@@ -591,7 +591,8 @@ def _collect_query_vectors(
     (double-cast) vectors, or ``None`` when the set exceeds
     :data:`_QUERY_DRIVER_MAX_ROWS` or carries duplicate ids (duplicate
     query ids produce join fan-out whose exact shape the distributed
-    plan owns — the fast path refuses rather than reproduce it)."""
+    plan owns — the fast path refuses rather than reproduce it) or a
+    zero-norm vector (:func:`_zero_norm`)."""
     rows = (
         queries.select(
             F.col(id_col).alias("query_id"),
@@ -609,7 +610,20 @@ def _collect_query_vectors(
     out = [(r.query_id, list(r.qv)) for r in rows]
     if len({qid for qid, _ in out}) != len(out):
         return None
+    if any(_zero_norm(v) for _qid, v in out):
+        return None
     return out
+
+
+def _zero_norm(v) -> bool:
+    """True when ``vectors.norm`` of ``v`` is 0 (same square fold, so
+    underflowing tiny vectors count too). The expression cosine then
+    divides by zero — Spark raises DIVIDE_BY_ZERO under ANSI and yields
+    NULL without it, never a double the ``_py_*`` replicas could return
+    — so the driver fast path declines such query vectors and
+    centroids and the distributed plan owns the degenerate
+    semantics."""
+    return _py_dot(v, v) == 0.0
 
 
 def _driver_probe_lut(
@@ -1360,6 +1374,8 @@ def knn_ivf_pq(
     else:
         q_rows = _collect_query_vectors(queries, id_col, vec_col)
     cent_rows = _small_rows(centroids) if q_rows is not None else None
+    if cent_rows is not None and any(_zero_norm(r.cent) for r in cent_rows):
+        q_rows = None
     cent_handle = centroids
     centroids = centroids.select("cell_id", "cent")
     if is_res:

@@ -1085,3 +1085,215 @@ def test_retrain_pq_index_preserves_passed_lease(spark, vecs, tmp_path):
         held.release()
     # clean release: a fresh acquire works
     statedir.acquire_lease(spark, path, owner="next").release()
+
+
+def _count_jobs(spark, fn):
+    """``(fn(), job ids, printable job list)`` for the Spark jobs ``fn``
+    submits from this thread, counted through a StatusTracker job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    st = sc.statusTracker()
+    ids = sorted(st.getJobIdsForGroup(group))
+    lines = []
+    for j in ids:
+        info = st.getJobInfo(j)
+        stages = [st.getStageInfo(s) for s in (info.stageIds if info else [])]
+        lines.append(f"job {j}: " + "; ".join(
+            s.name for s in stages if s is not None
+        ))
+    return out, ids, "\n".join(lines)
+
+
+@pytest.fixture(scope="module")
+def even_idx(vecs):
+    """A residual index over the even ids, built once for the load-memo
+    tests (each saves it to its own dir); odd ids are append material."""
+    even = vecs.filter(F.col("vec_id") % 2 == 0).localCheckpoint()
+    return ann_index.build_pq_index(
+        even, m=8, n_codes=8, n_cells=8, iters=1, sample_fraction=1.0
+    )
+
+
+def test_load_memo_refuses_in_session_tampering(
+    spark, vecs, even_idx, tmp_path
+):
+    # the session load memo reuses validated artifacts only while their
+    # listings are unchanged: overwriting meta, codebooks or centroids
+    # between two loads of ONE session must be refused with exactly the
+    # error a cold load (empty memo) raises
+    import json as _json
+
+    idx = even_idx
+    path = str(tmp_path / "memo_idx")
+    ann_index.save_pq_index(idx, path)
+    assert ann_index.load_pq_index(spark, path).meta == idx.meta  # fill
+    other_cents = train_ivf_centroids(
+        vecs, n_cells=4, iters=0, sample_fraction=1.0
+    )
+    other_cb = train_pq_codebooks(
+        vecs, m=8, n_codes=8, iters=0, sample_fraction=1.0,
+        centroids=idx.centroids,
+    )
+
+    def meta_df(meta):
+        return spark.createDataFrame(
+            [(_json.dumps(meta),)], "meta_json string"
+        )
+
+    tampered = {
+        "meta": (meta_df(dict(idx.meta, m=4)), "grid"),
+        "codebooks": (other_cb, "codebooks on disk"),
+        "centroids": (other_cents, "centroids on disk"),
+    }
+    originals = {
+        "meta": meta_df(idx.meta),
+        "codebooks": idx.codebooks,
+        "centroids": idx.centroids,
+    }
+    for sub, (bad, match) in tampered.items():
+        bad.write.mode("overwrite").parquet(f"{path}/{sub}")
+        with pytest.raises(ValueError, match=match) as warm:
+            ann_index.load_pq_index(spark, path)
+        with pytest.raises(ValueError) as cold:
+            ann_index.load_pq_index(spark.newSession(), path)
+        assert str(warm.value) == str(cold.value)
+        # a refused load stores nothing: the next load re-validates
+        with pytest.raises(ValueError, match=match):
+            ann_index.load_pq_index(spark, path, artifacts_only=True)
+        originals[sub].write.mode("overwrite").parquet(f"{path}/{sub}")
+        assert ann_index.load_pq_index(spark, path).meta == idx.meta
+
+
+def test_load_memo_serves_what_a_fresh_session_serves(
+    spark, vecs, even_idx, tmp_path
+):
+    # append → load, remove → load and compact → load in one warm session
+    # each serve exactly what a fresh session (empty memo) serves
+    odd = vecs.filter(F.col("vec_id") % 2 == 1).localCheckpoint()
+    path = str(tmp_path / "warm_idx")
+    ann_index.save_pq_index(even_idx, path)
+    queries = vecs.limit(3)
+
+    def served(index):
+        return sorted(map(tuple, ann_index.knn_from_index(
+            index, vecs, queries, k=5, shortlist=30, n_probe=4
+        ).collect()))
+
+    def check():
+        warm = ann_index.load_pq_index(spark, path)
+        fresh = ann_index.load_pq_index(spark.newSession(), path)
+        assert warm.meta == fresh.meta
+        assert sorted(map(tuple, warm.codes.collect())) == sorted(
+            map(tuple, fresh.codes.collect())
+        )
+        assert served(warm) == served(fresh)
+        return warm
+
+    first = check()
+    ann_index.append_to_pq_index(spark, path, odd)
+    assert check().codes.count() == vecs.count()
+    gone = [r.vec_id for r in odd.limit(20).collect()]
+    ann_index.remove_from_pq_index(spark, path, gone)
+    assert check().codes.count() == vecs.count() - len(gone)
+    ann_index.compact_pq_index(spark, path)
+    last = check()
+    assert last.codes.count() == vecs.count() - len(gone)
+    # the artifacts never changed, so every warm load shared one handle
+    assert last.codebooks is first.codebooks
+
+    # a session object never receives another session's handles — a new
+    # session (even one reusing a dropped session's id()) starts empty
+    import gc
+
+    other = spark.newSession()
+    theirs = ann_index.load_pq_index(other, path)
+    assert theirs.codebooks is not first.codebooks
+    assert theirs.codebooks.sparkSession is other
+    del other, theirs
+    gc.collect()
+    again = spark.newSession()
+    mine = ann_index.load_pq_index(again, path)
+    assert mine.codebooks.sparkSession is again
+    assert mine.codebooks is not first.codebooks
+
+
+def test_load_memo_dies_with_a_stopped_session(spark, even_idx, tmp_path):
+    # stop → getOrCreate builds a new SparkSession object, and the memo
+    # rides the object: the new session must re-read and re-validate,
+    # never receive the stopped session's handles. A subprocess, because
+    # stopping the suite's shared session would break every later test.
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    path = str(tmp_path / "idx")
+    ann_index.save_pq_index(even_idx, path)
+    script = textwrap.dedent(f"""
+        from pulfa_sausage_factory_spark.operators import ann_index
+        from pulfa_sausage_factory_spark.session import get_spark
+
+        spark = get_spark("memo-stop")
+        old = ann_index.load_pq_index(spark, {path!r})
+        warm = ann_index.load_pq_index(spark, {path!r})
+        assert warm.codebooks is old.codebooks
+        spark.stop()
+        spark2 = get_spark("memo-stop")
+        assert spark2 is not spark
+        assert getattr(spark2, ann_index._LOAD_MEMO_ATTR, None) is None
+        new = ann_index.load_pq_index(spark2, {path!r})
+        assert new.codebooks is not old.codebooks
+        assert new.codebooks.sparkSession is spark2
+        assert new.meta == old.meta
+        spark2.stop()
+        print("MEMO-STOP-OK")
+    """)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2",
+               SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(
+                   [root] + [p for p in [os.environ.get("PYTHONPATH")] if p]
+               ))
+    proc = subprocess.run(
+        [sys.executable, "-c", script], env=env, cwd=str(tmp_path),
+        capture_output=True, text=True, timeout=600,
+    )
+    assert "MEMO-STOP-OK" in proc.stdout, proc.stderr[-3000:]
+
+
+#: Spark jobs of one 3-query ``load_pq_index`` + ``knn_from_index``
+#: request against an unchanged residual index in a warm session — the
+#: load is job-free, the exec phase runs the driver fast path
+_WARM_REQUEST_JOBS = 7
+
+
+def test_warm_load_job_pins(spark, vecs, even_idx, tmp_path):
+    path = str(tmp_path / "pin_idx")
+    ann_index.save_pq_index(even_idx, path)
+    odd = vecs.filter(F.col("vec_id") % 2 == 1)
+    ann_index.append_to_pq_index(spark, path, odd.limit(20))
+    ann_index.load_pq_index(spark, path)  # warm the memo
+    loaded, ids, jobs = _count_jobs(
+        spark, lambda: ann_index.load_pq_index(spark, path)
+    )
+    assert not ids, f"warm load of unchanged artifacts ran jobs:\n{jobs}"
+    queries = vecs.limit(3)
+
+    def request():
+        index = ann_index.load_pq_index(spark, path)
+        return ann_index.knn_from_index(index, vecs, queries, k=5).collect()
+
+    rows, ids, jobs = _count_jobs(spark, request)
+    assert len(rows) == 15
+    assert len(ids) <= _WARM_REQUEST_JOBS, (
+        f"request ran {len(ids)} jobs > {_WARM_REQUEST_JOBS}:\n{jobs}"
+    )

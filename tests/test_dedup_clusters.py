@@ -388,3 +388,29 @@ def test_minhash_lsh_pairs_prebuilt_sigs_identical(spark, sf_dir):
     sigs.unpersist()
     assert base, "fixture must contain candidate pairs"
     assert reused == base
+
+
+def test_lsh_bcast_gate_flip_fallback_equality(spark, sf_dir, monkeypatch):
+    """``minhash_lsh_pairs`` picks its banded self-join strategy from a
+    materialized count: broadcast at or below ``_LSH_BCAST_MAX_UNITS``,
+    a merge hint above. Pin both directions equal — the same pairs and
+    est_jaccard with the gate forced shut (cap 0) — and pin that each
+    run took the join the gate chose."""
+    from pulfa_sausage_factory_spark.io import load_table
+    from pulfa_sausage_factory_spark.operators import dedup
+
+    docs = load_table(spark, sf_dir, "documents")
+
+    def run():
+        df = dedup.minhash_lsh_pairs(docs, threshold=0.2)
+        pairs = {(r.id_a, r.id_b): r.est_jaccard for r in df.collect()}
+        return pairs, df._jdf.queryExecution().executedPlan().toString()
+
+    bcast, bcast_plan = run()
+    monkeypatch.setattr(dedup, "_LSH_BCAST_MAX_UNITS", 0)
+    merge, merge_plan = run()
+    assert bcast, "fixture must contain candidate pairs"
+    assert merge == bcast
+    assert "BroadcastHashJoin" in bcast_plan
+    assert "SortMergeJoin" in merge_plan
+    assert "BroadcastHashJoin" not in merge_plan

@@ -686,3 +686,74 @@ def test_driver_query_fast_path_matches_distributed(spark, sf_dir, monkeypatch):
     for i, (f, s) in enumerate(zip(fast, slow)):
         assert f == s, f"serve call {i}: fast path diverged from distributed"
         assert len(f) > 0
+
+
+def test_driver_fast_path_zero_norm_parity(spark, sf_dir, monkeypatch):
+    """A zero-norm query vector or centroid makes the expression cosine
+    divide by zero: Spark raises DIVIDE_BY_ZERO under ANSI and yields
+    NULL without it. The driver fast path declines such inputs, so both
+    paths agree in both modes — the same error with ANSI on, the same
+    rows with it off — instead of the driver path crashing on its own
+    ZeroDivisionError."""
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    dim = len(emb.first().embedding)
+    zero_q = spark.createDataFrame([(10**9, [0.0] * dim)], emb.schema)
+    queries = emb.limit(5).unionByName(zero_q).localCheckpoint()
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        cents = similarity.train_ivf_centroids(
+            emb, n_cells=4, iters=1
+        ).localCheckpoint()
+        cb = similarity.train_pq_codebooks(
+            emb, m=4, n_codes=8, iters=1, sample_fraction=1.0,
+            centroids=cents,
+        ).localCheckpoint()
+        cents_z = cents.unionByName(
+            spark.createDataFrame([(99, [0.0] * dim)], cents.schema)
+        ).localCheckpoint()
+        cb_z = similarity.train_pq_codebooks(
+            emb, m=4, n_codes=8, iters=1, sample_fraction=1.0,
+            centroids=cents_z,
+        ).localCheckpoint()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    calls = {
+        "zero-norm query": lambda: similarity.knn_pq_rerank(
+            emb, queries, cb, k=5, shortlist=20, centroids=cents, n_probe=2,
+        ),
+        "zero centroid": lambda: similarity.knn_pq_rerank(
+            emb, emb.limit(5), cb_z, k=5, shortlist=20, centroids=cents_z,
+            n_probe=2,
+        ),
+    }
+
+    def outcome(fn):
+        try:
+            return sorted(tuple(r) for r in fn().collect())
+        except Exception as exc:  # the outcome under test, not a failure
+            return ("raised", "DIVIDE_BY_ZERO" in str(exc))
+
+    def run_all():
+        out = {}
+        for ansi_on in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi_on)
+            try:
+                for name, fn in calls.items():
+                    out[name, ansi_on] = outcome(fn)
+            finally:
+                spark.conf.set("spark.sql.ansi.enabled", ansi)
+        return out
+
+    monkeypatch.setattr(similarity, "_QUERY_DRIVER_MAX_ROWS", 1 << 20)
+    fast = run_all()
+    monkeypatch.setattr(similarity, "_QUERY_DRIVER_MAX_ROWS", 0)
+    slow = run_all()
+    for key in fast:
+        assert fast[key] == slow[key], f"{key}: fast path diverged"
+    for name in calls:
+        assert slow[name, "true"] == ("raised", True)
+        rows = slow[name, "false"]
+        assert rows[0] != "raised" and len(rows) == (
+            30 if name == "zero-norm query" else 25
+        )
