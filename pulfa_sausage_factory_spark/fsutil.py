@@ -258,27 +258,23 @@ def parquet_usage(spark: SparkSession, path: str) -> tuple[int, int]:
     return n, b
 
 
-#: bytes per py4j OutputStream.write call — a single call carrying a
-#: huge payload (a 512 MiB bloom bitmap at the 240M-item sizing)
-#: SILENTLY wrote zero bytes in the round-13 trend run (the epoch then
-#: committed its marker over an empty bits.bin: a corrupt-but-valid
-#: sidecar the next load refused); py4j moves byte[] arguments through
-#: its command channel, and chunking keeps each call far below
-#: whatever it mishandles
+#: bytes per py4j OutputStream.write call — py4j moves byte[] arguments
+#: through its command channel, and a single call carrying a payload of
+#: hundreds of MiB has been seen to write zero bytes without raising;
+#: chunking keeps each call far below that size
 _WRITE_CHUNK_BYTES = 16 << 20
 
 
 def write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
     """Write ``data`` to ``path`` (overwrite) through the Hadoop
-    FileSystem — small sidecar payloads (bloom bitmaps, meta JSON), not
+    FileSystem — small sidecar payloads (meta JSON, markers), not
     datasets. Callers needing crash-atomicity write a tmp path and
-    ``rename``, or land inside a marker-validated epoch dir.
+    ``rename``, or land inside a marker-validated dir.
 
-    Chunked + length-verified (round 13): the payload streams in
+    Chunked + length-verified: the payload streams in
     ``_WRITE_CHUNK_BYTES`` slices and the landed file's length is
-    checked against ``len(data)`` before returning — a silent partial
-    write must fail THIS call (before any validity marker lands), never
-    surface later as a marker-committed corrupt artifact."""
+    checked against ``len(data)`` before returning, so a partial write
+    fails this call before any validity marker lands."""
     fs, p = _fs_path(spark, path)
     out = fs.create(p, True)
     try:
@@ -296,55 +292,6 @@ def write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
         )
 
 
-def read_bytes(spark: SparkSession, path: str) -> bytes | None:
-    """Contents of ``path`` as bytes, or ``None`` when it does not exist
-    (same absence semantics as :func:`read_text`).
-
-    Chunked above ``_WRITE_CHUNK_BYTES`` (round 13): a single
-    ``IOUtils.toByteArray`` return of a 512 MiB bloom bitmap HANGS the
-    py4j channel for minutes (the symmetric failure to the unchunked
-    write) — big payloads stream back in bounded slices instead."""
-    from py4j.protocol import Py4JJavaError
-
-    fs, p = _fs_path(spark, path)
-    try:
-        size = int(fs.getFileStatus(p).getLen())
-    except Py4JJavaError:
-        if fs.exists(p):
-            raise  # real probe failure — absence is the only None
-        return None
-    iou = spark._jvm.org.apache.commons.io.IOUtils
-    stream = fs.open(p)
-    try:
-        if size <= _WRITE_CHUNK_BYTES:
-            return bytes(iou.toByteArray(stream))
-        chunks = []
-        remaining = size
-        while remaining > 0:
-            n = min(remaining, _WRITE_CHUNK_BYTES)
-            chunks.append(bytes(iou.toByteArray(stream, n)))
-            remaining -= n
-        return b"".join(chunks)
-    finally:
-        stream.close()
-
-
 def write_text(spark: SparkSession, path: str, content: str) -> None:
     """UTF-8 text write (overwrite) — see :func:`write_bytes`."""
     write_bytes(spark, path, content.encode("utf-8"))
-
-
-def dir_usage(spark: SparkSession, path: str) -> tuple[int, int]:
-    """``(n_files, n_bytes)`` of ALL files under ``path``, recursively —
-    the :func:`parquet_usage` twin for non-parquet sidecars (bloom
-    bitmaps, meta JSON, markers)."""
-    fs, p = _fs_path(spark, path)
-    if not fs.exists(p):
-        return 0, 0
-    n = b = 0
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        n += 1
-        b += int(st.getLen())
-    return n, b

@@ -5,7 +5,7 @@ The engine's state surfaces each have an observability report
 (``ingest_state_report``, ``pq_index_report``, ``journal_report``,
 ``curation_report_df``) and a set of maintenance verbs
 (``compact_ingest_state``, ``compact_pq_index``, ``compact_journal``,
-``rebuild_ledger_bloom``, ``coarsen_overlap_mod``, ``abandon_*``).
+``coarsen_overlap_mod``, ``abandon_*``).
 What an operator of a long-lived 100 TB deployment actually asks is the
 composition: *which verbs should run NOW, and how badly*. This module
 answers that — ``suggest_maintenance`` inspects every surface with the
@@ -30,7 +30,7 @@ COST and can be cheap instead.
 
 Thresholds come from the config where the config has an opinion
 (``ingest_compact_max_files``, ``index_compact_after_batches``,
-``overlap_coarsen_above_rows``, ``ledger_bloom_fpp``) — when a cadence
+``overlap_coarsen_above_rows``) — when a cadence
 knob is SET, the pipeline already runs the verb itself and the planner
 reports ``info`` instead of ``recommend`` (double-prompting an
 automated action trains operators to ignore the plan). Keyword
@@ -40,10 +40,7 @@ defaults cover unconfigured deployments.
 from __future__ import annotations
 
 import json
-import math
-import os
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import fsutil, statedir
@@ -56,11 +53,6 @@ _DEFAULT_MAX_FILES = 64
 #: live WAL entries (appends + tombstones) before an index fold is due
 #: when cfg.index_compact_after_batches is unset
 _DEFAULT_INDEX_COMPACT_AFTER = 16
-
-#: saturation-implied fpp over nominal fpp before a bloom rebuild is
-#: recommended — the sidecar still never false-negatives, it just stops
-#: paying (every probe comes back maybe)
-_DEFAULT_BLOOM_FPP_FACTOR = 8.0
 
 #: appended-rows / train_rows fraction before an index retrain is
 #: recommended — RECALL.md §3's measured decay holds ≥0.9 recall through
@@ -85,7 +77,6 @@ def suggest_maintenance(
     *,
     max_files: int | None = None,
     index_compact_after: int | None = None,
-    bloom_fpp_factor: float = _DEFAULT_BLOOM_FPP_FACTOR,
     retrain_fraction: float = _DEFAULT_RETRAIN_FRACTION,
     journal_compact_after: int = _DEFAULT_JOURNAL_COMPACT_AFTER,
     lease_ttl_sec: float = 900.0,
@@ -103,7 +94,7 @@ def suggest_maintenance(
         rows.append((surface, verb, urgency, reason))
 
     _ingest_dir_signals(spark, base, cfg, max_files, emit)
-    _bloom_signals(spark, base, cfg, bloom_fpp_factor, emit)
+    _vestigial_signals(spark, base, emit)
     _overlap_signals(spark, base, cfg, emit)
     _index_signals(spark, cfg, index_compact_after, retrain_fraction, emit)
     if journal_dir is not None:
@@ -170,63 +161,13 @@ def _ingest_dir_signals(spark, base, cfg, max_files, emit) -> None:
                     "footers"))
 
 
-def _bloom_signals(spark, base, cfg, fpp_factor, emit) -> None:
-    """Digest-ledger Bloom sidecar: saturation-implied fpp vs nominal
-    (the resize/rebuild signal) and the pending catch-up window."""
-    from ..functions import bloom as bloomfn
-    from . import ledger_bloom as lbm
-
-    paths = lbm._paths(os.path.join(base, "ledger"))
-    raw = fsutil.read_text(spark, paths.meta)
-    if raw is None:
-        return
-    meta = json.loads(raw)
-    epoch = lbm._live_epoch(spark, paths.bits)
-    info = lbm._merged_info(spark, paths, meta)
-    pending = [
-        b for b in lbm._ledger_batches(spark, os.path.join(base, "ledger"))
-        if not lbm._covered(info, b)
-    ]
-    if pending:
-        emit("ledger_bloom", "ingest with cfg.ledger_bloom=True", "info",
-             f"{len(pending)} ledger batch dirs pending catch-up "
-             f"{sorted(pending)[:5]} (bloom-off window) — the next "
-             "bloom-enabled ingest merges them")
-    # saturation must see the LIVE bitmap (epoch ∪ deltas) — round-14
-    # ADVICE: a snapshot-only read understates fill in delta mode until
-    # the next fold, and a fresh big-bitmap deployment commits only
-    # deltas for its first _DELTA_FOLD_COUNT batches (epoch stays -1).
-    if epoch < 0 and not lbm._delta_files(spark, paths):
-        return
-    try:
-        bits, _ = lbm._read_bits(spark, paths, int(meta["m"]))
-    except ValueError as exc:
-        emit("ledger_bloom", "rebuild_ledger_bloom", "urgent",
-             f"BLOCKED: unreadable bloom sidecar ({exc})")
-        return
-    sat = bloomfn.saturation(bits)
-    k = int(meta["k"])
-    implied = sat ** k
-    nominal = float(meta.get("fpp", cfg.ledger_bloom_fpp))
-    if implied > fpp_factor * nominal:
-        # round 14 (VERDICT item 2): ledger_bloom is demoted to
-        # experimental — it measurably loses to the plain scan-state
-        # join at every reachable scale, warm AND cold
-        # (stress_bloom_r13/r14.json) — so the planner only RECOMMENDS
-        # investing in a rebuild when the deployment actively runs the
-        # feature (cfg.ledger_bloom on); a vestigial sidecar gets an
-        # info row suggesting the cheaper exit
-        active = bool(getattr(cfg, "ledger_bloom", False))
-        emit("ledger_bloom", "rebuild_ledger_bloom",
-             "recommend" if active else "info",
-             f"saturation-implied fpp {implied:.4f} > {fpp_factor:.0f}x "
-             f"nominal {nominal} — the sidecar still never "
-             "false-negatives but most probes come back maybe; resize "
-             "via cfg.ledger_bloom_expected_items and rebuild"
-             + ("" if active else
-                " (cfg.ledger_bloom is OFF — the sidecar is vestigial; "
-                "deleting ledger_bloom/ is the cheaper fix for this "
-                "experimental feature)"))
+def _vestigial_signals(spark, base, emit) -> None:
+    """State dirs left behind by removed features: nothing reads them,
+    so name each once and let the operator reclaim the space."""
+    if fsutil.exists(spark, f"{base}/ledger_bloom"):
+        emit("ledger_bloom", "delete ledger_bloom/", "info",
+             "vestigial sidecar of the removed Bloom feature; nothing "
+             "reads it")
 
 
 def _overlap_signals(spark, base, cfg, emit) -> None:

@@ -523,71 +523,6 @@ def main() -> None:
             f"(dup re-land admitted {irep2['total_admitted']} in {dt2}s)",
             file=sys.stderr,
         )
-
-        # round-12: the Bloom-guarded exact-dedup decision against the
-        # now-populated full-volume ledger. Fresh (all-new) batches are
-        # the common case at 100 TB — with the sidecar the ledger is
-        # not even scanned for them. Same state dir, three sequential
-        # fresh batches (unique texts): bloom OFF baseline, bloom ON
-        # paying the one-time catch-up merge of the whole ledger, then
-        # bloom ON steady-state. The steady-state batch's `maybe` count
-        # is the measured fp rate at this saturation.
-        def _fresh(tag, shift):
-            sub = docs.filter(F.col("doc_id") % 10 == 1).select(
-                (F.col("doc_id") + shift).alias("doc_id"),
-                F.concat(
-                    F.col("text"), F.lit(f" fresh-{tag}-"),
-                    F.col("doc_id").cast("string"),
-                ).alias("text"),
-            )
-            sub.write.mode("append").option(
-                "maxRecordsPerFile", 100_000
-            ).json(landing)
-
-        plain_cfg = CurationConfig(min_quality=0.0, neardup_method="none")
-        bloom_cfg = CurationConfig(
-            min_quality=0.0, neardup_method="none", ledger_bloom=True,
-            ledger_bloom_expected_items=4_000_000,
-        )
-        probe = envprobe.op_probe()
-        _fresh("a", 2_000_000_000)
-        t0 = time.perf_counter()
-        ra = run_incremental_curation(
-            spark, landing, f"{work}/state", plain_cfg
-        )
-        dt_off = round(time.perf_counter() - t0, 2)
-        _fresh("b", 3_000_000_000)
-        t0 = time.perf_counter()
-        rb = run_incremental_curation(
-            spark, landing, f"{work}/state", bloom_cfg
-        )
-        dt_catchup = round(time.perf_counter() - t0, 2)
-        _fresh("c", 4_000_000_000)
-        t0 = time.perf_counter()
-        rc = run_incremental_curation(
-            spark, landing, f"{work}/state", bloom_cfg
-        )
-        dt_on = round(time.perf_counter() - t0, 2)
-        maybe = sum(
-            b.get("ledger_bloom", {}).get("maybe", 0)
-            for b in rc["batches"]
-        )
-        out["ops"]["ledger_bloom_ingest"] = {
-            "env": probe,
-            "fresh_rows": ra["total_admitted"],
-            "fresh_plain_sec": dt_off,
-            "bloom_catchup_sec": dt_catchup,
-            "fresh_bloom_sec": dt_on,
-            "steady_admitted": rc["total_admitted"],
-            "steady_maybe": maybe,
-        }
-        print(
-            f"# ledger_bloom_ingest: fresh {ra['total_admitted']} rows "
-            f"plain {dt_off}s | bloom catchup {dt_catchup}s | bloom "
-            f"steady {dt_on}s (maybe={maybe} of "
-            f"{rc['total_admitted']} admitted)",
-            file=sys.stderr,
-        )
     except Exception as exc:  # noqa: BLE001 — record, keep the evidence
         out["ops"]["incremental_ingest"] = {"error": f"{type(exc).__name__}: {exc}"[:300]}
         print(f"# incremental_ingest FAILED — {exc}", file=sys.stderr)
@@ -917,217 +852,5 @@ def main() -> None:
     print(json.dumps(out))
 
 
-def _drop_page_cache() -> bool:
-    """Best-effort page-cache drop (sync + ``drop_caches=3``) — the
-    round-14 storage-latency seam for :func:`bloom_trend`'s cold mode.
-    Returns False when the container denies the knob (cold mode then
-    refuses loudly instead of silently measuring warm reads)."""
-    try:
-        os.sync()
-        with open("/proc/sys/vm/drop_caches", "w") as fh:
-            fh.write("3")
-        return True
-    except OSError:
-        return False
-
-
-def bloom_trend(spark, sizes, batch_rows: int = 50_000,
-                cold_reads: bool = False) -> dict:
-    """Round 13 (VERDICT r12 item 2): measure the ledger-Bloom
-    break-even TREND, not just the arithmetic — grow the digest ledger
-    across decades and record the plain-scan vs bloom-steady per-batch
-    ingest cost at each point. What the first (pre-delta) run actually
-    showed: the gap WIDENED with ledger size (plain 9.7 s → 5.8 s,
-    bloom-steady 10.2 s → 14.7 s across 1.2M → 12M), because every
-    m-proportional per-batch cost — bitmap read, probe broadcast, and
-    above all the full m/8-byte epoch REWRITE per merge — scales with
-    the corpus while the scan-state plain path's ledger read is cheap
-    on page-cached local parquet. Round 13's fix: above
-    ledger_bloom._DELTA_ABOVE_BYTES, merges land ~k×n-position DELTA
-    files with periodic epoch folds (each row's ``delta_mode`` records
-    which regime it measured). The read+broadcast terms remain per
-    state-handle LOAD — amortized across a run's batches in production,
-    paid per batch by this harness's fresh-handle-per-ingest shape, so
-    these figures are the trickle-ingest worst case.
-
-    The ledger is SYNTHESIZED at the real schema (digest +
-    src_batch_id data column, hive ``batch_id=0`` dir — what
-    ``_write_admitted`` lands): building 10^8 rows through a real
-    ingest is hours of gate/JSON work that adds nothing to the compared
-    quantity, the per-batch exact-dedup decision against N admitted
-    digests. Batches are fresh (all-new digests) — the 100 TB common
-    case the sidecar exists for. Two timed reps per mode (min + spread
-    recorded); the one-time catch-up merge of the whole ledger is
-    reported separately (it amortizes over every later batch).
-
-    ``cold_reads=True`` (round-14 VERDICT item 2 — the storage-latency
-    seam, CLEARLY A SIMULATION): drop the OS page cache before every
-    timed ingest, so each batch's state reads hit storage instead of
-    RAM — the claimed payoff regime (object stores / billed IO) minus
-    its per-request latency, i.e. a LOWER BOUND on the remote-storage
-    benefit. On page-cached local parquet (the default mode) the plain
-    ledger scan is nearly free and r13's trend showed bloom losing
-    everywhere; cold mode measures whether removing that page-cache
-    subsidy flips the sign: the plain path must re-read the full
-    ledger (~33 B/row parquet) per batch, while the bloom-steady path
-    reads the m/8-byte bitmap + deltas and — at maybe=0 — never
-    touches the ledger at all."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import types as T
-
-    from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
-        CurationConfig,
-        _ingest_batch,
-    )
-
-    sch = T.StructType.fromDDL("doc_id long, text string")
-    plain_cfg = CurationConfig(min_quality=0.0, neardup_method="none")
-
-    def fresh_lines(bid):
-        # unique texts per batch id — a repeat batch must stay ALL-NEW
-        # (dup batches change the cost shape: fewer writes, confirm-join)
-        return spark.range(batch_rows).select(
-            F.to_json(F.struct(
-                (F.col("id") + bid * 10_000_000).alias("doc_id"),
-                F.concat(
-                    F.lit(f"fresh b{bid} district survey record "),
-                    F.col("id").cast("string"),
-                    F.lit(" with bridge load tables and river depth "),
-                    F.col("id").cast("string"),
-                ).alias("text"),
-            )).alias("value")
-        )
-
-    from pulfa_sausage_factory_spark.functions.bloom import bloom_params
-    from pulfa_sausage_factory_spark.pipelines import ledger_bloom as _lbm
-
-    if cold_reads and not _drop_page_cache():
-        raise RuntimeError(
-            "cold_reads requested but /proc/sys/vm/drop_caches is not "
-            "writable in this container — refusing to mislabel warm "
-            "measurements as cold"
-        )
-
-    def _pre_timed():
-        # the seam: every timed ingest starts with NOTHING page-cached
-        if cold_reads:
-            _drop_page_cache()
-
-    table = []
-    for n_ledger in sizes:
-        bloom_cfg = CurationConfig(
-            min_quality=0.0, neardup_method="none", ledger_bloom=True,
-            ledger_bloom_expected_items=max(2 * int(n_ledger), 1_000_000),
-        )
-        m, _k = bloom_params(
-            bloom_cfg.ledger_bloom_expected_items, bloom_cfg.ledger_bloom_fpp
-        )
-        # whether per-batch merges land position deltas (round 13)
-        # instead of full m/8 epoch rewrites — the before/after lever
-        # this harness measures
-        delta_mode = m // 8 > _lbm._DELTA_ABOVE_BYTES
-        work = tempfile.mkdtemp(prefix=f"bloom_trend_{n_ledger}_")
-        try:
-            state = f"{work}/state"
-            t0 = time.perf_counter()
-            spark.range(int(n_ledger)).select(
-                F.md5(F.concat(F.lit("led-"), F.col("id").cast("string")))
-                .alias("digest"),
-                F.lit(0).cast("long").alias("src_batch_id"),
-            ).write.mode("overwrite").parquet(f"{state}/ledger/batch_id=0")
-            t_synth = round(time.perf_counter() - t0, 2)
-
-            bid = 1
-            _ingest_batch(spark, fresh_lines(bid), bid, plain_cfg,
-                          state, sch)  # untimed warmup (JIT + footers)
-            bid += 1
-            probe = envprobe.op_probe()
-            plain_secs = []
-            for _ in range(2):
-                _pre_timed()
-                t0 = time.perf_counter()
-                _ingest_batch(spark, fresh_lines(bid), bid, plain_cfg,
-                              state, sch)
-                plain_secs.append(round(time.perf_counter() - t0, 2))
-                bid += 1
-            _pre_timed()
-            t0 = time.perf_counter()
-            _ingest_batch(spark, fresh_lines(bid), bid, bloom_cfg,
-                          state, sch)  # one-time whole-ledger catch-up
-            catchup_sec = round(time.perf_counter() - t0, 2)
-            bid += 1
-            steady_secs, maybe = [], 0
-            for _ in range(2):
-                _pre_timed()
-                t0 = time.perf_counter()
-                rep = _ingest_batch(spark, fresh_lines(bid), bid,
-                                    bloom_cfg, state, sch)
-                steady_secs.append(round(time.perf_counter() - t0, 2))
-                maybe += rep.get("ledger_bloom", {}).get("maybe", 0)
-                bid += 1
-            row = {
-                "n_ledger": int(n_ledger),
-                "delta_mode": bool(delta_mode),
-                "cold_reads": bool(cold_reads),
-                "env": probe,
-                "synth_sec": t_synth,
-                "plain_sec": min(plain_secs),
-                "plain_reps": plain_secs,
-                "bloom_catchup_sec": catchup_sec,
-                "bloom_steady_sec": min(steady_secs),
-                "steady_reps": steady_secs,
-                "steady_maybe_total": int(maybe),
-                "bloom_minus_plain_sec": round(
-                    min(steady_secs) - min(plain_secs), 2
-                ),
-            }
-            table.append(row)
-            print(
-                f"# bloom_trend n={n_ledger}: plain {row['plain_sec']}s "
-                f"{plain_secs} | catchup {catchup_sec}s | steady "
-                f"{row['bloom_steady_sec']}s {steady_secs} "
-                f"(maybe={maybe}) | gap {row['bloom_minus_plain_sec']}s",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001 — record, keep going
-            table.append({"n_ledger": int(n_ledger),
-                          "error": f"{type(exc).__name__}: {exc}"[:300]})
-            print(f"# bloom_trend n={n_ledger} FAILED — {exc}",
-                  file=sys.stderr)
-        finally:
-            shutil.rmtree(work, ignore_errors=True)
-    return {"metric": "bloom_break_even_trend",
-            "batch_rows": batch_rows, "cold_reads": bool(cold_reads),
-            "table": table}
-
-
-def bloom_main() -> None:
-    """`python stress.py bloom [cold] [N ...]` — the break-even trend
-    across ledger decades (default 1.2M / 12M / 120M rows; 120M ×
-    ~32 B of digest is ~4 GB of parquet, sandbox-feasible). ``cold``
-    drops the page cache before every timed ingest — the round-14
-    storage-latency seam (a labeled simulation of non-page-cached
-    storage; see bloom_trend's docstring)."""
-    args = sys.argv[2:]
-    cold = bool(args) and args[0] == "cold"
-    if cold:
-        args = args[1:]
-    sizes = [int(a) for a in args] or [
-        1_200_000, 12_000_000, 120_000_000
-    ]
-    env0 = envprobe.env_start()
-    spark = get_spark("stress-bloom-trend")
-    spark.sparkContext.setLogLevel("ERROR")
-    out = bloom_trend(spark, sizes, cold_reads=cold)
-    out["env"] = envprobe.env_context(env0)
-    out["calib_ref_ms"] = envprobe.CALIB_REF_MS
-    print(json.dumps(out))
-
-
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "bloom":
-        bloom_main()
-    else:
-        main()
+    main()

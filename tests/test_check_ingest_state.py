@@ -386,162 +386,6 @@ def test_run_report_carries_end_of_run_maintenance_plan(spark, tmp_path):
     )
 
 
-def test_check_ingest_state_bloom_legs(spark, tmp_path):
-    # round 13 (VERDICT r12 item 3): the bloom sidecar's no-false-
-    # negative invariant gets an fsck leg — a sampled probe of ledger
-    # digests against the live bitmap (any miss = FAIL naming the
-    # rebuild verb) plus epoch/marker hygiene and sizing-drift reporting
-    import numpy as np
-
-    from pulfa_sausage_factory_spark import fsutil
-    from pulfa_sausage_factory_spark.functions import bloom as bfn
-    from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
-        _ingest_batch,
-        check_ingest_state,
-    )
-    from pulfa_sausage_factory_spark.pipelines.ledger_bloom import (
-        rebuild_ledger_bloom,
-    )
-
-    state = str(tmp_path / "state")
-    cfg = CurationConfig(min_quality=0.0, neardup_method="none",
-                         ledger_bloom=True,
-                         ledger_bloom_expected_items=10_000)
-    sch = T.StructType.fromDDL("doc_id long, text string")
-    docs = [{"doc_id": i,
-             "text": f"district survey record number {i} with bridge "
-                     f"load tables and river depth measurements"}
-            for i in range(8)]
-    _ingest_batch(spark, _lines(spark, docs[:5]), 0, cfg, state, sch)
-    _ingest_batch(spark, _lines(spark, docs[5:]), 1, cfg, state, sch)
-
-    # clean state: probe ok with the sample size in the detail, hygiene ok
-    rep = _by_check(check_ingest_state(spark, state, cfg))
-    probe = rep[("bloom_digest_not_in_bits", "ledger_bloom")]
-    assert probe.status == "ok" and "sampled 8" in probe.detail
-    assert rep[("bloom_sidecar_hygiene", "ledger_bloom")].status == "ok"
-
-    # bloom not configured + no sidecar → no bloom rows at all
-    state2 = str(tmp_path / "plain")
-    off = CurationConfig(min_quality=0.0, neardup_method="none")
-    _ingest_batch(spark, _lines(spark, docs[:2]), 0, off, state2, sch)
-    rep2 = _by_check(check_ingest_state(spark, state2, off))
-    assert not any(c == "bloom_digest_not_in_bits" for c, _ in rep2)
-
-    # planted corruption: clear a couple of a real digest's bits in the
-    # live bitmap (hand-edited sidecar) — the probe must FAIL and name
-    # the rebuild verb (this is the silent dedup-off failure mode,
-    # invisible anywhere else). Rewrite through fsutil so the Hadoop
-    # CRC sidecar matches — a CRC mismatch is the unreadable-bitmap
-    # case, planted separately below.
-    import glob as _glob
-
-    def _live_bits():
-        return sorted(
-            _glob.glob(f"{state}/ledger_bloom/bits/epoch=*/bits.bin")
-        )[-1]
-
-    bits_bin = _live_bits()
-    raw = bytearray(fsutil.read_bytes(spark, bits_bin))
-    meta_m = len(raw) * 8
-    digest = spark.read.parquet(f"{state}/ledger").select(
-        "digest").limit(1).collect()[0].digest
-    for p in bfn.positions_of(digest, meta_m, 6)[:2]:
-        raw[p >> 3] &= ~(1 << (p & 7)) & 0xFF
-    fsutil.write_bytes(spark, bits_bin, bytes(raw))
-    rep = _by_check(check_ingest_state(spark, state, cfg))
-    probe = rep[("bloom_digest_not_in_bits", "ledger_bloom")]
-    assert probe.status == "fail" and "rebuild_ledger_bloom" in probe.detail
-
-    # the named remedy heals it
-    rebuild_ledger_bloom(spark, state, cfg)
-    rep = _by_check(check_ingest_state(spark, state, cfg))
-    assert rep[("bloom_digest_not_in_bits", "ledger_bloom")].status == "ok"
-
-    # truncated bitmap = corrupt sidecar → fail naming the rebuild verb
-    bits_bin = _live_bits()
-    fsutil.write_bytes(
-        spark, bits_bin, bytes(fsutil.read_bytes(spark, bits_bin))[:-8]
-    )
-    rep = _by_check(check_ingest_state(spark, state, cfg))
-    probe = rep[("bloom_digest_not_in_bits", "ledger_bloom")]
-    assert probe.status == "fail" and "corrupt sidecar" in probe.detail
-
-    # literal bit rot (payload edited behind the FS's back → CRC
-    # mismatch on read) is also a finding, never a crash
-    raw = bytearray(open(bits_bin, "rb").read())
-    raw[0] ^= 0xFF
-    open(bits_bin, "wb").write(bytes(raw))
-    rep = _by_check(check_ingest_state(spark, state, cfg))
-    probe = rep[("bloom_digest_not_in_bits", "ledger_bloom")]
-    assert probe.status == "fail" and "unreadable" in probe.detail
-    rebuild_ledger_bloom(spark, state, cfg)
-
-    # hygiene: an uncommitted epoch dir (crash debris) and a sizing
-    # drift both surface as WARN with actionable detail
-    import os as _os
-
-    stray = f"{state}/ledger_bloom/bits/epoch=999"
-    _os.makedirs(stray, exist_ok=True)
-    open(f"{stray}/bits.bin", "wb").write(b"\x00" * 8)
-    bigger = CurationConfig(min_quality=0.0, neardup_method="none",
-                            ledger_bloom=True,
-                            ledger_bloom_expected_items=500_000)
-    rep = _by_check(check_ingest_state(spark, state, bigger))
-    hyg = rep[("bloom_sidecar_hygiene", "ledger_bloom")]
-    assert hyg.status == "warn"
-    assert "uncommitted epoch dirs" in hyg.detail
-    assert "config sizing" in hyg.detail and "rebuild_ledger_bloom" in hyg.detail
-
-
-def test_bloom_fsck_tolerates_bloom_off_window(spark, tmp_path):
-    # round-13 self-review: batches landed while ledger_bloom was OFF are
-    # legitimately absent from the bitmap until the next bloom-enabled
-    # ingest's load_state catch-up merges them (catch-up 1 exists for
-    # exactly this toggle) — the fsck probe must sample only COVERED
-    # provenance, or a healthy state reads as corruption and the detail
-    # directs a needless rebuild. Dedup was never off: no probe runs
-    # before the catch-up.
-    from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
-        _ingest_batch,
-        check_ingest_state,
-    )
-
-    state = str(tmp_path / "state")
-    on = CurationConfig(min_quality=0.0, neardup_method="none",
-                        ledger_bloom=True,
-                        ledger_bloom_expected_items=10_000)
-    off = CurationConfig(min_quality=0.0, neardup_method="none")
-    sch = T.StructType.fromDDL("doc_id long, text string")
-
-    def docs(lo, hi):
-        return [{"doc_id": i,
-                 "text": f"canal lock maintenance log entry {i} with "
-                         f"gate timings and water level readings"}
-                for i in range(lo, hi)]
-
-    _ingest_batch(spark, _lines(spark, docs(0, 4)), 0, on, state, sch)
-    _ingest_batch(spark, _lines(spark, docs(4, 8)), 1, off, state, sch)
-    _ingest_batch(spark, _lines(spark, docs(8, 12)), 2, off, state, sch)
-
-    rep = _by_check(check_ingest_state(spark, state, on))
-    probe = rep[("bloom_digest_not_in_bits", "ledger_bloom")]
-    assert probe.status == "ok", probe.detail
-    # the uncovered window is surfaced as pending catch-up, named as
-    # such — visible, but never a FAIL and never "run rebuild"
-    assert "pending catch-up" in probe.detail
-    assert "rebuild_ledger_bloom" not in probe.detail
-
-    # the next bloom-enabled ingest heals the window; the probe then
-    # samples everything with no pending note
-    _ingest_batch(spark, _lines(spark, docs(12, 16)), 3, on, state, sch)
-    rep = _by_check(check_ingest_state(spark, state, on))
-    probe = rep[("bloom_digest_not_in_bits", "ledger_bloom")]
-    assert probe.status == "ok", probe.detail
-    assert "pending catch-up" not in probe.detail
-    assert "sampled 16" in probe.detail
-
-
 def test_export_training_corpus_compacts_without_folding_state(
     spark, tmp_path
 ):

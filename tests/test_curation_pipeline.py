@@ -7,6 +7,7 @@ from __future__ import annotations
 import glob
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from pulfa_sausage_factory_spark.io import load_table
@@ -3646,3 +3647,60 @@ def test_ingest_duplicate_ids_with_distinct_text_do_not_fan_out(spark, tmp_path)
     got = sorted((r.id, tuple(r.old_sig)) for r in stored.collect())
     assert got == want
     recomputed.unpersist()
+
+
+@pytest.mark.parametrize("ledgers", [
+    {},
+    {"neardup_ledger": True, "neardup_threshold": 0.5},
+    {"overlap_ledger": True, "overlap_sample_mod": 4},
+], ids=["exact", "neardup", "overlap"])
+def test_ingest_empty_and_all_corrupt_batches(spark, tmp_path, ledgers):
+    # an empty batch and an all-corrupt batch admit nothing and count
+    # every corrupt line, and the next normal batch admits exactly what
+    # it admits on a twin state that never saw them
+    import json
+
+    from pyspark.sql import types as T
+
+    from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
+        _ingest_batch,
+    )
+
+    cfg = CurationConfig(min_quality=0.0, neardup_method="none", **ledgers)
+    sch = T.StructType.fromDDL("doc_id long, text string")
+
+    def lines(values):
+        return spark.createDataFrame([(v,) for v in values], "value string")
+
+    def docs(rows):
+        return lines([json.dumps({"doc_id": i, "text": t}) for i, t in rows])
+
+    para = ("the survey party followed the river through dense forest and "
+            "recorded water depth temperature and the birds seen at each "
+            "camp while the boats were drawn up on gravel bars at dusk ")
+    seed = [(1, para + "first notebook of the season"),
+            (2, "the quick brown fox jumps over the lazy dog today")]
+    nxt = [(10, para + "first notebook of the season"),      # exact copy
+           (11, "the quick brown fox jumps over the lazy dog tonight"),
+           (12, "telescope mirror coating procedures for winter months"),
+           (13, "telescope mirror coating procedures for winter months"),
+           (14, "archive shelving practice and box inventory control " + para)]
+    corrupt = ["{not json", "]]"]
+
+    got = {}
+    for name in ("degenerate", "twin"):
+        state = str(tmp_path / name)
+        _ingest_batch(spark, docs(seed), 0, cfg, state, sch)
+        if name == "degenerate":
+            empty = _ingest_batch(spark, lines([]), 1, cfg, state, sch)
+            bad = _ingest_batch(spark, lines(corrupt), 2, cfg, state, sch)
+            for rep, n_bad in ((empty, 0), (bad, len(corrupt))):
+                assert rep["admitted"] == 0 and rep["input_rows"] == 0, rep
+                assert rep["corrupt_lines"] == n_bad, rep
+        rep = _ingest_batch(spark, docs(nxt), 3, cfg, state, sch)
+        got[name] = (rep["admitted"], sorted(
+            r.doc_id for r in spark.read.parquet(f"{state}/corpus")
+            .where(F.col("batch_id") == 3).select("doc_id").collect()
+        ))
+    assert got["degenerate"] == got["twin"]
+    assert got["twin"][0] == len(got["twin"][1]) > 0

@@ -135,71 +135,51 @@ def test_overlap_fps_ratio_recommends_coarsen(spark, tmp_path):
     assert info is not None and "overlap_coarsen_above_rows" in info
 
 
-def test_bloom_saturation_and_catchup_signals(spark, tmp_path):
-    state = str(tmp_path / "state")
-    on = CurationConfig(min_quality=0.0, neardup_method="none",
-                        ledger_bloom=True,
-                        ledger_bloom_expected_items=10_000)
-    off = CurationConfig(min_quality=0.0, neardup_method="none")
+def test_vestigial_ledger_bloom_dir_is_one_info_row(spark, tmp_path):
+    # a state dir written by a deployment that ran the removed Bloom
+    # sidecar still holds ledger_bloom/: the planner names it once as
+    # deletable; fsck, the report and ingest ignore it
+    from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
+        check_ingest_state,
+        ingest_state_report,
+    )
+
+    cfg = CurationConfig(min_quality=0.0, neardup_method="none")
     sch = T.StructType.fromDDL(SCHEMA_DDL)
-    _ingest_batch(spark, _lines(spark, _docs(0, 4)), 0, on, state, sch)
-    _ingest_batch(spark, _lines(spark, _docs(4, 8)), 1, off, state, sch)
+    states = {}
+    for name in ("vestigial", "twin"):
+        states[name] = str(tmp_path / name)
+        _ingest_batch(spark, _lines(spark, _docs(0, 4)), 0, cfg,
+                      states[name], sch)
+    side = f"{states['vestigial']}/ledger_bloom/bits/epoch=0"
+    os.makedirs(side)
+    with open(f"{side}/bits.bin", "wb") as fh:
+        fh.write(b"\x00" * 64)
 
-    # a factor below any reachable implied fpp (sat**k of a tiny
-    # bitmap is ~1e-23) makes the rebuild signal trip — the threshold
-    # arithmetic, not a saturated fixture, is under test
-    plan = _plan(suggest_maintenance(spark, state, on,
-                                     bloom_fpp_factor=1e-30))
-    reb = plan.get(("ledger_bloom", "rebuild_ledger_bloom", "recommend"))
-    assert reb is not None and "implied fpp" in reb
-    catchup = [k for k in plan if k[0] == "ledger_bloom" and k[2] == "info"]
-    assert catchup and "pending catch-up" in plan[catchup[0]]
+    plan = suggest_maintenance(spark, states["vestigial"], cfg).collect()
+    assert [tuple(r) for r in plan] == [(
+        "ledger_bloom", "delete ledger_bloom/", "info",
+        "vestigial sidecar of the removed Bloom feature; nothing reads it",
+    )]
+    fsck = check_ingest_state(spark, states["vestigial"], cfg).collect()
+    assert not [r for r in fsck if r.status in ("fail", "warn")], fsck
+    assert "ledger_bloom" not in {
+        r.artifact
+        for r in ingest_state_report(spark, states["vestigial"]).collect()
+    }
 
-    # at the honest default factor the tiny healthy sidecar is silent
-    plan = _plan(suggest_maintenance(spark, state, on))
-    assert ("ledger_bloom", "rebuild_ledger_bloom",
-            "recommend") not in plan
-
-    # round 14 (VERDICT item 2 demotion): with cfg.ledger_bloom OFF the
-    # sidecar is a vestigial artifact of an EXPERIMENTAL feature — the
-    # planner must not recommend investing in a rebuild, only inform
-    # (and name the cheaper exit)
-    plan = _plan(suggest_maintenance(spark, state, off,
-                                     bloom_fpp_factor=1e-30))
-    assert ("ledger_bloom", "rebuild_ledger_bloom",
-            "recommend") not in plan
-    info = plan.get(("ledger_bloom", "rebuild_ledger_bloom", "info"))
-    assert info is not None and "vestigial" in info
-
-
-def test_bloom_saturation_reads_delta_mode_bits(
-    spark, tmp_path, monkeypatch
-):
-    # round-14 ADVICE: the planner's saturation signal must see the
-    # LIVE bitmap (epoch ∪ deltas) via _read_bits. A fresh big-bitmap
-    # deployment commits only deltas for its first _DELTA_FOLD_COUNT
-    # batches (epoch stays -1) — the old epoch-snapshot read skipped
-    # the check entirely there and understated fill until the fold.
-    from pulfa_sausage_factory_spark.pipelines import ledger_bloom as lbm
-
-    monkeypatch.setattr(lbm, "_DELTA_ABOVE_BYTES", 0)  # force delta mode
-    state = str(tmp_path / "state")
-    cfg = CurationConfig(min_quality=0.0, neardup_method="none",
-                         ledger_bloom=True,
-                         ledger_bloom_expected_items=10_000)
-    sch = T.StructType.fromDDL(SCHEMA_DDL)
-    _ingest_batch(spark, _lines(spark, _docs(0, 4)), 0, cfg, state, sch)
-    # delta-only sidecar: no epoch dir exists
-    assert not os.path.exists(f"{state}/ledger_bloom/bits") or not [
-        n for n in os.listdir(f"{state}/ledger_bloom/bits")
-        if n.startswith("epoch=")
-    ]
-    # the tripwire factor fires ONLY if saturation saw the delta bits
-    # (an empty bitmap's implied fpp is 0.0 — below any factor)
-    plan = _plan(suggest_maintenance(spark, state, cfg,
-                                     bloom_fpp_factor=1e-30))
-    reb = plan.get(("ledger_bloom", "rebuild_ledger_bloom", "recommend"))
-    assert reb is not None and "implied fpp" in reb
+    # the next batch (a repeat of doc 1 plus fresh docs) admits the same
+    # ids with or without the leftover dir
+    nxt = _docs(1, 2) + _docs(4, 7)
+    admitted = {}
+    for name, state in states.items():
+        rep = _ingest_batch(spark, _lines(spark, nxt), 1, cfg, state, sch)
+        assert "ledger_bloom" not in rep
+        admitted[name] = sorted(
+            r.doc_id for r in spark.read.parquet(f"{state}/corpus")
+            .where(F.col("batch_id") == 1).select("doc_id").collect()
+        )
+    assert admitted["vestigial"] == admitted["twin"] == [4, 5, 6]
 
 
 def test_index_wal_pending_fold_and_staleness_signals(spark, tmp_path):
