@@ -3704,3 +3704,81 @@ def test_ingest_empty_and_all_corrupt_batches(spark, tmp_path, ledgers):
         ))
     assert got["degenerate"] == got["twin"]
     assert got["twin"][0] == len(got["twin"][1]) > 0
+
+
+@pytest.mark.parametrize("knobs, match", [
+    ({"serve_index_append": True},
+     "serve_index_append needs cfg.semantic_ledger"),
+    ({"index_compact_after_batches": 2},
+     "index_compact_after_batches needs cfg.serve_index_append"),
+    ({"overlap_coarsen_above_rows": 10},
+     "overlap_coarsen_above_rows needs cfg.overlap_ledger"),
+    ({"overlap_ledger": True, "overlap_coarsen_above_rows": 10},
+     "overlap_coarsen_above_rows needs overlap_sample_mod='auto'"),
+    ({"overlap_drop_audit": True},
+     "overlap_drop_audit needs cfg.overlap_ledger"),
+    ({"drift_ref_profile": {"rows": 3}},
+     "drift_ref_profile must be a profile_table result dict"),
+    ({"semantic_ledger": True},
+     "semantic_ledger needs cfg.semdedup_index_path"),
+], ids=["serve_append", "index_compact", "coarsen_no_overlap",
+        "coarsen_fixed_mod", "drop_audit", "drift_profile", "semantic"])
+def test_ingest_batch_refuses_contradictory_config(spark, tmp_path, knobs,
+                                                   match):
+    # a config whose knobs contradict each other is refused before the
+    # batch touches the state dir: nothing is read, leased or written
+    import os
+
+    from pyspark.sql import types as T
+
+    from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
+        _ingest_batch,
+    )
+
+    state = str(tmp_path / "state")
+    cfg = CurationConfig(min_quality=0.0, neardup_method="none", **knobs)
+    lines = spark.createDataFrame([('{"doc_id": 1, "text": "a b c"}',)],
+                                  "value string")
+    with pytest.raises(ValueError, match=match):
+        _ingest_batch(spark, lines, 0, cfg, state,
+                      T.StructType.fromDDL("doc_id long, text string"))
+    assert not os.path.exists(state)
+
+
+@pytest.mark.parametrize(
+    "field", ["ledger_bloom", "ledger_bloom_expected_items", "ledger_bloom_fpp"]
+)
+def test_removed_ledger_bloom_fields_are_rejected(field):
+    # the ledger Bloom sidecar is gone: its config fields no longer exist,
+    # so a config that still sets one fails when it is built instead of
+    # being silently ignored
+    with pytest.raises(TypeError, match=field):
+        CurationConfig(**{field: True})
+
+
+@pytest.mark.parametrize("module", [
+    "pulfa_sausage_factory_spark.functions.bloom",
+    "pulfa_sausage_factory_spark.pipelines.ledger_bloom",
+])
+def test_removed_ledger_bloom_modules_are_gone(module):
+    import importlib
+
+    with pytest.raises(ModuleNotFoundError):
+        importlib.import_module(module)
+
+
+def test_retract_documents_refuses_multi_column_ids(spark, tmp_path):
+    # an ids DataFrame must carry exactly one id column; a wider one is
+    # refused before any surface is scrubbed, and the verb's writer lease
+    # is released on the way out
+    from pulfa_sausage_factory_spark import statedir
+    from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
+        retract_documents,
+    )
+
+    state = str(tmp_path / "state")
+    ids = spark.createDataFrame([(1, "x")], "doc_id long, tag string")
+    with pytest.raises(ValueError, match="exactly one id column"):
+        retract_documents(spark, state, ids, CurationConfig())
+    assert not (tmp_path / "state" / "retracted").exists()
+    statedir.acquire_lease(spark, state, owner="next-writer").release()

@@ -131,3 +131,18 @@ def test_write_read_bytes_chunked_and_length_verified(spark, tmp_path, monkeypat
     fsutil.write_bytes(spark, p, b"tiny")
     with open(p, "rb") as fh:
         assert fh.read() == b"tiny"
+
+
+@pytest.mark.parametrize("size", [0, 1, 3 << 10], ids=["empty", "one_byte",
+                                                      "chunk_multiple"])
+def test_write_bytes_edge_lengths(spark, tmp_path, monkeypatch, size):
+    # the chunk loop's edges: an empty payload still lands (and replaces)
+    # the file, and a payload that is an exact multiple of the chunk size
+    # writes no trailing empty slice — the landed length matches each time
+    monkeypatch.setattr(fsutil, "_WRITE_CHUNK_BYTES", 1 << 10)
+    p = str(tmp_path / "blob.bin")
+    fsutil.write_bytes(spark, p, b"stale previous content")
+    payload = bytes(range(256)) * (size // 256) + bytes(size % 256)
+    fsutil.write_bytes(spark, p, payload)
+    with open(p, "rb") as fh:
+        assert fh.read() == payload

@@ -279,3 +279,14 @@ def test_journal_killed_run_and_fold_signals(spark, tmp_path):
     assert killed is not None and "5" in killed
     fold = plan.get(("journal", "compact_journal", "recommend"))
     assert fold is not None and "3 live run dirs" in fold
+
+
+def test_removed_bloom_fpp_factor_parameter_is_rejected(spark, tmp_path):
+    # the planner's Bloom saturation signal went with the sidecar, and so
+    # did its tuning parameter: passing it fails instead of being ignored
+    import pytest
+
+    cfg = CurationConfig(min_quality=0.0, neardup_method="none")
+    with pytest.raises(TypeError, match="bloom_fpp_factor"):
+        suggest_maintenance(spark, str(tmp_path / "state"), cfg,
+                            bloom_fpp_factor=2.0)
