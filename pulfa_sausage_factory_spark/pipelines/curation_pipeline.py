@@ -2261,7 +2261,7 @@ def _state_surfaces(icol: str) -> tuple:
 def _retraction_probe(keys: DataFrame, keys_col: str, key_col: str):
     """``(probe_df, match_condition)`` for the takedown's key matching —
     the ONE place the "which surface rows belong to a retraction key"
-    rule lives, shared by the membership probe (``_live_matches``) and
+    rule lives, shared by the membership probe (``_surface_matches``) and
     the scrub rewrite's anti-join (they MUST agree, or the residual
     self-check probes a different set than the scrub removed).
 
@@ -2308,35 +2308,86 @@ def _with_admitting_batch(df: DataFrame) -> DataFrame:
     return df.withColumn("__src", src)
 
 
-def _live_matches(spark, base: str, sub: str, key_col: str,
-                  keys: DataFrame, keys_col: str, batches):
-    """Rows of ``<base>/<sub>`` matching the retraction keys
-    (``_retraction_probe`` pairs — key value + admitting batch),
-    partition-pruned to ``batches`` plus the ``batch_id=-1`` fold
-    archive — the ONE membership-probe implementation behind the
-    takedown scrub's hit counts, its post-scrub ``residual``
-    self-check, and the audit prune's completed-scrub detection (three
-    hand-rolled copies of the pruning logic would drift). ``None`` when
-    the surface, its key column, or every candidate partition is
-    absent."""
-    from .. import fsutil
+def _read_surface(spark, base: str, sub: str, schemas: dict):
+    """``<base>/<sub>``, its merged schema inferred (a Spark job) once per
+    verb call: later reads reuse it from the caller's ``schemas`` dict.
+    Verb-local, not a session memo: a state dir gains a partition every
+    batch, so a listing-keyed memo would miss on every call."""
     from ..io import read_parquet_state
 
     path = f"{base}/{sub}"
+    if sub in schemas:
+        return spark.read.schema(schemas[sub]).parquet(path)
     df = read_parquet_state(spark, path, mergeSchema="true")
-    if df is None or key_col not in df.columns:
-        return None
-    parts = [
-        p for p in batches if fsutil.is_dir(spark, f"{path}/batch_id={p}")
+    if df is not None:
+        schemas[sub] = df.schema
+    return df
+
+
+def _surface_matches(spark, base: str, icol: str, keys: DataFrame,
+                     batches, schemas: dict) -> list:
+    """``[(surface, key col, retraction-key col, rows)]``: each surface's
+    rows matching the retraction keys (``_retraction_probe`` pairs),
+    pruned to ``batches`` plus the ``batch_id=-1`` fold archive by ONE
+    listing per surface (``None``: the keys' admission batches);
+    surfaces with no such partition or key column are left out. The one
+    membership probe behind the takedown scrub, its ``residual``, fsck's
+    ``retraction_residual`` and the audit prune."""
+    from .. import fsutil
+
+    if batches is None:
+        batches = [int(r[0]) for r in keys.select(
+            "admitted_batch_id").distinct().collect()]
+    out = []
+    for sub, key_col, keys_col in _state_surfaces(icol):
+        names = set(fsutil.child_names(spark, f"{base}/{sub}"))
+        # the folded archive may hold any batch's rows
+        parts = [p for p in [*batches, -1] if f"batch_id={p}" in names]
+        if not parts:
+            continue
+        df = _read_surface(spark, base, sub, schemas)
+        if df is None or key_col not in df.columns:
+            continue
+        probe, cond = _retraction_probe(keys, keys_col, key_col)
+        out.append((sub, key_col, keys_col, _with_admitting_batch(
+            df.filter(F.col("batch_id").isin(parts))
+        ).join(F.broadcast(probe), cond, "left_semi").drop("__src")))
+    return out
+
+
+def _live_matches(spark, base: str, icol: str, keys: DataFrame, batches,
+                  schemas: dict) -> dict:
+    """``{surface: {batch_id: matching rows}}`` for every surface in ONE
+    query: branches are projected to ``(surface, batch_id)`` before the
+    union, so digest and id key columns never mix. On takedown-sized keys
+    per-query fixed cost (planning, codegen, JIT) outweighs the scan."""
+    from functools import reduce
+
+    branches = [
+        m.select(F.lit(sub).alias("surface"),
+                 F.col("batch_id").cast("long").alias("batch_id"))
+        for sub, _key, _kc, m in _surface_matches(
+            spark, base, icol, keys, batches, schemas
+        )
     ]
-    if fsutil.is_dir(spark, f"{path}/batch_id=-1"):
-        parts.append(-1)  # folded archive may hold any batch's rows
-    if not parts:
-        return None
-    probe, cond = _retraction_probe(keys, keys_col, key_col)
-    return _with_admitting_batch(
-        df.filter(F.col("batch_id").isin(parts))
-    ).join(F.broadcast(probe), cond, "left_semi").drop("__src")
+    hits: dict = {}
+    if branches:
+        for r in reduce(DataFrame.unionByName, branches).groupBy(
+            "surface", "batch_id"
+        ).count().collect():
+            hits.setdefault(r["surface"], {})[int(r["batch_id"])] = int(
+                r["count"]
+            )
+    return {s: hits[s] for s, _k, _kc in _state_surfaces(icol) if s in hits}
+
+
+def _served(codes: DataFrame, keys: DataFrame) -> DataFrame:
+    """Rows of the served index view ``codes`` whose ``id`` is one of the
+    ``doc_id`` values of ``keys`` (cast to the index id type)."""
+    ids = keys.select(
+        F.col("doc_id").cast(codes.schema["id"].dataType).alias("id")
+    ).distinct()
+    return codes.join(F.broadcast(ids), "id", "left_semi")
 
 
 def retract_documents(
@@ -2468,7 +2519,6 @@ def _retract_documents_body(
     import os
 
     from .. import fsutil, statedir
-    from ..io import read_parquet_state
 
     base = state_dir.rstrip("/")
     tcol, icol = cfg.text_col, cfg.id_col
@@ -2489,7 +2539,6 @@ def _retract_documents_body(
         return out
 
     retr_dir = os.path.join(base, "retracted")
-    corpus_dir = os.path.join(base, "corpus")
     for d in ("ledger", "sigs", "bands", "semvecs", "fps", "corpus",
               "retracted"):
         statedir.recover_replaced_dir(spark, os.path.join(base, d))
@@ -2503,7 +2552,8 @@ def _retract_documents_body(
     # prior (possibly crashed) run of this verb for the same ids — after
     # the corpus scrub the text (and so the digest) is only recoverable
     # from the record, which is why the record is written first
-    corpus = read_parquet_state(spark, corpus_dir, mergeSchema="true")
+    schemas: dict = {}  # verb-local: one schema inference per surface
+    corpus = _read_surface(spark, base, "corpus", schemas)
     found = None
     if corpus is not None and icol in corpus.columns:
         found = corpus.filter(F.col(icol).isin(id_vals)).select(
@@ -2511,7 +2561,7 @@ def _retract_documents_body(
             F.md5(F.col(tcol)).alias("digest"),
             F.col("batch_id").cast("long").alias("admitted_batch_id"),
         ).localCheckpoint()
-    prior = read_parquet_state(spark, retr_dir, mergeSchema="true")
+    prior = _read_surface(spark, base, "retracted", schemas)
     keys = None
     if prior is not None:
         keys = prior.filter(F.col("doc_id").isin(id_vals)).select(
@@ -2533,9 +2583,12 @@ def _retract_documents_body(
     keys = keys.dropDuplicates(
         ["doc_id", "digest", "admitted_batch_id"]
     ).localCheckpoint()
+    # one takedown-sized collect of the (doc, admission batch) pairs:
     # "found" counts DOCS, not key rows — a re-admitted doc carries one
-    # key row per admission batch but is still one takedown subject
-    out["found"] = keys.select("doc_id").distinct().count()
+    # key row per admission batch but is still one takedown subject —
+    # and the admission batches are the candidate partitions below
+    pairs = keys.select("doc_id", "admitted_batch_id").distinct().collect()
+    out["found"] = len({r.doc_id for r in pairs})
     if out["found"] == 0:
         release_local_checkpoint(keys)
         if found is not None:
@@ -2557,63 +2610,50 @@ def _retract_documents_body(
     # every state surface partitions by the admitting ingest batch (or
     # the batch_id=-1 fold archive), and the retraction keys carry each
     # doc's admitted_batch_id — so the scrub is PARTITION-PRUNED end to
-    # end: candidate partitions come from the keys (no scan), the
-    # membership count scans only those partitions, and the rewrite
-    # touches only the partitions that actually hold retracted rows. At
-    # 100 TB a takedown costs the affected partitions, never a corpus
-    # pass. The per-partition swap is statedir.swap_partitions (sidecar
-    # + job-commit marker; heal shared with _ingest_batch's entry).
-    cand_batches = sorted(
-        int(r.admitted_batch_id)
-        for r in keys.select("admitted_batch_id").distinct().collect()
-    )
-
-    def _scrub(sub: str, key_col: str, keys_col: str) -> None:
-        path = os.path.join(base, sub)
-        statedir.recover_partition_swaps(spark, path)
-        matches = _live_matches(spark, base, sub, key_col, keys, keys_col,
-                                cand_batches)
-        if matches is None:
-            return
-        hits = matches.groupBy("batch_id").count().collect()
-        if not hits:
-            return
-        if dry_run:
-            out["scrubbed"][sub] = int(sum(r["count"] for r in hits))
-            return
-        affected = sorted(int(r.batch_id) for r in hits)
-        # the rewrite's anti-join uses the SAME pair condition as the
-        # probe above (_retraction_probe): a bare-key anti-join over the
-        # fold archive would also delete a different doc's legitimately
-        # re-admitted identical content (review-found — see
-        # _retraction_probe)
-        probe, cond = _retraction_probe(keys, keys_col, key_col)
-        drop = F.broadcast(probe)
-
-        def _rewrite(tmp: str) -> None:
-            src = spark.read.option("mergeSchema", "true").parquet(path)
-            _with_admitting_batch(
-                src.filter(F.col("batch_id").isin(affected))
-            ).join(drop, cond, "left_anti").drop("__src").write.mode(
-                "overwrite"
-            ).partitionBy("batch_id").parquet(tmp)
-
-        swapped = statedir.swap_partitions(spark, path, _rewrite,
-                                           lease=lease)
-        # a partition whose every row was retracted yields no replacement
-        # child (partitionBy writes no dir for zero rows) — empty it by
-        # deleting the live child; a crash before these deletes is
-        # completed by re-running the verb (the rows still match)
-        swapped_ids = {int(n.split("=", 1)[1]) for n in swapped}
-        for p in affected:
-            if p not in swapped_ids:
-                fsutil.delete(spark, f"{path}/batch_id={p}")
-        out["scrubbed"][sub] = int(sum(r["count"] for r in hits))
+    # end: candidate partitions come from the keys (no scan), ONE
+    # membership query counts every surface's hits over only those
+    # partitions, and the rewrite touches only the partitions that
+    # actually hold retracted rows. At 100 TB a takedown costs the
+    # affected partitions, never a corpus pass. The per-partition swap is
+    # statedir.swap_partitions (sidecar + job-commit marker; heal shared
+    # with _ingest_batch's entry).
+    cand_batches = sorted({int(r.admitted_batch_id) for r in pairs})
+    hits = _live_matches(spark, base, icol, keys, cand_batches, schemas)
 
     # 2. ledgers first (their keys live in `keys` regardless of corpus
     #    state), the corpus-sized dir last (_state_surfaces order)
     for sub, key_col, keys_col in _state_surfaces(icol):
-        _scrub(sub, key_col, keys_col)
+        if sub not in hits:
+            continue
+        if not dry_run:
+            path = os.path.join(base, sub)
+            affected = sorted(hits[sub])
+            # the rewrite's anti-join uses the SAME pair condition as the
+            # probe (_retraction_probe): a bare-key anti-join over the
+            # fold archive would also delete a different doc's
+            # legitimately re-admitted identical content
+            probe, cond = _retraction_probe(keys, keys_col, key_col)
+            src = _with_admitting_batch(_read_surface(
+                spark, base, sub, schemas
+            ).filter(F.col("batch_id").isin(affected)))
+
+            def _rewrite(tmp: str) -> None:
+                src.join(F.broadcast(probe), cond, "left_anti").drop(
+                    "__src"
+                ).write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
+
+            swapped = statedir.swap_partitions(spark, path, _rewrite,
+                                               lease=lease)
+            # a partition whose every row was retracted yields no
+            # replacement child (partitionBy writes no dir for zero rows)
+            # — empty it by deleting the live child; a crash before these
+            # deletes is completed by re-running the verb (the rows still
+            # match)
+            swapped_ids = {int(n.split("=", 1)[1]) for n in swapped}
+            for p in affected:
+                if p not in swapped_ids:
+                    fsutil.delete(spark, f"{path}/batch_id={p}")
+        out["scrubbed"][sub] = sum(hits[sub].values())
 
     # 3. serving-index tombstone, only for ids the assembled view still
     #    SERVES (live tombstones already hide previously-retracted ids,
@@ -2633,20 +2673,9 @@ def _retract_documents_body(
         # self-acquiring against us.
         ibase = cfg.semdedup_index_path.rstrip("/")
         with statedir.lease_scope(spark, ibase, "retract_documents") as il:
-            idx = load_pq_index(spark, cfg.semdedup_index_path)
-            id_type = idx.codes.schema["id"].dataType
-            present = [
-                r.id
-                for r in idx.codes.join(
-                    F.broadcast(
-                        keys.select(
-                            F.col("doc_id").cast(id_type).alias("id")
-                        ).distinct()
-                    ),
-                    "id",
-                    "left_semi",
-                ).select("id").distinct().collect()
-            ]
+            codes = load_pq_index(spark, cfg.semdedup_index_path).codes
+            present = [r.id for r in _served(codes, keys).select(
+                "id").distinct().collect()]
             if present and dry_run:
                 out["index_tombstone"] = {"would_remove": len(present)}
             elif present:
@@ -2663,15 +2692,11 @@ def _retract_documents_body(
     #    deliberately-retained `retracted/` record and overlap_drops/
     #    audit rows are excluded by design (see docstring).
     if not dry_run:
-        residual: dict = {}
-        for sub, key_col, keys_col in _state_surfaces(icol):
-            matches = _live_matches(spark, base, sub, key_col, keys,
-                                    keys_col, cand_batches)
-            if matches is None:
-                continue
-            n = matches.count()
-            if n:
-                residual[sub] = int(n)
+        residual = {
+            sub: sum(h.values()) for sub, h in _live_matches(
+                spark, base, icol, keys, cand_batches, schemas
+            ).items()
+        }
         if cfg.serve_index_append and cfg.semdedup_index_path:
             # same per-directory lease rationale as the tombstone leg
             # above; the count() materializes inside the scope
@@ -2679,19 +2704,9 @@ def _retract_documents_body(
                 spark, cfg.semdedup_index_path.rstrip("/"),
                 "retract_documents",
             ):
-                idx2 = load_pq_index(spark, cfg.semdedup_index_path)
-                id_type2 = idx2.codes.schema["id"].dataType
-                n = (
-                    idx2.codes.join(
-                        F.broadcast(
-                            keys.select(
-                                F.col("doc_id").cast(id_type2).alias("id")
-                            ).distinct()
-                        ),
-                        "id",
-                        "left_semi",
-                    ).count()
-                )
+                n = _served(load_pq_index(
+                    spark, cfg.semdedup_index_path
+                ).codes, keys).count()
             if n:
                 residual["index"] = int(n)
         out["residual"] = int(sum(residual.values()))
@@ -2880,17 +2895,9 @@ def _prune_ingest_audit_body(
         try:
             incomplete = None  # cand RECORDS whose key is still live
             if cand.count() > 0:
-                batches = sorted(
-                    int(r.admitted_batch_id)
-                    for r in cand.select(
-                        "admitted_batch_id"
-                    ).distinct().collect()
-                )
-                for sub, key_col, keys_col in _state_surfaces(cfg.id_col):
-                    matches = _live_matches(spark, base, sub, key_col,
-                                            cand, keys_col, batches)
-                    if matches is None:
-                        continue
+                for _sub, key_col, keys_col, matches in _surface_matches(
+                    spark, base, cfg.id_col, cand, None, {}
+                ):
                     # key VALUES still live on this surface (small —
                     # bounded by the candidate set), then back to the
                     # candidate RECORDS they retain: a hit on either key
@@ -2932,22 +2939,10 @@ def _prune_ingest_audit_body(
                         codes = load_pq_index(
                             spark, cfg.semdedup_index_path
                         ).codes
-                        id_type = codes.schema["id"].dataType
                         doc_type = cand.schema["doc_id"].dataType
-                        hit_vals = (
-                            codes.join(
-                                F.broadcast(
-                                    cand.select(
-                                        F.col("doc_id").cast(id_type)
-                                        .alias("id")
-                                    ).distinct()
-                                ),
-                                "id", "left_semi",
-                            )
-                            .select(
-                                F.col("id").cast(doc_type).alias("doc_id")
-                            ).distinct()
-                        )
+                        hit_vals = _served(codes, cand).select(
+                            F.col("id").cast(doc_type).alias("doc_id")
+                        ).distinct()
                         hit_recs = cand.join(
                             F.broadcast(hit_vals), "doc_id", "left_semi"
                         ).localCheckpoint()
@@ -3403,9 +3398,10 @@ def _check_ingest_state_body(
     spark: SparkSession, state_dir: str, cfg: CurationConfig, batches,
 ) -> DataFrame:
     import os
+    from functools import reduce
 
-    from .. import fsutil, statedir
-    from ..io import read_parquet_state
+    from .. import statedir
+    from ..io import tiny_df
 
     base = state_dir.rstrip("/")
     icol, tcol = cfg.id_col, cfg.text_col
@@ -3417,8 +3413,12 @@ def _check_ingest_state_body(
     def emit(check, surface, status, n, detail=""):
         rows.append((check, surface, status, int(n), detail))
 
-    def sample(df, col, n=5):
-        vals = [str(r[0]) for r in df.select(col).limit(n).collect()]
+    def sample(df, col, n):
+        """up to 5 keys of a violated check's frame (``n`` rows); a check
+        that holds names none and runs no query for them"""
+        if not n:
+            return ""
+        vals = [str(r[0]) for r in df.select(col).limit(5).collect()]
         return ("sample " + col + ": " + ", ".join(vals)) if vals else ""
 
     def scoped(df):
@@ -3441,9 +3441,8 @@ def _check_ingest_state_body(
         statedir.recover_replaced_dir(spark, os.path.join(base, d))
         statedir.recover_partition_swaps(spark, os.path.join(base, d))
 
-    corpus = read_parquet_state(
-        spark, os.path.join(base, "corpus"), mergeSchema="true"
-    )
+    schemas: dict = {}  # verb-local: one schema inference per surface
+    corpus = _read_surface(spark, base, "corpus", schemas)
     have_corpus = corpus is not None and icol in corpus.columns
     ckeys = None
     if have_corpus:
@@ -3460,9 +3459,7 @@ def _check_ingest_state_body(
         ).localCheckpoint()
 
     # ledger ↔ corpus digest bijection (both directions)
-    led = read_parquet_state(
-        spark, os.path.join(base, "ledger"), mergeSchema="true"
-    )
+    led = _read_surface(spark, base, "ledger", schemas)
     if led is None or ckeys is None:
         why = "no corpus" if ckeys is None else "no ledger"
         emit("ledger_digest_without_corpus_row", "ledger", "skipped", 0, why)
@@ -3474,38 +3471,50 @@ def _check_ingest_state_body(
         )
         n = orphan.count()
         emit("ledger_digest_without_corpus_row", "ledger",
-             "fail" if n else "ok", n, sample(orphan, "digest"))
+             "fail" if n else "ok", n, sample(orphan, "digest", n))
         unled = ckeys.join(led_d, "digest", "left_anti")
         n = unled.count()
         emit("corpus_row_without_ledger_digest", "corpus",
-             "fail" if n else "ok", n, sample(unled, "doc_id"))
+             "fail" if n else "ok", n, sample(unled, "doc_id", n))
 
-    # derived ledgers → corpus: evidence rows for ghosts
+    # derived ledgers → corpus: evidence rows for ghosts, every surface
+    # in ONE query — the (surface, doc_id) union, ids cast to the corpus
+    # doc_id type (the coercion a per-surface join applies), left-anti
+    # joined against the corpus ids and counted per surface
     derived = (("sigs", "id", cfg.neardup_ledger),
                ("bands", "old_id", cfg.neardup_ledger),
                ("semvecs", "old_id", cfg.semantic_ledger),
                ("fps", "old_id", cfg.overlap_ledger))
+    checked, branches = [], []  # checked: (surface, skip reason | None)
     for sub, key, configured in derived:
-        df = read_parquet_state(
-            spark, os.path.join(base, sub), mergeSchema="true"
-        )
+        df = _read_surface(spark, base, sub, schemas)
         if df is None or key not in df.columns or ckeys is None:
             if configured:
-                emit("derived_row_without_corpus_row", sub, "skipped", 0,
-                     "no corpus" if ckeys is None else "surface absent")
+                checked.append(
+                    (sub, "no corpus" if ckeys is None else "surface absent")
+                )
             continue
-        ghost = scoped(df).select(F.col(key).alias("doc_id")).distinct().join(
+        checked.append((sub, None))
+        branches.append(scoped(df).select(
+            F.lit(sub).alias("surface"),
+            F.col(key).cast(ckeys.schema["doc_id"].dataType).alias("doc_id"),
+        ))
+    ghost, ghosts = None, {}
+    if branches:
+        ghost = reduce(DataFrame.unionByName, branches).distinct().join(
             ckeys.select("doc_id").distinct(), "doc_id", "left_anti"
         )
-        n = ghost.count()
-        emit("derived_row_without_corpus_row", sub, "fail" if n else "ok",
-             n, sample(ghost, "doc_id"))
+        ghosts = {r["surface"]: int(r["count"])
+                  for r in ghost.groupBy("surface").count().collect()}
+    for sub, why in checked:  # a skipped surface has no ghost count
+        n = ghosts.get(sub, 0)
+        emit("derived_row_without_corpus_row", sub,
+             "skipped" if why else "fail" if n else "ok", n,
+             why or sample(ghost.filter(F.col("surface") == sub), "doc_id", n))
 
     # one read of the retraction history serves BOTH the still-served
     # index check and the whole-history residual probe below
-    retr = read_parquet_state(
-        spark, os.path.join(base, "retracted"), mergeSchema="true"
-    )
+    retr = _read_surface(spark, base, "retracted", schemas)
 
     # serving-index cross-checks (pipeline-managed index only). These
     # read the INDEX dir's WAL and codes sources, and the state-dir
@@ -3525,9 +3534,7 @@ def _check_ingest_state_body(
 
         ibase = cfg.semdedup_index_path.rstrip("/")
         with statedir.lease_scope(spark, ibase, "check_ingest_state"):
-            mapping = read_parquet_state(
-                spark, os.path.join(base, "idxmap"), mergeSchema="true"
-            )
+            mapping = _read_surface(spark, base, "idxmap", schemas)
             if mapping is None:
                 emit("idxmap_reservation_without_append", "idxmap", "skipped",
                      0, "no idxmap")
@@ -3617,25 +3624,18 @@ def _check_ingest_state_body(
                                " compaction folded (metadata cannot tell"
                                " them apart post-fold)")
                     emit("admitted_doc_not_in_index", "corpus", st, n,
-                         sample(missing, "id") + why)
+                         sample(missing, "id", n) + why)
 
             if retr is None:
                 emit("retracted_doc_still_served", "index", "skipped", 0,
                      "no retractions recorded")
             else:
-                idx = load_pq_index(spark, cfg.semdedup_index_path)
-                id_type = idx.codes.schema["id"].dataType
+                codes = load_pq_index(spark, cfg.semdedup_index_path).codes
+                id_type = codes.schema["id"].dataType
                 rsel = retr if bsel is None else retr.filter(
                     F.col("admitted_batch_id").isin(bsel)
                 )
-                still = idx.codes.join(
-                    F.broadcast(
-                        rsel.select(
-                            F.col("doc_id").cast(id_type).alias("id")
-                        ).distinct()
-                    ),
-                    "id", "left_semi",
-                ).select("id").distinct()
+                still = _served(codes, rsel).select("id").distinct()
                 # a retracted id the CORPUS currently holds under an
                 # admission NO retraction record covers was legitimately
                 # RE-SUBMITTED after its takedown (the documented
@@ -3673,7 +3673,7 @@ def _check_ingest_state_body(
                     still = still.join(fresh, "id", "left_anti")
                 n = still.count()
                 st = "fail" if n else "ok"
-                why = sample(still, "id")
+                why = sample(still, "id", n)
                 if n and bsel is not None:
                     st = "warn"
                     why += ("; batch-scoped — a re-admission outside the "
@@ -3695,34 +3695,21 @@ def _check_ingest_state_body(
         cand = retr if bsel is None else retr.filter(
             F.col("admitted_batch_id").isin(bsel)
         )
-        cand = cand.select(
-            "doc_id", "digest", "admitted_batch_id"
-        ).distinct().localCheckpoint()
-        cand_batches = sorted(
-            int(r.admitted_batch_id)
-            for r in cand.select("admitted_batch_id").distinct().collect()
-        )
-        per_surface = []
-        total = 0
-        for sub, key_col, keys_col in _state_surfaces(icol):
-            matches = _live_matches(spark, base, sub, key_col, cand,
-                                    keys_col, cand_batches)
-            if matches is None:
-                continue
-            n = matches.count()
-            if n:
-                per_surface.append(f"{sub}={n}")
-                total += n
+        residual = {
+            sub: sum(h.values()) for sub, h in _live_matches(
+                spark, base, icol, cand, None, schemas
+            ).items()
+        }
+        total = sum(residual.values())
         emit("retraction_residual", "all", "warn" if total else "ok",
              total,
-             ("; ".join(per_surface) +
+             ("; ".join(f"{sub}={n}" for sub, n in residual.items()) +
               "; incomplete scrub OR a provenance-less legacy archive "
               "row key-matching a re-admission (conservative fallback)")
              if total else "")
-        release_local_checkpoint(cand)
 
     if ckeys is not None:
         release_local_checkpoint(ckeys)
     if not have_corpus:
         emit("corpus", "corpus", "skipped", 0, "corpus absent")
-    return spark.createDataFrame(rows, schema)
+    return tiny_df(spark, rows, schema)

@@ -1087,32 +1087,6 @@ def test_retrain_pq_index_preserves_passed_lease(spark, vecs, tmp_path):
     statedir.acquire_lease(spark, path, owner="next").release()
 
 
-def _count_jobs(spark, fn):
-    """``(fn(), job ids, printable job list)`` for the Spark jobs ``fn``
-    submits from this thread, counted through a StatusTracker job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"job-pin-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    st = sc.statusTracker()
-    ids = sorted(st.getJobIdsForGroup(group))
-    lines = []
-    for j in ids:
-        info = st.getJobInfo(j)
-        stages = [st.getStageInfo(s) for s in (info.stageIds if info else [])]
-        lines.append(f"job {j}: " + "; ".join(
-            s.name for s in stages if s is not None
-        ))
-    return out, ids, "\n".join(lines)
-
-
 @pytest.fixture(scope="module")
 def even_idx(vecs):
     """A residual index over the even ids, built once for the load-memo
@@ -1276,14 +1250,14 @@ def test_load_memo_dies_with_a_stopped_session(spark, even_idx, tmp_path):
 _WARM_REQUEST_JOBS = 7
 
 
-def test_warm_load_job_pins(spark, vecs, even_idx, tmp_path):
+def test_warm_load_job_pins(spark, vecs, even_idx, tmp_path, count_jobs):
     path = str(tmp_path / "pin_idx")
     ann_index.save_pq_index(even_idx, path)
     odd = vecs.filter(F.col("vec_id") % 2 == 1)
     ann_index.append_to_pq_index(spark, path, odd.limit(20))
     ann_index.load_pq_index(spark, path)  # warm the memo
-    loaded, ids, jobs = _count_jobs(
-        spark, lambda: ann_index.load_pq_index(spark, path)
+    loaded, ids, jobs = count_jobs(
+        lambda: ann_index.load_pq_index(spark, path)
     )
     assert not ids, f"warm load of unchanged artifacts ran jobs:\n{jobs}"
     queries = vecs.limit(3)
@@ -1292,7 +1266,7 @@ def test_warm_load_job_pins(spark, vecs, even_idx, tmp_path):
         index = ann_index.load_pq_index(spark, path)
         return ann_index.knn_from_index(index, vecs, queries, k=5).collect()
 
-    rows, ids, jobs = _count_jobs(spark, request)
+    rows, ids, jobs = count_jobs(request)
     assert len(rows) == 15
     assert len(ids) <= _WARM_REQUEST_JOBS, (
         f"request ran {len(ids)} jobs > {_WARM_REQUEST_JOBS}:\n{jobs}"

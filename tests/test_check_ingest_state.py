@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -435,3 +436,137 @@ def test_export_training_corpus_compacts_without_folding_state(
     rep2 = export_training_corpus(spark, state, out, max_files=2)
     assert rep2["rows"] == 8
     assert spark.read.parquet(out).count() == 8
+
+
+#: Spark jobs of one 3-id ``retract_documents`` and of the
+#: ``check_ingest_state(...).collect()`` after it on ``verb_state`` (two
+#: batches, exact + MinHash ledgers): one membership query per step
+#: across all surfaces, one schema inference per surface per call
+_RETRACT_JOBS = 35
+_FSCK_JOBS = 25
+
+
+def _doc(i):
+    # 40 tokens no other doc shares: no exact or near-dup across docs
+    return " ".join(f"tok{i}w{j}" for j in range(40))
+
+
+@pytest.fixture(scope="module")
+def verb_state(spark, tmp_path_factory):
+    """A two-batch ingest state (10 docs each) with the exact digest
+    ledger and the MinHash sigs/bands ledgers."""
+    from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
+        _ingest_batch,
+    )
+
+    state = str(tmp_path_factory.mktemp("verbs") / "state")
+    cfg = CurationConfig(min_quality=0.0, neardup_method="none",
+                         neardup_ledger=True)
+    sch = T.StructType.fromDDL("doc_id long, text string")
+    for b in (0, 1):
+        rows = [{"doc_id": i, "text": _doc(i)}
+                for i in range(10 * b, 10 * b + 10)]
+        assert _ingest_batch(spark, _lines(spark, rows), b, cfg, state,
+                             sch)["admitted"] == 10
+    return state, cfg
+
+
+def test_maintenance_verb_job_pins(spark, verb_state, count_jobs):
+    from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
+        check_ingest_state,
+        retract_documents,
+    )
+
+    state, cfg = verb_state
+    rep, ids, jobs = count_jobs(
+        lambda: retract_documents(spark, state, [3, 7, 15], cfg)
+    )
+    assert rep["found"] == 3 and rep["residual"] == 0
+    assert rep["scrubbed"]["corpus"] == 3
+    assert len(ids) <= _RETRACT_JOBS, (
+        f"retract_documents ran {len(ids)} jobs > {_RETRACT_JOBS}:\n{jobs}"
+    )
+    rows, ids, jobs = count_jobs(
+        lambda: check_ingest_state(spark, state, cfg).collect()
+    )
+    assert {r.status for r in rows} == {"ok"}
+    assert len(ids) <= _FSCK_JOBS, (
+        f"check_ingest_state ran {len(ids)} jobs > {_FSCK_JOBS}:\n{jobs}"
+    )
+
+
+def test_fused_maintenance_queries_attribute_per_surface(spark, tmp_path):
+    # fsck's derived-row check and the takedown's membership probe run one
+    # query across every surface; each finding and each scrub count must
+    # still land on the surface it came from
+    from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
+        _ingest_batch,
+        check_ingest_state,
+        compact_ingest_state,
+        retract_documents,
+    )
+
+    state = str(tmp_path / "state")
+    cfg = CurationConfig(min_quality=0.0, neardup_method="none",
+                         neardup_ledger=True, overlap_ledger=True,
+                         overlap_sample_mod=4)
+    sch = T.StructType.fromDDL("doc_id long, text string")
+    ingest = lambda b, ids: _ingest_batch(  # noqa: E731
+        spark, _lines(spark, [{"doc_id": i, "text": _doc(i)} for i in ids]),
+        b, cfg, state, sch,
+    )
+    ingest(0, [1, 2])
+    # batch 0's ledger rows move to the batch_id=-1 fold archive; the
+    # corpus is never folded and keeps corpus/batch_id=0
+    compact_ingest_state(spark, state, max_files=0)
+    ingest(1, [3, 4])
+
+    # ghosts: doc 3's evidence re-keyed to ids the corpus never held —
+    # two on bands, one on sigs, none on fps
+    def plant(sub, key, ghost_ids):
+        live = spark.read.parquet(f"{state}/{sub}/batch_id=1").filter(
+            F.col(key) == 3
+        )
+        for g in ghost_ids:
+            live.withColumn(key, F.lit(g).cast("long")).write.mode(
+                "append"
+            ).parquet(f"{state}/{sub}/batch_id=1")
+
+    plant("bands", "old_id", [901, 902])
+    plant("sigs", "id", [903])
+    rep = _by_check(check_ingest_state(spark, state, cfg))
+    bands = rep[("derived_row_without_corpus_row", "bands")]
+    sigs = rep[("derived_row_without_corpus_row", "sigs")]
+    assert (bands.status, bands.n) == ("fail", 2)
+    assert "901" in bands.detail and "902" in bands.detail
+    assert "903" not in bands.detail
+    assert (sigs.status, sigs.n) == ("fail", 1)
+    assert "903" in sigs.detail and "901" not in sigs.detail
+    fps = rep[("derived_row_without_corpus_row", "fps")]
+    assert (fps.status, fps.n, fps.detail) == ("ok", 0, "")
+    others = {k: r.status for k, r in rep.items()
+              if k[0] != "derived_row_without_corpus_row"}
+    assert set(others.values()) <= {"ok", "skipped"}, others
+
+    # doc 1 sits live in corpus/batch_id=0 and in the archive of every
+    # ledger: the scrub counts per surface are its rows on each
+    corpus = spark.read.parquet(f"{state}/corpus")
+    digest = corpus.filter(F.col("doc_id") == 1).select(
+        F.md5("text")
+    ).collect()[0][0]
+    want = {}
+    for sub, cond in (("ledger", F.col("digest") == digest),
+                      ("sigs", F.col("id") == 1),
+                      ("bands", F.col("old_id") == 1),
+                      ("fps", F.col("old_id") == 1),
+                      ("corpus", F.col("doc_id") == 1)):
+        parts = {r.batch_id: r["count"] for r in spark.read.parquet(
+            f"{state}/{sub}").filter(cond).groupBy("batch_id").count()
+            .collect()}
+        assert parts == ({0: 1} if sub == "corpus" else
+                         {-1: parts.get(-1)}), (sub, parts)
+        want[sub] = sum(parts.values())
+    out = retract_documents(spark, state, [1], cfg)
+    assert out["found"] == 1
+    assert out["scrubbed"] == want and list(out["scrubbed"]) == list(want)
+    assert out["residual"] == 0 and "residual_by_surface" not in out
