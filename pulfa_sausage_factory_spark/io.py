@@ -116,9 +116,18 @@ def read_parquet_state(
     not per consumer. ``options`` pass through to the reader (the ingest
     ledger reads with ``mergeSchema`` so a half-upgraded dir — some
     partitions carrying a newer column — surfaces the union schema
-    deterministically instead of whichever footer Spark sampled)."""
+    deterministically instead of whichever footer Spark sampled).
+
+    An absent path is checked for first, through the same FileSystem
+    API: Spark's own not-found path logs a WARN with a full
+    ``FileNotFoundException`` stack trace before raising, once per
+    absent state dir — dozens per first micro-batch."""
     from pyspark.errors import AnalysisException
 
+    from . import fsutil
+
+    if not fsutil.exists(spark, path):
+        return None
     try:
         return spark.read.options(**options).parquet(path)
     except AnalysisException as exc:

@@ -170,7 +170,7 @@ def integrity_check(
 
 def anti_join_scan_state(
     batch: DataFrame, state: DataFrame, batch_key: str,
-    state_key: str | None = None,
+    state_key: str | None = None, broadcast: bool = True,
 ) -> DataFrame:
     """Batch rows whose key is NOT in a state table that dwarfs the
     batch — the anti-join shape for "decide a micro-batch against
@@ -191,18 +191,20 @@ def anti_join_scan_state(
 
     Semantically identical to the naive anti-join (a state key matches
     iff it collides with a batch key), with the state side reduced to a
-    shuffle-free column scan. Callers gate on batch size and fall back
-    to the naive join for bulk-backfill batches too large to broadcast
-    (the ingest uses its already-counted ``n_in``)."""
+    shuffle-free column scan. Callers gate on batch size:
+    ``broadcast=False`` keeps the same two joins unhinted for
+    bulk-backfill batches too large to broadcast (the ingest gates on
+    its already-counted ``n_in``)."""
+    hint = F.broadcast if broadcast else (lambda df: df)
     skey = state_key or batch_key
     hits = state.select(F.col(skey).alias(batch_key)).join(
-        F.broadcast(batch.select(batch_key)), batch_key, "left_semi"
+        hint(batch.select(batch_key)), batch_key, "left_semi"
     )
-    return batch.join(F.broadcast(hits), batch_key, "left_anti")
+    return batch.join(hint(hits), batch_key, "left_anti")
 
 
 def inner_join_scan_state(
-    state: DataFrame, small: DataFrame, key: str
+    state: DataFrame, small: DataFrame, key: str, broadcast: bool = True,
 ) -> DataFrame:
     """State ⨝ broadcast(small) with the huge state side streamed, never
     shuffled — the inner-join companion of :func:`anti_join_scan_state`
@@ -210,5 +212,6 @@ def inner_join_scan_state(
     probe, the signature fetch for confirmed candidates): put the
     state table on the streamed side of a BroadcastHashJoin and the
     batch-derived side in the broadcast. Output is bounded by the
-    collision count, not the state size."""
-    return state.join(F.broadcast(small), key)
+    collision count, not the state size. ``broadcast=False``: the plain
+    shuffled join, for a ``small`` side above the caller's gate."""
+    return state.join(F.broadcast(small) if broadcast else small, key)

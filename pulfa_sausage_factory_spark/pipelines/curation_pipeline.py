@@ -22,6 +22,7 @@ at 100 TB swap for reliable ``checkpoint``/parquet stage dirs, exactly as
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,7 +34,7 @@ from ..operators import dedup, relational
 from ..session import release_local_checkpoint
 from ..sinks import layout
 
-#: batch-size cap for the scan-state join flips in _ingest_batch_body
+#: batch-size cap for the scan-state join flips of the ingest dedup legs
 #: (relational.anti_join_scan_state / inner_join_scan_state): the flip
 #: broadcasts batch-derived frames — md5 digests (~32 B/doc) and
 #: (id, band-bucket) pairs (8 × ~24 B/doc) — so 1M docs is ~32 MB and
@@ -55,6 +56,61 @@ _SCAN_STATE_BCAST_MAX_ROWS = 1_000_000
 #: gate would force-broadcast up to 1M dim-sized float arrays (~GBs
 #: hashed) on the semantic leg.
 _SCAN_STATE_BCAST_MAX_UNITS = 8_000_000
+
+
+def _fits_broadcast(rows: int, units: int = 0) -> bool:
+    """The one scan-state gate: may a batch-derived frame of ``rows`` rows
+    and ``units`` payload units be broadcast? Reads the caps at call time,
+    so a monkeypatched cap routes every leg to its plain-join plan."""
+    return (rows <= _SCAN_STATE_BCAST_MAX_ROWS
+            and units <= _SCAN_STATE_BCAST_MAX_UNITS)
+
+
+#: every incremental-ingest state dir under a state dir, one entry each:
+#: ``(dir, the column a takedown matches its rows on — None where
+#: takedowns keep the rows, "id_col" for cfg.id_col — and the
+#: CurationConfig flag that makes the ingest write it, None = always)``.
+#: Ledgers first, the corpus last: the order every verb heals, scrubs,
+#: probes and reports them in.
+STATE_DIRS = (
+    ("ledger", "digest", None),
+    ("sigs", "id", "neardup_ledger"),
+    ("bands", "old_id", "neardup_ledger"),
+    ("semvecs", "old_id", "semantic_ledger"),
+    ("idxmap", None, "serve_index_append"),
+    ("fps", "old_id", "overlap_ledger"),
+    ("retracted", None, None),
+    ("overlap_drops", None, "overlap_drop_audit"),
+    ("corpus", "id_col", None),
+)
+
+#: MinHash signature length and band count of the neardup ledger — with
+#: ``_band_keys``, a persisted format: every later batch probes the
+#: ``bands/`` rows earlier batches wrote
+_NUM_HASHES, _N_BANDS = 32, 8
+
+
+def _band_keys(sig_col):
+    rows_per_band = _NUM_HASHES // _N_BANDS
+    return F.array(*[
+        F.xxhash64(
+            F.lit(b), F.slice(sig_col, b * rows_per_band + 1, rows_per_band)
+        )
+        for b in range(_N_BANDS)
+    ])
+
+
+def _drop_cluster_losers(docs: DataFrame, pairs: DataFrame, icol: str):
+    """``docs`` minus every non-canonical member of the connected
+    components of the ``(id_a, id_b)`` near-dup ``pairs`` — each
+    component's minimum id survives (the within-batch rule of the batch
+    DAG and of every ingest leg)."""
+    losers = (
+        dedup.dedup_clusters(pairs)  # (doc_id, canonical_id) per doc
+        .filter(F.col("doc_id") != F.col("canonical_id"))
+        .select(F.col("doc_id").alias(icol))
+    )
+    return docs.join(losers, icol, "left_anti")
 
 
 @dataclass
@@ -290,6 +346,52 @@ class CurationConfig:
     id_col: str = "doc_id"
     extra_cols: tuple[str, ...] = field(default_factory=tuple)
 
+    def __post_init__(self):
+        """Refuse contradictory ingest knobs when the config is built, not
+        at the first micro-batch."""
+        for bad, msg in (
+            (self.serve_index_append and not self.semantic_ledger,
+             "cfg.serve_index_append needs cfg.semantic_ledger — the "
+             "vectors appended to the serving index ARE the ledger's "
+             "admitted embeddings (derived at the index's dimension and "
+             "family under that ledger's contract)"),
+            (self.index_compact_after_batches
+             and not self.serve_index_append,
+             "cfg.index_compact_after_batches needs "
+             "cfg.serve_index_append — it bounds the log the pipeline's "
+             "own appends grow; compact an externally-managed index with "
+             "ann_index.compact_pq_index directly"),
+            (self.overlap_coarsen_above_rows and not self.overlap_ledger,
+             "cfg.overlap_coarsen_above_rows needs cfg.overlap_ledger — "
+             "it bounds the fps state that ledger grows; coarsen a state "
+             "dir by hand with coarsen_overlap_mod"),
+            (self.overlap_coarsen_above_rows
+             and self.overlap_sample_mod != "auto",
+             "cfg.overlap_coarsen_above_rows needs "
+             "overlap_sample_mod='auto' — after an in-pipeline coarsen "
+             "re-pins the meta, an explicit mod in the config would "
+             "contradict it and every later batch would refuse loudly "
+             "(the meta contract); 'auto' adopts the coarsened value"),
+            (self.overlap_drop_audit and not self.overlap_ledger,
+             "cfg.overlap_drop_audit needs cfg.overlap_ledger — the audit "
+             "records the cross-run overlap leg's drops"),
+            (self.drift_ref_profile is not None and not (
+                isinstance(self.drift_ref_profile, dict)
+                and "columns" in self.drift_ref_profile),
+             "cfg.drift_ref_profile must be a profile_table result dict "
+             "({'rows': n, 'columns': {...}}) — pass "
+             "functions.profiling.profile_table(reference_df), not a "
+             "DataFrame or a path"),
+            (self.semantic_ledger and self.semdedup_index_path is None,
+             "cfg.semantic_ledger needs cfg.semdedup_index_path — "
+             "cross-run semantic dedup requires the SAME trained cells on "
+             "every run, so they must come from a persisted index "
+             "artifact (ann_index.build_pq_index + save_pq_index), not a "
+             "per-batch derivation"),
+        ):
+            if bad:
+                raise ValueError(msg)
+
 
 def _writer_lease(spark, state_dir: str, owner: str, lease=None):
     """Scope helper for the ENFORCED single-writer contract (round-11
@@ -491,13 +593,8 @@ def run_curation(
                 threshold=cfg.neardup_threshold,
                 sigs=dag_sigs, n_rows=prev_rows,
             ).select("id_a", "id_b")
-            losers = (
-                dedup.dedup_clusters(pairs)
-                .filter(F.col("doc_id") != F.col("canonical_id"))
-                .select(F.col("doc_id").alias(icol))
-            )
             cur = stage(
-                "neardup_dedup", cur.join(losers, icol, "left_anti")
+                "neardup_dedup", _drop_cluster_losers(cur, pairs, icol)
             )
         finally:
             release_local_checkpoint(dag_sigs)
@@ -567,12 +664,7 @@ def run_curation(
             f"{cfg.neardup_method!r}"
         )
     if pairs is not None:
-        losers = (
-            dedup.dedup_clusters(pairs)  # (doc_id, canonical_id) per doc
-            .filter(F.col("doc_id") != F.col("canonical_id"))
-            .select(F.col("doc_id").alias(icol))
-        )
-        cur = stage("neardup_dedup", cur.join(losers, icol, "left_anti"))
+        cur = stage("neardup_dedup", _drop_cluster_losers(cur, pairs, icol))
 
     # 5. benchmark decontamination (eval-leakage gate): broadcast bench
     # shingle index, anti-join the contaminated train ids out
@@ -596,7 +688,7 @@ def run_curation(
         # corpus-side Exchange — AQE converts SMJ→BHJ only after both
         # shuffles ran); above it (adversarial everything-contaminated
         # regimes) the plain shuffled anti-join stands
-        if prev_rows <= _SCAN_STATE_BCAST_MAX_ROWS:
+        if _fits_broadcast(prev_rows):
             dirty = F.broadcast(dirty)
         cur = stage("decontaminate", cur.join(dirty, icol, "left_anti"))
 
@@ -868,8 +960,6 @@ def run_incremental_curation(
     column) instead of killing the stream. Returns a run report:
     per-batch admitted/dropped counts plus totals.
     """
-    import os
-
     from pyspark.sql import types as T
 
     sch = T.StructType.fromDDL(schema)
@@ -957,14 +1047,6 @@ def _load_semantic_centroids(spark: SparkSession, cfg: CurationConfig):
     re-reading parquet. None when the semantic ledger is off."""
     if not cfg.semantic_ledger:
         return None
-    if cfg.semdedup_index_path is None:
-        raise ValueError(
-            "cfg.semantic_ledger needs cfg.semdedup_index_path — cross-run "
-            "semantic dedup requires the SAME trained cells on every run, "
-            "so they must come from a persisted index artifact "
-            "(ann_index.build_pq_index + save_pq_index), not a per-batch "
-            "derivation"
-        )
     from ..operators.ann_index import load_pq_index
 
     idx = load_pq_index(spark, cfg.semdedup_index_path)
@@ -1004,18 +1086,22 @@ def _read_state(spark: SparkSession, path: str, exclude_batch: int):
     df = read_parquet_state(spark, path, mergeSchema="true")
     if df is None:
         return None
-    if "src_batch_id" in df.columns:
-        # coalesce, not bare src_batch_id: in a HALF-upgraded dir (old
-        # partitions without the column alongside new ones) the old
-        # files read as NULL src_batch_id, and `NULL != N` is NULL — a
-        # bare filter would silently DROP every pre-upgrade state row
-        # from the prior and re-admit its duplicates. Falling back to
-        # the partition id per-row keeps exactly the old semantics for
-        # exactly the old rows.
-        key = F.coalesce(F.col("src_batch_id"), F.col("batch_id"))
-    else:
-        key = F.col("batch_id")
-    return df.filter(key != exclude_batch).drop("batch_id", "src_batch_id")
+    return df.filter(_batch_of(df) != exclude_batch).drop(
+        "batch_id", "src_batch_id"
+    )
+
+
+def _batch_of(df: DataFrame, col: str = "src_batch_id"):
+    """The batch each state row belongs to: its provenance data column
+    ``col`` where present, else the hive partition value. Coalesce, not
+    the bare column: in a HALF-upgraded dir (old partitions without the
+    column alongside new ones) the old files read as NULL, and
+    ``NULL != N`` is NULL — a bare filter would silently DROP every
+    pre-upgrade row. Falling back to the partition id per row keeps
+    exactly the old semantics for exactly the old rows."""
+    if col not in df.columns:
+        return F.col("batch_id")
+    return F.coalesce(F.col(col), F.col("batch_id"))
 
 
 def _resolve_overlap_mod(spark: SparkSession, fps_dir: str, cfg) -> int:
@@ -1133,109 +1219,27 @@ def _ingest_batch(
     ledger; the direct-call (replay-test) path loads it on demand.
     ``lease``: the run-scoped writer lease (renewed per batch); the
     direct-call path acquires one transiently — see ``_writer_lease``."""
-    import os
-
     from pyspark.sql import types as T
 
+    from .. import statedir
     from ..sources.jsonl import CORRUPT_COL
 
-    if cfg.serve_index_append and not cfg.semantic_ledger:
-        raise ValueError(
-            "cfg.serve_index_append needs cfg.semantic_ledger — the "
-            "vectors appended to the serving index ARE the ledger's "
-            "admitted embeddings (derived at the index's dimension and "
-            "family under that ledger's contract)"
-        )
-    if cfg.index_compact_after_batches and not cfg.serve_index_append:
-        raise ValueError(
-            "cfg.index_compact_after_batches needs cfg.serve_index_append "
-            "— it bounds the log the pipeline's own appends grow; compact "
-            "an externally-managed index with ann_index.compact_pq_index "
-            "directly"
-        )
-    if cfg.overlap_coarsen_above_rows and not cfg.overlap_ledger:
-        raise ValueError(
-            "cfg.overlap_coarsen_above_rows needs cfg.overlap_ledger — "
-            "it bounds the fps state that ledger grows; coarsen a state "
-            "dir by hand with coarsen_overlap_mod"
-        )
-    if cfg.overlap_coarsen_above_rows and cfg.overlap_sample_mod != "auto":
-        raise ValueError(
-            "cfg.overlap_coarsen_above_rows needs "
-            "overlap_sample_mod='auto' — after an in-pipeline coarsen "
-            "re-pins the meta, an explicit mod in the config would "
-            "contradict it and every later batch would refuse loudly "
-            "(the meta contract); 'auto' adopts the coarsened value"
-        )
-    if cfg.overlap_drop_audit and not cfg.overlap_ledger:
-        raise ValueError(
-            "cfg.overlap_drop_audit needs cfg.overlap_ledger — the audit "
-            "records the cross-run overlap leg's drops"
-        )
-    if cfg.drift_ref_profile is not None and not (
-        isinstance(cfg.drift_ref_profile, dict)
-        and "columns" in cfg.drift_ref_profile
-    ):
-        raise ValueError(
-            "cfg.drift_ref_profile must be a profile_table result dict "
-            "({'rows': n, 'columns': {...}}) — pass "
-            "functions.profiling.profile_table(reference_df), not a "
-            "DataFrame or a path"
-        )
     if cfg.semantic_ledger and sem_centroids is None:
         sem_centroids = _load_semantic_centroids(spark, cfg)
     full = T.StructType(
         list(sch.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
     )
-    tcol, icol = cfg.text_col, cfg.id_col
-    ledger_dir = os.path.join(state_dir, "ledger")
-    corpus_dir = os.path.join(state_dir, "corpus")
-    sigs_dir = os.path.join(state_dir, "sigs")
-    bands_dir = os.path.join(state_dir, "bands")
-    semvecs_dir = os.path.join(state_dir, "semvecs")
-    idxmap_dir = os.path.join(state_dir, "idxmap")
-    fps_dir = os.path.join(state_dir, "fps")
-    retracted_dir = os.path.join(state_dir, "retracted")
-    overlap_drops_dir = os.path.join(state_dir, "overlap_drops")
-    # heal a killed compaction swap BEFORE any state read: a crash between
-    # replace_dir's two renames leaves the dir absent with `.__old__`
-    # holding the only copy, and an unhealed _read_state would see "no
-    # state" and silently re-admit everything the ledger ever recorded.
-    # A dozen existence checks — cheap enough to run unconditionally, and
-    # mandatory once cfg.ingest_compact_max_files folds mid-run. The
-    # corpus and retracted dirs heal here too since retract_documents
-    # rewrites them through the same swap.
-    from .. import statedir
-
     with _writer_lease(spark, state_dir, f"ingest_batch={batch_id}",
                        lease=lease):
-        for d in (ledger_dir, sigs_dir, bands_dir, semvecs_dir, idxmap_dir,
-                  fps_dir, corpus_dir, retracted_dir, overlap_drops_dir):
-            statedir.recover_replaced_dir(spark, d)
-            # ...and complete a killed retraction's partition swaps (round
-            # 11): a committed .__partswap__ sidecar holds replacement
-            # children awaiting their rename — adopting them finishes the
-            # scrub; a marker-less one is a killed write, discarded (the
-            # verb re-runs). Without this, a crash mid-retraction would
-            # leave the sidecar pinned forever.
-            statedir.recover_partition_swaps(spark, d)
-        num_hashes, n_bands = 32, 8
-        rows_per_band = num_hashes // n_bands
-
-        def _band_keys(sig_col):
-            return F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        F.slice(sig_col, b * rows_per_band + 1, rows_per_band),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-
-        def _part(d: str) -> str:
-            return os.path.join(d, f"batch_id={batch_id}")
-
+        # heal a killed compaction swap or retraction BEFORE any state
+        # read: a crash between replace_dir's two renames leaves the dir
+        # absent with `.__old__` holding the only copy, and an unhealed
+        # _read_state would see "no state" and silently re-admit
+        # everything the ledger ever recorded. A dozen existence checks —
+        # cheap enough to run unconditionally, and mandatory once
+        # cfg.ingest_compact_max_files folds mid-run.
+        for sub, *_ in STATE_DIRS:
+            statedir.heal_dir(spark, os.path.join(state_dir, sub))
         # re-spread the micro-batch BEFORE the persist (round 14, guide
         # §2.4): the file source bin-packs a batch's JSONL shards into a
         # handful of partitions (8 for a 100k-doc batch here — measured as
@@ -1260,27 +1264,67 @@ def _ingest_batch(
         # not pin the block until session GC)
         try:
             return _ingest_batch_body(
-                spark, parsed, batch_id, cfg, sch,
-                ledger_dir, corpus_dir, sigs_dir, bands_dir,
-                _band_keys, _part, num_hashes,
-                semvecs_dir, sem_centroids, idxmap_dir, fps_dir,
-                retracted_dir, overlap_drops_dir, n_bands=n_bands,
+                _Batch(spark, cfg, batch_id, state_dir, sem_centroids),
+                parsed, sch,
             )
         finally:
             parsed.unpersist()
 
 
-def _ingest_batch_body(
-    spark, parsed, batch_id, cfg, sch,
-    ledger_dir, corpus_dir, sigs_dir, bands_dir,
-    _band_keys, _part, num_hashes,
-    semvecs_dir=None, sem_centroids=None, idxmap_dir=None, fps_dir=None,
-    retracted_dir=None, overlap_drops_dir=None, n_bands=8,
-) -> dict:
-    import os
+@dataclass
+class _Batch:
+    """What the dedup legs of one ingest micro-batch share. Each leg
+    (``_exact_leg``, ``_neardup_leg``, ``_overlap_leg``, ``_semantic_leg``)
+    takes the batch's surviving docs and returns the survivors of its own
+    within-batch step and cross-run probe, carrying forward the columns
+    its state writes need; it queues those writes in ``writes`` and the
+    frames it cached in ``held``; ``_ingest_batch_body`` runs the writes and
+    releases the frames after the admitted set materializes."""
 
+    spark: SparkSession
+    cfg: CurationConfig
+    batch_id: int
+    base: str  # the state dir
+    sem_centroids: DataFrame | None
+    n_in: int = 0  # post-guard input docs, set once counted
+    held: list = field(default_factory=list)
+    writes: list = field(default_factory=list)  # (surface, fn(admitted))
+    report: dict = field(default_factory=dict)  # legs' batch-report keys
+
+    def path(self, sub: str) -> str:
+        return os.path.join(self.base, sub)
+
+    def part(self, sub: str) -> str:
+        """This batch's own partition dir of state surface ``sub``."""
+        return os.path.join(self.path(sub), f"batch_id={self.batch_id}")
+
+    def state(self, sub: str):
+        """Surface ``sub`` as of before this batch (``_read_state``)."""
+        return _read_state(self.spark, self.path(sub), self.batch_id)
+
+    def hold(self, df: DataFrame) -> DataFrame:
+        """Register a cached frame for release once the batch is written."""
+        self.held.append(df)
+        return df
+
+    def write(self, surface: str, rows) -> None:
+        """Queue ``rows(admitted)`` for this batch's partition of
+        ``surface``, stamped with the producing batch as the
+        ``src_batch_id`` data column (round 9): the partition dir alone
+        loses provenance once compact_ingest_state folds it into the
+        batch_id=-1 archive, and _read_state's own-batch exclusion — the
+        replay-safety mechanism — keys on this column."""
+        src = F.lit(int(self.batch_id)).cast("long").alias("src_batch_id")
+        self.writes.append((surface, lambda admitted: rows(
+            admitted, src
+        ).write.mode("overwrite").parquet(self.part(surface))))
+
+
+def _ingest_batch_body(ctx: _Batch, parsed, sch) -> dict:
+    from ..io import read_parquet_state
     from ..sources.jsonl import CORRUPT_COL
 
+    spark, cfg, batch_id = ctx.spark, ctx.cfg, ctx.batch_id
     tcol, icol = cfg.text_col, cfg.id_col
     n_corrupt = parsed.filter(
         F.col("j").getField(CORRUPT_COL).isNotNull()
@@ -1305,26 +1349,20 @@ def _ingest_batch_body(
     # input vs stage_rows/admitted never reconciled on exactly the
     # replayed batches the guard exists for).
     pre_guard = None
-    if retracted_dir is None and fps_dir is not None:
-        retracted_dir = os.path.join(os.path.dirname(fps_dir), "retracted")
-    if retracted_dir is not None:
-        from ..io import read_parquet_state
-
-        retr = read_parquet_state(spark, retracted_dir, mergeSchema="true")
-        if retr is not None:
-            guard = (
-                retr.filter(F.col("admitted_batch_id") == batch_id)
-                .select(F.col("doc_id").alias(icol)).distinct()
-            )
-            # isEmpty (limit-1 over the takedown-sized frame) gates the
-            # reconciliation counts — the common case (a state dir with
-            # retraction history but none for THIS batch id) pays one
-            # cheap probe job, not two full counts, per micro-batch
-            if not guard.isEmpty():
-                pre_guard = docs.count()
-                docs = docs.join(F.broadcast(guard), icol, "left_anti")
-    n_in = docs.count()
-    retraction_excluded = (pre_guard - n_in) if pre_guard is not None else 0
+    retr = read_parquet_state(spark, ctx.path("retracted"), mergeSchema="true")
+    if retr is not None:
+        guard = (
+            retr.filter(F.col("admitted_batch_id") == batch_id)
+            .select(F.col("doc_id").alias(icol)).distinct()
+        )
+        # isEmpty (limit-1 over the takedown-sized frame) gates the
+        # reconciliation counts — the common case (a state dir with
+        # retraction history but none for THIS batch id) pays one
+        # cheap probe job, not two full counts, per micro-batch
+        if not guard.isEmpty():
+            pre_guard = docs.count()
+            docs = docs.join(F.broadcast(guard), icol, "left_anti")
+    n_in = ctx.n_in = docs.count()
 
     # opt-in input drift monitoring (round 12): profile the PARSED batch
     # (pre-clean, pre-gate — the question is "did my INPUT move", and the
@@ -1378,464 +1416,38 @@ def _ingest_batch_body(
     # digest/signature decisions must match run_curation on identical
     # documents, and the corpus must never admit unredacted PII through
     # the incremental path
-    docs = _clean_docs(cfg, docs)
-    gated = _st("gate", docs.filter(_gate_condition(cfg, tcol)))
-    # within-batch exact dedup, then cross-batch/run dedup against the
-    # ledger (anti-join on digests — text never reshuffles)
-    batch_d = dedup.exact_dedup(gated, tcol, icol).withColumn(
-        "_digest", F.md5(F.col(tcol))
-    )
-    seen = _read_state(spark, ledger_dir, batch_id)
-    if seen is not None:
-        if n_in <= _SCAN_STATE_BCAST_MAX_ROWS:
-            # 100 TB shape (round 12): the naive batch ⟕anti ledger
-            # plans a SortMergeJoin that SHUFFLES every ledger digest
-            # per micro-batch — the dominant recurring cost once the
-            # ledger dwarfs the batch, and unfixable by Spark alone
-            # (the LEFT side of an anti-join is not broadcastable).
-            # anti_join_scan_state flips it: the ledger is SCANNED
-            # against the broadcast batch digests, and only the
-            # at-most-batch-sized collisions broadcast back.
-            batch_d = relational.anti_join_scan_state(
-                batch_d, seen, "_digest", "digest"
-            )
-        else:
-            # bulk-backfill batch above the broadcast cap: the plain
-            # anti-join is correct, just the old shuffle cost
-            batch_d = batch_d.join(
-                seen.select("digest").withColumnRenamed(
-                    "digest", "_digest"
-                ),
-                "_digest",
-                "left_anti",
-            )
-    batch_d = _st("exact_dedup", batch_d)
-    # truncate the admission lineage once the exact leg is decided
-    # (round 15, VERDICT item 4): every downstream consumer — the
-    # signature persist, the winnow checkpoint, each scan-state leg's
-    # broadcast build of a batch-derived frame, and the admitted
-    # checkpoint — re-executed clean → gate → window-dedup →
-    # ledger-anti-join from the parsed persist (~6 re-executions per
-    # batch, each an AQE multi-job cascade: measured 15.2 → 9.6 s on
-    # a 200-doc batch with both ledgers on). One checkpoint of the
-    # micro-batch (bounded by the batch contract) makes them all
-    # block reads; released in the end-of-batch finally.
-    batch_d = batch_d.localCheckpoint()
-    exact_ckpt = batch_d
-    sigs_b = None  # released in the end-of-batch finally
-    if cfg.neardup_ledger:
-        # ONE signature pass per batch (round 14, guide §4): the
-        # within-batch pair generation AND the cross-run leg / sigs-
-        # ledger write used to each run the signature UDF over the
-        # batch text — compute the cached signature frame once, feed
-        # it to minhash_lsh_pairs, and attach ``_sig`` by a left join
-        # (null for docs too short to sign, exactly the old
-        # withColumn semantics). The attach keys on ``_digest``, not
-        # the doc id (round-14 ADVICE): nothing upstream enforces
-        # id-uniqueness within a batch — duplicate ids with DIFFERING
-        # text both survive the digest-keyed exact dedup, and an
-        # id-keyed join would fan their rows out — while the digest
-        # IS unique post-exact-dedup, and the signature is a pure
-        # function of the text the digest hashes, so the digest-keyed
-        # attach reproduces the per-row withColumn exactly.
-        sigs_b = dedup.minhash_signatures(
-            batch_d, text_col=tcol, id_col=icol, num_hashes=num_hashes,
-            carry=("_digest",),
-            # micro-batches are small and latency-sensitive: one Arrow
-            # batch beats the under-partitioned-input re-spread's shuffle
-            # + 32-task fan-out (the guard would fire on every trigger)
-            spread=False,
-        )
-        # within-batch near-dups first — the SAME connected-components
-        # canonical rule as the batch DAG (per-pair greatest-id removal
-        # would admit a different survivor set from identical input:
-        # pairs (1,3),(2,3) keep {1,2} pairwise but only {1} as one
-        # component)
-        pairs = dedup.minhash_lsh_pairs(
-            batch_d, text_col=tcol, id_col=icol,
-            threshold=cfg.neardup_threshold,
-            spread=False, sigs=sigs_b,
-        ).select("id_a", "id_b")
-        losers = (
-            dedup.dedup_clusters(pairs)
-            .filter(F.col("doc_id") != F.col("canonical_id"))
-            .select(F.col("doc_id").alias(icol))
-        )
-        survivors = batch_d.join(losers, icol, "left_anti")
-        batch_d = survivors.join(
-            # dropDuplicates is belt-and-braces (digests are unique
-            # post-exact-dedup) and value-deterministic either way:
-            # equal digests hash equal text, which signs identically
-            sigs_b.select(
-                "_digest", F.col("sig").alias("_sig")
-            ).dropDuplicates(["_digest"]),
-            "_digest", "left",
-            # re-project to the pre-join column order: a USING join
-            # moves the key first, and the corpus/ledger writes below
-            # keep a stable cross-batch parquet layout
-        ).select(*survivors.columns, "_sig")
-        # ... then cross-batch/run: band-bucket candidates vs the
-        # ledger, confirmed by signature-agreement est-Jaccard
-        old_bands = _read_state(spark, bands_dir, batch_id)
-        old_sigs = _read_state(spark, sigs_dir, batch_id)
-        if old_bands is not None and old_sigs is not None:
-            if (n_in <= _SCAN_STATE_BCAST_MAX_ROWS
-                    and n_in * n_bands <= _SCAN_STATE_BCAST_MAX_UNITS):
-                # same 100 TB flip as the exact leg: bands/ and sigs/
-                # grow with the corpus, and the plain equi-joins would
-                # shuffle BOTH full tables per micro-batch. Scan bands
-                # against the broadcast (id, bucket) pairs (payload =
-                # n_in × n_bands units — the gate above counts it),
-                # shrink to the collision set, then scan sigs against
-                # the broadcast DISTINCT colliding old ids — never the
-                # batch signatures themselves (num_hashes-int arrays ×
-                # collision count would be the one unbounded broadcast
-                # in the leg); the batch _sig attaches AFTERWARDS via a
-                # plain join of two collision-bounded frames AQE sizes
-                # itself. Both state tables stream; output is bounded
-                # by the collision count, never state size.
-                bk = batch_d.filter(F.col("_sig").isNotNull()).select(
-                    icol, F.explode(_band_keys("_sig")).alias("bucket")
-                )
-                cand_ids = relational.inner_join_scan_state(
-                    old_bands, bk, "bucket"
-                ).select(icol, "old_id").distinct()
-                old_hit = relational.inner_join_scan_state(
-                    old_sigs.withColumnRenamed("id", "old_id"),
-                    cand_ids.select("old_id").distinct(), "old_id",
-                )
-                cand = (
-                    batch_d.filter(F.col("_sig").isNotNull())
-                    .select(icol, "_sig")
-                    .join(cand_ids, icol)
-                    .join(old_hit, "old_id")
-                )
-            else:
-                cand = (
-                    batch_d.filter(F.col("_sig").isNotNull())
-                    .select(icol, "_sig",
-                            F.explode(_band_keys("_sig")).alias("bucket"))
-                    .join(old_bands, "bucket")
-                    .select(icol, "_sig", F.col("old_id"))
-                    .distinct()
-                    .join(old_sigs.withColumnRenamed("id", "old_id"),
-                          "old_id")
-                )
-            est = F.size(
-                F.filter(
-                    F.zip_with(
-                        F.col("_sig"), F.col("old_sig"),
-                        lambda x, y: (x == y).cast("int"),
-                    ),
-                    lambda v: v == 1,
-                )
-            ).cast("double") / F.lit(float(num_hashes))
-            near = (
-                cand.filter(est >= F.lit(cfg.neardup_threshold))
-                .select(icol)
-                .distinct()
-            )
-            batch_d = batch_d.join(near, icol, "left_anti")
-        batch_d = _st("neardup_dedup", batch_d)
-    fps_ckpt = None
-    n_overlap_drop_pairs = 0 if cfg.overlap_drop_audit else None
-    if cfg.overlap_ledger:
-        # substring-overlap dedup (winnowed fingerprints — see the config
-        # docstring): within-batch first via the SAME connected-components
-        # canonical rule as the MinHash leg, then cross-batch/run against
-        # the admitted-fingerprint ledger. Boilerplate fps (present in
-        # more than overlap_fp_df_cap docs) are excluded on both sides —
-        # they are not copying evidence and they are exactly the viral
-        # keys that would blow up the equi-join fan-out.
-        overlap_mod = _resolve_overlap_mod(spark, fps_dir, cfg)
-        bfps = text.winnow_fingerprints_df(
-            batch_d, text_col=tcol, id_col=icol,
-            k=cfg.overlap_k, w=cfg.overlap_w, impl=cfg.overlap_impl,
-        ).filter(
-            F.col("fp") % overlap_mod == 0
-        ).localCheckpoint()  # winnowing is window-heavy; 4 consumers below
-        fps_ckpt = bfps
-        ok = bfps.join(
-            bfps.groupBy("fp").agg(F.countDistinct(icol).alias("_df"))
-            .filter(F.col("_df") <= cfg.overlap_fp_df_cap).select("fp"),
-            "fp", "left_semi",
-        )
-        pairs = (
-            ok.select(F.col(icol).alias("id_a"), "fp")
-            .join(ok.select(F.col(icol).alias("id_b"), "fp"), "fp")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.countDistinct("fp").alias("_sh"))
-            .filter(F.col("_sh") >= cfg.overlap_min_shared)
-            .select("id_a", "id_b")
-        )
-        losers = (
-            dedup.dedup_clusters(pairs)
-            .filter(F.col("doc_id") != F.col("canonical_id"))
-            .select(F.col("doc_id").alias(icol))
-        )
-        batch_d = batch_d.join(losers, icol, "left_anti")
-        old_fps = _read_state(spark, fps_dir, batch_id)
-        if old_fps is not None:
-            # batch side of the cross-run comparison: this batch's
-            # surviving docs' df-CAPPED fps — capping the batch side too
-            # is symmetric with the within-batch leg (round-10 VERDICT
-            # item 3): a fingerprint viral WITHIN the landing batch (new
-            # boilerplate — a header pasted into thousands of docs in one
-            # drop) is not copying evidence either, and uncapped it would
-            # fan out up to batch_occurrences × overlap_fp_df_cap rows in
-            # the join before the fp ever reaches state.
-            bshared = ok.join(batch_d.select(icol), icol, "left_semi")
-            # the flip broadcasts the batch's distinct sampled fps —
-            # fps/doc has no static bound (text length ÷ mod), so the
-            # gate measures the checkpointed fps frame (a near-free
-            # count off cached blocks) instead of trusting n_in alone
-            n_bfps = bfps.count()
-            # 100 TB shape (rounds 13-14): fps/ grows with the corpus,
-            # and the pre-r13 code shuffled the ENTIRE state per
-            # micro-batch TWICE — once for the df-cap groupBy, once for
-            # the cross-run equi-join. Both paths now share ONE body:
-            # restrict state to batch-colliding fps FIRST, then compute
-            # the df-cap as a window over the deduped collision remnant.
-            # The semi-restrict keeps EVERY state row of each colliding
-            # fp, so the per-fp distinct-doc count over the remnant
-            # equals the full-state df for exactly the fps that can
-            # reach `shared` — the cap decision is unchanged (the
-            # round-13 argument, which never depended on the join
-            # strategy). The paths differ ONLY in how the restrict
-            # joins: under the gate the state SCANS beneath a
-            # BroadcastHashJoin of the batch's distinct sampled fps;
-            # above it (bulk backfill) a plain shuffled join — the one
-            # state shuffle the main comparison needs anyway. Round 14
-            # (VERDICT item 3): this removes the fallback's full-state
-            # df groupBy entirely — a persisted per-fp df sidecar was
-            # considered and rejected: it could only replace the
-            # groupBy, not the main join's state shuffle, so it saves
-            # no I/O the window-over-remnant doesn't, while adding a
-            # whole state surface (write/fold/replay/retract/fsck).
-            bkeys = bshared.select("fp").distinct()
-            if (n_in <= _SCAN_STATE_BCAST_MAX_ROWS
-                    and n_bfps <= _SCAN_STATE_BCAST_MAX_UNITS):
-                hit = relational.inner_join_scan_state(
-                    old_fps, bkeys, "fp"
-                )
-            else:
-                hit = old_fps.join(bkeys, "fp")
-            # ONE shuffle of the remnant, not two: repartition by fp
-            # FIRST — HashPartitioning(fp) satisfies the dedup
-            # aggregate's ClusteredDistribution([fp, old_id]) (fp is
-            # a subset of the keys) AND the window's
-            # ClusteredDistribution([fp]), so a bare .distinct()
-            # (exchange on (fp, old_id)) followed by the window
-            # (exchange on fp) would shuffle the collision remnant
-            # twice in the adversarial every-doc-collides regime
-            old_ok = (
-                hit.select("fp", "old_id")
-                .repartition("fp")
-                .dropDuplicates(["fp", "old_id"])
-                .withColumn(
-                    "_df",
-                    F.count("old_id").over(Window.partitionBy("fp")),
-                )
-                .filter(F.col("_df") <= cfg.overlap_fp_df_cap)
-                .drop("_df")
-            )
-            # >= min_shared sampled fps with ANY SINGLE admitted doc — a
-            # doc sharing one fp each with many docs is not a copy.
-            shared = (
-                bshared
-                .join(old_ok, "fp")
-                .groupBy(icol, "old_id")
-                .agg(F.countDistinct("fp").alias("_sh"))
-            )
-            thr = F.lit(cfg.overlap_min_shared)
-            if cfg.overlap_short_doc_frac is not None:
-                # adaptive short-doc floor (see the config docstring):
-                # per-doc threshold = min(absolute, max(2, ceil(f·own)))
-                # where own counts the doc's non-boilerplate sampled fps
-                # — the same capped population _sh is counted over, so
-                # the fraction is a true share of the doc's evidence
-                own = ok.groupBy(icol).agg(
-                    F.countDistinct("fp").alias("_own")
-                )
-                shared = shared.join(own, icol)
-                thr = F.least(
-                    thr,
-                    F.greatest(
-                        F.lit(2),
-                        F.ceil(
-                            F.lit(float(cfg.overlap_short_doc_frac))
-                            * F.col("_own")
-                        ).cast("int"),
-                    ),
-                )
-            dropped = shared.filter(F.col("_sh") >= thr)
-            if cfg.overlap_drop_audit:
-                # land the audit rows FIRST, then derive the drop set
-                # from what landed — the audit provably matches the
-                # decision, and a replayed batch overwrites its own
-                # partition with identical rows (see the config docstring)
-                if overlap_drops_dir is None:
-                    overlap_drops_dir = os.path.join(
-                        os.path.dirname(fps_dir), "overlap_drops"
-                    )
-                dropped.select(
-                    F.col(icol),
-                    F.col("old_id"),
-                    F.col("_sh").alias("shared_fps"),
-                    thr.cast("int").alias("threshold"),
-                ).withColumn(
-                    "src_batch_id", F.lit(int(batch_id)).cast("long")
-                ).write.mode("overwrite").parquet(_part(overlap_drops_dir))
-                audit = spark.read.parquet(_part(overlap_drops_dir))
-                n_overlap_drop_pairs = audit.count()
-                over = audit.select(icol).distinct()
-            else:
-                over = dropped.select(icol).distinct()
-            batch_d = batch_d.join(over, icol, "left_anti")
-        batch_d = _st("overlap_dedup", batch_d)
-        # survivors' fingerprints ride to _write_admitted as an array
-        # column (short docs produce none → null, explode drops them)
-        batch_d = batch_d.join(
-            bfps.groupBy(icol).agg(F.collect_list("fp").alias("_fps")),
-            icol, "left",
-        )
-    if cfg.semantic_ledger:
-        # SemDeDup's cosine rule across batches AND runs (the semantic
-        # analog of the MinHash leg above, same ordering: within-batch
-        # first — the batch DAG's keep-one-representative rule — then
-        # cross-batch against admitted state). Embeddings are derived
-        # in-engine (hashed_text_embedding at the centroids' dimension),
-        # so the ledger is self-contained; state rows are
-        # (cell_id, old_id, old_vec) and the cross-run comparison is an
-        # equi-join on cell_id — within-cell work only, bounded by the
-        # index's cell sizing (√n cells at the auto config), never a
-        # scan of all admitted vectors.
-        from ..functions.vectors import cosine, hashed_text_embedding
-        from ..operators.similarity import (
-            _assign_cells,
-            _small_rows,
-            semdedup,
-        )
-
-        # dim via the _small_rows memo (round 15): sem_centroids is
-        # ONE run-scoped checkpointed handle, so the first batch pays
-        # one collect and every later batch reads the memo — the old
-        # limit(1).collect() was a fresh job per micro-batch
-        dim = len(_small_rows(sem_centroids)[0].cent)
-        # truncate the lineage the semantic leg's several actions
-        # (embed checkpoint, verdicts, cell assignment, cross-run
-        # broadcast builds) would otherwise re-execute — by here
-        # batch_d carries the minhash and overlap legs' joins on top
-        # of the exact-leg checkpoint (round 15; same rationale).
-        # Skipped when no other ledger ran: batch_d IS the exact-leg
-        # checkpoint then, and a second checkpoint buys nothing.
-        sem_in_ckpt = None
-        if cfg.neardup_ledger or cfg.overlap_ledger:
-            batch_d = batch_d.localCheckpoint()
-            sem_in_ckpt = batch_d
-        emb = batch_d.select(
-            F.col(icol).alias("vec_id"),
-            hashed_text_embedding(F.col(tcol), dim=dim).alias("embedding"),
-        ).localCheckpoint()  # feeds the verdict AND the assignment below
-        verd = semdedup(
-            emb, centroids=sem_centroids,
-            threshold=cfg.semdedup_threshold, impl=cfg.semdedup_impl,
-        )
-        batch_d = batch_d.join(
-            verd.filter(F.col("removed")).select(F.col("id").alias(icol)),
-            icol, "left_anti",
-        )
-        # survivors' cells + vectors: reused for the cross-run check and
-        # persisted for future batches by _write_admitted — checkpoint
-        # the batch-bounded assignment once (round 15) instead of
-        # re-running the crossJoin+window per consumer (the cross-run
-        # broadcast build AND the _semcell/_semvec attach)
-        cur = _assign_cells(
-            emb.join(
-                batch_d.select(F.col(icol).alias("vec_id")),
-                "vec_id", "left_semi",
-            ),
-            sem_centroids, "vec_id", 1, "vec_id", "embedding",
-        ).localCheckpoint()
-        sem_cur_ckpt = cur
-        old_vecs = _read_state(spark, semvecs_dir, batch_id)
-        if old_vecs is not None:
-            if (n_in <= _SCAN_STATE_BCAST_MAX_ROWS
-                    and n_in * (dim + 2) <= _SCAN_STATE_BCAST_MAX_UNITS):
-                # 100 TB shape (round 13): semvecs/ grows with the
-                # corpus and the plain equi-join shuffled every admitted
-                # vector per micro-batch. Flip: the batch's (vec_id,
-                # cell_id, v) frame is batch-bounded, so broadcast IT and
-                # stream the state under a BroadcastHashJoin — output is
-                # bounded by the population of the batch's cells (√n-cell
-                # sizing), never the state size. The payload is n_in
-                # dim-sized vectors, not n_in rows — the units gate
-                # counts n_in × (dim + 2), or a doc-count-only gate
-                # would force-broadcast gigabytes at the 1M-doc cap.
-                cand_sem = relational.inner_join_scan_state(
-                    old_vecs, cur, "cell_id"
-                )
-            else:
-                # bulk backfill above the broadcast cap: plain join
-                cand_sem = cur.join(old_vecs, "cell_id")
-            near_sem = (
-                cand_sem
-                .filter(
-                    cosine(F.col("v"), F.col("old_vec"))
-                    >= F.lit(cfg.semdedup_threshold)
-                )
-                .select(F.col("vec_id").alias(icol))
-                .distinct()
-            )
-            batch_d = batch_d.join(near_sem, icol, "left_anti")
-        batch_d = _st("semantic_dedup", batch_d)
-        batch_d = batch_d.join(
-            cur.select(
-                F.col("vec_id").alias(icol),
-                F.col("cell_id").alias("_semcell"),
-                F.col("v").alias("_semvec"),
-            ),
-            icol,
-        )
-        sem_emb_ckpt = emb  # released only after admitted materializes
-    else:
-        sem_in_ckpt = sem_cur_ckpt = None
-        sem_emb_ckpt = None
-    admitted = batch_d.localCheckpoint()  # read once, write 2-5x below
+    docs = _st("gate", _clean_docs(cfg, docs).filter(
+        _gate_condition(cfg, tcol)
+    ))
+    legs = [("exact_dedup", _exact_leg)] + [
+        (name, leg) for on, name, leg in (
+            (cfg.neardup_ledger, "neardup_dedup", _neardup_leg),
+            (cfg.overlap_ledger, "overlap_dedup", _overlap_leg),
+            (cfg.semantic_ledger, "semantic_dedup", _semantic_leg),
+        ) if on
+    ]
     idx_rep = None
     try:
-        n_admit = _write_admitted(admitted, cfg, icol, _part,
-                                  ledger_dir, corpus_dir, sigs_dir,
-                                  bands_dir, _band_keys, semvecs_dir,
-                                  batch_id=batch_id, fps_dir=fps_dir)
+        for name, leg in legs:
+            docs = _st(name, leg(ctx, docs))
+        admitted = ctx.hold(docs.localCheckpoint())  # read once, written 2-6x
+        n_admit = _write_admitted(ctx, admitted, sch.fieldNames())
         if cfg.serve_index_append:
             # after the ledgers commit: the admitted set is final for
             # this batch; a crash before the append replays the whole
             # batch (identical admitted set → identical append)
             idx_rep = _append_serve_index(
-                spark, admitted, cfg, icol, batch_id, idxmap_dir
+                spark, admitted, cfg, icol, batch_id, ctx.path("idxmap")
             )
     finally:
-        release_local_checkpoint(admitted)
-        if sem_emb_ckpt is not None:
-            # the eager checkpoint above is the last reader of the
-            # embedding blocks — release them now, not at driver GC
-            release_local_checkpoint(sem_emb_ckpt)
-        if sem_in_ckpt is not None:
-            release_local_checkpoint(sem_in_ckpt)
-        if sem_cur_ckpt is not None:
-            release_local_checkpoint(sem_cur_ckpt)
-        if fps_ckpt is not None:
-            release_local_checkpoint(fps_ckpt)
-        # the post-exact-leg lineage-truncation checkpoint: the
-        # admitted checkpoint above is its last reader
-        release_local_checkpoint(exact_ckpt)
-        if sigs_b is not None:
-            # the shared signature cache's last readers (`_sig` rides
-            # the admitted checkpoint) are materialized by now — drop
-            # the persist instead of pinning one per batch to GC
-            sigs_b.unpersist()
+        # the admitted checkpoint is the last reader of every frame the
+        # legs cached — free them now instead of pinning one set per
+        # batch until garbage collection
+        for df in ctx.held:
+            if df.is_cached:
+                df.unpersist()
+            else:
+                release_local_checkpoint(df)
     rep = {
         "batch_id": batch_id,
         "corrupt_lines": n_corrupt,
@@ -1847,13 +1459,12 @@ def _ingest_batch_body(
         # the replay guard ran: input_rows is already post-guard, and the
         # guard's exclusions are reported so input vs stage_rows/admitted
         # arithmetic reconciles (round-11 ADVICE)
-        rep["retraction_excluded"] = retraction_excluded
+        rep["retraction_excluded"] = pre_guard - n_in
     if stage_rows:
         rep["stage_rows"] = stage_rows
     if profile_drift is not None:
         rep["profile_drift"] = profile_drift
-    if n_overlap_drop_pairs is not None:
-        rep["overlap_dropped_pairs"] = n_overlap_drop_pairs
+    rep.update(ctx.report)
     if idx_rep is not None:
         rep["index_batch_id"] = idx_rep["batch_id"]
         rep["index_appended"] = idx_rep["rows"]
@@ -1861,6 +1472,389 @@ def _ingest_batch_body(
         if comp is not None:
             rep["index_compacted"] = comp
     return rep
+
+
+def _exact_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
+    """Within-batch exact dedup, then cross-batch/run dedup against the
+    digest ledger (anti-join on digests — text never reshuffles)."""
+    tcol, icol = ctx.cfg.text_col, ctx.cfg.id_col
+    docs = dedup.exact_dedup(docs, tcol, icol).withColumn(
+        "_digest", F.md5(F.col(tcol))
+    )
+    seen = ctx.state("ledger")
+    if seen is not None:
+        # 100 TB shape (round 12): the naive batch ⟕anti ledger plans a
+        # SortMergeJoin that SHUFFLES every ledger digest per
+        # micro-batch — the dominant recurring cost once the ledger
+        # dwarfs the batch, and unfixable by Spark alone (the LEFT side
+        # of an anti-join is not broadcastable). anti_join_scan_state
+        # flips it: the ledger is SCANNED against the broadcast batch
+        # digests, and only the at-most-batch-sized collisions
+        # broadcast back. A bulk-backfill batch above the gate runs the
+        # same plan with plain shuffled joins.
+        docs = relational.anti_join_scan_state(
+            docs, seen, "_digest", "digest",
+            broadcast=_fits_broadcast(ctx.n_in),
+        )
+    ctx.write("ledger", lambda adm, src: adm.select(
+        F.col("_digest").alias("digest"), src
+    ))
+    # truncate the admission lineage once the exact leg is decided
+    # (round 15, VERDICT item 4): every downstream consumer — the
+    # signature persist, the winnow checkpoint, each scan-state leg's
+    # broadcast build of a batch-derived frame, and the admitted
+    # checkpoint — re-executed clean → gate → window-dedup →
+    # ledger-anti-join from the parsed persist (~6 re-executions per
+    # batch, each an AQE multi-job cascade: measured 15.2 → 9.6 s on
+    # a 200-doc batch with both ledgers on). One checkpoint of the
+    # micro-batch (bounded by the batch contract) makes them all
+    # block reads.
+    return ctx.hold(docs.localCheckpoint())
+
+
+def _neardup_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
+    """MinHash near-dups: within the batch by LSH pairs → connected
+    components, then across batches/runs by band-bucket candidates vs the
+    ``bands/`` ledger, confirmed by signature-agreement est-Jaccard
+    against ``sigs/``. Carries ``_sig`` forward."""
+    cfg = ctx.cfg
+    tcol, icol = cfg.text_col, cfg.id_col
+    # ONE signature pass per batch (round 14): the within-batch
+    # pair generation AND the cross-run leg / sigs-ledger write share the
+    # cached signature frame, and ``_sig`` attaches by a left join (null
+    # for docs too short to sign). The attach keys on ``_digest``, not
+    # the doc id (round-14 ADVICE): nothing upstream enforces
+    # id-uniqueness within a batch — duplicate ids with DIFFERING text
+    # both survive the digest-keyed exact dedup, and an id-keyed join
+    # would fan their rows out — while the digest IS unique
+    # post-exact-dedup, and the signature is a pure function of the text
+    # the digest hashes.
+    sigs = ctx.hold(dedup.minhash_signatures(
+        docs, text_col=tcol, id_col=icol, num_hashes=_NUM_HASHES,
+        carry=("_digest",),
+        # micro-batches are small and latency-sensitive: one Arrow
+        # batch beats the under-partitioned-input re-spread's shuffle
+        # + 32-task fan-out (the guard would fire on every trigger)
+        spread=False,
+    ))
+    # within-batch near-dups first — the SAME connected-components
+    # canonical rule as the batch DAG (per-pair greatest-id removal
+    # would admit a different survivor set from identical input:
+    # pairs (1,3),(2,3) keep {1,2} pairwise but only {1} as one
+    # component)
+    survivors = _drop_cluster_losers(docs, dedup.minhash_lsh_pairs(
+        docs, text_col=tcol, id_col=icol, threshold=cfg.neardup_threshold,
+        spread=False, sigs=sigs,
+    ).select("id_a", "id_b"), icol)
+    docs = survivors.join(
+        # dropDuplicates is belt-and-braces (digests are unique
+        # post-exact-dedup) and value-deterministic either way:
+        # equal digests hash equal text, which signs identically
+        sigs.select(
+            "_digest", F.col("sig").alias("_sig")
+        ).dropDuplicates(["_digest"]),
+        "_digest", "left",
+        # re-project to the pre-join column order: a USING join moves
+        # the key first, and the corpus/ledger writes keep a stable
+        # cross-batch parquet layout
+    ).select(*survivors.columns, "_sig")
+    old_bands, old_sigs = ctx.state("bands"), ctx.state("sigs")
+    if old_bands is not None and old_sigs is not None:
+        # same 100 TB flip as the exact leg: bands/ and sigs/ grow with
+        # the corpus. Scan bands against the broadcast (id, bucket)
+        # pairs (payload = n_in × n_bands units — the gate counts it),
+        # shrink to the collision set, then scan sigs against the
+        # broadcast DISTINCT colliding old ids — never the batch
+        # signatures themselves (num_hashes-int arrays × collision
+        # count would be the one unbounded broadcast in the leg); the
+        # batch _sig attaches AFTERWARDS via a plain join of two
+        # collision-bounded frames AQE sizes itself. Output is bounded
+        # by the collision count, never state size.
+        bc = _fits_broadcast(ctx.n_in, ctx.n_in * _N_BANDS)
+        signed = docs.filter(F.col("_sig").isNotNull())
+        cand_ids = relational.inner_join_scan_state(
+            old_bands,
+            signed.select(icol, F.explode(_band_keys("_sig")).alias("bucket")),
+            "bucket", broadcast=bc,
+        ).select(icol, "old_id").distinct()
+        old_hit = relational.inner_join_scan_state(
+            old_sigs.withColumnRenamed("id", "old_id"),
+            cand_ids.select("old_id").distinct(), "old_id", broadcast=bc,
+        )
+        cand = (
+            signed.select(icol, "_sig")
+            .join(cand_ids, icol)
+            .join(old_hit, "old_id")
+        )
+        est = F.size(
+            F.filter(
+                F.zip_with(
+                    F.col("_sig"), F.col("old_sig"),
+                    lambda x, y: (x == y).cast("int"),
+                ),
+                lambda v: v == 1,
+            )
+        ).cast("double") / F.lit(float(_NUM_HASHES))
+        near = (
+            cand.filter(est >= F.lit(cfg.neardup_threshold))
+            .select(icol)
+            .distinct()
+        )
+        docs = docs.join(near, icol, "left_anti")
+    ctx.write("sigs", lambda adm, src: adm.filter(
+        F.col("_sig").isNotNull()
+    ).select(F.col(icol).alias("id"), F.col("_sig").alias("old_sig"), src))
+    ctx.write("bands", lambda adm, src: adm.filter(
+        F.col("_sig").isNotNull()
+    ).select(
+        F.col(icol).alias("old_id"),
+        F.explode(_band_keys("_sig")).alias("bucket"),
+    ).withColumn("src_batch_id", src))
+    return docs
+
+
+def _overlap_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
+    """Substring-overlap dedup (winnowed fingerprints — see the config
+    docstring): within-batch first via the SAME connected-components
+    canonical rule as the MinHash leg, then cross-batch/run against the
+    admitted-fingerprint ledger. Boilerplate fps (present in more than
+    overlap_fp_df_cap docs) are excluded on both sides — they are not
+    copying evidence and they are exactly the viral keys that would blow
+    up the equi-join fan-out. Carries ``_fps`` forward."""
+    spark, cfg = ctx.spark, ctx.cfg
+    tcol, icol = cfg.text_col, cfg.id_col
+    overlap_mod = _resolve_overlap_mod(spark, ctx.path("fps"), cfg)
+    bfps = ctx.hold(text.winnow_fingerprints_df(
+        docs, text_col=tcol, id_col=icol,
+        k=cfg.overlap_k, w=cfg.overlap_w, impl=cfg.overlap_impl,
+    ).filter(
+        F.col("fp") % overlap_mod == 0
+    ).localCheckpoint())  # winnowing is window-heavy; 4 consumers below
+    ok = bfps.join(
+        bfps.groupBy("fp").agg(F.countDistinct(icol).alias("_df"))
+        .filter(F.col("_df") <= cfg.overlap_fp_df_cap).select("fp"),
+        "fp", "left_semi",
+    )
+    docs = _drop_cluster_losers(docs, (
+        ok.select(F.col(icol).alias("id_a"), "fp")
+        .join(ok.select(F.col(icol).alias("id_b"), "fp"), "fp")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.countDistinct("fp").alias("_sh"))
+        .filter(F.col("_sh") >= cfg.overlap_min_shared)
+        .select("id_a", "id_b")
+    ), icol)
+    if cfg.overlap_drop_audit:
+        ctx.report["overlap_dropped_pairs"] = 0
+    old_fps = ctx.state("fps")
+    if old_fps is not None:
+        # batch side of the cross-run comparison: this batch's surviving
+        # docs' df-CAPPED fps — capping the batch side too is symmetric
+        # with the within-batch leg (round-10 VERDICT item 3): a
+        # fingerprint viral WITHIN the landing batch (new boilerplate — a
+        # header pasted into thousands of docs in one drop) is not
+        # copying evidence either, and uncapped it would fan out up to
+        # batch_occurrences × overlap_fp_df_cap rows in the join before
+        # the fp ever reaches state.
+        bshared = ok.join(docs.select(icol), icol, "left_semi")
+        # 100 TB shape (rounds 13-14): restrict state to batch-colliding
+        # fps FIRST, then compute the df-cap as a window over the deduped
+        # collision remnant. The semi-restrict keeps EVERY state row of
+        # each colliding fp, so the per-fp distinct-doc count over the
+        # remnant equals the full-state df for exactly the fps that can
+        # reach `shared` — the cap decision is unchanged. Under the gate
+        # the state SCANS beneath a BroadcastHashJoin of the batch's
+        # distinct sampled fps; above it (bulk backfill) a plain shuffled
+        # join — the one state shuffle the main comparison needs anyway.
+        # A persisted per-fp df sidecar was considered and rejected: it
+        # could only replace the df count, not the main join's state
+        # shuffle, while adding a whole state surface. fps/doc has no
+        # static bound (text length ÷ mod), so the gate measures the
+        # checkpointed fps frame (a near-free count off cached blocks).
+        hit = relational.inner_join_scan_state(
+            old_fps, bshared.select("fp").distinct(), "fp",
+            broadcast=_fits_broadcast(ctx.n_in, bfps.count()),
+        )
+        # ONE shuffle of the remnant, not two: repartition by fp FIRST —
+        # HashPartitioning(fp) satisfies the dedup aggregate's
+        # ClusteredDistribution([fp, old_id]) AND the window's
+        # ClusteredDistribution([fp]), so a bare .distinct() followed by
+        # the window would shuffle the collision remnant twice in the
+        # adversarial every-doc-collides regime
+        old_ok = (
+            hit.select("fp", "old_id")
+            .repartition("fp")
+            .dropDuplicates(["fp", "old_id"])
+            .withColumn(
+                "_df",
+                F.count("old_id").over(Window.partitionBy("fp")),
+            )
+            .filter(F.col("_df") <= cfg.overlap_fp_df_cap)
+            .drop("_df")
+        )
+        # >= min_shared sampled fps with ANY SINGLE admitted doc — a
+        # doc sharing one fp each with many docs is not a copy.
+        shared = (
+            bshared
+            .join(old_ok, "fp")
+            .groupBy(icol, "old_id")
+            .agg(F.countDistinct("fp").alias("_sh"))
+        )
+        thr = F.lit(cfg.overlap_min_shared)
+        if cfg.overlap_short_doc_frac is not None:
+            # adaptive short-doc floor (see the config docstring):
+            # per-doc threshold = min(absolute, max(2, ceil(f·own)))
+            # where own counts the doc's non-boilerplate sampled fps
+            # — the same capped population _sh is counted over, so
+            # the fraction is a true share of the doc's evidence
+            own = ok.groupBy(icol).agg(
+                F.countDistinct("fp").alias("_own")
+            )
+            shared = shared.join(own, icol)
+            thr = F.least(
+                thr,
+                F.greatest(
+                    F.lit(2),
+                    F.ceil(
+                        F.lit(float(cfg.overlap_short_doc_frac))
+                        * F.col("_own")
+                    ).cast("int"),
+                ),
+            )
+        dropped = shared.filter(F.col("_sh") >= thr)
+        if cfg.overlap_drop_audit:
+            # land the audit rows FIRST, then derive the drop set from
+            # what landed — the audit provably matches the decision, and
+            # a replayed batch overwrites its own partition with
+            # identical rows (see the config docstring)
+            dropped.select(
+                F.col(icol),
+                F.col("old_id"),
+                F.col("_sh").alias("shared_fps"),
+                thr.cast("int").alias("threshold"),
+            ).withColumn(
+                "src_batch_id", F.lit(int(ctx.batch_id)).cast("long")
+            ).write.mode("overwrite").parquet(ctx.part("overlap_drops"))
+            audit = spark.read.parquet(ctx.part("overlap_drops"))
+            ctx.report["overlap_dropped_pairs"] = audit.count()
+            over = audit.select(icol).distinct()
+        else:
+            over = dropped.select(icol).distinct()
+        docs = docs.join(over, icol, "left_anti")
+    # explode of a null array (a doc too short to fingerprint) yields no
+    # rows
+    ctx.write("fps", lambda adm, src: adm.select(
+        F.col(icol).alias("old_id"), F.explode("_fps").alias("fp"), src
+    ))
+    # survivors' fingerprints ride to the fps write as an array column
+    # (short docs produce none → null)
+    return docs.join(
+        bfps.groupBy(icol).agg(F.collect_list("fp").alias("_fps")),
+        icol, "left",
+    )
+
+
+def _semantic_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
+    """SemDeDup's cosine rule across batches AND runs (the semantic analog
+    of the MinHash leg, same ordering: within-batch first — the batch
+    DAG's keep-one-representative rule — then cross-batch against
+    admitted state). Embeddings are derived in-engine
+    (hashed_text_embedding at the centroids' dimension), so the ledger is
+    self-contained; state rows are (cell_id, old_id, old_vec) and the
+    cross-run comparison is an equi-join on cell_id — within-cell work
+    only, bounded by the index's cell sizing (√n cells at the auto
+    config), never a scan of all admitted vectors. Carries ``_semcell``
+    and ``_semvec`` forward."""
+    from ..functions.vectors import cosine, hashed_text_embedding
+    from ..operators.similarity import _assign_cells, _small_rows, semdedup
+
+    cfg, cents = ctx.cfg, ctx.sem_centroids
+    tcol, icol = cfg.text_col, cfg.id_col
+    # dim via the _small_rows memo (round 15): sem_centroids is ONE
+    # run-scoped checkpointed handle, so the first batch pays one collect
+    # and every later batch reads the memo
+    dim = len(_small_rows(cents)[0].cent)
+    # truncate the lineage the leg's several actions (embed checkpoint,
+    # verdicts, cell assignment, cross-run broadcast builds) would
+    # otherwise re-execute — by here docs carries the minhash and overlap
+    # legs' joins on top of the exact-leg checkpoint (round 15). Skipped
+    # when no other ledger ran: docs IS the exact-leg checkpoint then.
+    if cfg.neardup_ledger or cfg.overlap_ledger:
+        docs = ctx.hold(docs.localCheckpoint())
+    emb = ctx.hold(docs.select(
+        F.col(icol).alias("vec_id"),
+        hashed_text_embedding(F.col(tcol), dim=dim).alias("embedding"),
+    ).localCheckpoint())  # feeds the verdict AND the assignment below
+    verd = semdedup(
+        emb, centroids=cents,
+        threshold=cfg.semdedup_threshold, impl=cfg.semdedup_impl,
+    )
+    docs = docs.join(
+        verd.filter(F.col("removed")).select(F.col("id").alias(icol)),
+        icol, "left_anti",
+    )
+    # survivors' cells + vectors: reused for the cross-run check and
+    # persisted for future batches — checkpoint the batch-bounded
+    # assignment once (round 15) instead of re-running the
+    # crossJoin+window per consumer
+    cur = ctx.hold(_assign_cells(
+        emb.join(
+            docs.select(F.col(icol).alias("vec_id")), "vec_id", "left_semi",
+        ),
+        cents, "vec_id", 1, "vec_id", "embedding",
+    ).localCheckpoint())
+    old_vecs = ctx.state("semvecs")
+    if old_vecs is not None:
+        # 100 TB shape (round 13): semvecs/ grows with the corpus. The
+        # batch's (vec_id, cell_id, v) frame is batch-bounded, so it
+        # broadcasts and the state streams under a BroadcastHashJoin —
+        # output is bounded by the population of the batch's cells. The
+        # payload is n_in dim-sized vectors, not n_in rows — the units
+        # gate counts n_in × (dim + 2), or a doc-count-only gate would
+        # force-broadcast gigabytes at the 1M-doc cap.
+        near = relational.inner_join_scan_state(
+            old_vecs, cur, "cell_id",
+            broadcast=_fits_broadcast(ctx.n_in, ctx.n_in * (dim + 2)),
+        ).filter(
+            cosine(F.col("v"), F.col("old_vec"))
+            >= F.lit(cfg.semdedup_threshold)
+        ).select(F.col("vec_id").alias(icol)).distinct()
+        docs = docs.join(near, icol, "left_anti")
+    # the cell-bucketed vector state future batches compare against
+    ctx.write("semvecs", lambda adm, src: adm.select(
+        F.col("_semcell").alias("cell_id"),
+        F.col(icol).alias("old_id"),
+        F.col("_semvec").alias("old_vec"),
+        src,
+    ))
+    return docs.join(
+        cur.select(
+            F.col("vec_id").alias(icol),
+            F.col("cell_id").alias("_semcell"),
+            F.col("v").alias("_semvec"),
+        ),
+        icol,
+    )
+
+
+def _write_admitted(ctx: _Batch, admitted: DataFrame, doc_cols) -> int:
+    """Run the legs' queued state writes plus the corpus write; returns
+    the admitted count. The writes all read the ADMITTED CHECKPOINT's
+    blocks and land in different dirs with no ordering requirement
+    between them (replay overwrite-repairs each independently) — submit
+    them from a small thread pool (round 15: each write is a handful of
+    tiny tasks, and running 4-6 of them serially left the session idle
+    between job round-trips; measured 0.85 → ~0.35 s per 200-doc batch).
+    Job descriptions are thread-local, so the UI stays labeled per write."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    carried = [c for c in admitted.columns if c not in doc_cols]
+    ctx.write("corpus", lambda adm, _src: adm.drop(*carried))
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        n_admit = pool.submit(admitted.count)
+        for fut in [pool.submit(fn, admitted) for _sub, fn in ctx.writes]:
+            fut.result()  # propagate the first write failure loudly
+        return n_admit.result()
 
 
 def _maybe_coarsen_overlap(spark, state_dir: str, cfg,
@@ -1877,8 +1871,6 @@ def _maybe_coarsen_overlap(spark, state_dir: str, cfg,
     non-nested targets, the works. Returns its report dict (plus the
     row budget) or ``None`` when under budget / no state yet."""
     import math
-    import os
-
     from ..io import read_parquet_state
 
     fps_dir = os.path.join(state_dir, "fps")
@@ -1932,78 +1924,6 @@ def _maybe_compact_serve_index(spark, cfg) -> dict | None:
     return compact_pq_index(spark, base)
 
 
-def _write_admitted(admitted, cfg, icol, _part, ledger_dir, corpus_dir,
-                    sigs_dir, bands_dir, _band_keys,
-                    semvecs_dir=None, batch_id=None, fps_dir=None) -> int:
-    # every ledger row carries its producing batch as the src_batch_id
-    # DATA column (round 9): the per-batch partition dir alone loses
-    # provenance once compact_ingest_state folds it into the batch_id=-1
-    # archive, and _read_state's own-batch exclusion — the replay-safety
-    # mechanism — keys on this column
-    src = F.lit(int(batch_id)).cast("long").alias("src_batch_id")
-    # the per-surface writes all read the ADMITTED CHECKPOINT's blocks
-    # and land in different dirs with no ordering requirement between
-    # them (replay overwrite-repairs each independently) — submit them
-    # from a small driver thread pool (guide §2.6, round 15: each write is a
-    # handful of tiny tasks, and running 4-6 of them serially left the
-    # session idle between job round-trips; measured 0.85 → ~0.35 s per
-    # 200-doc batch). Job descriptions are thread-local, so the UI
-    # stays labeled per write.
-    from concurrent.futures import ThreadPoolExecutor
-
-    writes = [
-        ("n_admit", lambda: admitted.count()),
-        ("ledger", lambda: admitted.select(
-            F.col("_digest").alias("digest"), src
-        ).write.mode("overwrite").parquet(_part(ledger_dir))),
-    ]
-    admitted_out = admitted
-    if cfg.neardup_ledger:
-        with_sig = admitted.filter(F.col("_sig").isNotNull())
-        writes.append(("sigs", lambda: with_sig.select(
-            F.col(icol).alias("id"), F.col("_sig").alias("old_sig"), src
-        ).write.mode("overwrite").parquet(_part(sigs_dir))))
-        writes.append(("bands", lambda: with_sig.select(
-            F.col(icol).alias("old_id"),
-            F.explode(_band_keys("_sig")).alias("bucket"),
-        ).withColumn("src_batch_id", src).write.mode("overwrite").parquet(
-            _part(bands_dir)
-        )))
-        admitted_out = admitted_out.drop("_sig")
-    if cfg.semantic_ledger:
-        # the cell-bucketed vector state future batches compare against;
-        # same per-batch-partition overwrite discipline as every ledger
-        writes.append(("semvecs", lambda: admitted.select(
-            F.col("_semcell").alias("cell_id"),
-            F.col(icol).alias("old_id"),
-            F.col("_semvec").alias("old_vec"),
-            src,
-        ).write.mode("overwrite").parquet(_part(semvecs_dir))))
-        admitted_out = admitted_out.drop("_semcell", "_semvec")
-    if cfg.overlap_ledger:
-        # the overlap ledger future batches equi-join on fp; explode of a
-        # null array (a doc too short to fingerprint) yields no rows
-        writes.append(("fps", lambda: admitted.select(
-            F.col(icol).alias("old_id"), F.explode("_fps").alias("fp"), src
-        ).write.mode("overwrite").parquet(_part(fps_dir))))
-        admitted_out = admitted_out.drop("_fps")
-    corpus_out = admitted_out.drop("_digest")
-    writes.append(("corpus", lambda: corpus_out.write.mode(
-        "overwrite"
-    ).parquet(_part(corpus_dir))))
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        results = {
-            name: fut
-            for name, fut in (
-                (name, pool.submit(fn)) for name, fn in writes
-            )
-        }
-        n_admit = results["n_admit"].result()
-        for name, fut in results.items():
-            fut.result()  # propagate the first write failure loudly
-    return n_admit
-
-
 def _append_serve_index(spark, admitted, cfg, icol, batch_id,
                         idxmap_dir) -> dict:
     """``cfg.serve_index_append``: append this batch's admitted vectors
@@ -2046,8 +1966,6 @@ def _append_serve_index(spark, admitted, cfg, icol, batch_id,
     (``ingest_batch_id``), not just the partition dir name, so
     ``compact_ingest_state`` can fold ``idxmap/`` into its archive
     partition without losing the lookup key (round-8 VERDICT item 2)."""
-    import os
-
     from .. import fsutil
     from ..io import read_parquet_state, tiny_df
     from ..operators.ann_index import (
@@ -2064,13 +1982,8 @@ def _append_serve_index(spark, admitted, cfg, icol, batch_id,
     # batch's replay reserve FRESH and append a silent duplicate copy
     mapping = read_parquet_state(spark, idxmap_dir, mergeSchema="true")
     if mapping is not None:
-        key = (
-            F.coalesce(F.col("ingest_batch_id"), F.col("batch_id"))
-            if "ingest_batch_id" in mapping.columns
-            else F.col("batch_id")
-        )
         rows = (
-            mapping.filter(key == batch_id)
+            mapping.filter(_batch_of(mapping, "ingest_batch_id") == batch_id)
             .select("index_batch_id").collect()
         )
         if rows:
@@ -2123,8 +2036,9 @@ def ingest_state_report(spark: SparkSession, state_dir: str) -> DataFrame:
 
     base = state_dir.rstrip("/")
     rows = []
-    for sub in ("ledger", "sigs", "bands", "semvecs", "idxmap", "fps",
-                "fps_meta", "retracted", "overlap_drops", "corpus"):
+    subs = [sub for sub, *_ in STATE_DIRS]
+    subs.insert(subs.index("fps") + 1, "fps_meta")
+    for sub in subs:
         path = f"{base}/{sub}"
         if sub == "fps_meta":
             # the overlap sampling-config sidecar (round 10) is state too
@@ -2248,13 +2162,10 @@ def _state_surfaces(icol: str) -> tuple:
     dir last (the scrub/probe order shared by ``retract_documents``'s
     scrubs, its ``residual`` self-check, and ``prune_ingest_audit``'s
     completed-scrub detection)."""
-    return (
-        ("ledger", "digest", "digest"),
-        ("sigs", "id", "doc_id"),
-        ("bands", "old_id", "doc_id"),
-        ("semvecs", "old_id", "doc_id"),
-        ("fps", "old_id", "doc_id"),
-        ("corpus", icol, "doc_id"),
+    return tuple(
+        (sub, icol if key == "id_col" else key,
+         "digest" if key == "digest" else "doc_id")
+        for sub, key, _flag in STATE_DIRS if key
     )
 
 
@@ -2516,8 +2427,6 @@ def _retract_documents_body(
     ``retracted/`` record itself (doc id + content digest — the replay
     guard and crash-recovery keys; scrub-the-scrub would reopen the
     replay hole the record exists to close)."""
-    import os
-
     from .. import fsutil, statedir
 
     base = state_dir.rstrip("/")
@@ -2539,13 +2448,11 @@ def _retract_documents_body(
         return out
 
     retr_dir = os.path.join(base, "retracted")
-    for d in ("ledger", "sigs", "bands", "semvecs", "fps", "corpus",
-              "retracted"):
-        statedir.recover_replaced_dir(spark, os.path.join(base, d))
-        # complete a prior killed retraction's pending swaps BEFORE any
-        # read — otherwise the keys lookup sees pre-swap rows and this
-        # run records a duplicate (harmless but noisy) event for them
-        statedir.recover_partition_swaps(spark, os.path.join(base, d))
+    # complete a prior killed retraction's pending swaps BEFORE any read
+    # — otherwise the keys lookup sees pre-swap rows and this run records
+    # a duplicate (harmless but noisy) event for them
+    for sub, *_ in STATE_DIRS:
+        statedir.heal_dir(spark, os.path.join(base, sub))
 
     # the retraction keys: (doc_id, digest, admitted_batch_id) from the
     # corpus rows still present, UNIONED with rows already recorded by a
@@ -2565,10 +2472,14 @@ def _retract_documents_body(
     keys = None
     if prior is not None:
         keys = prior.filter(F.col("doc_id").isin(id_vals)).select(
-            "doc_id", "digest", "admitted_batch_id"
+            "doc_id", "digest", "admitted_batch_id",
+            F.lit(False).alias("__new"),
         )
     if found is not None:
-        keys = found if keys is None else keys.unionByName(found)
+        # __new: the key came from the corpus, i.e. this run has
+        # something to record
+        new = found.withColumn("__new", F.lit(True))
+        keys = new if keys is None else keys.unionByName(new)
     if keys is None:
         return out
     # dedup on the FULL key including admitted_batch_id (round-11 VERDICT
@@ -2581,13 +2492,15 @@ def _retract_documents_body(
     # rows keeps both admission batches in cand_batches; the record step
     # and replay guard already handle duplicates per batch correctly.
     keys = keys.dropDuplicates(
-        ["doc_id", "digest", "admitted_batch_id"]
+        ["doc_id", "digest", "admitted_batch_id", "__new"]
     ).localCheckpoint()
     # one takedown-sized collect of the (doc, admission batch) pairs:
     # "found" counts DOCS, not key rows — a re-admitted doc carries one
     # key row per admission batch but is still one takedown subject —
     # and the admission batches are the candidate partitions below
-    pairs = keys.select("doc_id", "admitted_batch_id").distinct().collect()
+    pairs = keys.select(
+        "doc_id", "admitted_batch_id", "__new"
+    ).distinct().collect()
     out["found"] = len({r.doc_id for r in pairs})
     if out["found"] == 0:
         release_local_checkpoint(keys)
@@ -2597,7 +2510,7 @@ def _retract_documents_body(
 
     # 1. record NEWLY-found rows as a retraction event (skipped when the
     #    corpus holds nothing new — a verb replay must not re-record)
-    if not dry_run and found is not None and found.count() > 0:
+    if not dry_run and any(r["__new"] for r in pairs):
         next_id = max(
             statedir.numbered_dirs(spark, retr_dir, "batch_id="),
             default=-1,
@@ -2725,8 +2638,6 @@ def _stream_commit_horizon(spark: SparkSession, state_dir: str) -> int:
     below it can never redeliver), or ``-1`` when the checkpoint has no
     commits yet / ``-2`` when no checkpoint dir exists at all (the state
     is not stream-driven)."""
-    import os
-
     from .. import fsutil
 
     ckpt = os.path.join(state_dir.rstrip("/"), "checkpoint")
@@ -2817,8 +2728,6 @@ def _prune_ingest_audit_body(
     spark: SparkSession, state_dir: str, cfg: CurationConfig,
     up_to_batch, max_files: int, lease,
 ) -> dict:
-    import os
-
     from .. import fsutil, statedir
     from ..io import read_parquet_state
 
@@ -2843,8 +2752,7 @@ def _prune_ingest_audit_body(
 
     def _prune_dir(sub: str, keep_filter) -> list | None:
         path = f"{base}/{sub}"
-        statedir.recover_replaced_dir(spark, path)
-        statedir.recover_partition_swaps(spark, path)
+        statedir.heal_dir(spark, path)
         df = read_parquet_state(spark, path, mergeSchema="true")
         if df is None:
             return None
@@ -2882,8 +2790,7 @@ def _prune_ingest_audit_body(
     # horizon — probe every surface for each candidate key, the same
     # partition-pruned scan shape as retract_documents' residual check
     path = f"{base}/retracted"
-    statedir.recover_replaced_dir(spark, path)
-    statedir.recover_partition_swaps(spark, path)
+    statedir.heal_dir(spark, path)
     retr = read_parquet_state(spark, path, mergeSchema="true")
     if retr is not None:
         before = retr.count()
@@ -3083,12 +2990,11 @@ def _coarsen_overlap_mod_body(
             "k int, w int, sample_mod int",
         ).write.mode("overwrite").parquet(meta_dir)
 
-    statedir.recover_replaced_dir(spark, fps_dir)
     # complete a retraction killed mid swap_partitions before the shrink
     # reads fps rows (round-11 ADVICE — same hazard as the generic fold:
     # shrinking pre-swap rows would fold retracted fps into the archive
     # while the surviving sidecar later heals without re-scrubbing it)
-    statedir.recover_partition_swaps(spark, fps_dir)
+    statedir.heal_dir(spark, fps_dir)
     state = read_parquet_state(spark, fps_dir)
     if state is None:  # meta written, no fps yet (empty-corpus dir)
         return {"old_mod": old_mod, "new_mod": new_mod,
@@ -3179,22 +3085,22 @@ def _compact_ingest_state_body(
     # 11) folds like any sibling: its lookup keys (doc_id,
     # admitted_batch_id) are data columns, so the replay guard and a
     # crashed retract_documents' digest recovery both survive the fold.
-    for sub in ("ledger", "sigs", "bands", "semvecs", "idxmap", "fps",
-                "retracted", "overlap_drops"):
+    for sub, *_ in STATE_DIRS:
+        if sub == "corpus":
+            # never folded: its per-batch partitions are
+            # retract_documents' write-cost granularity (a takedown
+            # rewrites only the affected partitions);
+            # export_training_corpus derives a compacted copy instead
+            continue
         path = state_dir.rstrip("/") + "/" + sub
-        # recover a prior killed swap FIRST — after a crash between the two
-        # renames, `path` is gone and `.__old__` holds the only copy; an
-        # existence check before this recovery would skip the dir forever
-        statedir.recover_replaced_dir(spark, path)
-        # ...and complete a retraction killed mid swap_partitions (round-11
-        # ADVICE): a committed .__partswap__ sidecar with unswapped
-        # children means scrubbed replacements exist but the live dir
-        # still holds the PRE-SCRUB rows — folding now would archive the
-        # unscrubbed rows into batch_id=-1 while the sidecar (a sibling,
-        # outside the fold's swap) survives and later heals WITHOUT
-        # re-scrubbing the archive, silently undoing the erasure. Same
-        # heal order _ingest_batch and retract_documents use.
-        statedir.recover_partition_swaps(spark, path)
+        # heal FIRST — after a crash between a fold's two renames, `path`
+        # is gone and `.__old__` holds the only copy (an existence check
+        # before the heal would skip the dir forever); and a committed
+        # .__partswap__ sidecar from a killed retraction means the live
+        # dir still holds PRE-SCRUB rows — folding them into batch_id=-1
+        # while the sidecar (outside the fold's swap) later heals WITHOUT
+        # re-scrubbing the archive would silently undo the erasure
+        statedir.heal_dir(spark, path)
         if not fsutil.is_dir(spark, path):
             continue
         before = fsutil.parquet_file_count(spark, path)
@@ -3260,14 +3166,11 @@ def export_training_corpus(
     ``columns`` prunes the export (e.g. ``["doc_id", "text"]``);
     default keeps every corpus column. Returns ``{"rows", "files",
     "out_dir"}``."""
-    import os
-
     from .. import fsutil, statedir
 
     base = state_dir.rstrip("/")
     corpus = os.path.join(base, "corpus")
-    statedir.recover_replaced_dir(spark, corpus)
-    statedir.recover_partition_swaps(spark, corpus)
+    statedir.heal_dir(spark, corpus)
     df = spark.read.option("mergeSchema", "true").parquet(corpus)
     if "batch_id" in df.columns:
         df = df.drop("batch_id")
@@ -3397,7 +3300,6 @@ def check_ingest_state(
 def _check_ingest_state_body(
     spark: SparkSession, state_dir: str, cfg: CurationConfig, batches,
 ) -> DataFrame:
-    import os
     from functools import reduce
 
     from .. import statedir
@@ -3428,18 +3330,12 @@ def _check_ingest_state_body(
         partition, then filter exactly on the provenance."""
         if bsel is None:
             return df
-        prov = (
-            F.coalesce(F.col("src_batch_id"), F.col("batch_id"))
-            if "src_batch_id" in df.columns else F.col("batch_id")
-        )
         return df.filter(
-            F.col("batch_id").isin(bsel + [-1]) & prov.isin(bsel)
+            F.col("batch_id").isin(bsel + [-1]) & _batch_of(df).isin(bsel)
         )
 
-    for d in ("ledger", "sigs", "bands", "semvecs", "idxmap", "fps",
-              "retracted", "overlap_drops", "corpus"):
-        statedir.recover_replaced_dir(spark, os.path.join(base, d))
-        statedir.recover_partition_swaps(spark, os.path.join(base, d))
+    for sub, *_ in STATE_DIRS:
+        statedir.heal_dir(spark, os.path.join(base, sub))
 
     schemas: dict = {}  # verb-local: one schema inference per surface
     corpus = _read_surface(spark, base, "corpus", schemas)
@@ -3466,25 +3362,33 @@ def _check_ingest_state_body(
         emit("corpus_row_without_ledger_digest", "corpus", "skipped", 0, why)
     else:
         led_d = scoped(led).select("digest").distinct()
+        # both directions counted in ONE full outer join: each distinct
+        # ledger digest without a corpus row, and each corpus row without
+        # a ledger digest, appears exactly once with the other side null
+        n_orphan, n_unled = led_d.withColumn("__led", F.lit(True)).join(
+            ckeys.select("digest", F.lit(True).alias("__cor")), "digest",
+            "full_outer",
+        ).agg(
+            F.count_if(F.col("__cor").isNull()),
+            F.count_if(F.col("__led").isNull()),
+        ).collect()[0]
         orphan = led_d.join(
             ckeys.select("digest").distinct(), "digest", "left_anti"
         )
-        n = orphan.count()
         emit("ledger_digest_without_corpus_row", "ledger",
-             "fail" if n else "ok", n, sample(orphan, "digest", n))
+             "fail" if n_orphan else "ok", n_orphan,
+             sample(orphan, "digest", n_orphan))
         unled = ckeys.join(led_d, "digest", "left_anti")
-        n = unled.count()
         emit("corpus_row_without_ledger_digest", "corpus",
-             "fail" if n else "ok", n, sample(unled, "doc_id", n))
+             "fail" if n_unled else "ok", n_unled,
+             sample(unled, "doc_id", n_unled))
 
     # derived ledgers → corpus: evidence rows for ghosts, every surface
     # in ONE query — the (surface, doc_id) union, ids cast to the corpus
     # doc_id type (the coercion a per-surface join applies), left-anti
     # joined against the corpus ids and counted per surface
-    derived = (("sigs", "id", cfg.neardup_ledger),
-               ("bands", "old_id", cfg.neardup_ledger),
-               ("semvecs", "old_id", cfg.semantic_ledger),
-               ("fps", "old_id", cfg.overlap_ledger))
+    derived = [(sub, key, getattr(cfg, flag))
+               for sub, key, flag in STATE_DIRS if key and flag]
     checked, branches = [], []  # checked: (surface, skip reason | None)
     for sub, key, configured in derived:
         df = _read_surface(spark, base, sub, schemas)
@@ -3541,12 +3445,10 @@ def _check_ingest_state_body(
                 emit("admitted_doc_not_in_index", "corpus", "skipped", 0,
                      "no idxmap")
             else:
-                ing = (
-                    F.coalesce(F.col("ingest_batch_id"), F.col("batch_id"))
-                    if "ingest_batch_id" in mapping.columns
-                    else F.col("batch_id")
-                ).alias("ingest")
-                mrows = mapping.select(ing, "index_batch_id").collect()
+                mrows = mapping.select(
+                    _batch_of(mapping, "ingest_batch_id").alias("ingest"),
+                    "index_batch_id",
+                ).collect()
                 if bsel is not None:
                     mrows = [r for r in mrows if int(r.ingest) in bsel]
                 horizon = _codes_horizon(spark, ibase)

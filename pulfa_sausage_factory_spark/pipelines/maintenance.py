@@ -44,6 +44,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import fsutil, statedir
+from .curation_pipeline import STATE_DIRS
 
 #: file-count threshold per ingest state dir when neither the call nor
 #: cfg.ingest_compact_max_files supplies one — matches the
@@ -64,9 +65,6 @@ _DEFAULT_RETRAIN_FRACTION = 0.5
 
 #: attempted journal run dirs before a journal fold is due
 _DEFAULT_JOURNAL_COMPACT_AFTER = 64
-
-_INGEST_DIRS = ("ledger", "sigs", "bands", "semvecs", "idxmap", "fps",
-                "retracted", "overlap_drops", "corpus")
 
 
 def suggest_maintenance(
@@ -113,7 +111,7 @@ def _ingest_dir_signals(spark, base, cfg, max_files, emit) -> None:
         else (cfg.ingest_compact_max_files or _DEFAULT_MAX_FILES)
     )
     cadence = cfg.ingest_compact_max_files is not None
-    for sub in _INGEST_DIRS:
+    for sub, *_ in STATE_DIRS:
         path = f"{base}/{sub}"
         live = fsutil.is_dir(spark, path)
         old = fsutil.exists(spark, path + ".__old__")

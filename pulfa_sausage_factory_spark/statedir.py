@@ -471,6 +471,17 @@ def recover_replaced_dir(spark: SparkSession, path: str) -> None:
         fsutil.rename(spark, old, path)
 
 
+def heal_dir(spark: SparkSession, path: str) -> None:
+    """Complete or undo whatever a killed verb left half-done in ``path``:
+    a :func:`replace_dir` swap killed between its renames, then a
+    :func:`swap_partitions` sidecar (a committed one holds scrubbed
+    replacement children awaiting their rename; folding or reading the
+    live dir before adopting them would resurrect retracted rows). Every
+    state verb runs it on each dir before its first read."""
+    recover_replaced_dir(spark, path)
+    recover_partition_swaps(spark, path)
+
+
 def recover_partition_swaps(spark: SparkSession, path: str) -> list[str]:
     """Crash recovery AND normal completion for :func:`swap_partitions`:
     if ``<path>.__partswap__`` exists and carries the job-commit marker,

@@ -441,9 +441,10 @@ def test_export_training_corpus_compacts_without_folding_state(
 #: Spark jobs of one 3-id ``retract_documents`` and of the
 #: ``check_ingest_state(...).collect()`` after it on ``verb_state`` (two
 #: batches, exact + MinHash ledgers): one membership query per step
-#: across all surfaces, one schema inference per surface per call
-_RETRACT_JOBS = 35
-_FSCK_JOBS = 25
+#: across all surfaces, one schema inference per surface per call, one
+#: query for both directions of the ledger ↔ corpus bijection
+_RETRACT_JOBS = 33
+_FSCK_JOBS = 21
 
 
 def _doc(i):

@@ -3649,12 +3649,53 @@ def test_ingest_duplicate_ids_with_distinct_text_do_not_fan_out(spark, tmp_path)
     recomputed.unpersist()
 
 
+#: word families for semantic-ledger corpora: docs of one family share a
+#: cell of an index trained on all four
+_FAMS = tuple(f.split() for f in (
+    "river forest fox dog bank quiet green lazy jumps runs far away "
+    "tonight brown quick over then into the and by",
+    "archive letter aid princeton collection finding material box folder "
+    "series inventory manuscript curator shelf record",
+    "train engine track station signal platform carriage conductor "
+    "whistle timetable junction freight diesel steam rail",
+    "ocean coral reef tide wave current sail harbor anchor vessel depth "
+    "marine salt spray horizon",
+))
+
+
+def _fam_doc(words, i):
+    return " ".join((words[i:] + words[:i])[:14])
+
+
+@pytest.fixture(scope="module")
+def tiny_ivf_index(spark, tmp_path_factory):
+    """Path of a 4-cell IVF index (m=8, n_codes=8) over 10 docs per family
+    of ``_FAMS`` — read-only for its users (no serve_index_append)."""
+    from pulfa_sausage_factory_spark.functions.vectors import (
+        hashed_text_embedding,
+    )
+    from pulfa_sausage_factory_spark.operators import ann_index
+
+    vecs = spark.createDataFrame(
+        [(f * 100 + i, _fam_doc(w, i)) for f, w in enumerate(_FAMS)
+         for i in range(10)], "vec_id long, text string",
+    ).select("vec_id", hashed_text_embedding(
+        F.col("text"), dim=64).alias("embedding")).localCheckpoint()
+    path = str(tmp_path_factory.mktemp("tiny_ivf") / "idx")
+    ann_index.save_pq_index(ann_index.build_pq_index(
+        vecs, m=8, n_codes=8, n_cells=4, iters=2, sample_fraction=1.0,
+    ), path)
+    return path
+
+
 @pytest.mark.parametrize("ledgers", [
     {},
     {"neardup_ledger": True, "neardup_threshold": 0.5},
     {"overlap_ledger": True, "overlap_sample_mod": 4},
-], ids=["exact", "neardup", "overlap"])
-def test_ingest_empty_and_all_corrupt_batches(spark, tmp_path, ledgers):
+    {"semantic_ledger": True, "semdedup_threshold": 0.8},
+], ids=["exact", "neardup", "overlap", "semantic"])
+def test_ingest_empty_and_all_corrupt_batches(spark, tmp_path, ledgers,
+                                              request):
     # an empty batch and an all-corrupt batch admit nothing and count
     # every corrupt line, and the next normal batch admits exactly what
     # it admits on a twin state that never saw them
@@ -3666,6 +3707,9 @@ def test_ingest_empty_and_all_corrupt_batches(spark, tmp_path, ledgers):
         _ingest_batch,
     )
 
+    if ledgers.get("semantic_ledger"):
+        ledgers = {**ledgers, "semdedup_index_path":
+                   request.getfixturevalue("tiny_ivf_index")}
     cfg = CurationConfig(min_quality=0.0, neardup_method="none", **ledgers)
     sch = T.StructType.fromDDL("doc_id long, text string")
 
@@ -3706,6 +3750,90 @@ def test_ingest_empty_and_all_corrupt_batches(spark, tmp_path, ledgers):
     assert got["twin"][0] == len(got["twin"][1]) > 0
 
 
+#: Spark jobs of the SECOND of two small ingest batches, per ledger config
+#: (the first batch only lays down state for the cross-run legs to probe)
+_INGEST_BATCH_JOBS = {"exact": 12, "neardup_overlap": 125, "semantic": 29}
+
+
+def test_ingest_batch_job_pins(spark, tmp_path, count_jobs,
+                               tiny_ivf_index):
+    # one micro-batch's Spark job count per ledger family, and no
+    # persisted block outliving the batch that cached it
+    import json
+
+    from pyspark.sql import types as T
+
+    from pulfa_sausage_factory_spark.pipelines import (
+        curation_pipeline as cp,
+    )
+    from pulfa_sausage_factory_spark.session import release_local_checkpoint
+
+    sch = T.StructType.fromDDL("doc_id long, text string")
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def lines(rows):
+        return spark.createDataFrame(
+            [(json.dumps({"doc_id": i, "text": t}),) for i, t in rows],
+            "value string",
+        )
+
+    para = ("the survey party followed the river through dense forest and "
+            "recorded water depth temperature and the birds seen at each "
+            "camp while the boats were drawn up on gravel bars at dusk ")
+    fresh = ("telescope mirror coating procedures in observatories during "
+             "winter months when the dome machinery needs care ") * 3
+    lexical = (
+        [(1, para + "first notebook of the season"), (2, fresh)],
+        [(10, para + "first notebook of the season"),        # exact copy
+         (11, fresh + "and a short tail"),                   # near-dup
+         (12, "a new framing sentence " + para + "ends it"),  # overlap
+         (13, "bridge engineering and load calculations for riveted "
+              "iron spans " * 4)],                           # new
+    )
+    first = _fam_doc(_FAMS[0], 3)
+    semantic = ([(1, first), (2, _fam_doc(_FAMS[1], 0))],
+                [(20, first.replace(first.split()[0], "altered", 1)),
+                 (21, _fam_doc(_FAMS[3], 5))])
+    base = dict(min_quality=0.0, neardup_method="none")
+    configs = {
+        "exact": (CurationConfig(**base), lexical),
+        "neardup_overlap": (CurationConfig(
+            **base, neardup_ledger=True, neardup_threshold=0.6,
+            overlap_ledger=True, overlap_sample_mod=4,
+            overlap_drop_audit=True,
+        ), lexical),
+        "semantic": (CurationConfig(
+            **base, semantic_ledger=True, semdedup_threshold=0.8,
+            semdedup_index_path=tiny_ivf_index,
+        ), semantic),
+    }
+    got = {}
+    for name, (cfg, batches) in configs.items():
+        state = str(tmp_path / name)
+        # loaded once per run, as run_incremental_curation does — the
+        # run-scoped cells are not the batch's to release
+        cents = cp._load_semantic_centroids(spark, cfg)
+        for b, rows in enumerate(batches):
+            before = persisted()
+            rep, ids, jobs = count_jobs(lambda: cp._ingest_batch(
+                spark, lines(rows), b, cfg, state, sch, sem_centroids=cents,
+            ))
+            # no block cached inside the batch outlives it
+            assert persisted() <= before, (name, b, persisted() - before)
+        if cents is not None:
+            release_local_checkpoint(cents)
+        got[name] = (len(ids), rep["admitted"])
+        assert len(ids) <= _INGEST_BATCH_JOBS[name], (
+            f"{name}: batch 1 ran {len(ids)} jobs > "
+            f"{_INGEST_BATCH_JOBS[name]}:\n{jobs}"
+        )
+    # every leg decided something on batch 1
+    assert got["exact"][1] == 3 and got["neardup_overlap"][1] == 1
+    assert got["semantic"][1] == 1
+
+
 @pytest.mark.parametrize("knobs, match", [
     ({"serve_index_append": True},
      "serve_index_append needs cfg.semantic_ledger"),
@@ -3736,10 +3864,10 @@ def test_ingest_batch_refuses_contradictory_config(spark, tmp_path, knobs,
     )
 
     state = str(tmp_path / "state")
-    cfg = CurationConfig(min_quality=0.0, neardup_method="none", **knobs)
     lines = spark.createDataFrame([('{"doc_id": 1, "text": "a b c"}',)],
                                   "value string")
     with pytest.raises(ValueError, match=match):
+        cfg = CurationConfig(min_quality=0.0, neardup_method="none", **knobs)
         _ingest_batch(spark, lines, 0, cfg, state,
                       T.StructType.fromDDL("doc_id long, text string"))
     assert not os.path.exists(state)

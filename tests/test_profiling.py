@@ -242,7 +242,7 @@ def test_ingest_reports_profile_drift(spark, tmp_path):
     assert ("text", "avg_len") in drifted
 
     # a malformed reference refuses loudly up front
-    bad = CurationConfig(min_quality=0.0, neardup_method="none",
-                         drift_ref_profile={"oops": 1})
     with pytest.raises(ValueError, match="drift_ref_profile"):
+        bad = CurationConfig(min_quality=0.0, neardup_method="none",
+                             drift_ref_profile={"oops": 1})
         _ingest_batch(spark, lines([]), 2, bad, state, sch)
