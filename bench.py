@@ -484,11 +484,10 @@ def main() -> None:
 
         work = tempfile.mkdtemp(prefix="bench_overlap_fps_")
         try:
-            # impl="arrow" (round 14): the ingest path's default winnowing
-            # twin is now the vectorized numpy pass (CurationConfig.
-            # overlap_impl="arrow", expr≡arrow pinned by test), so this
-            # extra measures what a batch actually pays; the r14 baseline
-            # on the expr plan was 2.392 s (recorded in OPTIMIZATION_r14.md)
+            # impl="arrow": the ingest overlap leg always winnows with the
+            # vectorized numpy pass (expr≡arrow pinned by test), so this
+            # extra measures what a batch actually pays; the baseline on
+            # the expr plan was 2.392 s (recorded in OPTIMIZATION_r14.md)
             _text.winnow_fingerprints_df(
                 docs, text_col="text", id_col="doc_id", k=16, w=8,
                 impl="arrow",

@@ -23,7 +23,9 @@ at 100 TB swap for reliable ``checkpoint``/parquet stage dirs, exactly as
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,9 +47,9 @@ from ..sinks import layout
 _SCAN_STATE_BCAST_MAX_ROWS = 1_000_000
 
 #: payload cap for the flips whose broadcast scales beyond one small row
-#: per doc — a row count alone does not bound their payload (ADVICE
-#: r12). One unit ≈ 8 bytes of raw broadcast payload; 8M units ≈ 64 MB
-#: raw (a few hundred MB as a HashedRelation — safe at the 4g-driver
+#: per doc — a row count alone does not bound their payload. One unit
+#: ≈ 8 bytes of raw broadcast payload; 8M units ≈ 64 MB raw (a few
+#: hundred MB as a HashedRelation — safe at the 4g-driver
 #: stress posture). Per leg:
 #: MinHash band pairs = n_in × n_bands units; semantic vectors =
 #: n_in × (dim + 2); overlap = the batch's sampled-fingerprint count
@@ -132,7 +134,6 @@ class CurationConfig:
     neardup_max_hamming: int = 3  # simhash bit budget
     semdedup_threshold: float = 0.95  # semantic: cosine removal floor
     semdedup_cells: int = 16  # semantic: k-means cell count
-    semdedup_impl: str = "arrow"  # per-cell numpy (scale default) | "expr"
     #: path of a persisted ANN index (ann_index.save_pq_index) whose coarse
     #: centroids the semantic stage reuses instead of deriving cells per
     #: run — the cross-run artifact-reuse analog of what the persisted
@@ -187,7 +188,7 @@ class CurationConfig:
     #: mod-16 sampling → ~1 sampled fp per ~72 shared chars, so
     #: min_shared=4 reliably flags spans upwards of a few hundred chars.
     #: ``overlap_sample_mod``: keep fps with ``fp % mod == 0``. Accepts
-    #: ``"auto"`` (round 10): resolved once per state dir via
+    #: ``"auto"``: resolved once per state dir via
     #: ``text.suggest_overlap_config()`` (catch-600-char-lifts default →
     #: mod 16 today) and PERSISTED in ``fps_meta`` — the mod must be
     #: identical at write and probe time across every run of a state dir
@@ -205,18 +206,7 @@ class CurationConfig:
     overlap_w: int = 8  # winnow window (k-gram hashes)
     overlap_sample_mod: int | str = 16
     overlap_fp_df_cap: int = 64  # fps in more docs than this are boilerplate
-    #: winnowing twin for the per-batch fingerprint pass (round 14):
-    #: ``"arrow"`` (scale default — one vectorized numpy pass per doc, no
-    #: per-char explode, no window exchanges) | ``"expr"`` (the
-    #: DuckDB-replayable relational plan). Pinned identical by
-    #: test; same convention as ``semdedup_impl``.
-    overlap_impl: str = "arrow"
-    #: decontamination twin (round 14): ``"arrow"`` (scale default —
-    #: 128-bit shingle hashes in one numpy pass per side, no interpreted
-    #: per-window string builds) | ``"expr"`` (the oracle-replayable
-    #: shingle-string chain x2e keeps). Pinned identical by test.
-    contamination_impl: str = "arrow"
-    #: opt-in ADAPTIVE evidence floor for short batch docs (round 10): a
+    #: opt-in ADAPTIVE evidence floor for short batch docs: a
     #: short doc wholesale-copied out of an admitted doc carries too few
     #: sampled fps to reach overlap_min_shared (a 150-char body has ~2
     #: at the defaults) yet slips every other ledger too (different
@@ -259,7 +249,7 @@ class CurationConfig:
     #: and every later batch would refuse loudly; "auto" adopts the
     #: coarsened value, which is the point.
     overlap_coarsen_above_rows: int | None = None
-    #: incremental ingest: overlap-drop PROVENANCE (round 11, opt-in) —
+    #: incremental ingest: overlap-drop PROVENANCE (opt-in) —
     #: the adaptive short-doc floor carries a measured 3-6.5% FP rate on
     #: held-out real text (OVERLAP.md §short-docs); at 100 TB that is
     #: millions of docs silently dropped with no way to audit which
@@ -294,7 +284,7 @@ class CurationConfig:
     #: ledgers — after each micro-batch, ``compact_ingest_state`` folds
     #: any state dir whose parquet file count exceeds this bound (the
     #: call itself is a cheap listing when nothing exceeds it). Safe
-    #: mid-run since round 9: state rows carry per-row provenance
+    #: mid-run: state rows carry per-row provenance
     #: (``src_batch_id``), so a batch replayed after its partitions were
     #: folded still decides against exactly the pre-batch state. ``None``
     #: = never compact in-pipeline (run it between runs by hand).
@@ -310,11 +300,11 @@ class CurationConfig:
     #: once at END of run and attach its plan rows to the run report
     #: (``rep["maintenance_plan"]``; ``ingest_run_report_df`` mirrors them
     #: as a summary row) — operators see "what's due" in the same surface
-    #: they already read (round-14 VERDICT item 6). Opt-in: the planner is
+    #: they already read. Opt-in: the planner is
     #: advisory + lease-free by design (listings + a few footer counts),
     #: but it is still a handful of filesystem round-trips per run.
     maintenance_plan_at_end: bool = False
-    #: incremental ingest: input DRIFT monitoring (round 12, opt-in) — a
+    #: incremental ingest: input DRIFT monitoring (opt-in) — a
     #: reference profile (``functions.profiling.profile_table`` dict,
     #: driver-sized: the corpus the gates/classifier/index were tuned
     #: on). With it set, each micro-batch profiles its parsed input docs
@@ -393,23 +383,72 @@ class CurationConfig:
                 raise ValueError(msg)
 
 
-def _writer_lease(spark, state_dir: str, owner: str, lease=None):
-    """Scope helper for the ENFORCED single-writer contract (round-11
-    VERDICT item 2): every state-mutating verb runs inside
-    ``with _writer_lease(...)``. ``lease=None`` (the standalone-verb
-    path) acquires the dir's writer lease for the duration and releases
-    it; a caller that already holds the run-scoped lease
-    (``run_incremental_curation``) passes it through — it is RENEWED
-    (which also validates the fencing token: a superseded run aborts
-    loudly here instead of writing) and NOT released on exit. A second
-    concurrent writer gets :class:`statedir.LeaseHeld`; a stale writer
-    that lost a takeover gets :class:`statedir.LeaseFenced` — never
-    silent interleaved state corruption. Thin alias of
-    ``statedir.lease_scope`` (one implementation across the curation
-    verbs and the index WAL verbs)."""
+@dataclass
+class _Verb:
+    """What one ingest-state verb holds inside :func:`_state_verb`: the
+    state dir ``base``, the held writer ``lease`` and the verb-local
+    schema memo behind :meth:`read`."""
+
+    spark: SparkSession
+    base: str
+    lease: object
+    schemas: dict = field(default_factory=dict)
+
+    def read(self, sub: str):
+        """``<base>/<sub>``, its merged schema inferred (a Spark job) once
+        per verb call; later reads of ``sub`` reuse it. Verb-local, not a
+        session memo: a state dir gains a partition every batch, so a
+        listing-keyed memo would miss on every call. None when absent."""
+        from ..io import read_parquet_state
+
+        path = f"{self.base}/{sub}"
+        if sub in self.schemas:
+            return self.spark.read.schema(self.schemas[sub]).parquet(path)
+        df = read_parquet_state(self.spark, path, mergeSchema="true")
+        if df is not None:
+            self.schemas[sub] = df.schema
+        return df
+
+    def fold(self, sub: str, max_files: int, keep=None) -> None:
+        """Replace ``<base>/<sub>`` with one ``batch_id=-1`` archive
+        partition of ``max(1, max_files // 8)`` files holding the rows
+        ``keep(df)`` returns (all rows when None), through the
+        ``statedir.replace_dir`` swap. Rows keep their provenance data
+        columns; mergeSchema keeps a column only some partitions carry;
+        ``dropDuplicates`` collapses replay debris (a batch replayed after
+        a fold rewrites rows the archive already holds)."""
+        from .. import statedir
+
+        path = f"{self.base}/{sub}"
+
+        def _write(tmp: str) -> None:
+            df = self.spark.read.option("mergeSchema", "true").parquet(
+                path
+            ).drop("batch_id")
+            (df if keep is None else keep(df)).dropDuplicates().coalesce(
+                max(1, max_files // 8)
+            ).write.mode("overwrite").parquet(tmp + "/batch_id=-1")
+
+        statedir.replace_dir(self.spark, path, _write, lease=self.lease)
+
+
+@contextmanager
+def _state_verb(spark, state_dir: str, owner: str, lease=None):
+    """The one way into ingest state: hold the state dir's writer lease
+    (``statedir.lease_scope``: ``lease=None`` acquires and releases it, a
+    passed-through run lease is renewed, which also fences a superseded
+    holder), then heal every ``STATE_DIRS`` dir before any read — a swap
+    killed between its renames leaves a dir absent with ``.__old__``
+    holding the only copy, and a committed ``.__partswap__`` sidecar
+    holds scrubbed children the live dir does not have yet. Yields the
+    verb's :class:`_Verb`. A second writer gets ``statedir.LeaseHeld``."""
     from .. import statedir
 
-    return statedir.lease_scope(spark, state_dir, owner, lease=lease)
+    base = state_dir.rstrip("/")
+    with statedir.lease_scope(spark, base, owner, lease=lease) as held:
+        for sub, *_ in STATE_DIRS:
+            statedir.heal_dir(spark, f"{base}/{sub}")
+        yield _Verb(spark, base, held)
 
 
 def _clean_docs(cfg: CurationConfig, df: DataFrame):
@@ -494,8 +533,8 @@ def run_curation(
         # cfg.semdedup_index_path is NOT unused on a semantic-ledger
         # config: run_incremental_curation requires it (the ledger's fixed
         # cross-run cells) while ignoring neardup_method, and one config
-        # object legitimately serves both APIs (round-8 ADVICE fix —
-        # refusing here made such configs unshareable with the batch API)
+        # object legitimately serves both APIs (refusing here would make
+        # such configs unshareable with the batch API)
         if cfg.semdedup_index_path is not None and not cfg.semantic_ledger:
             raise ValueError(
                 "cfg.semdedup_index_path is set but neardup_method="
@@ -572,18 +611,16 @@ def run_curation(
     # (minimum-id) member. The corpus side exits via one anti-join against
     # the non-canonical decision table.
     if cfg.neardup_method == "minhash":
-        # no signature PERSIST (round 15, VERDICT item 2): the round-6
-        # eager stats-fill (persist + count, whose only purpose was
-        # giving AQE accurate sizes) is replaced by minhash_lsh_pairs'
-        # count-gated explicit join choice, fed by the PREVIOUS stage's
-        # already-materialized row count (small → broadcast hint,
-        # 100× → merge — zero extra jobs for the gate). The signature
-        # frame is localCheckpointed so the UDF still runs exactly once
-        # (a bare BHJ would evaluate it on both self-join sides —
-        # measured +0.6 s at sf0.1) and released right after the stage
-        # materializes — no per-call pinned InMemoryRelation and no
-        # exception-path leak (round-14 ADVICE: the release is in a
-        # finally).
+        # no signature PERSIST: an eager stats-fill (persist + count, whose
+        # only purpose was giving AQE accurate sizes) is replaced by
+        # minhash_lsh_pairs' count-gated explicit join choice, fed by the
+        # PREVIOUS stage's already-materialized row count (small → broadcast
+        # hint, 100× → merge — zero extra jobs for the gate). The signature
+        # frame is localCheckpointed so the UDF still runs exactly once (a bare
+        # BHJ would evaluate it on both self-join sides — measured +0.6 s at
+        # sf0.1) and released right after the stage materializes — no per-call
+        # pinned InMemoryRelation and no exception-path leak (the release is in
+        # a finally).
         dag_sigs = dedup._minhash_sig_frame(
             cur, tcol, icol, 3, 32, True
         ).localCheckpoint()
@@ -612,7 +649,7 @@ def run_curation(
         pairs = None
         from ..operators.similarity import semdedup
 
-        # centroid artifact reuse (round-7): repeated curation runs — the
+        # centroid artifact reuse: repeated curation runs — the
         # incremental-ingest loop especially — should not re-derive cells
         # every run when a trained/persisted set exists. Precedence:
         # explicit DataFrame > persisted index (validated load, coarse
@@ -648,7 +685,7 @@ def run_curation(
             ),
             n_cells=cfg.semdedup_cells,
             threshold=cfg.semdedup_threshold,
-            impl=cfg.semdedup_impl,
+            impl="arrow",
             centroids=sem_cents,
         )
         losers_sem = alive.filter(F.col("removed")).select(
@@ -673,15 +710,15 @@ def run_curation(
             dedup.contamination_pairs(
                 cur, bench, text_col=tcol, id_col=icol,
                 min_shared=cfg.contamination_min_shared,
-                impl=cfg.contamination_impl,
+                impl="arrow",
             )
             .select(F.col("train_id").alias(icol))
             .distinct()
         )
-        # gate the broadcast on the PREVIOUS stage's materialized count
-        # (round 15, VERDICT item 3): dirty ids ⊆ surviving train ids, so
-        # prev_rows is a sound upper bound on the built relation — the
-        # round-14 localCheckpoint + count jobs (the dirty-ids compute
+        # gate the broadcast on the PREVIOUS stage's materialized count:
+        # dirty ids ⊆ surviving train ids, so prev_rows is a sound upper
+        # bound on the built relation — a separate localCheckpoint +
+        # count of the dirty ids (the dirty-ids compute
         # materialized inside them, ~1.4 s at sf0.1) fold into the stage
         # job itself: below the gate contamination_pairs executes once
         # inside the broadcast build (the hint, not AQE, removes the
@@ -938,7 +975,7 @@ def run_incremental_curation(
     fingerprints with any single admitted doc (boilerplate-capped; see
     the config docstring for the span-length arithmetic).
 
-    Takedowns: :func:`retract_documents` (round 11) removes an admitted
+    Takedowns: :func:`retract_documents` removes an admitted
     doc-id set from every state surface above plus the corpus and the
     pipeline-managed serving index; its ``retracted/`` record makes each
     batch here immune to the replay-resurrection hazard (docs retracted
@@ -966,31 +1003,29 @@ def run_incremental_curation(
     ckpt_dir = os.path.join(state_dir, "checkpoint")
     batches: list[dict] = []
 
-    # semantic ledger: the coarse cells are loaded ONCE per run from the
-    # persisted index (validated), not per micro-batch — and never derived
-    # from batch data, which would drift the cells between runs and
-    # silently miss cross-run pairs
-    sem_centroids = _load_semantic_centroids(spark, cfg)
-
-    # ENFORCED single-writer contract (round-11 VERDICT item 2): the run
-    # holds the state dir's writer lease for its whole duration — a
-    # second concurrent run (or a retraction / manual compaction racing
-    # this one) refuses loudly at acquisition instead of silently
-    # corrupting shared state. RUN-scoped, not batch-scoped, because two
-    # runs with separate checkpoints assign overlapping batch ids: each
-    # batch renews the lease (which also fences a run that lost a
-    # stale-lease takeover mid-stream).
+    # ENFORCED single-writer contract: the run holds the state dir's
+    # writer lease for its whole duration — a second concurrent run (or a
+    # retraction / manual compaction racing this one) refuses loudly at
+    # acquisition instead of silently corrupting shared state. RUN-scoped,
+    # not batch-scoped, because two runs with separate checkpoints assign
+    # overlapping batch ids: each batch renews the lease (which also
+    # fences a run that lost a stale-lease takeover mid-stream).
     from .. import statedir
 
     run_lease = statedir.acquire_lease(
         spark, state_dir, owner="run_incremental_curation"
     )
+    # semantic ledger: the coarse cells are loaded ONCE per run from the
+    # persisted index (validated), not per micro-batch — and never derived
+    # from batch data, which would drift the cells between runs and
+    # silently miss cross-run pairs; released with the lease
+    sem_centroids = None
 
     def batch_fn(lines: DataFrame, batch_id: int) -> None:
         rep = _ingest_batch(spark, lines, batch_id, cfg, state_dir, sch,
                             sem_centroids=sem_centroids, lease=run_lease)
         if cfg.ingest_compact_max_files is not None:
-            # in-pipeline ledger maintenance (round 9): safe between
+            # in-pipeline ledger maintenance: safe between
             # batches because state rows carry per-row provenance — a
             # replay after the fold still excludes exactly its own rows
             done = compact_ingest_state(
@@ -1000,7 +1035,7 @@ def run_incremental_curation(
             if done:
                 rep["state_compacted"] = done
         if cfg.overlap_coarsen_above_rows is not None:
-            # in-pipeline fps-budget maintenance (round 11): runs between
+            # in-pipeline fps-budget maintenance: runs between
             # batches like the fold above, under the same single-writer
             # contract — see the config docstring for the budget check's
             # cost (footer count, zero data pages)
@@ -1011,6 +1046,7 @@ def run_incremental_curation(
         batches.append(rep)
 
     try:
+        sem_centroids = _load_semantic_centroids(spark, cfg)
         (
             spark.readStream.format("text")
             .load(in_dir)
@@ -1022,6 +1058,8 @@ def run_incremental_curation(
         )
     finally:
         run_lease.release()
+        if sem_centroids is not None:
+            release_local_checkpoint(sem_centroids)
     out = {
         "batches": batches,
         "total_admitted": sum(b["admitted"] for b in batches),
@@ -1063,7 +1101,7 @@ def _read_state(spark: SparkSession, path: str, exclude_batch: int):
     """Read a state dir (hive-partitioned by batch_id), EXCLUDING the
     current batch's own rows so a replayed batch decides against exactly
     the pre-batch state. Exclusion keys on the ``src_batch_id`` DATA
-    column the writers stamp (round 9), not the partition dir: after
+    column the writers stamp, not the partition dir: after
     ``compact_ingest_state`` folded a batch's partition into the
     ``batch_id=-1`` archive, partition-based exclusion can no longer see
     whose rows are whose — a replayed batch would find its OWN digests in
@@ -1071,7 +1109,7 @@ def _read_state(spark: SparkSession, path: str, exclude_batch: int):
     EMPTY (silent data loss, strictly worse than the double-admit the old
     stop-the-world contract warned about). With the data column the
     archive keeps per-row provenance and replay-after-compaction decides
-    identically to replay-before. Pre-round-9 state dirs (no column yet)
+    identically to replay-before. State dirs without the column
     fall back to partition exclusion — correct until their first
     compaction, after which the writers' own stamps have taken over.
     "No usable state yet" → None via the shared FS-portable classifier
@@ -1117,8 +1155,8 @@ def _resolve_overlap_mod(spark: SparkSession, fps_dir: str, cfg) -> int:
     batch adopts the persisted mod — including ``"auto"`` runs after a
     formula change — and an EXPLICIT config contradicting the meta is
     refused loudly (the config-carrying-artifact contract: NBModel's
-    hasher/dim, PQ codebooks' cent_sig). Pre-round-10 state dirs (fps
-    rows, no meta yet) adopt the current config and write the meta —
+    hasher/dim, PQ codebooks' cent_sig). State dirs from before the meta
+    (fps rows, no meta yet) adopt the current config and write the meta —
     those dirs were written at the then-only default, and refusing them
     would brick every existing deployment on upgrade."""
     from ..functions.text import suggest_overlap_config
@@ -1150,7 +1188,7 @@ def _resolve_overlap_mod(spark: SparkSession, fps_dir: str, cfg) -> int:
     legacy = read_parquet_state(spark, fps_dir)
     if cfg.overlap_sample_mod == "auto":
         if legacy is not None:
-            # pre-round-10 state (fps rows, no meta): pin the DEFAULT, 16,
+            # pre-meta state (fps rows, no meta): pin the DEFAULT, 16,
             # not today's suggestion (which moves with min_shared and
             # any future formula change; e.g. min_shared=8 suggests
             # mod 8, and probing a mod-16 dir at 8 silently halves the
@@ -1164,7 +1202,7 @@ def _resolve_overlap_mod(spark: SparkSession, fps_dir: str, cfg) -> int:
     else:
         mod = int(cfg.overlap_sample_mod)
     if legacy is not None and "fp" in legacy.columns:
-        # round-11 (ADVICE): before adopting ANY mod for a meta-less dir
+        # before adopting ANY mod for a meta-less dir
         # — the legacy default 16 above, or an explicit config value —
         # check the claim against the rows themselves: every stored fp
         # must satisfy fp % mod == 0 (one cheap aggregate over the
@@ -1218,38 +1256,30 @@ def _ingest_batch(
     ``sem_centroids`` is the per-run preloaded cell table for the semantic
     ledger; the direct-call (replay-test) path loads it on demand.
     ``lease``: the run-scoped writer lease (renewed per batch); the
-    direct-call path acquires one transiently — see ``_writer_lease``."""
+    direct-call path acquires one transiently (``_state_verb``). Cells
+    this call loaded itself are released before it returns."""
     from pyspark.sql import types as T
 
-    from .. import statedir
     from ..sources.jsonl import CORRUPT_COL
 
-    if cfg.semantic_ledger and sem_centroids is None:
-        sem_centroids = _load_semantic_centroids(spark, cfg)
+    own_cells = cfg.semantic_ledger and sem_centroids is None
     full = T.StructType(
         list(sch.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
     )
-    with _writer_lease(spark, state_dir, f"ingest_batch={batch_id}",
-                       lease=lease):
-        # heal a killed compaction swap or retraction BEFORE any state
-        # read: a crash between replace_dir's two renames leaves the dir
-        # absent with `.__old__` holding the only copy, and an unhealed
-        # _read_state would see "no state" and silently re-admit
-        # everything the ledger ever recorded. A dozen existence checks —
-        # cheap enough to run unconditionally, and mandatory once
-        # cfg.ingest_compact_max_files folds mid-run.
-        for sub, *_ in STATE_DIRS:
-            statedir.heal_dir(spark, os.path.join(state_dir, sub))
-        # re-spread the micro-batch BEFORE the persist (round 14, guide
-        # §2.4): the file source bin-packs a batch's JSONL shards into a
-        # handful of partitions (8 for a 100k-doc batch here — measured as
-        # the dominant straggler stage: the whole admission pipeline's
-        # clean/gate/digest work ran on 8 of 32 cores). spread_for_arrow's
-        # guards keep tiny micro-batches unshuffled (size floor) and make
-        # this a no-op at cluster scale (splittable sources already exceed
-        # cores/4 partitions). Measured (interleaved stash A/B, 100k-doc
-        # exact-only batches, identical admitted sets): warm 14.2-14.6 →
-        # 11.3-11.7 s, cold 20.0-20.5 → 16.0-17.1 s (~20%).
+    # the frame heals before any state read: an unhealed _read_state
+    # would see a half-swapped dir as "no state" and re-admit everything
+    # the ledger ever recorded
+    with _state_verb(spark, state_dir, f"ingest_batch={batch_id}",
+                     lease=lease):
+        # re-spread the micro-batch BEFORE the persist: the file source
+        # bin-packs a batch's JSONL shards into a handful of partitions (8 for
+        # a 100k-doc batch here — measured as the dominant straggler stage: the
+        # whole admission pipeline's clean/gate/digest work ran on 8 of 32
+        # cores). spread_for_arrow's guards keep tiny micro-batches unshuffled
+        # (size floor) and make this a no-op at cluster scale (splittable
+        # sources already exceed cores/4 partitions). Measured (interleaved
+        # stash A/B, 100k-doc exact-only batches, identical admitted sets):
+        # warm 14.2-14.6 → 11.3-11.7 s, cold 20.0-20.5 → 16.0-17.1 s (~20%).
         parsed = dedup.spread_for_arrow(lines).filter(
             F.length(F.trim("value")) > 0
         ).withColumn(
@@ -1263,12 +1293,16 @@ def _ingest_batch(
         # once (unpersisted in the finally below — a mid-batch failure must
         # not pin the block until session GC)
         try:
+            if own_cells:
+                sem_centroids = _load_semantic_centroids(spark, cfg)
             return _ingest_batch_body(
                 _Batch(spark, cfg, batch_id, state_dir, sem_centroids),
                 parsed, sch,
             )
         finally:
             parsed.unpersist()
+            if own_cells and sem_centroids is not None:
+                release_local_checkpoint(sem_centroids)
 
 
 @dataclass
@@ -1310,7 +1344,7 @@ class _Batch:
     def write(self, surface: str, rows) -> None:
         """Queue ``rows(admitted)`` for this batch's partition of
         ``surface``, stamped with the producing batch as the
-        ``src_batch_id`` data column (round 9): the partition dir alone
+        ``src_batch_id`` data column: the partition dir alone
         loses provenance once compact_ingest_state folds it into the
         batch_id=-1 archive, and _read_state's own-batch exclusion — the
         replay-safety mechanism — keys on this column."""
@@ -1334,7 +1368,7 @@ def _ingest_batch_body(ctx: _Batch, parsed, sch) -> dict:
         .select(*[F.col("j").getField(f.name).alias(f.name) for f in sch.fields])
         .filter(F.length(F.coalesce(tcol, F.lit(""))) > 0)
     )
-    # retraction replay guard (round 11 — see retract_documents): an
+    # retraction replay guard (see retract_documents): an
     # at-least-once REPLAY of this batch recomputes admission against the
     # pre-batch state and would re-land docs a takedown removed, silently
     # undoing the retraction. Retraction rows carry the batch that
@@ -1344,9 +1378,9 @@ def _ingest_batch_body(ctx: _Batch, parsed, sch) -> dict:
     # documented re-submission semantics. The read is takedown-sized and
     # returns None on the (overwhelmingly common) no-retractions path.
     # The guard runs BEFORE n_in is counted and its exclusions are
-    # reported separately (round-11 ADVICE: counting input first left
+    # reported separately (counting input first would leave
     # rep["input"] including docs no stage count accounted for, so
-    # input vs stage_rows/admitted never reconciled on exactly the
+    # input vs stage_rows/admitted would never reconcile on exactly the
     # replayed batches the guard exists for).
     pre_guard = None
     retr = read_parquet_state(spark, ctx.path("retracted"), mergeSchema="true")
@@ -1364,7 +1398,7 @@ def _ingest_batch_body(ctx: _Batch, parsed, sch) -> dict:
             docs = docs.join(F.broadcast(guard), icol, "left_anti")
     n_in = ctx.n_in = docs.count()
 
-    # opt-in input drift monitoring (round 12): profile the PARSED batch
+    # opt-in input drift monitoring: profile the PARSED batch
     # (pre-clean, pre-gate — the question is "did my INPUT move", and the
     # gates downstream are exactly what a moved input mis-tunes) against
     # the reference profile, one single-pass agg job. Monitoring only —
@@ -1458,7 +1492,7 @@ def _ingest_batch_body(ctx: _Batch, parsed, sch) -> dict:
     if pre_guard is not None:
         # the replay guard ran: input_rows is already post-guard, and the
         # guard's exclusions are reported so input vs stage_rows/admitted
-        # arithmetic reconciles (round-11 ADVICE)
+        # arithmetic reconciles
         rep["retraction_excluded"] = pre_guard - n_in
     if stage_rows:
         rep["stage_rows"] = stage_rows
@@ -1483,7 +1517,7 @@ def _exact_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     )
     seen = ctx.state("ledger")
     if seen is not None:
-        # 100 TB shape (round 12): the naive batch ⟕anti ledger plans a
+        # 100 TB shape: the naive batch ⟕anti ledger plans a
         # SortMergeJoin that SHUFFLES every ledger digest per
         # micro-batch — the dominant recurring cost once the ledger
         # dwarfs the batch, and unfixable by Spark alone (the LEFT side
@@ -1499,8 +1533,8 @@ def _exact_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     ctx.write("ledger", lambda adm, src: adm.select(
         F.col("_digest").alias("digest"), src
     ))
-    # truncate the admission lineage once the exact leg is decided
-    # (round 15, VERDICT item 4): every downstream consumer — the
+    # truncate the admission lineage once the exact leg is decided:
+    # every downstream consumer — the
     # signature persist, the winnow checkpoint, each scan-state leg's
     # broadcast build of a batch-derived frame, and the admitted
     # checkpoint — re-executed clean → gate → window-dedup →
@@ -1519,11 +1553,11 @@ def _neardup_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     against ``sigs/``. Carries ``_sig`` forward."""
     cfg = ctx.cfg
     tcol, icol = cfg.text_col, cfg.id_col
-    # ONE signature pass per batch (round 14): the within-batch
+    # ONE signature pass per batch: the within-batch
     # pair generation AND the cross-run leg / sigs-ledger write share the
     # cached signature frame, and ``_sig`` attaches by a left join (null
     # for docs too short to sign). The attach keys on ``_digest``, not
-    # the doc id (round-14 ADVICE): nothing upstream enforces
+    # the doc id: nothing upstream enforces
     # id-uniqueness within a batch — duplicate ids with DIFFERING text
     # both survive the digest-keyed exact dedup, and an id-keyed join
     # would fan their rows out — while the digest IS unique
@@ -1626,7 +1660,7 @@ def _overlap_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     overlap_mod = _resolve_overlap_mod(spark, ctx.path("fps"), cfg)
     bfps = ctx.hold(text.winnow_fingerprints_df(
         docs, text_col=tcol, id_col=icol,
-        k=cfg.overlap_k, w=cfg.overlap_w, impl=cfg.overlap_impl,
+        k=cfg.overlap_k, w=cfg.overlap_w, impl="arrow",
     ).filter(
         F.col("fp") % overlap_mod == 0
     ).localCheckpoint())  # winnowing is window-heavy; 4 consumers below
@@ -1650,7 +1684,7 @@ def _overlap_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     if old_fps is not None:
         # batch side of the cross-run comparison: this batch's surviving
         # docs' df-CAPPED fps — capping the batch side too is symmetric
-        # with the within-batch leg (round-10 VERDICT item 3): a
+        # with the within-batch leg: a
         # fingerprint viral WITHIN the landing batch (new boilerplate — a
         # header pasted into thousands of docs in one drop) is not
         # copying evidence either, and uncapped it would fan out up to
@@ -1770,14 +1804,14 @@ def _semantic_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
 
     cfg, cents = ctx.cfg, ctx.sem_centroids
     tcol, icol = cfg.text_col, cfg.id_col
-    # dim via the _small_rows memo (round 15): sem_centroids is ONE
+    # dim via the _small_rows memo: sem_centroids is ONE
     # run-scoped checkpointed handle, so the first batch pays one collect
     # and every later batch reads the memo
     dim = len(_small_rows(cents)[0].cent)
     # truncate the lineage the leg's several actions (embed checkpoint,
     # verdicts, cell assignment, cross-run broadcast builds) would
     # otherwise re-execute — by here docs carries the minhash and overlap
-    # legs' joins on top of the exact-leg checkpoint (round 15). Skipped
+    # legs' joins on top of the exact-leg checkpoint. Skipped
     # when no other ledger ran: docs IS the exact-leg checkpoint then.
     if cfg.neardup_ledger or cfg.overlap_ledger:
         docs = ctx.hold(docs.localCheckpoint())
@@ -1787,7 +1821,7 @@ def _semantic_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     ).localCheckpoint())  # feeds the verdict AND the assignment below
     verd = semdedup(
         emb, centroids=cents,
-        threshold=cfg.semdedup_threshold, impl=cfg.semdedup_impl,
+        threshold=cfg.semdedup_threshold, impl="arrow",
     )
     docs = docs.join(
         verd.filter(F.col("removed")).select(F.col("id").alias(icol)),
@@ -1795,7 +1829,7 @@ def _semantic_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     )
     # survivors' cells + vectors: reused for the cross-run check and
     # persisted for future batches — checkpoint the batch-bounded
-    # assignment once (round 15) instead of re-running the
+    # assignment once instead of re-running the
     # crossJoin+window per consumer
     cur = ctx.hold(_assign_cells(
         emb.join(
@@ -1805,7 +1839,7 @@ def _semantic_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     ).localCheckpoint())
     old_vecs = ctx.state("semvecs")
     if old_vecs is not None:
-        # 100 TB shape (round 13): semvecs/ grows with the corpus. The
+        # 100 TB shape: semvecs/ grows with the corpus. The
         # batch's (vec_id, cell_id, v) frame is batch-bounded, so it
         # broadcasts and the state streams under a BroadcastHashJoin —
         # output is bounded by the population of the batch's cells. The
@@ -1842,7 +1876,7 @@ def _write_admitted(ctx: _Batch, admitted: DataFrame, doc_cols) -> int:
     the admitted count. The writes all read the ADMITTED CHECKPOINT's
     blocks and land in different dirs with no ordering requirement
     between them (replay overwrite-repairs each independently) — submit
-    them from a small thread pool (round 15: each write is a handful of
+    them from a small thread pool (each write is a handful of
     tiny tasks, and running 4-6 of them serially left the session idle
     between job round-trips; measured 0.85 → ~0.35 s per 200-doc batch).
     Job descriptions are thread-local, so the UI stays labeled per write."""
@@ -1942,10 +1976,10 @@ def _append_serve_index(spark, admitted, cfg, icol, batch_id,
 
     The reservation is made VISIBLE to the index's own id discipline by
     landing the empty, marker-less attempted dir
-    ``codes_append/batch=<id>`` the moment the id is chosen (round-8
-    VERDICT item 3): a concurrent ``append_to_pq_index(batch_id=None)``
-    then auto-assigns PAST the reserved id instead of colliding inside
-    the reserve→append crash window (the single-writer contract stays
+    ``codes_append/batch=<id>`` the moment the id is chosen: a
+    concurrent ``append_to_pq_index(batch_id=None)`` then auto-assigns
+    PAST the reserved id instead of colliding inside the reserve→append
+    crash window (the single-writer contract stays
     documented, but the guard is now mechanical). The id itself comes
     from ``ann_index.next_log_id`` — the same formula the WAL's auto
     path runs, public so the two cannot drift.
@@ -1965,7 +1999,7 @@ def _append_serve_index(spark, admitted, cfg, icol, batch_id,
     The mapping row carries the ingest batch id as a DATA column
     (``ingest_batch_id``), not just the partition dir name, so
     ``compact_ingest_state`` can fold ``idxmap/`` into its archive
-    partition without losing the lookup key (round-8 VERDICT item 2)."""
+    partition without losing the lookup key."""
     from .. import fsutil
     from ..io import read_parquet_state, tiny_df
     from ..operators.ann_index import (
@@ -1977,8 +2011,8 @@ def _append_serve_index(spark, admitted, cfg, icol, batch_id,
     base = cfg.semdedup_index_path.rstrip("/")
     reserved = None
     # mergeSchema + coalesce-to-partition-id: same upgrade-window
-    # treatment as _read_state — a pre-round-9 mapping row carries only
-    # the partition dir's batch_id, and missing it here would make that
+    # treatment as _read_state — a provenance-less mapping row carries
+    # only the partition dir's batch_id, and missing it here would make that
     # batch's replay reserve FRESH and append a silent duplicate copy
     mapping = read_parquet_state(spark, idxmap_dir, mergeSchema="true")
     if mapping is not None:
@@ -2041,7 +2075,7 @@ def ingest_state_report(spark: SparkSession, state_dir: str) -> DataFrame:
     for sub in subs:
         path = f"{base}/{sub}"
         if sub == "fps_meta":
-            # the overlap sampling-config sidecar (round 10) is state too
+            # the overlap sampling-config sidecar is state too
             # — the report convention covers every artifact a dir holds.
             # Listing-only like every other row; the pinned mod/k/w are
             # one read_parquet_state away for whoever needs the values.
@@ -2061,8 +2095,7 @@ def ingest_state_report(spark: SparkSession, state_dir: str) -> DataFrame:
             statedir.numbered_dirs(spark, path, "batch_id=", above=-1)
         )
         archived = fsutil.is_dir(spark, f"{path}/batch_id=-1")
-        # two distinct .__old__ states (round-10 ADVICE — the old report
-        # called both "only copy"): live dir ABSENT = a fold died between
+        # two distinct .__old__ states: live dir ABSENT = a fold died between
         # its two renames and .__old__ really is the only copy (the next
         # recover_replaced_dir restores it); live dir PRESENT = the fold
         # completed its rename-in but died before deleting the old copy —
@@ -2080,7 +2113,7 @@ def ingest_state_report(spark: SparkSession, state_dir: str) -> DataFrame:
                       "fold)")
         else:
             detail = ""
-        # a retraction's partition-swap sidecar (round 11): committed =
+        # a retraction's partition-swap sidecar: committed =
         # replacement children awaiting their rename (completed at the
         # next ingest batch or retract call); marker-less = a killed
         # write, discarded at the next heal — flagged either way so an
@@ -2094,7 +2127,7 @@ def ingest_state_report(spark: SparkSession, state_dir: str) -> DataFrame:
                 f"retraction partition swap in .__partswap__ ({state})"
             )
         rows.append((sub, n, b, batches, archived, detail))
-    # the writer lease (round 12) is state too: show the current epoch,
+    # the writer lease is state too: show the current epoch,
     # holder record, and whether it is live or expired — "who is writing
     # this dir / is a crashed holder blocking maintenance" should be
     # answerable from the report, not from listing _lease by hand
@@ -2182,17 +2215,17 @@ def _retraction_probe(keys: DataFrame, keys_col: str, key_col: str):
     ``compact_ingest_state`` fold moved them under ``batch_id=-1``, as
     the ``src_batch_id`` provenance column — and the retraction keys
     carry ``admitted_batch_id``. Matching the bare key over-reaches in
-    exactly one place (review-found): the digest-keyed ``ledger/``
+    exactly one place: the digest-keyed ``ledger/``
     after a fold, where a DIFFERENT live doc that legitimately
     re-admitted identical content (same digest, other id, later batch)
     sits in the same archive partition — a bare-digest scrub deletes
     its exact-dedup evidence, and the residual probe (same bare key)
     then blesses the damage. Pair matching scopes both the scrub and
     the probe to the admissions actually being retracted. Archive rows
-    with NO provenance column / a null ``src_batch_id`` (pre-round-9
-    folds) fall back to key-only matching — the conservative direction
-    for a takedown (over-scrub legacy debris rather than leave the
-    retracted doc live)."""
+    with NO provenance column / a null ``src_batch_id`` (folds of
+    provenance-less dirs) fall back to key-only matching — the
+    conservative direction for a takedown (over-scrub legacy debris
+    rather than leave the retracted doc live)."""
     probe = keys.select(
         F.col(keys_col).alias("__rk"),
         F.col("admitted_batch_id").cast("long").alias("__rb"),
@@ -2206,37 +2239,17 @@ def _retraction_probe(keys: DataFrame, keys_col: str, key_col: str):
 def _with_admitting_batch(df: DataFrame) -> DataFrame:
     """Stamp ``__src`` = the row's admitting batch: the live partition
     value, or ``src_batch_id`` for rows a fold moved into the
-    ``batch_id=-1`` archive (null when the provenance column predates
-    round 9 — key-only fallback in ``_retraction_probe``)."""
-    if "src_batch_id" in df.columns:
-        src = F.when(
-            F.col("batch_id") == -1, F.col("src_batch_id").cast("long")
-        ).otherwise(F.col("batch_id").cast("long"))
-    else:
-        src = F.when(
-            F.col("batch_id") == -1, F.lit(None).cast("long")
-        ).otherwise(F.col("batch_id").cast("long"))
-    return df.withColumn("__src", src)
+    ``batch_id=-1`` archive (null when the dir has no provenance column
+    — key-only fallback in ``_retraction_probe``)."""
+    folded = F.col("src_batch_id") if "src_batch_id" in df.columns else (
+        F.lit(None)
+    )
+    return df.withColumn("__src", F.when(
+        F.col("batch_id") == -1, folded.cast("long")
+    ).otherwise(F.col("batch_id").cast("long")))
 
 
-def _read_surface(spark, base: str, sub: str, schemas: dict):
-    """``<base>/<sub>``, its merged schema inferred (a Spark job) once per
-    verb call: later reads reuse it from the caller's ``schemas`` dict.
-    Verb-local, not a session memo: a state dir gains a partition every
-    batch, so a listing-keyed memo would miss on every call."""
-    from ..io import read_parquet_state
-
-    path = f"{base}/{sub}"
-    if sub in schemas:
-        return spark.read.schema(schemas[sub]).parquet(path)
-    df = read_parquet_state(spark, path, mergeSchema="true")
-    if df is not None:
-        schemas[sub] = df.schema
-    return df
-
-
-def _surface_matches(spark, base: str, icol: str, keys: DataFrame,
-                     batches, schemas: dict) -> list:
+def _surface_matches(v: _Verb, icol: str, keys: DataFrame, batches) -> list:
     """``[(surface, key col, retraction-key col, rows)]``: each surface's
     rows matching the retraction keys (``_retraction_probe`` pairs),
     pruned to ``batches`` plus the ``batch_id=-1`` fold archive by ONE
@@ -2251,12 +2264,12 @@ def _surface_matches(spark, base: str, icol: str, keys: DataFrame,
             "admitted_batch_id").distinct().collect()]
     out = []
     for sub, key_col, keys_col in _state_surfaces(icol):
-        names = set(fsutil.child_names(spark, f"{base}/{sub}"))
+        names = set(fsutil.child_names(v.spark, f"{v.base}/{sub}"))
         # the folded archive may hold any batch's rows
         parts = [p for p in [*batches, -1] if f"batch_id={p}" in names]
         if not parts:
             continue
-        df = _read_surface(spark, base, sub, schemas)
+        df = v.read(sub)
         if df is None or key_col not in df.columns:
             continue
         probe, cond = _retraction_probe(keys, keys_col, key_col)
@@ -2266,20 +2279,15 @@ def _surface_matches(spark, base: str, icol: str, keys: DataFrame,
     return out
 
 
-def _live_matches(spark, base: str, icol: str, keys: DataFrame, batches,
-                  schemas: dict) -> dict:
+def _live_matches(v: _Verb, icol: str, keys: DataFrame, batches) -> dict:
     """``{surface: {batch_id: matching rows}}`` for every surface in ONE
     query: branches are projected to ``(surface, batch_id)`` before the
     union, so digest and id key columns never mix. On takedown-sized keys
     per-query fixed cost (planning, codegen, JIT) outweighs the scan."""
-    from functools import reduce
-
     branches = [
         m.select(F.lit(sub).alias("surface"),
                  F.col("batch_id").cast("long").alias("batch_id"))
-        for sub, _key, _kc, m in _surface_matches(
-            spark, base, icol, keys, batches, schemas
-        )
+        for sub, _key, _kc, m in _surface_matches(v, icol, keys, batches)
     ]
     hits: dict = {}
     if branches:
@@ -2305,32 +2313,8 @@ def retract_documents(
     spark: SparkSession, state_dir: str, ids, cfg: CurationConfig,
     dry_run: bool = False, lease=None,
 ) -> dict:
-    """Lease-holding entry point for the takedown verb — acquires the
-    state dir's writer lease (or renews a passed-through run lease; see
-    ``_writer_lease``) for the duration, so a retraction racing an
-    ingest run or another maintenance verb refuses loudly instead of
-    interleaving scrubs with concurrent writes. ``dry_run`` holds the
-    lease too: the preview's entry heal mutates state. Semantics are in
-    :func:`_retract_documents_body`."""
-    with _writer_lease(spark, state_dir.rstrip("/"), "retract_documents",
-                       lease=lease) as held:
-        return _retract_documents_body(
-            spark, state_dir, ids, cfg, dry_run, held
-        )
-
-
-def _retract_documents_body(
-    spark: SparkSession, state_dir: str, ids, cfg: CurationConfig,
-    dry_run: bool = False, lease=None,
-) -> dict:
-    """Takedown/retraction verb for the incremental-ingest state — the
-    missing lifecycle quadrant (round-10 VERDICT item 1): append, compact,
-    abandon, and replay all had verbs, but a GDPR/right-to-erasure request
-    against an ADMITTED document previously meant hand-editing six state
-    surfaces under the single-writer contract — exactly the
-    hand-deleted-dirs failure mode ``abandon_log_entry`` /
-    ``abandon_run`` were built to prevent. One call removes a doc-id set
-    from every surface its admission touched:
+    """Takedown verb for the incremental-ingest state: one call removes a
+    doc-id set from every surface its admission touched:
 
       ``corpus/``  — the document rows themselves (the erasure);
       ``ledger/``  — its md5 digest (keyed by digest, recomputed from the
@@ -2341,6 +2325,11 @@ def _retract_documents_body(
       the serving index — a tombstone through the shared WAL id sequence
       (``ann_index.remove_from_pq_index``) when the index is
       pipeline-managed (``cfg.serve_index_append``).
+
+    Runs inside :func:`_state_verb` (the state dir's writer lease, or a
+    renewed pass-through run lease, and the entry heal), so a retraction
+    racing an ingest run or another maintenance verb refuses loudly.
+    ``dry_run`` holds the lease too: the entry heal mutates state.
 
     Physical deletes, not read-side filtering — and PARTITION-PRUNED
     after one key-resolution pass: resolving ids to
@@ -2353,34 +2342,32 @@ def _retract_documents_body(
     the membership count scans only those partitions, and only
     partitions actually holding retracted rows are rewritten
     (``statedir.swap_partitions`` — sidecar write + job-commit marker,
-    per-child swap, heal shared with the ingest entry). At 100 TB a
-    takedown's WRITE cost is the affected partitions, never a corpus
-    rewrite; after ``compact_ingest_state`` folds a ledger, its archive
-    partition is the granularity floor (the documented compaction trade
-    — the never-folded corpus keeps per-batch granularity forever).
-    Per-row ``src_batch_id`` provenance survives the rewrite, so replay
-    exclusion keeps working — and the scrub/probe match is the PAIR
-    (key value, admitting batch) via ``_retraction_probe``, never the
-    bare key: inside the fold archive a bare digest match would also
-    delete a DIFFERENT doc's legitimately re-admitted identical
-    content's ledger row (and the bare-key residual probe would bless
-    it). Provenance-less legacy archive rows key-match as the
-    conservative fallback.
+    per-child swap, healed by every verb's entry). A takedown's WRITE
+    cost is the affected partitions, never a corpus rewrite; after
+    ``compact_ingest_state`` folds a ledger, its archive partition is
+    the granularity floor (the never-folded corpus keeps per-batch
+    granularity forever). Per-row ``src_batch_id`` provenance survives
+    the rewrite, so replay exclusion keeps working — and the scrub/probe
+    match is the PAIR (key value, admitting batch) via
+    ``_retraction_probe``, never the bare key: inside the fold archive a
+    bare digest match would also delete a DIFFERENT doc's legitimately
+    re-admitted identical content's ledger row (and the bare-key
+    residual probe would bless it). Provenance-less legacy archive rows
+    key-match as the conservative fallback.
 
-    At-least-once interaction — the one subtle hazard: a batch killed
-    BEFORE its stream checkpoint committed will REPLAY after this verb
-    ran, recompute its admission against the pre-batch state, and
-    re-land its full row set — silently undoing the retraction for any
-    retracted doc it admitted. So the verb FIRST records
+    At-least-once interaction: a batch killed BEFORE its stream
+    checkpoint committed will REPLAY after this verb ran, recompute its
+    admission against the pre-batch state, and re-land its full row set
+    — silently undoing the retraction for any retracted doc it
+    admitted. So the verb FIRST records
     ``(doc_id, digest, admitted_batch_id)`` in a ``retracted/`` ledger
     (takedown-sized, batch-dir layout like every sibling), and
     ``_ingest_batch`` anti-joins each batch's docs against retraction
     rows whose ``admitted_batch_id`` equals the CURRENT batch id — a
     replay of batch N re-excludes exactly the docs retracted out of
     batch N, while a genuine re-submission of the same text in a LATER
-    batch is admitted fresh (its batch id differs), which is the
-    documented semantics: retraction removes the doc's ledger footprint,
-    it does not blocklist the content.
+    batch is admitted fresh (its batch id differs): retraction removes
+    the doc's ledger footprint, it does not blocklist the content.
 
     Crash ordering / idempotence: record → scrub ledgers → scrub corpus
     → index tombstone. A crash anywhere is completed by re-running the
@@ -2392,9 +2379,7 @@ def _retract_documents_body(
     ids whose tombstone already landed are invisible, so a replayed
     verb never lands a duplicate tombstone entry). A retraction of ids
     never admitted is a loud-free no-op, same as deleting an absent
-    file. Run it between ingest runs (single-writer contract, like
-    every maintenance verb here); the replay guard covers the one
-    redelivery that can straddle it.
+    file.
 
     ``ids`` is an iterable of doc ids or a one-column DataFrame —
     takedown-sized (it is collected and broadcast), never corpus-sized.
@@ -2429,206 +2414,204 @@ def _retract_documents_body(
     replay hole the record exists to close)."""
     from .. import fsutil, statedir
 
-    base = state_dir.rstrip("/")
-    tcol, icol = cfg.text_col, cfg.id_col
-    if isinstance(ids, DataFrame):
-        if len(ids.columns) != 1:
-            raise ValueError(
-                f"retract_documents: ids DataFrame has columns "
-                f"{ids.columns} — pass exactly one id column"
+    with _state_verb(spark, state_dir, "retract_documents",
+                     lease=lease) as v:
+        tcol, icol = cfg.text_col, cfg.id_col
+        if isinstance(ids, DataFrame):
+            if len(ids.columns) != 1:
+                raise ValueError(
+                    f"retract_documents: ids DataFrame has columns "
+                    f"{ids.columns} — pass exactly one id column"
+                )
+            id_vals = [r[0] for r in ids.distinct().collect()]
+        else:
+            id_vals = sorted(set(ids))
+        out: dict = {"requested": len(id_vals), "found": 0, "scrubbed": {},
+                     "retract_batch_id": None, "index_tombstone": None}
+        if dry_run:
+            out["dry_run"] = True
+        if not id_vals:
+            return out
+
+        retr_dir = os.path.join(v.base, "retracted")
+        # the retraction keys: (doc_id, digest, admitted_batch_id) from the
+        # corpus rows still present, UNIONED with rows already recorded by a
+        # prior (possibly crashed) run of this verb for the same ids — after
+        # the corpus scrub the text (and so the digest) is only recoverable
+        # from the record, which is why the record is written first
+        corpus = v.read("corpus")
+        found = None
+        if corpus is not None and icol in corpus.columns:
+            found = corpus.filter(F.col(icol).isin(id_vals)).select(
+                F.col(icol).alias("doc_id"),
+                F.md5(F.col(tcol)).alias("digest"),
+                F.col("batch_id").cast("long").alias("admitted_batch_id"),
+            ).localCheckpoint()
+        prior = v.read("retracted")
+        keys = None
+        if prior is not None:
+            keys = prior.filter(F.col("doc_id").isin(id_vals)).select(
+                "doc_id", "digest", "admitted_batch_id",
+                F.lit(False).alias("__new"),
             )
-        id_vals = [r[0] for r in ids.distinct().collect()]
-    else:
-        id_vals = sorted(set(ids))
-    out: dict = {"requested": len(id_vals), "found": 0, "scrubbed": {},
-                 "retract_batch_id": None, "index_tombstone": None}
-    if dry_run:
-        out["dry_run"] = True
-    if not id_vals:
-        return out
-
-    retr_dir = os.path.join(base, "retracted")
-    # complete a prior killed retraction's pending swaps BEFORE any read
-    # — otherwise the keys lookup sees pre-swap rows and this run records
-    # a duplicate (harmless but noisy) event for them
-    for sub, *_ in STATE_DIRS:
-        statedir.heal_dir(spark, os.path.join(base, sub))
-
-    # the retraction keys: (doc_id, digest, admitted_batch_id) from the
-    # corpus rows still present, UNIONED with rows already recorded by a
-    # prior (possibly crashed) run of this verb for the same ids — after
-    # the corpus scrub the text (and so the digest) is only recoverable
-    # from the record, which is why the record is written first
-    schemas: dict = {}  # verb-local: one schema inference per surface
-    corpus = _read_surface(spark, base, "corpus", schemas)
-    found = None
-    if corpus is not None and icol in corpus.columns:
-        found = corpus.filter(F.col(icol).isin(id_vals)).select(
-            F.col(icol).alias("doc_id"),
-            F.md5(F.col(tcol)).alias("digest"),
-            F.col("batch_id").cast("long").alias("admitted_batch_id"),
+        if found is not None:
+            # __new: the key came from the corpus, i.e. this run has
+            # something to record
+            new = found.withColumn("__new", F.lit(True))
+            keys = new if keys is None else keys.unionByName(new)
+        if keys is None:
+            return out
+        # dedup on the FULL key including admitted_batch_id: a doc retracted,
+        # then re-submitted under the same id with identical text, then
+        # retracted again contributes TWO rows differing only in
+        # admitted_batch_id — the prior retracted/ record and the fresh corpus
+        # row. Collapsing to one arbitrary row let the STALE record win, prune
+        # cand_batches to the old batch's partitions, and silently skip the
+        # live copy (found=1, scrubbed={}). Keeping both rows keeps both
+        # admission batches in cand_batches; the record step and replay guard
+        # already handle duplicates per batch correctly.
+        keys = keys.dropDuplicates(
+            ["doc_id", "digest", "admitted_batch_id", "__new"]
         ).localCheckpoint()
-    prior = _read_surface(spark, base, "retracted", schemas)
-    keys = None
-    if prior is not None:
-        keys = prior.filter(F.col("doc_id").isin(id_vals)).select(
-            "doc_id", "digest", "admitted_batch_id",
-            F.lit(False).alias("__new"),
-        )
-    if found is not None:
-        # __new: the key came from the corpus, i.e. this run has
-        # something to record
-        new = found.withColumn("__new", F.lit(True))
-        keys = new if keys is None else keys.unionByName(new)
-    if keys is None:
-        return out
-    # dedup on the FULL key including admitted_batch_id (round-11 VERDICT
-    # item 1): a doc retracted, then re-submitted under the same id with
-    # identical text, then retracted again contributes TWO rows differing
-    # only in admitted_batch_id — the prior retracted/ record and the
-    # fresh corpus row. Collapsing to one arbitrary row let the STALE
-    # record win, prune cand_batches to the old batch's partitions, and
-    # silently skip the live copy (found=1, scrubbed={}). Keeping both
-    # rows keeps both admission batches in cand_batches; the record step
-    # and replay guard already handle duplicates per batch correctly.
-    keys = keys.dropDuplicates(
-        ["doc_id", "digest", "admitted_batch_id", "__new"]
-    ).localCheckpoint()
-    # one takedown-sized collect of the (doc, admission batch) pairs:
-    # "found" counts DOCS, not key rows — a re-admitted doc carries one
-    # key row per admission batch but is still one takedown subject —
-    # and the admission batches are the candidate partitions below
-    pairs = keys.select(
-        "doc_id", "admitted_batch_id", "__new"
-    ).distinct().collect()
-    out["found"] = len({r.doc_id for r in pairs})
-    if out["found"] == 0:
+        # one takedown-sized collect of the (doc, admission batch) pairs:
+        # "found" counts DOCS, not key rows — a re-admitted doc carries one
+        # key row per admission batch but is still one takedown subject —
+        # and the admission batches are the candidate partitions below
+        pairs = keys.select(
+            "doc_id", "admitted_batch_id", "__new"
+        ).distinct().collect()
+        out["found"] = len({r.doc_id for r in pairs})
+        if out["found"] == 0:
+            release_local_checkpoint(keys)
+            if found is not None:
+                release_local_checkpoint(found)
+            return out
+
+        # 1. record NEWLY-found rows as a retraction event (skipped when the
+        #    corpus holds nothing new — a verb replay must not re-record)
+        if not dry_run and any(r["__new"] for r in pairs):
+            next_id = max(
+                statedir.numbered_dirs(spark, retr_dir, "batch_id="),
+                default=-1,
+            ) + 1
+            found.write.mode("overwrite").parquet(
+                os.path.join(retr_dir, f"batch_id={next_id}")
+            )
+            out["retract_batch_id"] = next_id
+
+        # every state surface partitions by the admitting ingest batch (or
+        # the batch_id=-1 fold archive), and the retraction keys carry each
+        # doc's admitted_batch_id — so the scrub is PARTITION-PRUNED end to
+        # end: candidate partitions come from the keys (no scan), ONE
+        # membership query counts every surface's hits over only those
+        # partitions, and the rewrite touches only the partitions that
+        # actually hold retracted rows. At 100 TB a takedown costs the
+        # affected partitions, never a corpus pass. The per-partition swap is
+        # statedir.swap_partitions (sidecar + job-commit marker; heal shared
+        # with _ingest_batch's entry).
+        cand_batches = sorted({int(r.admitted_batch_id) for r in pairs})
+        hits = _live_matches(v, icol, keys, cand_batches)
+
+        # 2. ledgers first (their keys live in `keys` regardless of corpus
+        #    state), the corpus-sized dir last (_state_surfaces order)
+        for sub, key_col, keys_col in _state_surfaces(icol):
+            if sub not in hits:
+                continue
+            if not dry_run:
+                path = os.path.join(v.base, sub)
+                affected = sorted(hits[sub])
+                # the rewrite's anti-join uses the SAME pair condition as the
+                # probe (_retraction_probe): a bare-key anti-join over the
+                # fold archive would also delete a different doc's
+                # legitimately re-admitted identical content
+                probe, cond = _retraction_probe(keys, keys_col, key_col)
+                src = _with_admitting_batch(v.read(sub).filter(
+                    F.col("batch_id").isin(affected)
+                ))
+
+                def _rewrite(tmp: str) -> None:
+                    src.join(F.broadcast(probe), cond, "left_anti").drop(
+                        "__src"
+                    ).write.mode("overwrite").partitionBy(
+                        "batch_id"
+                    ).parquet(tmp)
+
+                swapped = statedir.swap_partitions(spark, path, _rewrite,
+                                                   lease=v.lease)
+                # a partition whose every row was retracted yields no
+                # replacement child (partitionBy writes no dir for zero rows)
+                # — empty it by deleting the live child; a crash before these
+                # deletes is completed by re-running the verb (the rows still
+                # match)
+                swapped_ids = {int(n.split("=", 1)[1]) for n in swapped}
+                for p in affected:
+                    if p not in swapped_ids:
+                        fsutil.delete(spark, f"{path}/batch_id={p}")
+            out["scrubbed"][sub] = sum(hits[sub].values())
+
+        # 3. serving-index tombstone, only for ids the assembled view still
+        #    SERVES (live tombstones already hide previously-retracted ids,
+        #    so a verb replay probes zero and lands nothing) — through the
+        #    shared WAL id sequence, after the ledgers so a crash here is
+        #    completed by the re-run's probe
+        if cfg.serve_index_append and cfg.semdedup_index_path:
+            from ..operators.ann_index import (
+                load_pq_index,
+                remove_from_pq_index,
+            )
+
+            # leases are per-directory: the state-dir lease this verb holds
+            # provides NO exclusion on the index dir, and a concurrent
+            # compact_pq_index (cron-driven, under the index dir's own
+            # lease) could delete the WAL dirs between this probe's listing
+            # and its reads (the same guard check_ingest_state's index block
+            # takes). The held index lease threads into
+            # remove_from_pq_index so its scope renews instead of
+            # self-acquiring against us.
+            ibase = cfg.semdedup_index_path.rstrip("/")
+            with statedir.lease_scope(spark, ibase, "retract_documents") as il:
+                codes = load_pq_index(spark, cfg.semdedup_index_path).codes
+                present = [r.id for r in _served(codes, keys).select(
+                    "id").distinct().collect()]
+                if present and dry_run:
+                    out["index_tombstone"] = {"would_remove": len(present)}
+                elif present:
+                    out["index_tombstone"] = remove_from_pq_index(
+                        spark, cfg.semdedup_index_path, present, lease=il
+                    )
+
+        # 4. postcondition SELF-CHECK: re-probe membership for the
+        #    retraction keys on every surface just scrubbed, the same
+        #    partition-pruned scan shape as the scrubs. A takedown verb must
+        #    verify its own erasure — a bug upstream becomes a LOUD non-zero
+        #    `residual` in the report instead of a silent success. The
+        #    deliberately-retained `retracted/` record and overlap_drops/
+        #    audit rows are excluded by design (see docstring).
+        if not dry_run:
+            residual = {
+                sub: sum(h.values()) for sub, h in _live_matches(
+                    v, icol, keys, cand_batches
+                ).items()
+            }
+            if cfg.serve_index_append and cfg.semdedup_index_path:
+                # same per-directory lease rationale as the tombstone leg
+                # above; the count() materializes inside the scope
+                with statedir.lease_scope(
+                    spark, cfg.semdedup_index_path.rstrip("/"),
+                    "retract_documents",
+                ):
+                    n = _served(load_pq_index(
+                        spark, cfg.semdedup_index_path
+                    ).codes, keys).count()
+                if n:
+                    residual["index"] = int(n)
+            out["residual"] = int(sum(residual.values()))
+            if residual:
+                out["residual_by_surface"] = residual
         release_local_checkpoint(keys)
         if found is not None:
             release_local_checkpoint(found)
         return out
-
-    # 1. record NEWLY-found rows as a retraction event (skipped when the
-    #    corpus holds nothing new — a verb replay must not re-record)
-    if not dry_run and any(r["__new"] for r in pairs):
-        next_id = max(
-            statedir.numbered_dirs(spark, retr_dir, "batch_id="),
-            default=-1,
-        ) + 1
-        found.write.mode("overwrite").parquet(
-            os.path.join(retr_dir, f"batch_id={next_id}")
-        )
-        out["retract_batch_id"] = next_id
-
-    # every state surface partitions by the admitting ingest batch (or
-    # the batch_id=-1 fold archive), and the retraction keys carry each
-    # doc's admitted_batch_id — so the scrub is PARTITION-PRUNED end to
-    # end: candidate partitions come from the keys (no scan), ONE
-    # membership query counts every surface's hits over only those
-    # partitions, and the rewrite touches only the partitions that
-    # actually hold retracted rows. At 100 TB a takedown costs the
-    # affected partitions, never a corpus pass. The per-partition swap is
-    # statedir.swap_partitions (sidecar + job-commit marker; heal shared
-    # with _ingest_batch's entry).
-    cand_batches = sorted({int(r.admitted_batch_id) for r in pairs})
-    hits = _live_matches(spark, base, icol, keys, cand_batches, schemas)
-
-    # 2. ledgers first (their keys live in `keys` regardless of corpus
-    #    state), the corpus-sized dir last (_state_surfaces order)
-    for sub, key_col, keys_col in _state_surfaces(icol):
-        if sub not in hits:
-            continue
-        if not dry_run:
-            path = os.path.join(base, sub)
-            affected = sorted(hits[sub])
-            # the rewrite's anti-join uses the SAME pair condition as the
-            # probe (_retraction_probe): a bare-key anti-join over the
-            # fold archive would also delete a different doc's
-            # legitimately re-admitted identical content
-            probe, cond = _retraction_probe(keys, keys_col, key_col)
-            src = _with_admitting_batch(_read_surface(
-                spark, base, sub, schemas
-            ).filter(F.col("batch_id").isin(affected)))
-
-            def _rewrite(tmp: str) -> None:
-                src.join(F.broadcast(probe), cond, "left_anti").drop(
-                    "__src"
-                ).write.mode("overwrite").partitionBy("batch_id").parquet(tmp)
-
-            swapped = statedir.swap_partitions(spark, path, _rewrite,
-                                               lease=lease)
-            # a partition whose every row was retracted yields no
-            # replacement child (partitionBy writes no dir for zero rows)
-            # — empty it by deleting the live child; a crash before these
-            # deletes is completed by re-running the verb (the rows still
-            # match)
-            swapped_ids = {int(n.split("=", 1)[1]) for n in swapped}
-            for p in affected:
-                if p not in swapped_ids:
-                    fsutil.delete(spark, f"{path}/batch_id={p}")
-        out["scrubbed"][sub] = sum(hits[sub].values())
-
-    # 3. serving-index tombstone, only for ids the assembled view still
-    #    SERVES (live tombstones already hide previously-retracted ids,
-    #    so a verb replay probes zero and lands nothing) — through the
-    #    shared WAL id sequence, after the ledgers so a crash here is
-    #    completed by the re-run's probe
-    if cfg.serve_index_append and cfg.semdedup_index_path:
-        from ..operators.ann_index import load_pq_index, remove_from_pq_index
-
-        # leases are per-directory: the state-dir lease this verb holds
-        # provides NO exclusion on the index dir, and a concurrent
-        # compact_pq_index (cron-driven, under the index dir's own
-        # lease) could delete the WAL dirs between this probe's listing
-        # and its reads (review-found — same guard check_ingest_state's
-        # index block takes). The held index lease threads into
-        # remove_from_pq_index so its scope renews instead of
-        # self-acquiring against us.
-        ibase = cfg.semdedup_index_path.rstrip("/")
-        with statedir.lease_scope(spark, ibase, "retract_documents") as il:
-            codes = load_pq_index(spark, cfg.semdedup_index_path).codes
-            present = [r.id for r in _served(codes, keys).select(
-                "id").distinct().collect()]
-            if present and dry_run:
-                out["index_tombstone"] = {"would_remove": len(present)}
-            elif present:
-                out["index_tombstone"] = remove_from_pq_index(
-                    spark, cfg.semdedup_index_path, present, lease=il
-                )
-
-    # 4. postcondition SELF-CHECK (round-11 VERDICT item 1): re-probe
-    #    membership for the retraction keys on every surface just
-    #    scrubbed, the same partition-pruned scan shape as the scrubs.
-    #    A takedown verb must verify its own erasure — a bug upstream
-    #    (like the round-11 key-dedup defect) becomes a LOUD non-zero
-    #    `residual` in the report instead of a silent success. The
-    #    deliberately-retained `retracted/` record and overlap_drops/
-    #    audit rows are excluded by design (see docstring).
-    if not dry_run:
-        residual = {
-            sub: sum(h.values()) for sub, h in _live_matches(
-                spark, base, icol, keys, cand_batches, schemas
-            ).items()
-        }
-        if cfg.serve_index_append and cfg.semdedup_index_path:
-            # same per-directory lease rationale as the tombstone leg
-            # above; the count() materializes inside the scope
-            with statedir.lease_scope(
-                spark, cfg.semdedup_index_path.rstrip("/"),
-                "retract_documents",
-            ):
-                n = _served(load_pq_index(
-                    spark, cfg.semdedup_index_path
-                ).codes, keys).count()
-            if n:
-                residual["index"] = int(n)
-        out["residual"] = int(sum(residual.values()))
-        if residual:
-            out["residual_by_surface"] = residual
-    release_local_checkpoint(keys)
-    if found is not None:
-        release_local_checkpoint(found)
-    return out
 
 
 def _stream_commit_horizon(spark: SparkSession, state_dir: str) -> int:
@@ -2660,13 +2643,11 @@ def prune_ingest_audit(
     max_files: int = 64,
     lease=None,
 ) -> dict:
-    """Retention for the append-only AUDIT ledgers (round-11 VERDICT item
-    3): ``overlap_drops/`` grows one row per cross-run overlap drop —
-    with the measured 3–6.5% adaptive-floor FP rate that is millions of
-    rows per 100 TB batch — and ``retracted/`` rows are only needed for
-    (a) the replay-guard window and (b) crash recovery of an incomplete
-    scrub. Both fold under ``compact_ingest_state`` but nothing ever
-    EXPIRED them. This verb drops rows that can no longer matter:
+    """Retention for the append-only AUDIT ledgers: ``overlap_drops/``
+    grows one row per cross-run overlap drop, and ``retracted/`` rows are
+    only needed for (a) the replay-guard window and (b) crash recovery of
+    an incomplete scrub. ``compact_ingest_state`` folds both but never
+    expires a row. This verb drops rows that can no longer matter:
 
     - the retention horizon is the stream checkpoint's COMMITTED batch
       id (``checkpoint/commits/`` — a batch at or below it can never
@@ -2693,10 +2674,9 @@ def prune_ingest_audit(
       index tombstone is the takedown's LAST step, so a record whose
       state scrubs completed but whose tombstone never landed must stay
       (pruning it would leave the verb's re-run nothing to find and the
-      id serving forever). Rows still
-      matching live state belong to an INCOMPLETE retraction (crashed
-      mid-scrub): they are retained, counted in
-      ``retained_incomplete``, and the operator re-runs
+      id serving forever). Rows still matching live state belong to an
+      INCOMPLETE retraction (crashed mid-scrub): they are retained,
+      counted in ``retained_incomplete``, and the operator re-runs
       ``retract_documents`` to finish the scrub first. Pruning them
       would strand unscrubable ledger digests (the record is the only
       carrier of the digest once the corpus text is gone). The probe
@@ -2706,104 +2686,72 @@ def prune_ingest_audit(
       RE-ADMITTED in a later batch no longer reads as the old
       admission being live, and its completed record prunes precisely.
       The conservative direction survives exactly where provenance is
-      missing: pre-round-9 fold-archive rows with no ``src_batch_id``
-      key-match any admission and keep the record — a kept audit row,
-      never a kept document.
+      missing: fold-archive rows with no ``src_batch_id`` key-match any
+      admission and keep the record — a kept audit row, never a kept
+      document.
 
-    Both rewrites ride ``statedir.replace_dir`` (kept rows land in the
-    ``batch_id=-1`` archive partition, bounded to the shared
-    ``max(1, max_files // 8)`` file count) with the fold's heal order —
-    ``recover_replaced_dir`` + ``recover_partition_swaps`` first. Holds
-    the state dir's writer lease. Returns ``{"horizon", "up_to_batch",
+    Both rewrites are ``_Verb.fold`` (kept rows land in the
+    ``batch_id=-1`` archive partition, bounded to
+    ``max(1, max_files // 8)`` files) inside :func:`_state_verb` (writer
+    lease, entry heal). Returns ``{"horizon", "up_to_batch",
     "overlap_drops": [before, after] | None, "retracted":
     [before, after] | None, "retained_incomplete": n}``."""
-    with _writer_lease(spark, state_dir.rstrip("/"), "prune_ingest_audit",
-                       lease=lease) as held:
-        return _prune_ingest_audit_body(
-            spark, state_dir, cfg, up_to_batch, max_files, held
-        )
+    from .. import statedir
 
-
-def _prune_ingest_audit_body(
-    spark: SparkSession, state_dir: str, cfg: CurationConfig,
-    up_to_batch, max_files: int, lease,
-) -> dict:
-    from .. import fsutil, statedir
-    from ..io import read_parquet_state
-
-    base = state_dir.rstrip("/")
-    horizon = _stream_commit_horizon(spark, base)
-    if up_to_batch is None:
-        up_to_batch = max(horizon, -1)
-    elif horizon >= -1 and up_to_batch > horizon:
-        raise ValueError(
-            f"prune_ingest_audit: up_to_batch={up_to_batch} is above the "
-            f"stream checkpoint's committed horizon ({horizon}) — batches "
-            "above it can still redeliver and their audit rows are "
-            "load-bearing (the retraction replay guard); prune at or "
-            "below the horizon, or let the default use it"
-        )
-    out: dict = {"horizon": horizon, "up_to_batch": int(up_to_batch),
-                 "overlap_drops": None, "retracted": None,
-                 "retained_incomplete": 0}
-    if up_to_batch < 0:
-        return out
-    files_cap = max(1, max_files // 8)
-
-    def _prune_dir(sub: str, keep_filter) -> list | None:
-        path = f"{base}/{sub}"
-        statedir.heal_dir(spark, path)
-        df = read_parquet_state(spark, path, mergeSchema="true")
-        if df is None:
-            return None
-        before = df.count()
-        kept = keep_filter(df)
-        n_kept = kept.count()
-        if n_kept == before:
-            return [before, before]
-
-        def _fold(tmp: str) -> None:
-            spark.read.option("mergeSchema", "true").parquet(path).drop(
-                "batch_id"
-            ).transform(keep_filter).dropDuplicates().coalesce(
-                files_cap
-            ).write.mode("overwrite").parquet(tmp + "/batch_id=-1")
-
-        statedir.replace_dir(spark, path, _fold, lease=lease)
-        return [before, spark.read.parquet(path).count()]
-
-    # overlap_drops: provenance-column retention; missing column = keep
-    if fsutil.is_dir(spark, f"{base}/overlap_drops") or fsutil.exists(
-        spark, f"{base}/overlap_drops.__old__"
-    ):
-        def _keep_drops(df):
-            if "src_batch_id" not in df.columns:
-                return df
-            return df.filter(
-                F.col("src_batch_id").isNull()
-                | (F.col("src_batch_id") > up_to_batch)
+    with _state_verb(spark, state_dir, "prune_ingest_audit",
+                     lease=lease) as v:
+        base = v.base
+        horizon = _stream_commit_horizon(spark, base)
+        if up_to_batch is None:
+            up_to_batch = max(horizon, -1)
+        elif horizon >= -1 and up_to_batch > horizon:
+            raise ValueError(
+                f"prune_ingest_audit: up_to_batch={up_to_batch} is above "
+                f"the stream checkpoint's committed horizon ({horizon}) — "
+                "batches above it can still redeliver and their audit "
+                "rows are load-bearing (the retraction replay guard); "
+                "prune at or below the horizon, or let the default use it"
             )
+        out: dict = {"horizon": horizon, "up_to_batch": int(up_to_batch),
+                     "overlap_drops": None, "retracted": None,
+                     "retained_incomplete": 0}
+        if up_to_batch < 0:
+            return out
 
-        out["overlap_drops"] = _prune_dir("overlap_drops", _keep_drops)
+        # overlap_drops: provenance-column retention; missing column = keep
+        drops = v.read("overlap_drops")
+        if drops is not None:
+            def _keep_drops(df):
+                if "src_batch_id" not in df.columns:
+                    return df
+                return df.filter(
+                    F.col("src_batch_id").isNull()
+                    | (F.col("src_batch_id") > up_to_batch)
+                )
 
-    # retracted: drop only provably-completed retractions at/below the
-    # horizon — probe every surface for each candidate key, the same
-    # partition-pruned scan shape as retract_documents' residual check
-    path = f"{base}/retracted"
-    statedir.heal_dir(spark, path)
-    retr = read_parquet_state(spark, path, mergeSchema="true")
-    if retr is not None:
+            before = after = drops.count()
+            if _keep_drops(drops).count() != before:
+                v.fold("overlap_drops", max_files, _keep_drops)
+                after = spark.read.parquet(f"{base}/overlap_drops").count()
+            out["overlap_drops"] = [before, after]
+
+        # retracted: drop only provably-completed retractions at/below the
+        # horizon — probe every surface for each candidate key, the same
+        # partition-pruned scan shape as retract_documents' residual check
+        retr = v.read("retracted")
+        if retr is None:
+            return out
         before = retr.count()
+        rec_cols = ["doc_id", "digest", "admitted_batch_id"]
         cand = retr.filter(
             F.col("admitted_batch_id") <= up_to_batch
-        ).select("doc_id", "digest", "admitted_batch_id").distinct()
-        cand = cand.localCheckpoint()
-        idx_ck = None  # the index probe's intermediate checkpoint
+        ).select(*rec_cols).distinct().localCheckpoint()
+        live = []  # per probe: the cand RECORDS whose key is still live
+        idx_ck = incomplete = None  # checkpoints besides cand
         try:
-            incomplete = None  # cand RECORDS whose key is still live
             if cand.count() > 0:
                 for _sub, key_col, keys_col, matches in _surface_matches(
-                    spark, base, cfg.id_col, cand, None, {}
+                    v, cfg.id_col, cand, None
                 ):
                     # key VALUES still live on this surface (small —
                     # bounded by the candidate set), then back to the
@@ -2812,33 +2760,29 @@ def _prune_ingest_audit_body(
                     hit_vals = matches.select(
                         F.col(key_col).alias(keys_col)
                     ).distinct()
-                    hit_recs = cand.join(
+                    live.append(cand.join(
                         F.broadcast(hit_vals), keys_col, "left_semi"
-                    )
-                    incomplete = (
-                        hit_recs if incomplete is None
-                        else incomplete.unionByName(hit_recs)
-                    )
+                    ))
                 if cfg.serve_index_append and cfg.semdedup_index_path:
                     # the takedown's LAST step is the serving-index
                     # tombstone: a record whose six state scrubs all
                     # completed but whose tombstone never landed (crash
                     # between steps, or a LeaseHeld on the index dir)
                     # probes clean on the surfaces above yet is NOT
-                    # prunable — dropping it would strand the id
-                    # serving forever, because the verb's re-run would
-                    # find no keys (corpus scrubbed, record gone) and
-                    # return before ever reaching its index leg. Same
-                    # probe the verb's own `residual` self-check runs.
+                    # prunable — dropping it would strand the id serving
+                    # forever, because the verb's re-run would find no
+                    # keys (corpus scrubbed, record gone) and return
+                    # before ever reaching its index leg. Same probe the
+                    # verb's own `residual` self-check runs.
                     from ..operators.ann_index import load_pq_index
 
-                    # per-directory leases (review-found): reading the
-                    # index WAL under only the STATE dir's lease races a
-                    # concurrent compact_pq_index sweeping the dirs
-                    # between listing and read — take the index dir's
-                    # lease for the probe, and materialize the hits
-                    # INSIDE the scope (a lazy frame would run the codes
-                    # read after the lease released)
+                    # leases are per-directory: reading the index WAL
+                    # under only the STATE dir's lease races a concurrent
+                    # compact_pq_index sweeping the dirs between listing
+                    # and read — take the index dir's lease for the
+                    # probe, and materialize the hits INSIDE the scope (a
+                    # lazy frame would run the codes read after the lease
+                    # released)
                     with statedir.lease_scope(
                         spark, cfg.semdedup_index_path.rstrip("/"),
                         "prune_ingest_audit",
@@ -2850,56 +2794,35 @@ def _prune_ingest_audit_body(
                         hit_vals = _served(codes, cand).select(
                             F.col("id").cast(doc_type).alias("doc_id")
                         ).distinct()
-                        hit_recs = cand.join(
+                        idx_ck = cand.join(
                             F.broadcast(hit_vals), "doc_id", "left_semi"
                         ).localCheckpoint()
-                        idx_ck = hit_recs
-                    incomplete = (
-                        hit_recs if incomplete is None
-                        else incomplete.unionByName(hit_recs)
-                    )
+                    live.append(idx_ck)
             drop = cand
-            n_incomplete = 0
-            if incomplete is not None:
+            if live:
                 # takedown-history-sized: eager materialization so the
                 # anti-join below and the count see one stable snapshot
-                incomplete = incomplete.distinct().localCheckpoint()
-                drop = cand.join(
-                    incomplete,
-                    ["doc_id", "digest", "admitted_batch_id"],
-                    "left_anti",
+                incomplete = reduce(
+                    DataFrame.unionByName, live
+                ).distinct().localCheckpoint()
+                drop = cand.join(incomplete, rec_cols, "left_anti")
+                out["retained_incomplete"] = int(
+                    incomplete.select("doc_id").distinct().count()
                 )
-                n_incomplete = incomplete.select(
-                    "doc_id"
-                ).distinct().count()
-            out["retained_incomplete"] = int(n_incomplete)
-            n_drop = drop.count()
-            if n_drop > 0:
+            if drop.count() > 0:
                 drop_ck = drop.localCheckpoint()
-
-                def _fold_retr(tmp: str) -> None:
-                    spark.read.option("mergeSchema", "true").parquet(
-                        path
-                    ).drop("batch_id").join(
-                        F.broadcast(drop_ck),
-                        ["doc_id", "digest", "admitted_batch_id"],
-                        "left_anti",
-                    ).dropDuplicates().coalesce(files_cap).write.mode(
-                        "overwrite"
-                    ).parquet(tmp + "/batch_id=-1")
-
-                statedir.replace_dir(spark, path, _fold_retr, lease=lease)
+                v.fold("retracted", max_files, lambda df: df.join(
+                    F.broadcast(drop_ck), rec_cols, "left_anti"
+                ))
                 release_local_checkpoint(drop_ck)
             out["retracted"] = [
-                int(before), spark.read.parquet(path).count()
+                int(before), spark.read.parquet(f"{base}/retracted").count()
             ]
         finally:
-            release_local_checkpoint(cand)
-            if incomplete is not None:
-                release_local_checkpoint(incomplete)
-            if idx_ck is not None and idx_ck is not incomplete:
-                release_local_checkpoint(idx_ck)
-    return out
+            for ck in (cand, idx_ck, incomplete):
+                if ck is not None:
+                    release_local_checkpoint(ck)
+        return out
 
 
 def coarsen_overlap_mod(
@@ -2910,9 +2833,9 @@ def coarsen_overlap_mod(
     (the overlap config's standing advice, arithmetic in
     ``text.suggest_overlap_config``) an actual operation: re-pin the
     state dir's ``fps_meta`` at a COARSER power-of-two multiple of the
-    current mod and shrink the ``fps/`` state to match. Without this
-    verb the meta contract (round 10) correctly refuses any mod change,
-    so a live deployment could only coarsen by discarding its ledger.
+    current mod and shrink the ``fps/`` state to match. The meta
+    contract refuses any other mod change, so without this verb a live
+    deployment could only coarsen by discarding its ledger.
 
     Only nested coarsening is legal — ``new_mod`` a power-of-two
     multiple of the persisted mod — because every fp kept at ``2m`` was
@@ -2924,211 +2847,126 @@ def coarsen_overlap_mod(
     — the exact failure the meta exists to prevent.
 
     Crash ordering: the meta is re-pinned FIRST, then ``fps/`` is folded
-    through the shared ``statedir.replace_dir`` swap. A crash between
-    the two leaves meta=new over unshrunk state — a SUPERSET, still
-    correct (probes sample at new_mod; the extra finer rows simply never
-    match) and re-running the verb completes the shrink: when
-    ``new_mod`` already equals the persisted mod, the verb checks the
-    state for rows a finished shrink could not contain
-    (``fp % new_mod != 0`` — one cheap aggregate) and runs the fold iff
-    any exist, so the crash-window re-run actually reclaims the space
-    instead of early-returning on the meta equality (round-11 ADVICE —
-    the previous no-op kept the finer rows forever; matching stayed
-    correct but the docstring's promised reclamation never happened). A
-    clean re-run (no such rows) stays a fold-free no-op. The reverse
-    ordering would leave meta=old over already-shrunk state: probes at
-    the finer mod would sample fps the state no longer holds and
-    silently miss cross-run pairs. Like ``compact_ingest_state``, this
-    is maintenance under the state dir's single-writer contract — run it
-    between ingest runs (a batch writing fps at the old mod concurrently
-    with the shrink would land rows the meta no longer describes).
-    ``max_files`` bounds the folded state's file count exactly as
-    ``compact_ingest_state`` does (shared ``max(1, max_files // 8)``
-    convention — round-11 ADVICE replaced a hardcoded 8). The
-    single-writer contract is ENFORCED (round-11 VERDICT item 2): the
-    verb holds the state dir's writer lease (or renews a passed-through
-    run lease). Returns
-    ``{"old_mod", "new_mod", "fps_rows_before", "fps_rows_after"}``."""
-    with _writer_lease(spark, state_dir.rstrip("/"), "coarsen_overlap_mod",
-                       lease=lease) as held:
-        return _coarsen_overlap_mod_body(
-            spark, state_dir, new_mod, max_files, held
-        )
-
-
-def _coarsen_overlap_mod_body(
-    spark: SparkSession, state_dir: str, new_mod: int, max_files: int,
-    lease,
-) -> dict:
-    from .. import statedir
+    (``_Verb.fold``). A crash between the two leaves meta=new over
+    unshrunk state — a SUPERSET, still correct (probes sample at
+    new_mod; the extra finer rows simply never match) — and re-running
+    the verb completes the shrink: when ``new_mod`` already equals the
+    persisted mod, the verb checks the state for rows a finished shrink
+    could not contain (``fp % new_mod != 0`` — one cheap aggregate) and
+    runs the fold iff any exist. A clean re-run (no such rows) stays a
+    fold-free no-op. The reverse ordering would leave meta=old over
+    already-shrunk state: probes at the finer mod would sample fps the
+    state no longer holds and silently miss cross-run pairs. The entry
+    heal of :func:`_state_verb` completes a retraction killed mid
+    ``swap_partitions`` before the shrink reads fps rows (shrinking
+    pre-swap rows would fold retracted fps into the archive). Runs under
+    the state dir's writer lease (or a renewed pass-through run lease):
+    a batch writing fps at the old mod concurrently with the shrink
+    would land rows the meta no longer describes. ``max_files`` bounds
+    the folded state's file count as in ``compact_ingest_state``.
+    Returns ``{"old_mod", "new_mod", "fps_rows_before",
+    "fps_rows_after"}``."""
     from ..io import read_parquet_state, tiny_df
 
-    base = state_dir.rstrip("/")
-    fps_dir, meta_dir = f"{base}/fps", f"{base}/fps_meta"
-    meta = read_parquet_state(spark, meta_dir)
-    if meta is None:
-        raise ValueError(
-            f"no fps_meta at {meta_dir} — nothing to coarsen (the meta "
-            "is written by the first overlap batch)"
-        )
-    row = meta.collect()[0]
-    old_mod = int(row.sample_mod)
-    if new_mod != old_mod:
-        ratio = new_mod // old_mod if old_mod else 0
-        if new_mod < old_mod or ratio * old_mod != new_mod or (
-                ratio & (ratio - 1)) != 0:
+    with _state_verb(spark, state_dir, "coarsen_overlap_mod",
+                     lease=lease) as v:
+        fps_dir, meta_dir = f"{v.base}/fps", f"{v.base}/fps_meta"
+        meta = read_parquet_state(spark, meta_dir)
+        if meta is None:
             raise ValueError(
-                f"coarsen_overlap_mod: new_mod={new_mod} is not a "
-                f"power-of-two multiple of the persisted mod={old_mod} — "
-                "only nested coarsening keeps old state rows matching new "
-                "probes; a finer mod needs fps that were never persisted "
-                "(use a fresh state dir)"
+                f"no fps_meta at {meta_dir} — nothing to coarsen (the meta "
+                "is written by the first overlap batch)"
             )
-        tiny_df(
-            spark,
-            [(int(row.k), int(row.w), new_mod)],
-            "k int, w int, sample_mod int",
-        ).write.mode("overwrite").parquet(meta_dir)
+        row = meta.collect()[0]
+        old_mod = int(row.sample_mod)
+        if new_mod != old_mod:
+            ratio = new_mod // old_mod if old_mod else 0
+            if new_mod < old_mod or ratio * old_mod != new_mod or (
+                    ratio & (ratio - 1)) != 0:
+                raise ValueError(
+                    f"coarsen_overlap_mod: new_mod={new_mod} is not a "
+                    f"power-of-two multiple of the persisted mod={old_mod} "
+                    "— only nested coarsening keeps old state rows "
+                    "matching new probes; a finer mod needs fps that were "
+                    "never persisted (use a fresh state dir)"
+                )
+            tiny_df(
+                spark,
+                [(int(row.k), int(row.w), new_mod)],
+                "k int, w int, sample_mod int",
+            ).write.mode("overwrite").parquet(meta_dir)
 
-    # complete a retraction killed mid swap_partitions before the shrink
-    # reads fps rows (round-11 ADVICE — same hazard as the generic fold:
-    # shrinking pre-swap rows would fold retracted fps into the archive
-    # while the surviving sidecar later heals without re-scrubbing it)
-    statedir.heal_dir(spark, fps_dir)
-    state = read_parquet_state(spark, fps_dir)
-    if state is None:  # meta written, no fps yet (empty-corpus dir)
-        return {"old_mod": old_mod, "new_mod": new_mod,
-                "fps_rows_before": 0, "fps_rows_after": 0}
-    if new_mod == old_mod:
-        # meta already at new_mod: either a clean re-run (no-op) or the
-        # completion half of a crash between the meta re-pin and the fold
-        # — distinguished by whether rows a finished shrink could not
-        # contain are still present (see docstring)
-        unshrunk = state.filter(F.col("fp") % new_mod != 0).count()
-        if unshrunk == 0:
+        state = read_parquet_state(spark, fps_dir)
+        if state is None:  # meta written, no fps yet (empty-corpus dir)
             return {"old_mod": old_mod, "new_mod": new_mod,
-                    "fps_rows_before": None, "fps_rows_after": None}
-    before = state.count()
-
-    def _shrink(tmp: str) -> None:
-        # keep per-row provenance (src_batch_id) exactly as the generic
-        # fold does; replay debris collapses the same way
-        spark.read.option("mergeSchema", "true").parquet(fps_dir).drop(
-            "batch_id"
-        ).filter(F.col("fp") % new_mod == 0).dropDuplicates().coalesce(
-            max(1, max_files // 8)
-        ).write.mode("overwrite").parquet(tmp + "/batch_id=-1")
-
-    statedir.replace_dir(spark, fps_dir, _shrink, lease=lease)
-    after = spark.read.parquet(fps_dir).count()
-    return {"old_mod": old_mod, "new_mod": new_mod,
-            "fps_rows_before": before, "fps_rows_after": after}
+                    "fps_rows_before": 0, "fps_rows_after": 0}
+        if new_mod == old_mod:
+            # meta already at new_mod: either a clean re-run (no-op) or
+            # the completion half of a crash between the meta re-pin and
+            # the fold — distinguished by whether rows a finished shrink
+            # could not contain are still present (see docstring)
+            unshrunk = state.filter(F.col("fp") % new_mod != 0).count()
+            if unshrunk == 0:
+                return {"old_mod": old_mod, "new_mod": new_mod,
+                        "fps_rows_before": None, "fps_rows_after": None}
+        before = state.count()
+        v.fold("fps", max_files,
+               lambda df: df.filter(F.col("fp") % new_mod == 0))
+        after = spark.read.parquet(fps_dir).count()
+        return {"old_mod": old_mod, "new_mod": new_mod,
+                "fps_rows_before": before, "fps_rows_after": after}
 
 
 def compact_ingest_state(
     spark: SparkSession, state_dir: str, max_files: int = 64, lease=None,
 ) -> dict:
     """Maintenance for the incremental-ingest ledgers: every micro-batch
-    appends a few small parquet files to ``ledger/``/``sigs/``/``bands/``
-    (and, with ``serve_index_append``, one reservation dir to
-    ``idxmap/``), and after thousands of batches the anti-join pays
-    file-listing +
-    per-file-footer overhead far exceeding the data read (the classic
-    small-file problem). Collapse every per-batch partition dir into one
-    ``batch_id=-1`` archive partition with a bounded file count, via the
-    same crash-safe tmp/old swap as ``sinks/layout.compact``. Archived
-    rows keep their per-row provenance (the ``src_batch_id`` data column
-    the writers stamp; ``idxmap`` rows their ``ingest_batch_id``), so the
-    own-batch exclusion and the reservation lookup work identically
-    before and after folding — a batch that replays after its partition
-    dir was archived decides against exactly the pre-batch state and
-    re-lands its rows (round 9; previously a stop-the-world contract: the
-    replay saw its OWN digests in the archive, admitted zero docs, and
-    overwrote its corpus partition empty). The replay's rewritten
+    appends a few small parquet files to each state dir, and after
+    thousands of batches the anti-join pays file-listing + per-file-footer
+    overhead far exceeding the data read (the classic small-file
+    problem). Fold every state dir holding more than ``max_files``
+    parquet files into one ``batch_id=-1`` archive partition of
+    ``max(1, max_files // 8)`` files (``_Verb.fold``: the
+    ``statedir.replace_dir`` tmp/old swap, through the Hadoop FileSystem
+    API so it works on hdfs://, s3a:// and local alike).
+
+    Archived rows keep their per-row provenance (the ``src_batch_id``
+    data column the writers stamp; ``idxmap`` rows their
+    ``ingest_batch_id``; ``retracted`` rows their ``doc_id`` and
+    ``admitted_batch_id``), so the own-batch exclusion, the reservation
+    lookup, the replay guard and a crashed retraction's digest recovery
+    work identically before and after folding — a batch that replays
+    after its partition dir was archived decides against exactly the
+    pre-batch state and re-lands its rows. The replay's rewritten
     partition duplicates rows the archive already holds — harmless to
     every consumer (semi/anti joins and distinct-candidate joins are
     multiplicity-insensitive) and collapsed by the next fold's
     ``dropDuplicates``. The archive id is -1 so partition-based readers
-    (pre-round-9 state without the column) still always keep it. Prefer
-    running compaction between ingest runs anyway — it is maintenance,
-    not hot path. Returns ``{dir: (files_before, files_after)}`` for
-    dirs it touched.
+    of provenance-less state still always keep it. ``corpus/`` is never
+    folded: its per-batch partitions are ``retract_documents``'
+    write-cost granularity; ``export_training_corpus`` derives a
+    compacted copy instead.
 
-    All filesystem ops go through the Hadoop FileSystem API (``fsutil``)
-    so compaction works on whatever store the state dir lives on
-    (hdfs://, s3a://, local) — an ``os.path`` implementation would
-    silently no-op off local disk, the exact failure mode ``_read_state``
-    was made FS-portable to avoid. The tmp/old double-rename swap and its
-    crash recovery are the shared ``statedir.replace_dir`` /
-    ``recover_replaced_dir`` discipline (one implementation across the
-    journal, the ledgers, and the ANN index — r7 VERDICT item 5); on
-    object stores the renames are copy+delete (not atomic), and the
-    recovery ordering still restores the original after a crash in the
-    window. The single-writer contract is ENFORCED (round-11 VERDICT
-    item 2): the verb holds the state dir's writer lease (or renews a
-    passed-through run lease)."""
-    with _writer_lease(spark, state_dir.rstrip("/"), "compact_ingest_state",
-                       lease=lease) as held:
-        return _compact_ingest_state_body(spark, state_dir, max_files, held)
-
-
-def _compact_ingest_state_body(
-    spark: SparkSession, state_dir: str, max_files: int, lease,
-) -> dict:
-    from .. import fsutil, statedir
+    Runs inside :func:`_state_verb`: the writer lease (or a renewed
+    pass-through run lease) and the entry heal — a committed
+    ``.__partswap__`` sidecar from a killed retraction means the live dir
+    still holds PRE-SCRUB rows, and folding them into ``batch_id=-1``
+    would silently undo the erasure. Returns ``{dir: (files_before,
+    files_after)}`` for the dirs it folded."""
+    from .. import fsutil
 
     done: dict[str, tuple[int, int]] = {}
-    # idxmap folds too (round-8 VERDICT item 2): its reservation rows
-    # carry the lookup key as the ingest_batch_id DATA column, so rows
-    # archived into batch_id=-1 still resolve — a replayed ingest batch
-    # re-lands the same index log id after compaction. retracted (round
-    # 11) folds like any sibling: its lookup keys (doc_id,
-    # admitted_batch_id) are data columns, so the replay guard and a
-    # crashed retract_documents' digest recovery both survive the fold.
-    for sub, *_ in STATE_DIRS:
-        if sub == "corpus":
-            # never folded: its per-batch partitions are
-            # retract_documents' write-cost granularity (a takedown
-            # rewrites only the affected partitions);
-            # export_training_corpus derives a compacted copy instead
-            continue
-        path = state_dir.rstrip("/") + "/" + sub
-        # heal FIRST — after a crash between a fold's two renames, `path`
-        # is gone and `.__old__` holds the only copy (an existence check
-        # before the heal would skip the dir forever); and a committed
-        # .__partswap__ sidecar from a killed retraction means the live
-        # dir still holds PRE-SCRUB rows — folding them into batch_id=-1
-        # while the sidecar (outside the fold's swap) later heals WITHOUT
-        # re-scrubbing the archive would silently undo the erasure
-        statedir.heal_dir(spark, path)
-        if not fsutil.is_dir(spark, path):
-            continue
-        before = fsutil.parquet_file_count(spark, path)
-        if before <= max_files:
-            continue
-
-        def _fold(tmp: str, path: str = path) -> None:
-            # dropDuplicates collapses replay debris — a batch replayed
-            # after a fold rewrites its partition with rows the archive
-            # already holds; coalesce (not repartition) rides the
-            # dedup's own shuffle down to the bounded file count.
-            # mergeSchema (round-10 ADVICE): in a half-upgraded dir only
-            # SOME partitions carry the provenance column (src_batch_id /
-            # idxmap's ingest_batch_id) — without it Spark's footer
-            # sampling can fold an archive WITHOUT the column,
-            # permanently destroying per-row provenance for the
-            # post-upgrade rows (a later replay would then fall back to
-            # partition exclusion, see its own rows in the prior, and
-            # overwrite its corpus partition empty — exactly the failure
-            # _read_state's mergeSchema exists to prevent at read time)
-            spark.read.option("mergeSchema", "true").parquet(path).drop(
-                "batch_id"
-            ).dropDuplicates().coalesce(
-                max(1, max_files // 8)
-            ).write.mode("overwrite").parquet(tmp + "/batch_id=-1")
-
-        statedir.replace_dir(spark, path, _fold, lease=lease)
-        done[sub] = (before, fsutil.parquet_file_count(spark, path))
+    with _state_verb(spark, state_dir, "compact_ingest_state",
+                     lease=lease) as v:
+        for sub, *_ in STATE_DIRS:
+            path = f"{v.base}/{sub}"
+            if sub == "corpus" or not fsutil.is_dir(spark, path):
+                continue
+            before = fsutil.parquet_file_count(spark, path)
+            if before <= max_files:
+                continue
+            v.fold(sub, max_files)
+            done[sub] = (before, fsutil.parquet_file_count(spark, path))
     return done
 
 
@@ -3141,14 +2979,14 @@ def export_training_corpus(
 ) -> dict:
     """Materialize a COMPACTED read-optimized copy of the live corpus
     for training consumers — the executable remedy the maintenance
-    planner names for corpus file growth (round 14). The corpus state
-    dir itself is deliberately never folded: its per-batch partitions
-    are ``retract_documents``' write-cost granularity (a takedown
-    rewrites only affected partitions), so after thousands of
-    micro-batches a training job reading it pays O(batches) listings
-    and footers. This verb derives a bounded-file-count plain-parquet
-    copy instead of folding in place — the state keeps its granularity,
-    the readers get big files.
+    planner names for corpus file growth. The corpus state dir itself is
+    deliberately never folded: its per-batch partitions are
+    ``retract_documents``' write-cost granularity (a takedown rewrites
+    only affected partitions), so after thousands of micro-batches a
+    training job reading it pays O(batches) listings and footers. This
+    verb derives a bounded-file-count plain-parquet copy instead of
+    folding in place — the state keeps its granularity, the readers get
+    big files.
 
     The export is a DERIVED artifact, not state: it holds no ledgers,
     carries no replay obligations, and is safely regenerated at any
@@ -3163,26 +3001,31 @@ def export_training_corpus(
     ``compact_ingest_state``). Retracted documents are absent by
     construction: takedowns scrub the corpus state this reads.
 
+    Runs inside :func:`_state_verb` like every state verb: its entry
+    heal discards a marker-less ``.__partswap__`` sidecar, which is a
+    LIVE retraction's in-flight scrub write unless the heal holds the
+    writer lease; a concurrent writer gets ``statedir.LeaseHeld``.
+
     ``columns`` prunes the export (e.g. ``["doc_id", "text"]``);
     default keeps every corpus column. Returns ``{"rows", "files",
     "out_dir"}``."""
-    from .. import fsutil, statedir
+    from .. import fsutil
 
-    base = state_dir.rstrip("/")
-    corpus = os.path.join(base, "corpus")
-    statedir.heal_dir(spark, corpus)
-    df = spark.read.option("mergeSchema", "true").parquet(corpus)
-    if "batch_id" in df.columns:
-        df = df.drop("batch_id")
-    if columns is not None:
-        df = df.select(*columns)
-    out = out_dir.rstrip("/")
-    parent = os.path.dirname(out) or "."
-    tmp = os.path.join(parent, f".{os.path.basename(out)}.tmp")
-    fsutil.delete(spark, tmp)
-    df.dropDuplicates().coalesce(max(1, max_files)).write.mode(
-        "overwrite"
-    ).parquet(tmp)
+    with _state_verb(spark, state_dir, "export_training_corpus") as v:
+        df = spark.read.option("mergeSchema", "true").parquet(
+            f"{v.base}/corpus"
+        )
+        if "batch_id" in df.columns:
+            df = df.drop("batch_id")
+        if columns is not None:
+            df = df.select(*columns)
+        out = out_dir.rstrip("/")
+        parent = os.path.dirname(out) or "."
+        tmp = os.path.join(parent, f".{os.path.basename(out)}.tmp")
+        fsutil.delete(spark, tmp)
+        df.dropDuplicates().coalesce(max(1, max_files)).write.mode(
+            "overwrite"
+        ).parquet(tmp)
     # marker-last validity through the rename (statedir.write_snapshot's
     # copy-ordering rule): on object stores the rename is copy+delete
     # and _SUCCESS sorts before part-*, so a partial copy could carry it
@@ -3264,15 +3107,15 @@ def check_ingest_state(
       the WHOLE retraction history instead of one call's keys). WARN,
       not FAIL: the probe pairs each key with its admitting batch
       (``_retraction_probe``), so re-admissions no longer read as
-      residue — but pre-round-9 fold-archive rows without
+      residue — but fold-archive rows without
       ``src_batch_id`` provenance key-match any admission
       (conservative fallback), and only the operator can adjudicate
       those.
 
     ``status`` per row: ``ok`` (invariant holds), ``fail`` (violated),
     ``warn`` (violated-or-conservative, see the check), ``skipped``
-    (surface absent / not configured). ``n`` is the
-    violation count and ``detail`` carries up to 5 sample keys so the operator can go look.
+    (surface absent / not configured). ``n`` is the violation count and
+    ``detail`` carries up to 5 sample keys so the operator can go look.
 
     Cost posture at 100 TB: the corpus appears in these joins as its
     (id, md5(text)) projection — ONE column-pruned corpus scan shared
@@ -3292,20 +3135,9 @@ def check_ingest_state(
     (leases are per-directory — the state-dir lease provides no
     exclusion against a concurrent ``compact_pq_index`` deleting the
     WAL dirs between the horizon probe and the reads)."""
-    with _writer_lease(spark, state_dir.rstrip("/"), "check_ingest_state",
-                       lease=lease):
-        return _check_ingest_state_body(spark, state_dir, cfg, batches)
-
-
-def _check_ingest_state_body(
-    spark: SparkSession, state_dir: str, cfg: CurationConfig, batches,
-) -> DataFrame:
-    from functools import reduce
-
     from .. import statedir
     from ..io import tiny_df
 
-    base = state_dir.rstrip("/")
     icol, tcol = cfg.id_col, cfg.text_col
     bsel = sorted(int(b) for b in batches) if batches is not None else None
     rows: list[tuple] = []
@@ -3334,284 +3166,289 @@ def _check_ingest_state_body(
             F.col("batch_id").isin(bsel + [-1]) & _batch_of(df).isin(bsel)
         )
 
-    for sub, *_ in STATE_DIRS:
-        statedir.heal_dir(spark, os.path.join(base, sub))
+    with _state_verb(spark, state_dir, "check_ingest_state",
+                     lease=lease) as v:
+        corpus = v.read("corpus")
+        have_corpus = corpus is not None and icol in corpus.columns
+        ckeys = None
+        if have_corpus:
+            cs = corpus if bsel is None else corpus.filter(
+                F.col("batch_id").isin(bsel)
+            )
+            # the one corpus-sized scan, shared by every check below —
+            # batch_id rides along so the index block's per-batch scope
+            # derives from this checkpoint instead of re-scanning the corpus
+            ckeys = cs.select(
+                F.col(icol).alias("doc_id"),
+                F.md5(F.col(tcol)).alias("digest"),
+                F.col("batch_id").cast("long").alias("batch_id"),
+            ).localCheckpoint()
 
-    schemas: dict = {}  # verb-local: one schema inference per surface
-    corpus = _read_surface(spark, base, "corpus", schemas)
-    have_corpus = corpus is not None and icol in corpus.columns
-    ckeys = None
-    if have_corpus:
-        cs = corpus if bsel is None else corpus.filter(
-            F.col("batch_id").isin(bsel)
-        )
-        # the one corpus-sized scan, shared by every check below —
-        # batch_id rides along so the index block's per-batch scope
-        # derives from this checkpoint instead of re-scanning the corpus
-        ckeys = cs.select(
-            F.col(icol).alias("doc_id"),
-            F.md5(F.col(tcol)).alias("digest"),
-            F.col("batch_id").cast("long").alias("batch_id"),
-        ).localCheckpoint()
+        # ledger ↔ corpus digest bijection (both directions)
+        led = v.read("ledger")
+        if led is None or ckeys is None:
+            why = "no corpus" if ckeys is None else "no ledger"
+            emit("ledger_digest_without_corpus_row", "ledger", "skipped", 0,
+                 why)
+            emit("corpus_row_without_ledger_digest", "corpus", "skipped", 0,
+                 why)
+        else:
+            led_d = scoped(led).select("digest").distinct()
+            # both directions counted in ONE full outer join: each distinct
+            # ledger digest without a corpus row, and each corpus row without
+            # a ledger digest, appears exactly once with the other side null
+            n_orphan, n_unled = led_d.withColumn("__led", F.lit(True)).join(
+                ckeys.select("digest", F.lit(True).alias("__cor")), "digest",
+                "full_outer",
+            ).agg(
+                F.count_if(F.col("__cor").isNull()),
+                F.count_if(F.col("__led").isNull()),
+            ).collect()[0]
+            orphan = led_d.join(
+                ckeys.select("digest").distinct(), "digest", "left_anti"
+            )
+            emit("ledger_digest_without_corpus_row", "ledger",
+                 "fail" if n_orphan else "ok", n_orphan,
+                 sample(orphan, "digest", n_orphan))
+            unled = ckeys.join(led_d, "digest", "left_anti")
+            emit("corpus_row_without_ledger_digest", "corpus",
+                 "fail" if n_unled else "ok", n_unled,
+                 sample(unled, "doc_id", n_unled))
 
-    # ledger ↔ corpus digest bijection (both directions)
-    led = _read_surface(spark, base, "ledger", schemas)
-    if led is None or ckeys is None:
-        why = "no corpus" if ckeys is None else "no ledger"
-        emit("ledger_digest_without_corpus_row", "ledger", "skipped", 0, why)
-        emit("corpus_row_without_ledger_digest", "corpus", "skipped", 0, why)
-    else:
-        led_d = scoped(led).select("digest").distinct()
-        # both directions counted in ONE full outer join: each distinct
-        # ledger digest without a corpus row, and each corpus row without
-        # a ledger digest, appears exactly once with the other side null
-        n_orphan, n_unled = led_d.withColumn("__led", F.lit(True)).join(
-            ckeys.select("digest", F.lit(True).alias("__cor")), "digest",
-            "full_outer",
-        ).agg(
-            F.count_if(F.col("__cor").isNull()),
-            F.count_if(F.col("__led").isNull()),
-        ).collect()[0]
-        orphan = led_d.join(
-            ckeys.select("digest").distinct(), "digest", "left_anti"
-        )
-        emit("ledger_digest_without_corpus_row", "ledger",
-             "fail" if n_orphan else "ok", n_orphan,
-             sample(orphan, "digest", n_orphan))
-        unled = ckeys.join(led_d, "digest", "left_anti")
-        emit("corpus_row_without_ledger_digest", "corpus",
-             "fail" if n_unled else "ok", n_unled,
-             sample(unled, "doc_id", n_unled))
+        # derived ledgers → corpus: evidence rows for ghosts, every surface
+        # in ONE query — the (surface, doc_id) union, ids cast to the corpus
+        # doc_id type (the coercion a per-surface join applies), left-anti
+        # joined against the corpus ids and counted per surface
+        derived = [(sub, key, getattr(cfg, flag))
+                   for sub, key, flag in STATE_DIRS if key and flag]
+        checked, branches = [], []  # checked: (surface, skip reason | None)
+        for sub, key, configured in derived:
+            df = v.read(sub)
+            if df is None or key not in df.columns or ckeys is None:
+                if configured:
+                    checked.append((sub, "no corpus" if ckeys is None
+                                    else "surface absent"))
+                continue
+            checked.append((sub, None))
+            branches.append(scoped(df).select(
+                F.lit(sub).alias("surface"),
+                F.col(key).cast(
+                    ckeys.schema["doc_id"].dataType
+                ).alias("doc_id"),
+            ))
+        ghost, ghosts = None, {}
+        if branches:
+            ghost = reduce(DataFrame.unionByName, branches).distinct().join(
+                ckeys.select("doc_id").distinct(), "doc_id", "left_anti"
+            )
+            ghosts = {r["surface"]: int(r["count"])
+                      for r in ghost.groupBy("surface").count().collect()}
+        for sub, why in checked:  # a skipped surface has no ghost count
+            n = ghosts.get(sub, 0)
+            emit("derived_row_without_corpus_row", sub,
+                 "skipped" if why else "fail" if n else "ok", n,
+                 why or sample(ghost.filter(F.col("surface") == sub),
+                               "doc_id", n))
 
-    # derived ledgers → corpus: evidence rows for ghosts, every surface
-    # in ONE query — the (surface, doc_id) union, ids cast to the corpus
-    # doc_id type (the coercion a per-surface join applies), left-anti
-    # joined against the corpus ids and counted per surface
-    derived = [(sub, key, getattr(cfg, flag))
-               for sub, key, flag in STATE_DIRS if key and flag]
-    checked, branches = [], []  # checked: (surface, skip reason | None)
-    for sub, key, configured in derived:
-        df = _read_surface(spark, base, sub, schemas)
-        if df is None or key not in df.columns or ckeys is None:
-            if configured:
-                checked.append(
-                    (sub, "no corpus" if ckeys is None else "surface absent")
-                )
-            continue
-        checked.append((sub, None))
-        branches.append(scoped(df).select(
-            F.lit(sub).alias("surface"),
-            F.col(key).cast(ckeys.schema["doc_id"].dataType).alias("doc_id"),
-        ))
-    ghost, ghosts = None, {}
-    if branches:
-        ghost = reduce(DataFrame.unionByName, branches).distinct().join(
-            ckeys.select("doc_id").distinct(), "doc_id", "left_anti"
-        )
-        ghosts = {r["surface"]: int(r["count"])
-                  for r in ghost.groupBy("surface").count().collect()}
-    for sub, why in checked:  # a skipped surface has no ghost count
-        n = ghosts.get(sub, 0)
-        emit("derived_row_without_corpus_row", sub,
-             "skipped" if why else "fail" if n else "ok", n,
-             why or sample(ghost.filter(F.col("surface") == sub), "doc_id", n))
+        # one read of the retraction history serves BOTH the still-served
+        # index check and the whole-history residual probe below
+        retr = v.read("retracted")
 
-    # one read of the retraction history serves BOTH the still-served
-    # index check and the whole-history residual probe below
-    retr = _read_surface(spark, base, "retracted", schemas)
+        # serving-index cross-checks (pipeline-managed index only). These
+        # read the INDEX dir's WAL and codes sources, and the state-dir
+        # lease this verb holds provides no exclusion there — a concurrent
+        # compact_pq_index under the index dir's own lease could commit a
+        # new snapshot and delete the dirs between the horizon probe and
+        # the reads (a crashed fsck, or worse, false findings). Leases are
+        # per-directory, so take the index dir's too for this block.
+        if cfg.serve_index_append and cfg.semdedup_index_path:
+            from ..operators.ann_index import (
+                _append_batches,
+                _attempted_log_ids,
+                _codes_horizon,
+                _tombstone_batches,
+                load_pq_index,
+            )
 
-    # serving-index cross-checks (pipeline-managed index only). These
-    # read the INDEX dir's WAL and codes sources, and the state-dir
-    # lease this verb holds provides no exclusion there — a concurrent
-    # compact_pq_index under the index dir's own lease could commit a
-    # new snapshot and delete the dirs between the horizon probe and
-    # the reads (a crashed fsck, or worse, false findings). Leases are
-    # per-directory, so take the index dir's too for this block.
-    if cfg.serve_index_append and cfg.semdedup_index_path:
-        from ..operators.ann_index import (
-            _append_batches,
-            _attempted_log_ids,
-            _codes_horizon,
-            _tombstone_batches,
-            load_pq_index,
-        )
-
-        ibase = cfg.semdedup_index_path.rstrip("/")
-        with statedir.lease_scope(spark, ibase, "check_ingest_state"):
-            mapping = _read_surface(spark, base, "idxmap", schemas)
-            if mapping is None:
-                emit("idxmap_reservation_without_append", "idxmap", "skipped",
-                     0, "no idxmap")
-                emit("admitted_doc_not_in_index", "corpus", "skipped", 0,
-                     "no idxmap")
-            else:
-                mrows = mapping.select(
-                    _batch_of(mapping, "ingest_batch_id").alias("ingest"),
-                    "index_batch_id",
-                ).collect()
-                if bsel is not None:
-                    mrows = [r for r in mrows if int(r.ingest) in bsel]
-                horizon = _codes_horizon(spark, ibase)
-                committed = set(_append_batches(spark, ibase, horizon))
-                att_app, _ = _attempted_log_ids(spark, ibase, horizon)
-                lost = sorted(
-                    int(r.index_batch_id) for r in mrows
-                    if int(r.index_batch_id) > horizon
-                    and int(r.index_batch_id) not in att_app
-                )
-                pending = sorted(
-                    int(r.index_batch_id) for r in mrows
-                    if int(r.index_batch_id) > horizon
-                    and int(r.index_batch_id) in att_app - committed
-                )
-                if lost:
-                    emit("idxmap_reservation_without_append", "idxmap", "fail",
-                         len(lost),
-                         f"index log ids with no trace: {lost[:5]}")
-                elif pending:
-                    emit("idxmap_reservation_without_append", "idxmap", "warn",
-                         len(pending),
-                         f"attempted-uncommitted (replay repairs): "
-                         f"{pending[:5]}")
-                else:
-                    emit("idxmap_reservation_without_append", "idxmap", "ok",
-                         0, "")
-
-                if ckeys is None:
+            ibase = cfg.semdedup_index_path.rstrip("/")
+            with statedir.lease_scope(spark, ibase, "check_ingest_state"):
+                mapping = v.read("idxmap")
+                if mapping is None:
+                    emit("idxmap_reservation_without_append", "idxmap",
+                         "skipped", 0, "no idxmap")
                     emit("admitted_doc_not_in_index", "corpus", "skipped", 0,
-                         "no corpus")
+                         "no idxmap")
                 else:
-                    mapped_ing = sorted({int(r.ingest) for r in mrows})
-                    srcs = [
-                        f"{ibase}/codes_head/upto={horizon}" if horizon >= 0
-                        else f"{ibase}/codes"
-                    ] + [
-                        f"{ibase}/codes_append/batch={b}"
-                        for b in sorted(committed)
-                    ]
-                    served_any = spark.read.parquet(*srcs).select("id")
-                    id_type = served_any.schema["id"].dataType
-                    # derived from the shared ckeys checkpoint — the
-                    # docstring's one-corpus-scan promise (a raw corpus
-                    # re-read here was a second full scan; bsel is
-                    # already applied inside ckeys)
-                    mcorp = ckeys.filter(F.col("batch_id").isin(mapped_ing))
-                    missing = mcorp.select(
-                        F.col("doc_id").cast(id_type).alias("id")
-                    ).distinct().join(served_any, "id", "left_anti")
-                    # a live manual tombstone is INTENTIONAL absence
-                    tomb_ids = _tombstone_batches(spark, ibase, horizon)
-                    if tomb_ids:
-                        tombs = spark.read.parquet(*[
-                            f"{ibase}/tombstones/batch={t}" for t in tomb_ids
-                        ]).select(F.col("id").cast(id_type).alias("id"))
-                        missing = missing.join(tombs, "id", "left_anti")
-                    n = missing.count()
-                    # pre-compaction the check is PRECISE (every manual
-                    # tombstone is still live and excluded above) →
-                    # fail. Once a compaction has run (horizon >= 0) a
-                    # manually tombstoned doc's rows AND its tombstone
-                    # are purged together, indistinguishable from a
-                    # lost append by metadata — WARN, not a permanent
-                    # false fail on a healthy state (review-found).
-                    if not n:
-                        st, why = "ok", ""
-                    elif horizon < 0:
-                        st = "fail"
-                        why = "; absent from every committed codes source"
-                    else:
-                        st = "warn"
-                        why = ("; absent from snapshot + committed appends"
-                               " — lost append OR a manual tombstone the"
-                               " compaction folded (metadata cannot tell"
-                               " them apart post-fold)")
-                    emit("admitted_doc_not_in_index", "corpus", st, n,
-                         sample(missing, "id", n) + why)
-
-            if retr is None:
-                emit("retracted_doc_still_served", "index", "skipped", 0,
-                     "no retractions recorded")
-            else:
-                codes = load_pq_index(spark, cfg.semdedup_index_path).codes
-                id_type = codes.schema["id"].dataType
-                rsel = retr if bsel is None else retr.filter(
-                    F.col("admitted_batch_id").isin(bsel)
-                )
-                still = _served(codes, rsel).select("id").distinct()
-                # a retracted id the CORPUS currently holds under an
-                # admission NO retraction record covers was legitimately
-                # RE-SUBMITTED after its takedown (the documented
-                # semantics: retraction is not a content blocklist) and
-                # re-appended — serving it is correct, and
-                # prune_ingest_audit deliberately keeps the old record
-                # while the id is served, so without this exclusion a
-                # healthy state would FAIL here forever (review-found).
-                # The exclusion is PAIR-aware, like the scrubs: a live
-                # corpus row in the SAME batch a record names is an
-                # incomplete scrub (the takedown never finished), not a
-                # re-admission — only a live (id, batch) pair outside
-                # every record's (id, admitted_batch_id) clears the id.
-                # Live pairs come from the shared ckeys scan; in
-                # batch-scoped mode ckeys only covers bsel, so an
-                # out-of-scope re-admission can't be ruled out —
-                # findings there downgrade to warn.
-                n_re = 0
-                if ckeys is not None:
-                    rec_pairs = retr.select(
-                        F.col("doc_id").cast(id_type).alias("__rid"),
-                        F.col("admitted_batch_id").cast("long")
-                        .alias("__rbatch"),
-                    ).distinct()
-                    fresh = ckeys.select(
-                        F.col("doc_id").cast(id_type).alias("id"),
-                        F.col("batch_id").alias("__lb"),
-                    ).distinct().join(
-                        F.broadcast(rec_pairs),
-                        (F.col("id") == F.col("__rid"))
-                        & (F.col("__lb") == F.col("__rbatch")),
-                        "left_anti",
-                    ).select("id").distinct()
-                    n_re = still.join(fresh, "id", "left_semi").count()
-                    still = still.join(fresh, "id", "left_anti")
-                n = still.count()
-                st = "fail" if n else "ok"
-                why = sample(still, "id", n)
-                if n and bsel is not None:
-                    st = "warn"
-                    why += ("; batch-scoped — a re-admission outside the "
-                            "scoped batches would also serve legitimately")
-                if n_re:
-                    why = (why + "; " if why else "") + (
-                        f"{n_re} retracted id(s) re-admitted later and "
-                        "served — excluded (expected)"
+                    mrows = mapping.select(
+                        _batch_of(mapping, "ingest_batch_id").alias("ingest"),
+                        "index_batch_id",
+                    ).collect()
+                    if bsel is not None:
+                        mrows = [r for r in mrows if int(r.ingest) in bsel]
+                    horizon = _codes_horizon(spark, ibase)
+                    committed = set(_append_batches(spark, ibase, horizon))
+                    att_app, _ = _attempted_log_ids(spark, ibase, horizon)
+                    lost = sorted(
+                        int(r.index_batch_id) for r in mrows
+                        if int(r.index_batch_id) > horizon
+                        and int(r.index_batch_id) not in att_app
                     )
-                emit("retracted_doc_still_served", "index", st, n, why)
+                    pending = sorted(
+                        int(r.index_batch_id) for r in mrows
+                        if int(r.index_batch_id) > horizon
+                        and int(r.index_batch_id) in att_app - committed
+                    )
+                    if lost:
+                        emit("idxmap_reservation_without_append", "idxmap",
+                             "fail", len(lost),
+                             f"index log ids with no trace: {lost[:5]}")
+                    elif pending:
+                        emit("idxmap_reservation_without_append", "idxmap",
+                             "warn", len(pending),
+                             f"attempted-uncommitted (replay repairs): "
+                             f"{pending[:5]}")
+                    else:
+                        emit("idxmap_reservation_without_append", "idxmap",
+                             "ok", 0, "")
 
-    # retraction residual across the whole history (the verb's own
-    # self-check shape; conservative post-fold — see docstring); reads
-    # the retracted/ frame hoisted above (one listing, two consumers)
-    if retr is None:
-        emit("retraction_residual", "all", "skipped", 0,
-             "no retractions recorded")
-    else:
-        cand = retr if bsel is None else retr.filter(
-            F.col("admitted_batch_id").isin(bsel)
-        )
-        residual = {
-            sub: sum(h.values()) for sub, h in _live_matches(
-                spark, base, icol, cand, None, schemas
-            ).items()
-        }
-        total = sum(residual.values())
-        emit("retraction_residual", "all", "warn" if total else "ok",
-             total,
-             ("; ".join(f"{sub}={n}" for sub, n in residual.items()) +
-              "; incomplete scrub OR a provenance-less legacy archive "
-              "row key-matching a re-admission (conservative fallback)")
-             if total else "")
+                    if ckeys is None:
+                        emit("admitted_doc_not_in_index", "corpus",
+                             "skipped", 0, "no corpus")
+                    else:
+                        mapped_ing = sorted({int(r.ingest) for r in mrows})
+                        srcs = [
+                            f"{ibase}/codes_head/upto={horizon}"
+                            if horizon >= 0 else f"{ibase}/codes"
+                        ] + [
+                            f"{ibase}/codes_append/batch={b}"
+                            for b in sorted(committed)
+                        ]
+                        served_any = spark.read.parquet(*srcs).select("id")
+                        id_type = served_any.schema["id"].dataType
+                        # derived from the shared ckeys checkpoint — the
+                        # docstring's one-corpus-scan promise (a raw corpus
+                        # re-read here was a second full scan; bsel is
+                        # already applied inside ckeys)
+                        mcorp = ckeys.filter(
+                            F.col("batch_id").isin(mapped_ing)
+                        )
+                        missing = mcorp.select(
+                            F.col("doc_id").cast(id_type).alias("id")
+                        ).distinct().join(served_any, "id", "left_anti")
+                        # a live manual tombstone is INTENTIONAL absence
+                        tomb_ids = _tombstone_batches(spark, ibase, horizon)
+                        if tomb_ids:
+                            tombs = spark.read.parquet(*[
+                                f"{ibase}/tombstones/batch={t}"
+                                for t in tomb_ids
+                            ]).select(F.col("id").cast(id_type).alias("id"))
+                            missing = missing.join(tombs, "id", "left_anti")
+                        n = missing.count()
+                        # pre-compaction the check is PRECISE (every manual
+                        # tombstone is still live and excluded above) →
+                        # fail. Once a compaction has run (horizon >= 0) a
+                        # manually tombstoned doc's rows AND its tombstone
+                        # are purged together, indistinguishable from a
+                        # lost append by metadata — WARN, not a permanent
+                        # false fail on a healthy state.
+                        if not n:
+                            st, why = "ok", ""
+                        elif horizon < 0:
+                            st = "fail"
+                            why = "; absent from every committed codes source"
+                        else:
+                            st = "warn"
+                            why = ("; absent from snapshot + committed appends"
+                                   " — lost append OR a manual tombstone the"
+                                   " compaction folded (metadata cannot tell"
+                                   " them apart post-fold)")
+                        emit("admitted_doc_not_in_index", "corpus", st, n,
+                             sample(missing, "id", n) + why)
 
-    if ckeys is not None:
-        release_local_checkpoint(ckeys)
-    if not have_corpus:
-        emit("corpus", "corpus", "skipped", 0, "corpus absent")
-    return tiny_df(spark, rows, schema)
+                if retr is None:
+                    emit("retracted_doc_still_served", "index", "skipped", 0,
+                         "no retractions recorded")
+                else:
+                    codes = load_pq_index(spark, cfg.semdedup_index_path).codes
+                    id_type = codes.schema["id"].dataType
+                    rsel = retr if bsel is None else retr.filter(
+                        F.col("admitted_batch_id").isin(bsel)
+                    )
+                    still = _served(codes, rsel).select("id").distinct()
+                    # a retracted id the CORPUS currently holds under an
+                    # admission NO retraction record covers was legitimately
+                    # RE-SUBMITTED after its takedown (the documented
+                    # semantics: retraction is not a content blocklist) and
+                    # re-appended — serving it is correct, and
+                    # prune_ingest_audit deliberately keeps the old record
+                    # while the id is served, so without this exclusion a
+                    # healthy state would FAIL here forever.
+                    # The exclusion is PAIR-aware, like the scrubs: a live
+                    # corpus row in the SAME batch a record names is an
+                    # incomplete scrub (the takedown never finished), not a
+                    # re-admission — only a live (id, batch) pair outside
+                    # every record's (id, admitted_batch_id) clears the id.
+                    # Live pairs come from the shared ckeys scan; in
+                    # batch-scoped mode ckeys only covers bsel, so an
+                    # out-of-scope re-admission can't be ruled out —
+                    # findings there downgrade to warn.
+                    n_re = 0
+                    if ckeys is not None:
+                        rec_pairs = retr.select(
+                            F.col("doc_id").cast(id_type).alias("__rid"),
+                            F.col("admitted_batch_id").cast("long")
+                            .alias("__rbatch"),
+                        ).distinct()
+                        fresh = ckeys.select(
+                            F.col("doc_id").cast(id_type).alias("id"),
+                            F.col("batch_id").alias("__lb"),
+                        ).distinct().join(
+                            F.broadcast(rec_pairs),
+                            (F.col("id") == F.col("__rid"))
+                            & (F.col("__lb") == F.col("__rbatch")),
+                            "left_anti",
+                        ).select("id").distinct()
+                        n_re = still.join(fresh, "id", "left_semi").count()
+                        still = still.join(fresh, "id", "left_anti")
+                    n = still.count()
+                    st = "fail" if n else "ok"
+                    why = sample(still, "id", n)
+                    if n and bsel is not None:
+                        st = "warn"
+                        why += ("; batch-scoped — a re-admission outside the "
+                                "scoped batches would also serve legitimately")
+                    if n_re:
+                        why = (why + "; " if why else "") + (
+                            f"{n_re} retracted id(s) re-admitted later and "
+                            "served — excluded (expected)"
+                        )
+                    emit("retracted_doc_still_served", "index", st, n, why)
+
+        # retraction residual across the whole history (the verb's own
+        # self-check shape; conservative post-fold — see docstring); reads
+        # the retracted/ frame hoisted above (one listing, two consumers)
+        if retr is None:
+            emit("retraction_residual", "all", "skipped", 0,
+                 "no retractions recorded")
+        else:
+            cand = retr if bsel is None else retr.filter(
+                F.col("admitted_batch_id").isin(bsel)
+            )
+            residual = {
+                sub: sum(h.values()) for sub, h in _live_matches(
+                    v, icol, cand, None
+                ).items()
+            }
+            total = sum(residual.values())
+            emit("retraction_residual", "all", "warn" if total else "ok",
+                 total,
+                 ("; ".join(f"{sub}={n}" for sub, n in residual.items()) +
+                  "; incomplete scrub OR a provenance-less legacy archive "
+                  "row key-matching a re-admission (conservative fallback)")
+                 if total else "")
+
+        if ckeys is not None:
+            release_local_checkpoint(ckeys)
+        if not have_corpus:
+            emit("corpus", "corpus", "skipped", 0, "corpus absent")
+        return tiny_df(spark, rows, schema)

@@ -129,9 +129,8 @@ def journal_publish(
     a KILLED run (marker-less partition dir) is still awaiting its
     at-least-once redelivery, and landing different rows under its id
     would let that redelivery — a legitimate replay — silently overwrite
-    them (round-9 ADVICE fix; the index WAL's auto ids follow the same
-    rule). An
-    EXPLICIT id must be either greater than every ATTEMPTED run (a new
+    them (the index WAL's auto ids follow the same rule). An EXPLICIT
+    id must be either greater than every ATTEMPTED run (a new
     run under external numbering — streaming batch ids, which start at
     0: a fresh journal accepts any first id) or an already-attempted id
     (a replay); a reused-but-never-attempted id in between is refused —
@@ -145,126 +144,119 @@ def journal_publish(
     trade: bounded reads for replayability of compacted history).
 
     Returns ``{"published": n, "unchanged": n, "run_id": id}``. The
-    journal's single-writer contract is ENFORCED (round-11 VERDICT item
-    2): the verb holds the journal dir's writer lease — two concurrent
-    publishers (or a publish racing a compaction) refuse loudly at
-    acquisition instead of double-assigning run ids.
+    journal's single-writer contract is ENFORCED: the verb holds the
+    journal dir's writer lease — two concurrent publishers (or a
+    publish racing a compaction) refuse loudly at acquisition instead of
+    double-assigning run ids.
     """
-    from pulfa_sausage_factory_spark import statedir
-
-    with statedir.lease_scope(spark, journal_dir, "journal_publish",
-                              lease=lease):
-        return _journal_publish_body(spark, outputs, journal_dir, run_id)
-
-
-def _journal_publish_body(
-    spark: SparkSession,
-    outputs: DataFrame,
-    journal_dir: str,
-    run_id: int | None = None,
-) -> dict:
     import os
 
     from pyspark import StorageLevel
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    # distinct: an upstream that emits the same output row twice must not
-    # double-journal it (svn commits a path once per revision). Persisted:
-    # the plan is consumed twice (count + write), and the typical caller
-    # feeds it binaryFile content + sha1 — without the persist every
-    # published file would be read and hashed twice per run.
-    rows = outputs.select("path", "digest").distinct().persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        # one journal read serves id assignment AND the prior manifest;
-        # the journal is bounded (one row per changed output per run), so
-        # the distinct-run collect is small. Validation additionally
-        # consults the run-partition DIRECTORY listing (attempted runs ⊇
-        # committed runs — no-op runs journal zero rows but still write
-        # their partition).
-        horizon = _journal_horizon(spark, journal_dir)
-        full = _read_journal(spark, journal_dir, before_run=None,
-                             keep_run=True)
-        committed = (
-            set()
-            if full is None
-            else {
-                r.run_id
-                for r in full.select("run_id").distinct().collect()
-            }
+    from pulfa_sausage_factory_spark import statedir
+
+    with statedir.lease_scope(spark, journal_dir, "journal_publish",
+                              lease=lease):
+        # distinct: an upstream that emits the same output row twice must not
+        # double-journal it (svn commits a path once per revision). Persisted:
+        # the plan is consumed twice (count + write), and the typical caller
+        # feeds it binaryFile content + sha1 — without the persist every
+        # published file would be read and hashed twice per run.
+        rows = outputs.select("path", "digest").distinct().persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        attempted = committed | _attempted_runs(spark, journal_dir, horizon)
-        if run_id is None:
-            # auto ids advance past every ATTEMPTED run — committed,
-            # no-op (empty committed partition), or KILLED (marker-less
-            # dir awaiting its at-least-once redelivery): reusing a
-            # killed run's id for DIFFERENT rows would let that
-            # redelivery, a legitimate replay of the id, silently
-            # overwrite them (round-9 ADVICE fix — the same rule the
-            # index WAL's _validate_log_batch_id applies). Never lands
-            # at or below the compaction horizon, whose priors are gone.
-            run_id = max(max(attempted, default=0), horizon) + 1
-        elif run_id < 0:
-            raise ValueError(
-                f"journal_publish: run_id={run_id} is negative — run ids "
-                "are non-negative (streaming batch ids start at 0), and "
-                "-1 is the never-compacted horizon sentinel"
+        try:
+            # one journal read serves id assignment AND the prior manifest;
+            # the journal is bounded (one row per changed output per run), so
+            # the distinct-run collect is small. Validation additionally
+            # consults the run-partition DIRECTORY listing (attempted runs ⊇
+            # committed runs — no-op runs journal zero rows but still write
+            # their partition).
+            horizon = _journal_horizon(spark, journal_dir)
+            full = _read_journal(spark, journal_dir, before_run=None,
+                                 keep_run=True)
+            committed = (
+                set()
+                if full is None
+                else {
+                    r.run_id
+                    for r in full.select("run_id").distinct().collect()
+                }
             )
-        elif run_id <= horizon:
-            raise ValueError(
-                f"journal_publish: run_id={run_id} is at or below the "
-                f"compaction horizon ({horizon}) — its original prior "
-                "manifest was folded into the HEAD snapshot, so the "
-                "replay cannot reproduce its decision; only runs > "
-                f"{horizon} are replayable"
+            attempted = committed | _attempted_runs(spark, journal_dir,
+                                                    horizon)
+            if run_id is None:
+                # auto ids advance past every ATTEMPTED run — committed, no-op
+                # (empty committed partition), or KILLED (marker-less dir
+                # awaiting its at-least-once redelivery): reusing a killed
+                # run's id for DIFFERENT rows would let that redelivery, a
+                # legitimate replay of the id, silently overwrite them (the
+                # same rule the index WAL's _validate_log_batch_id applies).
+                # Never lands at or below the compaction horizon, whose priors
+                # are gone.
+                run_id = max(max(attempted, default=0), horizon) + 1
+            elif run_id < 0:
+                raise ValueError(
+                    f"journal_publish: run_id={run_id} is negative — run ids "
+                    "are non-negative (streaming batch ids start at 0), and "
+                    "-1 is the never-compacted horizon sentinel"
+                )
+            elif run_id <= horizon:
+                raise ValueError(
+                    f"journal_publish: run_id={run_id} is at or below the "
+                    f"compaction horizon ({horizon}) — its original prior "
+                    "manifest was folded into the HEAD snapshot, so the "
+                    "replay cannot reproduce its decision; only runs > "
+                    f"{horizon} are replayable"
+                )
+            elif (run_id not in attempted and attempted
+                  and run_id <= max(attempted)):
+                raise ValueError(
+                    f"journal_publish: run_id={run_id} is neither a new run "
+                    f"(> {max(attempted)}) nor a replay of an attempted run "
+                    f"({sorted(attempted)}) — a reused, never-attempted id "
+                    "would decide against a partial prior manifest and "
+                    "silently corrupt audit history"
+                )
+            # prior = runs STRICTLY BEFORE this one (not merely "excluding
+            # it"): a replay of run N after later runs exist must decide
+            # against the journal as it stood when run N originally committed,
+            # or the replay rewrites run N's partition with rows it never
+            # contained
+            prior = (
+                None
+                if full is None
+                else full.filter(F.col("run_id") < run_id)
             )
-        elif run_id not in attempted and attempted and run_id <= max(attempted):
-            raise ValueError(
-                f"journal_publish: run_id={run_id} is neither a new run "
-                f"(> {max(attempted)}) nor a replay of an attempted run "
-                f"({sorted(attempted)}) — a reused, never-attempted id "
-                "would decide against a partial prior manifest and "
-                "silently corrupt audit history"
-            )
-        # prior = runs STRICTLY BEFORE this one (not merely "excluding
-        # it"): a replay of run N after later runs exist must decide
-        # against the journal as it stood when run N originally committed,
-        # or the replay rewrites run N's partition with rows it never
-        # contained
-        prior = (
-            None
-            if full is None
-            else full.filter(F.col("run_id") < run_id)
-        )
-        if prior is not None:
-            # HEAD per path: the digest journaled by the newest run. The
-            # journal is bounded (one row per actually-changed output per
-            # run), so the per-path window is a journal-sized shuffle,
-            # never a corpus-sized one.
-            w = Window.partitionBy("path").orderBy(
-                F.col("run_id").desc(), F.col("digest")
-            )
-            head = (
-                prior.withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") == 1)
-                .select("path", "digest")
-            )
-            fresh = rows.join(head, ["path", "digest"], "left_anti")
-        else:
-            fresh = rows
-        n_total = rows.count()
-        part_dir = os.path.join(journal_dir, f"run_id={int(run_id)}")
-        fresh.write.mode("overwrite").parquet(part_dir)
-        n_new = spark.read.parquet(part_dir).count()
-    finally:
-        rows.unpersist()
-    return {
-        "published": n_new,
-        "unchanged": n_total - n_new,
-        "run_id": int(run_id),
-    }
+            if prior is not None:
+                # HEAD per path: the digest journaled by the newest run. The
+                # journal is bounded (one row per actually-changed output per
+                # run), so the per-path window is a journal-sized shuffle,
+                # never a corpus-sized one.
+                w = Window.partitionBy("path").orderBy(
+                    F.col("run_id").desc(), F.col("digest")
+                )
+                head = (
+                    prior.withColumn("_rk", F.row_number().over(w))
+                    .filter(F.col("_rk") == 1)
+                    .select("path", "digest")
+                )
+                fresh = rows.join(head, ["path", "digest"], "left_anti")
+            else:
+                fresh = rows
+            n_total = rows.count()
+            part_dir = os.path.join(journal_dir, f"run_id={int(run_id)}")
+            fresh.write.mode("overwrite").parquet(part_dir)
+            n_new = spark.read.parquet(part_dir).count()
+        finally:
+            rows.unpersist()
+        return {
+            "published": n_new,
+            "unchanged": n_total - n_new,
+            "run_id": int(run_id),
+        }
 
 
 def published_manifest(
@@ -419,18 +411,8 @@ def compact_journal(
 
     Returns ``{"horizon": id, "snapshot_paths": n, "removed_dirs": k}``
     (``horizon=-1`` when there was nothing to compact). Holds the
-    journal dir's writer lease (round-11 VERDICT item 2).
+    journal dir's writer lease.
     """
-    from .. import statedir
-
-    with statedir.lease_scope(spark, journal_dir, "compact_journal",
-                              lease=lease) as held:
-        return _compact_journal_body(spark, journal_dir, up_to_run, held)
-
-
-def _compact_journal_body(
-    spark: SparkSession, journal_dir: str, up_to_run, lease,
-) -> dict:
     import os
 
     from pyspark.sql import Window
@@ -438,58 +420,63 @@ def _compact_journal_body(
 
     from .. import fsutil, statedir
 
-    old_horizon = _journal_horizon(spark, journal_dir)
-    # a KILLED run = attempted dir without Spark's job-commit marker (a
-    # committed no-op run has the marker and zero rows) — its redelivery
-    # must stay replayable, so the fold may never reach it
-    pending = sorted(
-        rid
-        for rid, name in statedir.numbered_dirs(
-            spark, journal_dir, "run_id=", above=old_horizon
-        ).items()
-        if not fsutil.exists(spark, f"{journal_dir.rstrip('/')}/{name}/"
-                             f"{statedir.MARKER}")
-    )
-    full = _read_journal(spark, journal_dir, before_run=None, keep_run=True)
-    if full is None:
-        return {"horizon": old_horizon, "snapshot_paths": 0,
-                "removed_dirs": 0, "pending": pending}
-    committed = {r.run_id for r in full.select("run_id").distinct().collect()}
-    if up_to_run is None:
-        up_to_run = max(
-            (c for c in committed if not pending or c < pending[0]),
-            default=old_horizon,
+    with statedir.lease_scope(spark, journal_dir, "compact_journal",
+                              lease=lease) as held:
+        old_horizon = _journal_horizon(spark, journal_dir)
+        # a KILLED run = attempted dir without Spark's job-commit marker (a
+        # committed no-op run has the marker and zero rows) — its redelivery
+        # must stay replayable, so the fold may never reach it
+        pending = sorted(
+            rid
+            for rid, name in statedir.numbered_dirs(
+                spark, journal_dir, "run_id=", above=old_horizon
+            ).items()
+            if not fsutil.exists(spark, f"{journal_dir.rstrip('/')}/{name}/"
+                                 f"{statedir.MARKER}")
         )
-    elif pending and up_to_run >= pending[0]:
-        raise ValueError(
-            f"compact_journal: up_to_run={up_to_run} spans killed run(s) "
-            f"{pending} still awaiting redelivery — folding past one "
-            "would delete its partition and refuse its replay as "
-            "below-horizon, losing its journal rows; replay (or "
-            "deliberately abandon) them first"
+        full = _read_journal(spark, journal_dir, before_run=None,
+                             keep_run=True)
+        if full is None:
+            return {"horizon": old_horizon, "snapshot_paths": 0,
+                    "removed_dirs": 0, "pending": pending}
+        committed = {
+            r.run_id for r in full.select("run_id").distinct().collect()
+        }
+        if up_to_run is None:
+            up_to_run = max(
+                (c for c in committed if not pending or c < pending[0]),
+                default=old_horizon,
+            )
+        elif pending and up_to_run >= pending[0]:
+            raise ValueError(
+                f"compact_journal: up_to_run={up_to_run} spans killed run(s) "
+                f"{pending} still awaiting redelivery — folding past one "
+                "would delete its partition and refuse its replay as "
+                "below-horizon, losing its journal rows; replay (or "
+                "deliberately abandon) them first"
+            )
+        if up_to_run <= old_horizon:
+            return {"horizon": old_horizon, "snapshot_paths": 0,
+                    "removed_dirs": 0, "pending": pending}
+        w = Window.partitionBy("path").orderBy(
+            F.col("run_id").desc(), F.col("digest")
         )
-    if up_to_run <= old_horizon:
-        return {"horizon": old_horizon, "snapshot_paths": 0,
-                "removed_dirs": 0, "pending": pending}
-    w = Window.partitionBy("path").orderBy(
-        F.col("run_id").desc(), F.col("digest")
-    )
-    head = (
-        full.filter(F.col("run_id") <= up_to_run)
-        .withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .select("path", "digest", "run_id")
-    )
-    head_dir = os.path.join(journal_dir, "_head")
-    n_snap = statedir.write_snapshot(spark, head, head_dir, int(up_to_run),
-                                     lease=lease)
-    # only now is it safe to drop what the snapshot supersedes
-    removed = statedir.delete_folded(spark, journal_dir, "run_id=",
-                                     int(up_to_run))
-    removed += statedir.delete_superseded_snapshots(spark, head_dir,
-                                                    int(up_to_run))
-    return {"horizon": int(up_to_run), "snapshot_paths": n_snap,
-            "removed_dirs": removed, "pending": pending}
+        head = (
+            full.filter(F.col("run_id") <= up_to_run)
+            .withColumn("_rk", F.row_number().over(w))
+            .filter(F.col("_rk") == 1)
+            .select("path", "digest", "run_id")
+        )
+        head_dir = os.path.join(journal_dir, "_head")
+        n_snap = statedir.write_snapshot(spark, head, head_dir, int(up_to_run),
+                                         lease=held)
+        # only now is it safe to drop what the snapshot supersedes
+        removed = statedir.delete_folded(spark, journal_dir, "run_id=",
+                                         int(up_to_run))
+        removed += statedir.delete_superseded_snapshots(spark, head_dir,
+                                                        int(up_to_run))
+        return {"horizon": int(up_to_run), "snapshot_paths": n_snap,
+                "removed_dirs": removed, "pending": pending}
 
 
 def abandon_run(spark: SparkSession, journal_dir: str, run_id: int,

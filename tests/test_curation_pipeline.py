@@ -3834,6 +3834,44 @@ def test_ingest_batch_job_pins(spark, tmp_path, count_jobs,
     assert got["semantic"][1] == 1
 
 
+def test_semantic_runs_release_their_cells(spark, tmp_path, tiny_ivf_index):
+    # the semantic ledger's cells are checkpointed once per run; three
+    # runs of one batch each leave no persisted RDD behind, and neither
+    # does a direct batch that loads its own cells
+    import json
+
+    from pyspark.sql import types as T
+
+    from pulfa_sausage_factory_spark.pipelines import (
+        curation_pipeline as cp,
+    )
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    cfg = CurationConfig(min_quality=0.0, neardup_method="none",
+                         semantic_ledger=True, semdedup_threshold=0.8,
+                         semdedup_index_path=tiny_ivf_index)
+    inp, state = tmp_path / "in", str(tmp_path / "state")
+    inp.mkdir()
+    before = persisted()
+    for b in range(3):
+        (inp / f"shard-{b}.jsonl").write_text("\n".join(
+            json.dumps({"doc_id": b * 10 + i, "text": _fam_doc(w, b + i)})
+            for i, w in enumerate(_FAMS[:2])
+        ) + "\n")
+        rep = cp.run_incremental_curation(spark, str(inp), state, cfg)
+        assert len(rep["batches"]) == 1
+        assert persisted() <= before, persisted() - before
+    lines = spark.createDataFrame(
+        [(json.dumps({"doc_id": 99, "text": _fam_doc(_FAMS[3], 2)}),)],
+        "value string",
+    )
+    cp._ingest_batch(spark, lines, 7, cfg, str(tmp_path / "direct"),
+                     T.StructType.fromDDL("doc_id long, text string"))
+    assert persisted() <= before, persisted() - before
+
+
 @pytest.mark.parametrize("knobs, match", [
     ({"serve_index_append": True},
      "serve_index_append needs cfg.semantic_ledger"),
@@ -3884,6 +3922,17 @@ def test_removed_ledger_bloom_fields_are_rejected(field):
         CurationConfig(**{field: True})
 
 
+@pytest.mark.parametrize(
+    "field", ["semdedup_impl", "contamination_impl", "overlap_impl"]
+)
+def test_removed_impl_fields_are_rejected(field):
+    # the ingest and batch DAG always run the arrow twins (the operators
+    # keep impl=), so a config still naming one of these fields fails
+    # when it is built
+    with pytest.raises(TypeError, match=field):
+        CurationConfig(**{field: "expr"})
+
+
 @pytest.mark.parametrize("module", [
     "pulfa_sausage_factory_spark.functions.bloom",
     "pulfa_sausage_factory_spark.pipelines.ledger_bloom",
@@ -3910,3 +3959,43 @@ def test_retract_documents_refuses_multi_column_ids(spark, tmp_path):
         retract_documents(spark, state, ids, CurationConfig())
     assert not (tmp_path / "state" / "retracted").exists()
     statedir.acquire_lease(spark, state, owner="next-writer").release()
+
+
+def test_state_writers_enter_through_the_verb_frame():
+    # curation_pipeline heals and replaces state dirs only inside
+    # _state_verb and _Verb, and no public verb is split into a wrapper
+    # plus a `_<verb>_body`: a new verb gets the lease and the heal by
+    # entering the frame, not by writing them out again
+    import ast
+    import inspect
+
+    from pulfa_sausage_factory_spark.pipelines import curation_pipeline as cp
+
+    tree = ast.parse(inspect.getsource(cp))
+    frame = {"_state_verb", "_Verb"}
+    guarded = {"heal_dir", "replace_dir", "recover_replaced_dir",
+               "recover_partition_swaps"}
+    outside = []
+    for top in tree.body:
+        if getattr(top, "name", None) in frame:
+            continue
+        for node in ast.walk(top):
+            named = (
+                node.attr if isinstance(node, ast.Attribute)
+                else node.id if isinstance(node, ast.Name)
+                else None
+            )
+            if named in guarded or isinstance(node, ast.ImportFrom) and {
+                a.name for a in node.names
+            } & guarded:
+                outside.append((getattr(top, "name", "<module>"),
+                                node.lineno))
+    assert not outside, f"state heal/replace outside the frame: {outside}"
+    funcs = {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}
+    split = sorted(
+        name for name in funcs
+        if name.startswith("_") and name.endswith("_body")
+        and name[1:-len("_body")] in funcs
+    )
+    assert not split, f"verbs split into wrapper + body: {split}"
+    assert "_writer_lease" not in funcs

@@ -349,7 +349,11 @@ def test_verbs_enforce_single_writer(spark, tmp_path):
     from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
         CurationConfig,
         _ingest_batch,
+        check_ingest_state,
+        coarsen_overlap_mod,
         compact_ingest_state,
+        export_training_corpus,
+        prune_ingest_audit,
         retract_documents,
     )
     from pyspark.sql import functions as F
@@ -383,6 +387,16 @@ def test_verbs_enforce_single_writer(spark, tmp_path):
             retract_documents(spark, state, [1], cfg)
         with pytest.raises(statedir.LeaseHeld):
             compact_ingest_state(spark, state, max_files=0)
+        with pytest.raises(statedir.LeaseHeld):
+            prune_ingest_audit(spark, state, cfg, up_to_batch=0)
+        with pytest.raises(statedir.LeaseHeld):
+            coarsen_overlap_mod(spark, state, 32)
+        with pytest.raises(statedir.LeaseHeld):
+            check_ingest_state(spark, state, cfg)
+        # export heals corpus/, and the heal deletes a marker-less
+        # .__partswap__ sidecar: a live writer's in-flight scrub write
+        with pytest.raises(statedir.LeaseHeld):
+            export_training_corpus(spark, state, str(tmp_path / "export"))
         # the holder itself passes its lease through
         rep2 = _ingest_batch(spark, lines, 1, cfg, state, sch, lease=other)
         assert rep2["admitted"] == 0  # duplicate text — but it RAN
