@@ -327,15 +327,12 @@ def _minhash_sig_frame(
     n: int,
     num_hashes: int,
     spread: bool,
-    carry: "tuple[str, ...]" = (),
 ) -> DataFrame:
-    """The un-materialized MinHash signature frame ``(id, *carry, sig)`` —
-    the shared plan both :func:`minhash_signatures` (which persists it)
-    and :func:`minhash_lsh_pairs`'s internal path (which does not) build,
-    so the two stay plan-identical and the CacheManager can serve one's
-    persist to the other. ``carry`` columns ride through the projection
-    untouched (the ingest attaches ``_sig`` by digest, a key that is
-    unique post-exact-dedup where the doc id is not guaranteed to be)."""
+    """The un-materialized MinHash signature frame ``(id, sig)`` — the
+    shared plan both :func:`minhash_signatures` (which persists it) and
+    :func:`minhash_lsh_pairs`'s internal path (which does not) build, so
+    the two stay plan-identical and the CacheManager can serve one's
+    persist to the other."""
     sig_udf = _minhash_sig_udf(num_hashes=num_hashes, n=n)
     # ``spread=False`` opts latency-sensitive small inputs (streaming
     # micro-batches) out of the under-partitioned-input re-spread: for a
@@ -345,7 +342,6 @@ def _minhash_sig_frame(
         src_df
         .select(
             F.col(id_col).alias("id"),
-            *[F.col(c) for c in carry],
             sig_udf(text_col).alias("sig"),
         )
         .filter(F.col("sig").isNotNull())
@@ -360,13 +356,14 @@ def minhash_signatures(
     num_hashes: int = 32,
     storage_level: "StorageLevel | None" = None,
     spread: bool = True,
-    carry: "tuple[str, ...]" = (),
 ) -> DataFrame:
-    """The materialized MinHash signature cache ``(id, *carry, sig)`` for
-    callers that consume the signatures MORE THAN ONCE outside a single
-    self-join (the incremental ingest feeds pairs + the ``_sig`` attach +
-    the sigs ledger from one frame; bench's cache build pre-fills the
-    plan-identical persist the x2b query then hits via the CacheManager).
+    """The materialized MinHash signature cache ``(id, sig)`` for callers
+    that consume the signatures MORE THAN ONCE outside a single self-join
+    (bench's cache build pre-fills the plan-identical persist the x2b
+    query then hits via the CacheManager). A pipeline that checkpoints
+    its input anyway (the incremental ingest) computes the signatures as
+    a column of that checkpoint instead and passes them to
+    :func:`minhash_lsh_pairs` as ``sigs``.
 
     The eager count() fills the cache before any consumer is planned, so
     the planner sees the signatures' REAL size — small corpus → broadcast
@@ -382,7 +379,7 @@ def minhash_signatures(
     from pyspark import StorageLevel
 
     sigs = _minhash_sig_frame(
-        df, text_col, id_col, n, num_hashes, spread, carry
+        df, text_col, id_col, n, num_hashes, spread
     ).persist(storage_level or StorageLevel.MEMORY_AND_DISK)
     sigs.count()
     return sigs
@@ -428,12 +425,14 @@ def minhash_lsh_pairs(
     memory — degrading to local disk beats silent eviction + recompute of
     the Arrow-batched signature UDF.
 
-    ``sigs`` reuses a prebuilt :func:`minhash_signatures` frame (same
-    ``num_hashes``/``n`` as requested here — the caller owns that
-    contract) so a pipeline that ALSO needs the signatures as a stage
-    artifact (the incremental ingest writes them to its ``sigs/`` ledger)
-    tokenizes and hashes each document ONCE instead of twice (round 14,
-    guide §4: pay the Python boundary once per datum).
+    ``sigs`` reuses prebuilt ``(id, sig)`` signatures — a
+    :func:`minhash_signatures` frame, or a projection of a checkpoint
+    that carries them as a column (same ``num_hashes``/``n`` as requested
+    here — the caller owns that contract) — so a pipeline that ALSO
+    needs the signatures as a stage artifact (the incremental ingest
+    writes them to its ``sigs/`` ledger) tokenizes and hashes each
+    document ONCE instead of twice (the Python boundary is paid once
+    per datum).
 
     With ``sigs=None`` (round-15): the signature frame is NOT persisted —
     the join strategy is chosen explicitly from a materialized row count

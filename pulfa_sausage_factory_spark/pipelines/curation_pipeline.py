@@ -292,9 +292,10 @@ class CurationConfig:
     #: incremental ingest: record per-stage surviving-row counts in each
     #: batch report (``rep["stage_rows"]``) — answers "WHICH gate/ledger
     #: dropped my documents" the way ``curation_report_df`` does for the
-    #: batch DAG. Opt-in: each count is a full Spark job re-executing the
-    #: admission lineage to that stage; leave off on the hot path and
-    #: turn on to debug an admission-rate regression.
+    #: batch DAG. Opt-in: each stage's output is checkpointed and counted
+    #: (a few extra Spark jobs per stage, never a re-run of a ledger
+    #: probe); leave off on the hot path and turn on to debug an
+    #: admission-rate regression.
     ingest_stage_counts: bool = False
     #: incremental ingest: run ``pipelines.maintenance.suggest_maintenance``
     #: once at END of run and attach its plan rows to the run report
@@ -1289,7 +1290,7 @@ def _ingest_batch(
                 {"mode": "PERMISSIVE",
                  "columnNameOfCorruptRecord": CORRUPT_COL},
             ),
-        ).persist()  # counted twice + feeds the admission pipeline: parse
+        ).persist()  # counted + feeds the admission pipeline: parse
         # once (unpersisted in the finally below — a mid-batch failure must
         # not pin the block until session GC)
         try:
@@ -1309,11 +1310,12 @@ def _ingest_batch(
 class _Batch:
     """What the dedup legs of one ingest micro-batch share. Each leg
     (``_exact_leg``, ``_neardup_leg``, ``_overlap_leg``, ``_semantic_leg``)
-    takes the batch's surviving docs and returns the survivors of its own
-    within-batch step and cross-run probe, carrying forward the columns
-    its state writes need; it queues those writes in ``writes`` and the
-    frames it cached in ``held``; ``_ingest_batch_body`` runs the writes and
-    releases the frames after the admitted set materializes."""
+    takes the batch's surviving docs, checkpoints them once together with
+    the per-doc column it derives, and returns the survivors of its own
+    within-batch step and (lazy) cross-run probe, carrying forward the
+    columns its state writes need; it queues those writes in ``writes``
+    and the frames it cached in ``held``; ``_ingest_batch_body`` runs the
+    writes and releases the frames after the admitted set materializes."""
 
     spark: SparkSession
     cfg: CurationConfig
@@ -1360,14 +1362,16 @@ def _ingest_batch_body(ctx: _Batch, parsed, sch) -> dict:
 
     spark, cfg, batch_id = ctx.spark, ctx.cfg, ctx.batch_id
     tcol, icol = cfg.text_col, cfg.id_col
-    n_corrupt = parsed.filter(
-        F.col("j").getField(CORRUPT_COL).isNotNull()
-    ).count()
-    docs = (
-        parsed.filter(F.col("j").getField(CORRUPT_COL).isNull())
-        .select(*[F.col("j").getField(f.name).alias(f.name) for f in sch.fields])
-        .filter(F.length(F.coalesce(tcol, F.lit(""))) > 0)
+    fields = parsed.select(
+        F.col("j").getField(CORRUPT_COL).isNotNull().alias("_bad"),
+        *[F.col("j").getField(f.name).alias(f.name) for f in sch.fields],
     )
+    is_doc = ~F.col("_bad") & (F.length(F.coalesce(tcol, F.lit(""))) > 0)
+    # corrupt lines and input docs: ONE aggregate over the parsed persist
+    n_corrupt, n_docs = fields.agg(
+        F.count_if("_bad"), F.count_if(is_doc)
+    ).first()
+    docs = fields.filter(is_doc).drop("_bad")
     # retraction replay guard (see retract_documents): an
     # at-least-once REPLAY of this batch recomputes admission against the
     # pre-batch state and would re-land docs a takedown removed, silently
@@ -1390,13 +1394,14 @@ def _ingest_batch_body(ctx: _Batch, parsed, sch) -> dict:
             .select(F.col("doc_id").alias(icol)).distinct()
         )
         # isEmpty (limit-1 over the takedown-sized frame) gates the
-        # reconciliation counts — the common case (a state dir with
+        # post-guard recount — the common case (a state dir with
         # retraction history but none for THIS batch id) pays one
-        # cheap probe job, not two full counts, per micro-batch
+        # cheap probe job, not a second full count, per micro-batch
         if not guard.isEmpty():
-            pre_guard = docs.count()
+            pre_guard = n_docs
             docs = docs.join(F.broadcast(guard), icol, "left_anti")
-    n_in = ctx.n_in = docs.count()
+            n_docs = docs.count()
+    n_in = ctx.n_in = n_docs
 
     # opt-in input drift monitoring: profile the PARSED batch
     # (pre-clean, pre-gate — the question is "did my INPUT move", and the
@@ -1439,10 +1444,12 @@ def _ingest_batch_body(ctx: _Batch, parsed, sch) -> dict:
     stage_rows: dict[str, int] = {}
 
     def _st(name: str, df):
-        # opt-in per-stage survivor counts (cfg.ingest_stage_counts) —
-        # each one is a full job over the admission lineage, so the
-        # default is a no-op passthrough
+        # opt-in per-stage survivor counts (cfg.ingest_stage_counts): the
+        # stage's output is checkpointed and counted off its blocks, so a
+        # count never re-runs a leg's ledger probe; the default is a no-op
+        # passthrough
         if cfg.ingest_stage_counts:
+            df = ctx.hold(df.localCheckpoint())
             stage_rows[name] = df.count()
         return df
 
@@ -1462,6 +1469,9 @@ def _ingest_batch_body(ctx: _Batch, parsed, sch) -> dict:
     ]
     idx_rep = None
     try:
+        # each leg checkpoints its input (plus the column it derives) and
+        # returns its cross-run probe lazily: the next leg's checkpoint, or
+        # this one, runs that probe exactly once
         for name, leg in legs:
             docs = _st(name, leg(ctx, docs))
         admitted = ctx.hold(docs.localCheckpoint())  # read once, written 2-6x
@@ -1512,9 +1522,13 @@ def _exact_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     """Within-batch exact dedup, then cross-batch/run dedup against the
     digest ledger (anti-join on digests — text never reshuffles)."""
     tcol, icol = ctx.cfg.text_col, ctx.cfg.id_col
-    docs = dedup.exact_dedup(docs, tcol, icol).withColumn(
+    # clean → gate → window-dedup → digest run ONCE, into this checkpoint:
+    # the ledger flip below reads the batch twice (its stream side and
+    # its digest broadcast), and each read would otherwise re-run the
+    # whole chain from the parsed persist
+    docs = ctx.hold(dedup.exact_dedup(docs, tcol, icol).withColumn(
         "_digest", F.md5(F.col(tcol))
-    )
+    ).localCheckpoint())
     seen = ctx.state("ledger")
     if seen is not None:
         # 100 TB shape: the naive batch ⟕anti ledger plans a
@@ -1533,17 +1547,7 @@ def _exact_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     ctx.write("ledger", lambda adm, src: adm.select(
         F.col("_digest").alias("digest"), src
     ))
-    # truncate the admission lineage once the exact leg is decided:
-    # every downstream consumer — the
-    # signature persist, the winnow checkpoint, each scan-state leg's
-    # broadcast build of a batch-derived frame, and the admitted
-    # checkpoint — re-executed clean → gate → window-dedup →
-    # ledger-anti-join from the parsed persist (~6 re-executions per
-    # batch, each an AQE multi-job cascade: measured 15.2 → 9.6 s on
-    # a 200-doc batch with both ledgers on). One checkpoint of the
-    # micro-batch (bounded by the batch contract) makes them all
-    # block reads.
-    return ctx.hold(docs.localCheckpoint())
+    return docs
 
 
 def _neardup_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
@@ -1553,45 +1557,24 @@ def _neardup_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     against ``sigs/``. Carries ``_sig`` forward."""
     cfg = ctx.cfg
     tcol, icol = cfg.text_col, cfg.id_col
-    # ONE signature pass per batch: the within-batch
-    # pair generation AND the cross-run leg / sigs-ledger write share the
-    # cached signature frame, and ``_sig`` attaches by a left join (null
-    # for docs too short to sign). The attach keys on ``_digest``, not
-    # the doc id: nothing upstream enforces
-    # id-uniqueness within a batch — duplicate ids with DIFFERING text
-    # both survive the digest-keyed exact dedup, and an id-keyed join
-    # would fan their rows out — while the digest IS unique
-    # post-exact-dedup, and the signature is a pure function of the text
-    # the digest hashes.
-    sigs = ctx.hold(dedup.minhash_signatures(
-        docs, text_col=tcol, id_col=icol, num_hashes=_NUM_HASHES,
-        carry=("_digest",),
-        # micro-batches are small and latency-sensitive: one Arrow
-        # batch beats the under-partitioned-input re-spread's shuffle
-        # + 32-task fan-out (the guard would fire on every trigger)
-        spread=False,
-    ))
+    # ONE signature pass per batch, into the leg's input checkpoint: the
+    # within-batch pairs, the cross-run probe and the sigs/bands writes
+    # all read ``_sig`` off its blocks (null for docs too short to sign)
+    docs = ctx.hold(docs.withColumn(
+        "_sig", dedup._minhash_sig_udf(num_hashes=_NUM_HASHES)(tcol)
+    ).localCheckpoint())
+    sigs = docs.select(
+        F.col(icol).alias("id"), F.col("_sig").alias("sig")
+    ).filter(F.col("sig").isNotNull())
     # within-batch near-dups first — the SAME connected-components
     # canonical rule as the batch DAG (per-pair greatest-id removal
     # would admit a different survivor set from identical input:
     # pairs (1,3),(2,3) keep {1,2} pairwise but only {1} as one
     # component)
-    survivors = _drop_cluster_losers(docs, dedup.minhash_lsh_pairs(
+    docs = _drop_cluster_losers(docs, dedup.minhash_lsh_pairs(
         docs, text_col=tcol, id_col=icol, threshold=cfg.neardup_threshold,
-        spread=False, sigs=sigs,
+        sigs=sigs, n_rows=ctx.n_in,
     ).select("id_a", "id_b"), icol)
-    docs = survivors.join(
-        # dropDuplicates is belt-and-braces (digests are unique
-        # post-exact-dedup) and value-deterministic either way:
-        # equal digests hash equal text, which signs identically
-        sigs.select(
-            "_digest", F.col("sig").alias("_sig")
-        ).dropDuplicates(["_digest"]),
-        "_digest", "left",
-        # re-project to the pre-join column order: a USING join moves
-        # the key first, and the corpus/ledger writes keep a stable
-        # cross-batch parquet layout
-    ).select(*survivors.columns, "_sig")
     old_bands, old_sigs = ctx.state("bands"), ctx.state("sigs")
     if old_bands is not None and old_sigs is not None:
         # same 100 TB flip as the exact leg: bands/ and sigs/ grow with
@@ -1601,16 +1584,19 @@ def _neardup_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
         # broadcast DISTINCT colliding old ids — never the batch
         # signatures themselves (num_hashes-int arrays × collision
         # count would be the one unbounded broadcast in the leg); the
-        # batch _sig attaches AFTERWARDS via a plain join of two
-        # collision-bounded frames AQE sizes itself. Output is bounded
-        # by the collision count, never state size.
+        # batch _sig attaches AFTERWARDS via a shuffled join of two
+        # collision-bounded frames. Output is bounded by the collision
+        # count, never state size.
         bc = _fits_broadcast(ctx.n_in, ctx.n_in * _N_BANDS)
         signed = docs.filter(F.col("_sig").isNotNull())
-        cand_ids = relational.inner_join_scan_state(
+        # checkpointed: the sigs probe and the pair join below both read
+        # the collision set, and bands/ (which grows with the corpus) is
+        # scanned once per batch
+        cand_ids = ctx.hold(relational.inner_join_scan_state(
             old_bands,
             signed.select(icol, F.explode(_band_keys("_sig")).alias("bucket")),
             "bucket", broadcast=bc,
-        ).select(icol, "old_id").distinct()
+        ).select(icol, "old_id").distinct().localCheckpoint())
         old_hit = relational.inner_join_scan_state(
             old_sigs.withColumnRenamed("id", "old_id"),
             cand_ids.select("old_id").distinct(), "old_id", broadcast=bc,
@@ -1618,7 +1604,11 @@ def _neardup_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
         cand = (
             signed.select(icol, "_sig")
             .join(cand_ids, icol)
-            .join(old_hit, "old_id")
+            # shuffled on both sides by hint: neither collision-bounded
+            # side is bounded by the gate, and left to AQE the runtime
+            # broadcast went to whichever side's shuffle finished first —
+            # a timing race that moved the batch's job count by one
+            .join(old_hit.hint("merge"), "old_id")
         )
         est = F.size(
             F.filter(
@@ -1658,6 +1648,10 @@ def _overlap_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     spark, cfg = ctx.spark, ctx.cfg
     tcol, icol = cfg.text_col, cfg.id_col
     overlap_mod = _resolve_overlap_mod(spark, ctx.path("fps"), cfg)
+    # the leg's input, checkpointed: the winnow below, the bshared
+    # semi-join and the drop and _fps joins all read it, and each read
+    # would otherwise re-run the previous leg's probe
+    docs = ctx.hold(docs.localCheckpoint())
     bfps = ctx.hold(text.winnow_fingerprints_df(
         docs, text_col=tcol, id_col=icol,
         k=cfg.overlap_k, w=cfg.overlap_w, impl="arrow",
@@ -1808,17 +1802,17 @@ def _semantic_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     # run-scoped checkpointed handle, so the first batch pays one collect
     # and every later batch reads the memo
     dim = len(_small_rows(cents)[0].cent)
-    # truncate the lineage the leg's several actions (embed checkpoint,
-    # verdicts, cell assignment, cross-run broadcast builds) would
-    # otherwise re-execute — by here docs carries the minhash and overlap
-    # legs' joins on top of the exact-leg checkpoint. Skipped
-    # when no other ledger ran: docs IS the exact-leg checkpoint then.
-    if cfg.neardup_ledger or cfg.overlap_ledger:
-        docs = ctx.hold(docs.localCheckpoint())
-    emb = ctx.hold(docs.select(
-        F.col(icol).alias("vec_id"),
-        hashed_text_embedding(F.col(tcol), dim=dim).alias("embedding"),
-    ).localCheckpoint())  # feeds the verdict AND the assignment below
+    # the leg's input and its embeddings in ONE checkpoint: the verdict,
+    # the cell assignment, the cross-run broadcast build and the drop
+    # joins all read it, and each read would otherwise re-run the
+    # previous leg's probe
+    docs = ctx.hold(docs.withColumn(
+        "_emb", hashed_text_embedding(F.col(tcol), dim=dim)
+    ).localCheckpoint())
+    emb = docs.select(
+        F.col(icol).alias("vec_id"), F.col("_emb").alias("embedding")
+    )
+    docs = docs.drop("_emb")
     verd = semdedup(
         emb, centroids=cents,
         threshold=cfg.semdedup_threshold, impl="arrow",

@@ -3751,8 +3751,10 @@ def test_ingest_empty_and_all_corrupt_batches(spark, tmp_path, ledgers,
 
 
 #: Spark jobs of the SECOND of two small ingest batches, per ledger config
-#: (the first batch only lays down state for the cross-run legs to probe)
-_INGEST_BATCH_JOBS = {"exact": 12, "neardup_overlap": 125, "semantic": 29}
+#: (the first batch only lays down state for the cross-run legs to probe),
+#: the pooled state writes included
+_INGEST_BATCH_JOBS = {"exact": 13, "minhash": 34, "neardup_overlap": 69,
+                      "semantic": 31}
 
 
 def test_ingest_batch_job_pins(spark, tmp_path, count_jobs,
@@ -3799,6 +3801,7 @@ def test_ingest_batch_job_pins(spark, tmp_path, count_jobs,
     base = dict(min_quality=0.0, neardup_method="none")
     configs = {
         "exact": (CurationConfig(**base), lexical),
+        "minhash": (CurationConfig(**base, neardup_ledger=True), lexical),
         "neardup_overlap": (CurationConfig(
             **base, neardup_ledger=True, neardup_threshold=0.6,
             overlap_ledger=True, overlap_sample_mod=4,
@@ -3825,13 +3828,14 @@ def test_ingest_batch_job_pins(spark, tmp_path, count_jobs,
         if cents is not None:
             release_local_checkpoint(cents)
         got[name] = (len(ids), rep["admitted"])
-        assert len(ids) <= _INGEST_BATCH_JOBS[name], (
-            f"{name}: batch 1 ran {len(ids)} jobs > "
+        # an equality: the count is deterministic, so one more job shows
+        assert len(ids) == _INGEST_BATCH_JOBS[name], (
+            f"{name}: batch 1 ran {len(ids)} jobs, pinned "
             f"{_INGEST_BATCH_JOBS[name]}:\n{jobs}"
         )
     # every leg decided something on batch 1
-    assert got["exact"][1] == 3 and got["neardup_overlap"][1] == 1
-    assert got["semantic"][1] == 1
+    assert got["exact"][1] == 3 and got["minhash"][1] == 2
+    assert got["neardup_overlap"][1] == 1 and got["semantic"][1] == 1
 
 
 def test_semantic_runs_release_their_cells(spark, tmp_path, tiny_ivf_index):

@@ -95,6 +95,38 @@ def test_label_or_default(spark):
     assert got == ["x", "[No title]", "[No title]"]
 
 
+def test_strip_double_quotes(spark):
+    """P2 variant (bin/publish.rb:81, ``gsub('"', '')``): every double
+    quote goes; single quotes, other text and NULL pass through."""
+    df = spark.createDataFrame(
+        [('say "hi" to \'o\'',), ('""',), ("none",), (None,)], ["t"]
+    )
+    for col in ("t", F.col("t")):
+        got = [r.y for r in df.select(
+            scalars.strip_double_quotes(col).alias("y")
+        ).collect()]
+        assert got == ["say hi to 'o'", "", "none", None]
+
+
+def test_utc_stamp_is_the_reference_format(spark):
+    """P12 (bin/dao.py:19-20,186): the reference stamps ``created`` with
+    ``utcnow().strftime('%Y-%m-%dT%H:%M:%SZ')`` — UTC wall clock, whole
+    seconds. The port formats in the session time zone, which the
+    session pins to UTC."""
+    import datetime as dt
+    import re
+
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    before = dt.datetime.now(dt.timezone.utc).replace(microsecond=0)
+    got = spark.range(1).select(scalars.utc_stamp().alias("s")).first().s
+    after = dt.datetime.now(dt.timezone.utc)
+    assert re.fullmatch(r"\d{4}-\d\d-\d\dT\d\d:\d\d:\d\dZ", got), got
+    stamp = dt.datetime.strptime(got, "%Y-%m-%dT%H:%M:%SZ").replace(
+        tzinfo=dt.timezone.utc
+    )
+    assert before <= stamp <= after
+
+
 def test_rolling_hash_matches_python_reference(spark):
     """X4d: the JVM fold equals the obvious python loop, char for char."""
     from hypothesis import given, settings
