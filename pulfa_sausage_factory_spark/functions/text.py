@@ -32,26 +32,6 @@ def word_count(col: Column | str) -> Column:
     return F.size(tokens(col))
 
 
-def char_count(col: Column | str) -> Column:
-    return F.length(F.col(col) if isinstance(col, str) else col)
-
-
-def punct_count(col: Column | str) -> Column:
-    """X4 quality signal — count of non-alphanumeric, non-space chars.
-    Count-only form (round 15): every ``[^a-zA-Z0-9\\s]`` match is one
-    char, so the match count equals the chars the old
-    ``length - length(regexp_replace(.., ""))`` pair removed — identical
-    value, one regex pass, no rebuilt string."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_count(c, F.lit(r"[^a-zA-Z0-9\s]"))
-
-
-def distinct_token_ratio(col: Column | str) -> Column:
-    """X4 quality signal — unique tokens / total tokens (repetition proxy)."""
-    t = tokens(col)
-    return F.size(F.array_distinct(t)).cast("double") / F.size(t).cast("double")
-
-
 def stopword_hits(col: Column | str, lang: str) -> Column:
     """Count of tokens that are stopwords of ``lang`` (language-ID signal)."""
     t = tokens(col)
@@ -73,13 +53,6 @@ def langid_expr(col: Column | str) -> Column:
     # first-lang tie-break by sorting on (hits desc, lang asc) via sort_array.
     best = F.sort_array(scored, asc=False)[0]
     return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
-
-
-def rolling_fingerprint(col: Column | str, prefix_words: int = 8) -> Column:
-    """X4 — document fingerprint: md5 of the first N normalized tokens.
-    md5 (not xxhash) so a DuckDB oracle can reproduce it exactly."""
-    t = tokens(F.lower(F.col(col) if isinstance(col, str) else col))
-    return F.md5(F.array_join(F.slice(t, 1, prefix_words), " "))
 
 
 def rolling_hash(col: Column | str, mod: int = 2_147_483_648, base: int = 31) -> Column:

@@ -92,12 +92,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every driver table as a temp view for spark.sql() use."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_parquet_state(
     spark: SparkSession, path: str, **options
 ) -> DataFrame | None:

@@ -15,7 +15,7 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -28,12 +28,20 @@ def exact_dedup(
     ``md5(text)`` so the shuffle moves digests, not documents; md5 (not
     xxhash64) so the DuckDB oracle reproduces it. Generalizes the
     reference's checksum surface (bin/dao.py:12-17) + J5 skip-guards."""
+    return _first_per_digest(
+        df.withColumn("_digest", F.md5(F.col(text_col))), id_col
+    ).drop("_digest")
+
+
+def _first_per_digest(df: DataFrame, id_col: str) -> DataFrame:
+    """:func:`exact_dedup`'s window over a frame that already carries the
+    ``_digest`` column; keeps it, so a caller that needs the digest
+    afterwards (the ingest's digest ledger) hashes the text once."""
     w = Window.partitionBy("_digest").orderBy(id_col)
     return (
-        df.withColumn("_digest", F.md5(F.col(text_col)))
-        .withColumn("_rn", F.row_number().over(w))
+        df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_digest", "_rn")
+        .drop("_rn")
     )
 
 
@@ -66,7 +74,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
-    storage_level: "StorageLevel | None" = None,
 ) -> DataFrame:
     """X2 (exact variant) — all pairs with n-gram-shingle Jaccard >=
     threshold, via an inverted shingle index instead of a cross join:
@@ -85,10 +92,9 @@ def ngram_jaccard_pairs(
     >=threshold result set is unchanged (asserted on the test fixture);
     ``None`` (default) is the exact all-shingles computation.
 
-    ``storage_level`` controls the shingle-index materialization (it feeds
-    the self-join AND the per-doc sizes): defaults to MEMORY_AND_DISK so a
-    100 TB shingle set degrades to disk instead of evicting — the same
-    policy as the LSH signature cache.
+    The shingle index feeds the self-join AND the per-doc sizes, so it is
+    persisted MEMORY_AND_DISK: a 100 TB shingle set degrades to disk
+    instead of evicting — the same policy as the signature cache.
     """
     from pyspark import StorageLevel
 
@@ -102,7 +108,7 @@ def ngram_jaccard_pairs(
             .filter(F.col("_df") <= max_shingle_df)
             .drop("_df")
         )
-    sh = sh.persist(storage_level or StorageLevel.MEMORY_AND_DISK)
+    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     pairs = (
         sh.alias("a")
@@ -122,6 +128,36 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
+
+
+#: The MinHash format: signature length, LSH band count, shingle length
+#: (tokens) and permutation seed. It is persisted — the incremental
+#: ingest's ``sigs/`` and ``bands/`` ledgers hold signatures and band keys
+#: computed under it, and every later batch probes them — so
+#: :func:`minhash_lsh_pairs` and the ingest's neardup leg both read it,
+#: and :func:`_lsh_buckets` / :func:`_sig_agreement`, from here. The x2b
+#: oracle SQL (queries.py) keeps its own literals as the independent
+#: check on these values.
+_NUM_HASHES, _BANDS, _SHINGLE_N, _SEED = 32, 8, 3, 42
+
+
+def _lsh_buckets(sig) -> Column:
+    """The ``_BANDS`` LSH bucket keys of a signature column: ``xxhash64``
+    of (band number, that band's slice of the signature)."""
+    rows = _NUM_HASHES // _BANDS
+    return F.array(*[
+        F.xxhash64(F.lit(b), F.slice(sig, b * rows + 1, rows))
+        for b in range(_BANDS)
+    ])
+
+
+def _sig_agreement(a: Column, b: Column) -> Column:
+    """Estimated Jaccard of two signature columns: the share of the
+    ``_NUM_HASHES`` positions on which they agree."""
+    return F.size(F.filter(
+        F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
+        lambda v: v == 1,
+    )).cast("double") / F.lit(float(_NUM_HASHES))
 
 
 #: odd multipliers/offsets for permutation hashing, derived from a fixed LCG
@@ -146,7 +182,7 @@ _SHINGLE_POS_MULT = (0x9E3779B97F4A7C15, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
                      0x27D4EB2F165667C5, 0x85EBCA77C2B2AE63)
 
 
-def _minhash_sig_udf(num_hashes: int = 32, n: int = 3, seed: int = 42):
+def _minhash_sig_udf():
     """Arrow-batched pandas UDF: text → array<long> minhash signature.
 
     Tokenize, hash each DISTINCT token once (md5-low-32 — like
@@ -155,7 +191,7 @@ def _minhash_sig_udf(num_hashes: int = 32, n: int = 3, seed: int = 42):
     the dict cache amortizes it across the batch — corpus vocabulary ≪
     token stream), then form each n-token shingle's 64-bit hash as a
     position-weighted rolling combine of the token hashes (numpy slicing,
-    uint64 wraparound) and run all ``num_hashes`` affine permutations as
+    uint64 wraparound) and run all ``_NUM_HASHES`` affine permutations as
     one broadcast min-reduce.
     Profiled at 500k docs: building shingle STRINGS and hashing them
     dominated the old signature pass (~45 s); the rolling combine needs no
@@ -171,9 +207,10 @@ def _minhash_sig_udf(num_hashes: int = 32, n: int = 3, seed: int = 42):
     import numpy as np
     import pandas as pd
 
-    params = np.array(_perm_params(num_hashes, seed), dtype=np.uint64)
+    params = np.array(_perm_params(_NUM_HASHES, _SEED), dtype=np.uint64)
     a = params[:, 0][:, None]
     b = params[:, 1][:, None]
+    n = _SHINGLE_N
     pos_mult = np.array(_SHINGLE_POS_MULT[:n], dtype=np.uint64)
     md5 = hashlib.md5
 
@@ -210,7 +247,7 @@ def _minhash_sig_udf(num_hashes: int = 32, n: int = 3, seed: int = 42):
 
 
 def spread_for_arrow(
-    df: DataFrame, min_factor: int = 4, min_bytes: int = 256 << 10
+    df: DataFrame, min_bytes: int = 256 << 10
 ) -> DataFrame:
     """Re-spread a pathologically under-partitioned input before an
     expensive Arrow-batched stage.
@@ -223,7 +260,7 @@ def spread_for_arrow(
     spread; this was the bulk of x2b's cold time, misattributed to UDF
     bootstrap). Two-sided guard:
 
-    - partition count: only inputs with ≤ cores/``min_factor`` partitions
+    - partition count: only inputs with ≤ cores/4 partitions
       pay the one text-sized shuffle. At cluster scale, splittable
       sources already exceed ``defaultParallelism`` and this is a no-op —
       the 100 TB plan keeps zero added shuffles.
@@ -302,7 +339,7 @@ def spread_for_arrow(
     if not has_limit:
         if has_shuffle:
             return df
-        if df.rdd.getNumPartitions() * min_factor > target:
+        if df.rdd.getNumPartitions() * 4 > target:
             return df
     try:
         est = int(
@@ -315,49 +352,28 @@ def spread_for_arrow(
     return df.repartition(target)
 
 
-#: backward-compat private alias (promoted to public API in round 5 once a
-#: second module + tests started depending on it)
-_spread_for_arrow = spread_for_arrow
-
-
-def _minhash_sig_frame(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    num_hashes: int,
-    spread: bool,
-) -> DataFrame:
+def _minhash_sig_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """The un-materialized MinHash signature frame ``(id, sig)`` — the
     shared plan both :func:`minhash_signatures` (which persists it) and
     :func:`minhash_lsh_pairs`'s internal path (which does not) build, so
     the two stay plan-identical and the CacheManager can serve one's
-    persist to the other."""
-    sig_udf = _minhash_sig_udf(num_hashes=num_hashes, n=n)
-    # ``spread=False`` opts latency-sensitive small inputs (streaming
-    # micro-batches) out of the under-partitioned-input re-spread: for a
-    # few hundred rows, one Arrow batch beats a shuffle + 32-task fan-out
-    src_df = spread_for_arrow(df) if spread else df
+    persist to the other. An under-partitioned input is re-spread first
+    (:func:`spread_for_arrow`; tiny inputs stay put)."""
     return (
-        src_df
+        spread_for_arrow(df)
         .select(
             F.col(id_col).alias("id"),
-            sig_udf(text_col).alias("sig"),
+            _minhash_sig_udf()(text_col).alias("sig"),
         )
         .filter(F.col("sig").isNotNull())
     )
 
 
 def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    storage_level: "StorageLevel | None" = None,
-    spread: bool = True,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """The materialized MinHash signature cache ``(id, sig)`` for callers
+    """The materialized MinHash signature cache ``(id, sig)``, in the
+    format of :data:`_NUM_HASHES` and :data:`_SHINGLE_N`, for callers
     that consume the signatures MORE THAN ONCE outside a single self-join
     (bench's cache build pre-fills the plan-identical persist the x2b
     query then hits via the CacheManager). A pipeline that checkpoints
@@ -365,11 +381,14 @@ def minhash_signatures(
     a column of that checkpoint instead and passes them to
     :func:`minhash_lsh_pairs` as ``sigs``.
 
-    The eager count() fills the cache before any consumer is planned, so
-    the planner sees the signatures' REAL size — small corpus → broadcast
-    join, big corpus → sort-merge (round-6 lesson: an UNFILLED
-    InMemoryRelation's optimistic size estimate baited a corpus-sized
-    broadcast; the 4 GiB stress run died in
+    The cache is persisted MEMORY_AND_DISK (~8·``_NUM_HASHES`` bytes per
+    doc: at 100 TB the set can exceed executor memory, and degrading to
+    local disk beats silent eviction + recompute of the Arrow-batched
+    signature UDF). The eager count() fills it before any consumer is
+    planned, so the planner sees the signatures' REAL size — small
+    corpus → broadcast join, big corpus → sort-merge (round-6 lesson: an
+    UNFILLED InMemoryRelation's optimistic size estimate baited a
+    corpus-sized broadcast; the 4 GiB stress run died in
     notEnoughMemoryToBuildAndBroadcastTable). Single-shot pair generation
     no longer needs this materialization: ``minhash_lsh_pairs`` with
     ``sigs=None`` picks its join strategy explicitly from a row count
@@ -378,17 +397,17 @@ def minhash_signatures(
     """
     from pyspark import StorageLevel
 
-    sigs = _minhash_sig_frame(
-        df, text_col, id_col, n, num_hashes, spread
-    ).persist(storage_level or StorageLevel.MEMORY_AND_DISK)
+    sigs = _minhash_sig_frame(df, text_col, id_col).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     sigs.count()
     return sigs
 
 
 #: payload-aware broadcast gate for ``minhash_lsh_pairs``'s banded
-#: self-join (1 unit ≈ 8 B): the broadcast side carries ``bands`` rows per
-#: doc of (id, num_hashes-long sig, bucket), so units =
-#: n_docs × bands × (num_hashes + 2) — ≤ 8M units ≈ 64 MB built relation.
+#: self-join (1 unit ≈ 8 B): the broadcast side carries ``_BANDS`` rows
+#: per doc of (id, ``_NUM_HASHES``-long sig, bucket), so units =
+#: n_docs × _BANDS × (_NUM_HASHES + 2) — ≤ 8M units ≈ 64 MB built relation.
 #: Same convention as the ingest's _SCAN_STATE_BCAST_MAX_UNITS: the gate
 #: decides off a MATERIALIZED count, never Catalyst's explode estimates
 #: (round-6: an amplified 100× frame estimated SMALLER than its base).
@@ -399,40 +418,29 @@ def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
     threshold: float = 0.5,
-    storage_level: "StorageLevel | None" = None,
-    spread: bool = True,
     sigs: DataFrame | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
     """X2 — MinHash + banded LSH near-dup candidates, verified by estimated
-    Jaccard (signature agreement rate).
+    Jaccard (signature agreement rate, :func:`_sig_agreement`).
 
     shingle → 32 minhashes → 8 bands of 4 → explode bands → group by
-    (band, band-signature) → same-bucket pairs → signature-Jaccard filter.
+    (band, band-signature) → same-bucket pairs → signature-Jaccard filter
+    (the format of :data:`_NUM_HASHES`, fixed for every caller).
 
     Scale: no cross join anywhere; bucket sizes are the only skew surface
     (identical boilerplate docs), handled by AQE skew-join splitting. This is
     the 100-TB path; ``ngram_jaccard_pairs`` is the exact oracle-checkable
     baseline.
 
-    ``storage_level`` controls the signature materialization (both sides of
-    the self-join read it). Default MEMORY_AND_DISK: signatures are
-    ~8·num_hashes bytes/doc, and at 100 TB the set can exceed executor
-    memory — degrading to local disk beats silent eviction + recompute of
-    the Arrow-batched signature UDF.
-
     ``sigs`` reuses prebuilt ``(id, sig)`` signatures — a
     :func:`minhash_signatures` frame, or a projection of a checkpoint
-    that carries them as a column (same ``num_hashes``/``n`` as requested
-    here — the caller owns that contract) — so a pipeline that ALSO
-    needs the signatures as a stage artifact (the incremental ingest
-    writes them to its ``sigs/`` ledger) tokenizes and hashes each
-    document ONCE instead of twice (the Python boundary is paid once
-    per datum).
+    that carries them as a column computed by :func:`_minhash_sig_udf` —
+    so a pipeline that ALSO needs the signatures as a stage artifact (the
+    incremental ingest writes them to its ``sigs/`` ledger) tokenizes and
+    hashes each document ONCE instead of twice (the Python boundary is
+    paid once per datum).
 
     With ``sigs=None`` (round-15): the signature frame is NOT persisted —
     the join strategy is chosen explicitly from a materialized row count
@@ -448,47 +456,25 @@ def minhash_lsh_pairs(
     explicit because Catalyst's explode estimates would otherwise bait a
     corpus-sized broadcast (round-6 OOM class).
     """
-    rows_per_band = num_hashes // bands
     lsh_broadcast: bool | None = None
     if sigs is None:
         if n_rows is None:
             # column-pruned count — never evaluates the signature UDF
             n_rows = df.count()
-        sigs = _minhash_sig_frame(
-            df, text_col, id_col, n, num_hashes, spread
-        )
+        sigs = _minhash_sig_frame(df, text_col, id_col)
     if n_rows is not None:
         # explicit strategy whenever the caller's (or our) materialized
         # count is available; a prebuilt persisted+counted ``sigs`` with
         # no ``n_rows`` keeps the accurate-stats planner choice instead
         lsh_broadcast = (
-            n_rows * bands * (num_hashes + 2) <= _LSH_BCAST_MAX_UNITS
+            n_rows * _BANDS * (_NUM_HASHES + 2) <= _LSH_BCAST_MAX_UNITS
         )
     # bucket key = hash of (band, band-slice of the signature). The signature
     # rides along through the explode: ~bands × 8·num_hashes bytes per doc of
     # extra shuffle, which buys back two join-backs + a distinct (4 shuffles
     # → 2). At 100 TB the band self-join is the scale bottleneck either way;
     # shipping 256-byte sigs with it is the cheaper side of the trade.
-    banded = sigs.select(
-        "id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b), F.slice("sig", b * rows_per_band + 1, rows_per_band)
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bucket"),
-    )
-    est = F.size(
-        F.filter(
-            F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: (x == y).cast("int")),
-            lambda v: v == 1,
-        )
-    ).cast("double") / F.lit(float(num_hashes))
+    banded = sigs.select("id", "sig", F.explode(_lsh_buckets("sig")).alias("bucket"))
     build = banded.alias("b")
     if lsh_broadcast is True:
         build = F.broadcast(build)
@@ -501,7 +487,7 @@ def minhash_lsh_pairs(
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            est.alias("est_jaccard"),
+            _sig_agreement(F.col("a.sig"), F.col("b.sig")).alias("est_jaccard"),
         )
         .filter(F.col("est_jaccard") >= threshold)
         # a pair collides in as many bands as agree — collapse duplicates

@@ -22,6 +22,7 @@ from pulfa_sausage_factory_spark.functions.vectors import (
     cosine,
     dot,
 )
+from pulfa_sausage_factory_spark.operators import relational
 
 
 def knn_bruteforce(
@@ -47,12 +48,19 @@ def knn_bruteforce(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "rk", F.round("cos", 6).alias("cos"))
+    return _top_k_tail(scored, k, "cos", "neighbor_id")
+
+
+def _top_k_tail(scored: DataFrame, k: int, score: str, nbr: str) -> DataFrame:
+    """The per-query tail every kNN path ends in: the ``k`` best ``nbr``
+    rows per ``query_id`` by ``score`` (ties to the lower id), ranked
+    ``rk`` from 1, the score rounded to 6 places, ``nbr`` out as
+    ``neighbor_id``."""
+    top = relational.top_k_per_group(
+        scored, ["query_id"], [F.col(score).desc(), F.col(nbr)], k
     )
+    nid = F.col(nbr) if nbr == "neighbor_id" else F.col(nbr).alias("neighbor_id")
+    return top.select("query_id", nid, "rk", F.round(score, 6).alias(score))
 
 
 def _hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
@@ -141,12 +149,7 @@ def knn_lsh(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "rk", F.round("cos", 6).alias("cos"))
-    )
+    return _top_k_tail(scored, k, "cos", "neighbor_id")
 
 
 def embedding_neardup(
@@ -759,12 +762,7 @@ def knn_ivf(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "rk", F.round("cos", 6).alias("cos"))
-    )
+    return _top_k_tail(scored, k, "cos", "neighbor_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1295,17 +1293,7 @@ def knn_pq_adc(
         .filter(F.col("query_id") != F.col("id"))
         .withColumn("score", _adc_score(m))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            "rk",
-            F.round("score", 6).alias("score"),
-        )
-    )
+    return _top_k_tail(scored, k, "score", "id")
 
 
 def knn_ivf_pq(
@@ -1453,17 +1441,7 @@ def knn_ivf_pq(
         .join(F.broadcast(lut), "query_id")
         .withColumn("score", F.col("qc") + _adc_score(m))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            "rk",
-            F.round("score", 6).alias("score"),
-        )
-    )
+    return _top_k_tail(scored, k, "score", "id")
 
 
 def knn_pq_rerank(
@@ -1595,11 +1573,4 @@ def knn_pq_rerank(
         .join(F.broadcast(qv), "query_id")
         .withColumn("cos", cosine(F.col("qv"), F.col("cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "rk", F.round("cos", 6).alias("cos"))
-    )
+    return _top_k_tail(scored, k, "cos", "neighbor_id")

@@ -86,20 +86,12 @@ STATE_DIRS = (
     ("corpus", "id_col", None),
 )
 
-#: MinHash signature length and band count of the neardup ledger — with
-#: ``_band_keys``, a persisted format: every later batch probes the
-#: ``bands/`` rows earlier batches wrote
-_NUM_HASHES, _N_BANDS = 32, 8
+#: the overlap ledger's winnow window (k-gram hashes per window); pinned
+#: with ``overlap_k`` and the sampling mod in each state dir's ``fps_meta``
+_OVERLAP_W = 8
 
-
-def _band_keys(sig_col):
-    rows_per_band = _NUM_HASHES // _N_BANDS
-    return F.array(*[
-        F.xxhash64(
-            F.lit(b), F.slice(sig_col, b * rows_per_band + 1, rows_per_band)
-        )
-        for b in range(_N_BANDS)
-    ])
+#: hash shards of the packing stage (one greedy window pass each)
+_PACK_SHARDS = 32
 
 
 def _drop_cluster_losers(docs: DataFrame, pairs: DataFrame, icol: str):
@@ -128,10 +120,8 @@ class CurationConfig:
     clf_weights: dict | None = None  # None = no classifier gate
     clf_dim: int = 64
     clf_min_logit: float = 0.0
-    clf_hasher: str = "md5"  # MUST match train_hashed_nb_weights' hasher
     neardup_method: str = "minhash"  # "minhash" | "simhash" | "semantic" | "none"
     neardup_threshold: float = 0.5  # minhash est-Jaccard floor
-    neardup_max_hamming: int = 3  # simhash bit budget
     semdedup_threshold: float = 0.95  # semantic: cosine removal floor
     semdedup_cells: int = 16  # semantic: k-means cell count
     #: path of a persisted ANN index (ann_index.save_pq_index) whose coarse
@@ -168,7 +158,7 @@ class CurationConfig:
     #: family the other ledgers miss: a document that lifts a paragraph
     #: into otherwise-new text has LOW whole-document Jaccard (MinHash
     #: admits it) and often low cosine (the semantic ledger admits it),
-    #: but every shared span of length >= overlap_k+overlap_w-1 chars
+    #: but every shared span of length >= overlap_k+_OVERLAP_W-1 chars
     #: contributes shared winnowed fingerprints (Schleimer et al.,
     #: SIGMOD'03 — ``text.winnow_fingerprints_df``). Admitted docs
     #: persist their mod-sampled fingerprints (``fps/`` — one row per
@@ -203,7 +193,6 @@ class CurationConfig:
     overlap_ledger: bool = False
     overlap_min_shared: int = 4
     overlap_k: int = 16  # fingerprint k-gram length (chars)
-    overlap_w: int = 8  # winnow window (k-gram hashes)
     overlap_sample_mod: int | str = 16
     overlap_fp_df_cap: int = 64  # fps in more docs than this are boilerplate
     #: opt-in ADAPTIVE evidence floor for short batch docs: a
@@ -317,20 +306,16 @@ class CurationConfig:
     #: whether a moved distribution means retune, retrain, or nothing
     #: (the same honest division of labor as the index staleness row).
     drift_ref_profile: dict | None = None
-    drift_rel_tol: float = 0.10
-    drift_null_frac_tol: float = 0.05
     dsir_k: int | None = None  # DSIR target-matched selection (needs target=)
     dsir_dim: int = 8192
     keep_tiers: tuple[int, ...] | None = None  # CCNet tier gate (needs scores=)
     tier_count: int = 3
-    contamination_min_shared: int = 5
     substring_dedup_k: int | None = None  # None = no substring-dedup stage
     chunk_max_tokens: int | None = None  # None = no chunking stage
     chunk_overlap: int = 0
     unicode_form: str | None = None  # NFC/NFKC normalization in the clean stage
     sample_fraction: float = 1.0
     pack_budget: int = 2048
-    pack_shards: int = 32
     rows_per_shard: int = 100_000
     out_dir: str | None = None
     text_col: str = "text"
@@ -487,7 +472,7 @@ def _gate_condition(cfg: CurationConfig, tcol: str):
     if cfg.clf_weights is not None:
         cond = cond & (
             lm.hashed_linear_logit_expr(
-                cfg.clf_weights, cfg.clf_dim, F.col(tcol), cfg.clf_hasher
+                cfg.clf_weights, cfg.clf_dim, F.col(tcol)
             )
             >= cfg.clf_min_logit
         )
@@ -518,10 +503,10 @@ def run_curation(
     classifier gate can be trained in-engine too: set ``cfg.clf_weights =
     lm.train_hashed_nb_weights(..., hasher="md5").weights_dict()`` and
     fold the model's bias into ``clf_min_logit`` — md5 because the gate
-    runs the inlined expression mode under ``cfg.clf_hasher`` (default
-    md5). ``weights_dict()`` carries the training hasher/dim, so a
-    mismatched pairing raises inside the gate instead of silently scoring
-    garbage."""
+    always hashes with md5 (the inlined expression mode's oracle-replayable
+    hasher). ``weights_dict()`` carries the training hasher/dim, so
+    weights trained with another hasher, or a mismatched dim, raise inside
+    the gate instead of silently scoring garbage."""
     tcol, icol = cfg.text_col, cfg.id_col
     if cfg.neardup_method != "semantic":
         if semdedup_centroids is not None:
@@ -622,9 +607,7 @@ def run_curation(
         # sf0.1) and released right after the stage materializes — no per-call
         # pinned InMemoryRelation and no exception-path leak (the release is in
         # a finally).
-        dag_sigs = dedup._minhash_sig_frame(
-            cur, tcol, icol, 3, 32, True
-        ).localCheckpoint()
+        dag_sigs = dedup._minhash_sig_frame(cur, tcol, icol).localCheckpoint()
         try:
             pairs = dedup.minhash_lsh_pairs(
                 cur, text_col=tcol, id_col=icol,
@@ -639,7 +622,7 @@ def run_curation(
         pairs = None  # stage handled inside the checkpoint's scope
     elif cfg.neardup_method == "simhash":
         pairs = dedup.simhash_neardup_pairs(
-            cur, text_col=tcol, id_col=icol, max_hamming=cfg.neardup_max_hamming
+            cur, text_col=tcol, id_col=icol
         ).select("id_a", "id_b")
     elif cfg.neardup_method == "semantic":
         if embeddings is None:
@@ -666,16 +649,7 @@ def run_curation(
         if semdedup_centroids is not None:
             sem_src = "prebuilt"
         elif cfg.semdedup_index_path is not None:
-            from ..operators.ann_index import load_pq_index
-
-            idx = load_pq_index(spark, cfg.semdedup_index_path)
-            if idx.centroids is None:
-                raise ValueError(
-                    f"semdedup_index_path={cfg.semdedup_index_path!r} is a "
-                    "FLAT PQ index (no coarse centroids) — SemDeDup needs "
-                    "an IVF index (build_pq_index(n_cells=...))"
-                )
-            sem_cents = idx.centroids
+            sem_cents = _index_centroids(spark, cfg.semdedup_index_path)
             sem_src = f"index:{cfg.semdedup_index_path}"
         # SemDeDup emits a per-vector verdict directly (its own
         # keep-one-representative rule) — no component pass needed; restrict
@@ -709,9 +683,7 @@ def run_curation(
     if bench is not None:
         dirty = (
             dedup.contamination_pairs(
-                cur, bench, text_col=tcol, id_col=icol,
-                min_shared=cfg.contamination_min_shared,
-                impl="arrow",
+                cur, bench, text_col=tcol, id_col=icol, impl="arrow",
             )
             .select(F.col("train_id").alias(icol))
             .distinct()
@@ -793,7 +765,7 @@ def run_curation(
     # 7. sequence packing on BPE-ish token counts (per-shard window pass)
     packed = (
         cur.withColumn("n_tokens", text.bpe_token_count(F.col(tcol)))
-        .withColumn("shard", sampling.hash_bucket(icol) % cfg.pack_shards)
+        .withColumn("shard", sampling.hash_bucket(icol) % _PACK_SHARDS)
     )
     packed = sampling.pack_greedy(
         packed, "n_tokens", cfg.pack_budget, part_col="shard", order_col=icol
@@ -1079,23 +1051,29 @@ def run_incremental_curation(
     return out
 
 
-def _load_semantic_centroids(spark: SparkSession, cfg: CurationConfig):
-    """The semantic ledger's fixed coarse cells, from the persisted index
-    (``load_pq_index`` — full artifact cross-validation), checkpointed so
-    each micro-batch broadcasts a materialized small table instead of
-    re-reading parquet. None when the semantic ledger is off."""
-    if not cfg.semantic_ledger:
-        return None
+def _index_centroids(spark: SparkSession, path: str) -> DataFrame:
+    """The coarse centroids of the persisted index at ``path``
+    (``load_pq_index`` — full artifact cross-validation): the fixed cells
+    semantic dedup assigns into. A FLAT index has none and is refused."""
     from ..operators.ann_index import load_pq_index
 
-    idx = load_pq_index(spark, cfg.semdedup_index_path)
+    idx = load_pq_index(spark, path)
     if idx.centroids is None:
         raise ValueError(
-            f"semdedup_index_path={cfg.semdedup_index_path!r} is a FLAT "
-            "PQ index (no coarse centroids) — the semantic ledger needs "
-            "an IVF index (build_pq_index(n_cells=...))"
+            f"semdedup_index_path={path!r} is a FLAT PQ index (no coarse "
+            "centroids) — semantic dedup needs an IVF index "
+            "(build_pq_index(n_cells=...))"
         )
-    return idx.centroids.localCheckpoint()
+    return idx.centroids
+
+
+def _load_semantic_centroids(spark: SparkSession, cfg: CurationConfig):
+    """The semantic ledger's fixed cells (:func:`_index_centroids`),
+    checkpointed so each micro-batch broadcasts a materialized small table
+    instead of re-reading parquet. None when the semantic ledger is off."""
+    if not cfg.semantic_ledger:
+        return None
+    return _index_centroids(spark, cfg.semdedup_index_path).localCheckpoint()
 
 
 def _read_state(spark: SparkSession, path: str, exclude_batch: int):
@@ -1167,11 +1145,11 @@ def _resolve_overlap_mod(spark: SparkSession, fps_dir: str, cfg) -> int:
     meta = read_parquet_state(spark, meta_dir)
     row = meta.collect()[0] if meta is not None else None
     if row is not None:
-        if (int(row.k), int(row.w)) != (cfg.overlap_k, cfg.overlap_w):
+        if (int(row.k), int(row.w)) != (cfg.overlap_k, _OVERLAP_W):
             raise ValueError(
                 f"overlap ledger state at {fps_dir} was written with "
                 f"k={int(row.k)}, w={int(row.w)} but the config says "
-                f"k={cfg.overlap_k}, w={cfg.overlap_w} — the stored "
+                f"k={cfg.overlap_k}, w={_OVERLAP_W} — the stored "
                 "fingerprints are not comparable; use a fresh state dir"
             )
         mod = int(row.sample_mod)
@@ -1197,7 +1175,7 @@ def _resolve_overlap_mod(spark: SparkSession, fps_dir: str, cfg) -> int:
             mod = 16
         else:
             mod = suggest_overlap_config(
-                k=cfg.overlap_k, w=cfg.overlap_w,
+                k=cfg.overlap_k, w=_OVERLAP_W,
                 min_shared=cfg.overlap_min_shared,
             )["sample_mod"]
     else:
@@ -1235,7 +1213,7 @@ def _resolve_overlap_mod(spark: SparkSession, fps_dir: str, cfg) -> int:
     # task drain 32 python partitions serially (io.tiny_df docstring)
     tiny_df(
         spark,
-        [(cfg.overlap_k, cfg.overlap_w, mod)],
+        [(cfg.overlap_k, _OVERLAP_W, mod)],
         "k int, w int, sample_mod int",
     ).write.mode("overwrite").parquet(meta_dir)
     return mod
@@ -1434,9 +1412,7 @@ def _ingest_batch_body(ctx: _Batch, parsed, sch) -> dict:
              "delta": delta, "detail": detail}
             for col, stat, rv, cv, delta, drifted, detail
             in compare_profile_rows(
-                ref_prof, profile_table(docs.drop(icol)),
-                rel_tol=cfg.drift_rel_tol,
-                null_frac_tol=cfg.drift_null_frac_tol,
+                ref_prof, profile_table(docs.drop(icol))
             )
             if drifted
         ]
@@ -1522,12 +1498,13 @@ def _exact_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     """Within-batch exact dedup, then cross-batch/run dedup against the
     digest ledger (anti-join on digests — text never reshuffles)."""
     tcol, icol = ctx.cfg.text_col, ctx.cfg.id_col
-    # clean → gate → window-dedup → digest run ONCE, into this checkpoint:
-    # the ledger flip below reads the batch twice (its stream side and
-    # its digest broadcast), and each read would otherwise re-run the
-    # whole chain from the parsed persist
-    docs = ctx.hold(dedup.exact_dedup(docs, tcol, icol).withColumn(
-        "_digest", F.md5(F.col(tcol))
+    # clean → gate → digest → window-dedup run ONCE, into this checkpoint
+    # (the window's md5 key is the ledger's digest, hashed once): the
+    # ledger flip below reads the batch twice (its stream side and its
+    # digest broadcast), and each read would otherwise re-run the whole
+    # chain from the parsed persist
+    docs = ctx.hold(dedup._first_per_digest(
+        docs.withColumn("_digest", F.md5(F.col(tcol))), icol
     ).localCheckpoint())
     seen = ctx.state("ledger")
     if seen is not None:
@@ -1561,7 +1538,7 @@ def _neardup_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     # within-batch pairs, the cross-run probe and the sigs/bands writes
     # all read ``_sig`` off its blocks (null for docs too short to sign)
     docs = ctx.hold(docs.withColumn(
-        "_sig", dedup._minhash_sig_udf(num_hashes=_NUM_HASHES)(tcol)
+        "_sig", dedup._minhash_sig_udf()(tcol)
     ).localCheckpoint())
     sigs = docs.select(
         F.col(icol).alias("id"), F.col("_sig").alias("sig")
@@ -1587,14 +1564,16 @@ def _neardup_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
         # batch _sig attaches AFTERWARDS via a shuffled join of two
         # collision-bounded frames. Output is bounded by the collision
         # count, never state size.
-        bc = _fits_broadcast(ctx.n_in, ctx.n_in * _N_BANDS)
+        bc = _fits_broadcast(ctx.n_in, ctx.n_in * dedup._BANDS)
         signed = docs.filter(F.col("_sig").isNotNull())
         # checkpointed: the sigs probe and the pair join below both read
         # the collision set, and bands/ (which grows with the corpus) is
         # scanned once per batch
         cand_ids = ctx.hold(relational.inner_join_scan_state(
             old_bands,
-            signed.select(icol, F.explode(_band_keys("_sig")).alias("bucket")),
+            signed.select(
+                icol, F.explode(dedup._lsh_buckets("_sig")).alias("bucket")
+            ),
             "bucket", broadcast=bc,
         ).select(icol, "old_id").distinct().localCheckpoint())
         old_hit = relational.inner_join_scan_state(
@@ -1610,15 +1589,7 @@ def _neardup_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
             # a timing race that moved the batch's job count by one
             .join(old_hit.hint("merge"), "old_id")
         )
-        est = F.size(
-            F.filter(
-                F.zip_with(
-                    F.col("_sig"), F.col("old_sig"),
-                    lambda x, y: (x == y).cast("int"),
-                ),
-                lambda v: v == 1,
-            )
-        ).cast("double") / F.lit(float(_NUM_HASHES))
+        est = dedup._sig_agreement(F.col("_sig"), F.col("old_sig"))
         near = (
             cand.filter(est >= F.lit(cfg.neardup_threshold))
             .select(icol)
@@ -1632,7 +1603,7 @@ def _neardup_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
         F.col("_sig").isNotNull()
     ).select(
         F.col(icol).alias("old_id"),
-        F.explode(_band_keys("_sig")).alias("bucket"),
+        F.explode(dedup._lsh_buckets("_sig")).alias("bucket"),
     ).withColumn("src_batch_id", src))
     return docs
 
@@ -1654,7 +1625,7 @@ def _overlap_leg(ctx: _Batch, docs: DataFrame) -> DataFrame:
     docs = ctx.hold(docs.localCheckpoint())
     bfps = ctx.hold(text.winnow_fingerprints_df(
         docs, text_col=tcol, id_col=icol,
-        k=cfg.overlap_k, w=cfg.overlap_w, impl="arrow",
+        k=cfg.overlap_k, w=_OVERLAP_W, impl="arrow",
     ).filter(
         F.col("fp") % overlap_mod == 0
     ).localCheckpoint())  # winnowing is window-heavy; 4 consumers below

@@ -121,6 +121,44 @@ def test_curation_classifier_gate(spark, sf_dir):
     assert report["output_rows"] == 0
 
 
+def test_curation_language_gate(spark):
+    # allowed_langs keeps exactly the docs langid_expr labels English: the
+    # batch DAG's quality-gate stage and the predicate the ingest runs
+    # (_gate_condition) agree, on the configured text column
+    from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
+        _gate_condition,
+    )
+
+    docs = spark.createDataFrame([
+        (1, "the river and the forest of the north is quiet in winter"),
+        (2, "el rio y la casa de los abuelos que viven en el campo"),
+        (3, "a letter to the curator of the archive with the box list"),
+        (4, "la carta de las islas que llegan por el mar del sur"),
+    ], "doc_id long, body string")
+    cfg = CurationConfig(min_quality=0.0, neardup_method="none",
+                         allowed_langs=("en",), text_col="body")
+    rep = run_curation(spark, docs, cfg)
+    gate = next(s for s in rep["stages"] if s["stage"] == "quality_gate")
+    assert (gate["rows"], gate["dropped"]) == (2, 2)
+    kept = docs.filter(_gate_condition(cfg, "body")).collect()
+    assert sorted(r.doc_id for r in kept) == [1, 3]
+
+
+def test_gate_refuses_weights_of_another_hasher(spark):
+    # the classifier gate hashes with md5; weights trained with xxhash64
+    # would read permuted buckets, so building the gate refuses them
+    from pulfa_sausage_factory_spark.functions.lm import HashedWeights
+    from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
+        _gate_condition,
+    )
+
+    cfg = CurationConfig(
+        clf_weights=HashedWeights({0: 1.0}, hasher="xxhash64", dim=64)
+    )
+    with pytest.raises(ValueError, match="hasher='xxhash64'"):
+        _gate_condition(cfg, "text")
+
+
 def test_curation_neardup_method_knob(spark, sf_dir):
     import pytest
 
@@ -3640,7 +3678,7 @@ def test_ingest_duplicate_ids_with_distinct_text_do_not_fan_out(spark, tmp_path)
     sigs_dir = f"{state}/sigs"
     stored = spark.read.parquet(sigs_dir).select("id", "old_sig")
     recomputed = _dedup.minhash_signatures(
-        corpus, text_col="text", id_col="doc_id", spread=False
+        corpus, text_col="text", id_col="doc_id"
     )
     # ids are non-unique, so compare as multisets of (id, sig) pairs
     want = sorted((r.id, tuple(r.sig)) for r in recomputed.collect())
@@ -3926,12 +3964,15 @@ def test_removed_ledger_bloom_fields_are_rejected(field):
         CurationConfig(**{field: True})
 
 
-@pytest.mark.parametrize(
-    "field", ["semdedup_impl", "contamination_impl", "overlap_impl"]
-)
+@pytest.mark.parametrize("field", [
+    "semdedup_impl", "contamination_impl", "overlap_impl",
+    "clf_hasher", "neardup_max_hamming", "contamination_min_shared",
+    "overlap_w", "drift_rel_tol", "drift_null_frac_tol", "pack_shards",
+])
 def test_removed_impl_fields_are_rejected(field):
     # the ingest and batch DAG always run the arrow twins (the operators
-    # keep impl=), so a config still naming one of these fields fails
+    # keep impl=), and the other fields are constants or operator
+    # defaults now, so a config still naming one of these fields fails
     # when it is built
     with pytest.raises(TypeError, match=field):
         CurationConfig(**{field: "expr"})
@@ -3963,6 +4004,44 @@ def test_retract_documents_refuses_multi_column_ids(spark, tmp_path):
         retract_documents(spark, state, ids, CurationConfig())
     assert not (tmp_path / "state" / "retracted").exists()
     statedir.acquire_lease(spark, state, owner="next-writer").release()
+
+
+def test_every_config_field_has_a_caller():
+    # every CurationConfig field is set somewhere outside the class body —
+    # by the package, the root scripts, perfbench/ or the tests — as a
+    # CurationConfig/replace/dict keyword, a dict-literal key or an
+    # attribute store; a field nothing sets is a constant, not a setting
+    import ast
+    import dataclasses
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    files = [*root.glob("*.py"),
+             *(root / "pulfa_sausage_factory_spark").rglob("*.py"),
+             *(root / "perfbench").glob("*.py"), *(root / "tests").glob("*.py")]
+    set_names = set()
+    for path in files:
+        tree = ast.parse(path.read_text())
+        body = {id(n) for c in ast.walk(tree)
+                if isinstance(c, ast.ClassDef) and c.name == "CurationConfig"
+                for n in ast.walk(c)}
+        for node in ast.walk(tree):
+            if id(node) in body:
+                continue
+            if isinstance(node, ast.Call) and getattr(
+                node.func, "attr", getattr(node.func, "id", None)
+            ) in {"CurationConfig", "replace", "dict"}:
+                set_names.update(k.arg for k in node.keywords)
+            elif isinstance(node, ast.Attribute) and isinstance(
+                node.ctx, ast.Store
+            ):
+                set_names.add(node.attr)
+            elif isinstance(node, ast.Dict):
+                set_names.update(k.value for k in node.keys
+                                 if isinstance(k, ast.Constant))
+    unset = [f.name for f in dataclasses.fields(CurationConfig)
+             if f.name not in set_names]
+    assert not unset, f"CurationConfig fields nothing sets: {unset}"
 
 
 def test_state_writers_enter_through_the_verb_frame():
