@@ -92,12 +92,10 @@ def ngram_jaccard_pairs(
     >=threshold result set is unchanged (asserted on the test fixture);
     ``None`` (default) is the exact all-shingles computation.
 
-    The shingle index feeds the self-join AND the per-doc sizes, so it is
-    persisted MEMORY_AND_DISK: a 100 TB shingle set degrades to disk
-    instead of evicting — the same policy as the signature cache.
+    Nothing is cached: the result is a lazy frame, so a persist made here
+    could never be released. The self-join's two sides read one reused
+    exchange; only the per-doc sizes derive the shingles a second time.
     """
-    from pyspark import StorageLevel
-
     sh = word_shingles(df, text_col, id_col, n)
     if max_shingle_df is not None:
         # One count-over-window pass keyed the same as the self-join below,
@@ -108,7 +106,6 @@ def ngram_jaccard_pairs(
             .filter(F.col("_df") <= max_shingle_df)
             .drop("_df")
         )
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     pairs = (
         sh.alias("a")

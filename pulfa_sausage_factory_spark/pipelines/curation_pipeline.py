@@ -1906,18 +1906,12 @@ def _maybe_compact_serve_index(spark, cfg) -> dict | None:
     dict), and a later replay of a folded batch no-ops via its idxmap
     reservation — both directions of the at-least-once contract hold
     with compaction interleaved."""
-    from ..operators.ann_index import (
-        _append_batches,
-        _tombstone_batches,
-        compact_pq_index,
-    )
+    from ..operators.ann_index import INDEX_LOG, compact_pq_index
 
     if not cfg.index_compact_after_batches:
         return None
     base = cfg.semdedup_index_path.rstrip("/")
-    live = len(_append_batches(spark, base)) + len(
-        _tombstone_batches(spark, base)
-    )
+    live = len(INDEX_LOG.view(spark, base).committed())
     if live < cfg.index_compact_after_batches:
         return None
     return compact_pq_index(spark, base)
@@ -1968,7 +1962,7 @@ def _append_serve_index(spark, admitted, cfg, icol, batch_id,
     from .. import fsutil
     from ..io import read_parquet_state, tiny_df
     from ..operators.ann_index import (
-        _codes_horizon,
+        INDEX_LOG,
         append_to_pq_index,
         next_log_id,
     )
@@ -1987,7 +1981,8 @@ def _append_serve_index(spark, admitted, cfg, icol, batch_id,
         )
         if rows:
             reserved = int(rows[0].index_batch_id)
-    if reserved is not None and reserved <= _codes_horizon(spark, base):
+    if (reserved is not None
+            and reserved <= INDEX_LOG.view(spark, base).horizon):
         # replayed batch whose append was already folded away — see
         # docstring; identical rows are in the snapshot, nothing to do
         return {"batch_id": reserved, "rows": 0, "folded": True}
@@ -2122,18 +2117,17 @@ def _sweep_orphan_reservations(spark, base: str, mapping) -> int:
     reservation path (listing-sized work, and replays never reserve
     fresh). Returns the number swept."""
     from .. import fsutil
-    from ..operators.ann_index import _attempted_log_ids, _codes_horizon
+    from ..operators.ann_index import INDEX_LOG
 
     # candidates FIRST (normally zero), mapping check second — the idxmap
     # holds one row per ingest batch forever, so an unconditional collect
     # of every reserved id would grow with deployment lifetime; filtering
     # by the (at most handful of) empty dirs keeps this output-sensitive
-    horizon = _codes_horizon(spark, base)
-    app_att, _tomb = _attempted_log_ids(spark, base, horizon)
+    log = INDEX_LOG.view(spark, base)
     empties = [
-        bid for bid in sorted(app_att)
+        bid for bid in sorted(log.attempted("append"))
         # data or committer debris → a real batch, never swept
-        if not fsutil.child_names(spark, f"{base}/codes_append/batch={bid}")
+        if not fsutil.child_names(spark, log.path("append", bid))
     ]
     if not empties:
         return 0
@@ -2149,7 +2143,7 @@ def _sweep_orphan_reservations(spark, base: str, mapping) -> int:
     for bid in empties:
         if bid in mapped:
             continue  # crash between mapping and append — replay claims it
-        fsutil.delete(spark, f"{base}/codes_append/batch={bid}")
+        log.abandon(bid, "_sweep_orphan_reservations")
         swept += 1
     return swept
 
@@ -2974,7 +2968,7 @@ def export_training_corpus(
     ``columns`` prunes the export (e.g. ``["doc_id", "text"]``);
     default keeps every corpus column. Returns ``{"rows", "files",
     "out_dir"}``."""
-    from .. import fsutil
+    from .. import fsutil, statedir
 
     with _state_verb(spark, state_dir, "export_training_corpus") as v:
         df = spark.read.option("mergeSchema", "true").parquet(
@@ -2994,10 +2988,10 @@ def export_training_corpus(
     # marker-last validity through the rename (statedir.write_snapshot's
     # copy-ordering rule): on object stores the rename is copy+delete
     # and _SUCCESS sorts before part-*, so a partial copy could carry it
-    fsutil.delete(spark, f"{tmp}/_SUCCESS")
+    fsutil.delete(spark, f"{tmp}/{statedir.MARKER}")
     fsutil.delete(spark, out)
     fsutil.rename(spark, tmp, out)
-    fsutil.touch(spark, f"{out}/_SUCCESS")
+    fsutil.touch(spark, f"{out}/{statedir.MARKER}")
     exported = spark.read.parquet(out)
     return {
         "rows": exported.count(),
@@ -3227,13 +3221,7 @@ def check_ingest_state(
         # the reads (a crashed fsck, or worse, false findings). Leases are
         # per-directory, so take the index dir's too for this block.
         if cfg.serve_index_append and cfg.semdedup_index_path:
-            from ..operators.ann_index import (
-                _append_batches,
-                _attempted_log_ids,
-                _codes_horizon,
-                _tombstone_batches,
-                load_pq_index,
-            )
+            from ..operators.ann_index import INDEX_LOG, load_pq_index
 
             ibase = cfg.semdedup_index_path.rstrip("/")
             with statedir.lease_scope(spark, ibase, "check_ingest_state"):
@@ -3250,9 +3238,8 @@ def check_ingest_state(
                     ).collect()
                     if bsel is not None:
                         mrows = [r for r in mrows if int(r.ingest) in bsel]
-                    horizon = _codes_horizon(spark, ibase)
-                    committed = set(_append_batches(spark, ibase, horizon))
-                    att_app, _ = _attempted_log_ids(spark, ibase, horizon)
+                    log = INDEX_LOG.view(spark, ibase)
+                    horizon, att_app = log.horizon, log.attempted("append")
                     lost = sorted(
                         int(r.index_batch_id) for r in mrows
                         if int(r.index_batch_id) > horizon
@@ -3260,8 +3247,8 @@ def check_ingest_state(
                     )
                     pending = sorted(
                         int(r.index_batch_id) for r in mrows
-                        if int(r.index_batch_id) > horizon
-                        and int(r.index_batch_id) in att_app - committed
+                        if int(r.index_batch_id) in att_app
+                        and int(r.index_batch_id) in log.pending
                     )
                     if lost:
                         emit("idxmap_reservation_without_append", "idxmap",
@@ -3282,11 +3269,11 @@ def check_ingest_state(
                     else:
                         mapped_ing = sorted({int(r.ingest) for r in mrows})
                         srcs = [
-                            f"{ibase}/codes_head/upto={horizon}"
-                            if horizon >= 0 else f"{ibase}/codes"
+                            log.snapshot_path() if horizon >= 0
+                            else f"{ibase}/codes"
                         ] + [
-                            f"{ibase}/codes_append/batch={b}"
-                            for b in sorted(committed)
+                            log.path("append", b)
+                            for b in log.committed("append")
                         ]
                         served_any = spark.read.parquet(*srcs).select("id")
                         id_type = served_any.schema["id"].dataType
@@ -3301,11 +3288,10 @@ def check_ingest_state(
                             F.col("doc_id").cast(id_type).alias("id")
                         ).distinct().join(served_any, "id", "left_anti")
                         # a live manual tombstone is INTENTIONAL absence
-                        tomb_ids = _tombstone_batches(spark, ibase, horizon)
+                        tomb_ids = log.committed("tombstone")
                         if tomb_ids:
                             tombs = spark.read.parquet(*[
-                                f"{ibase}/tombstones/batch={t}"
-                                for t in tomb_ids
+                                log.path("tombstone", t) for t in tomb_ids
                             ]).select(F.col("id").cast(id_type).alias("id"))
                             missing = missing.join(tombs, "id", "left_anti")
                         n = missing.count()

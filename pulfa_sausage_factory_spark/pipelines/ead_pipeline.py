@@ -407,13 +407,13 @@ def run_pipeline(spark: SparkSession, eads_root: str, cfg: EadPipelineConfig) ->
                 )
                 if cfg.journal_compact_after_runs is not None:
                     from ..streaming.incremental import (
-                        _attempted_runs,
-                        _journal_horizon,
+                        JOURNAL_LOG,
                         compact_journal,
                     )
 
-                    horizon = _journal_horizon(spark, cfg.journal_dir)
-                    live = _attempted_runs(spark, cfg.journal_dir, horizon)
+                    live = JOURNAL_LOG.view(
+                        spark, cfg.journal_dir
+                    ).attempted()
                     if len(live) > cfg.journal_compact_after_runs:
                         # fold everything STRICTLY BEFORE the run just
                         # published — the newest run stays replayable for

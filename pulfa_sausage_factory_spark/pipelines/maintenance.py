@@ -207,12 +207,7 @@ def _index_signals(spark, cfg, compact_after, retrain_fraction,
     (urgent — nothing else unblocks it), fold due by live entry count,
     and appended-staleness vs the measured retrain threshold."""
     from ..io import read_parquet_state
-    from ..operators.ann_index import (
-        _append_batches,
-        _attempted_log_ids,
-        _codes_horizon,
-        _tombstone_batches,
-    )
+    from ..operators.ann_index import INDEX_LOG
 
     idx = getattr(cfg, "semdedup_index_path", None)
     if not idx:
@@ -220,11 +215,8 @@ def _index_signals(spark, cfg, compact_after, retrain_fraction,
     ibase = idx.rstrip("/")
     if read_parquet_state(spark, f"{ibase}/meta") is None:
         return
-    horizon = _codes_horizon(spark, ibase)
-    app_c = _append_batches(spark, ibase, horizon)
-    tomb_c = _tombstone_batches(spark, ibase, horizon)
-    app_a, tomb_a = _attempted_log_ids(spark, ibase, horizon)
-    pending = sorted((app_a | tomb_a) - set(app_c) - set(tomb_c))
+    log = INDEX_LOG.view(spark, ibase)
+    pending, live = log.pending, len(log.committed())
     if pending:
         emit("index_wal", "replay the batch or abandon_log_entry",
              "urgent",
@@ -239,7 +231,6 @@ def _index_signals(spark, cfg, compact_after, retrain_fraction,
               or _DEFAULT_INDEX_COMPACT_AFTER)
     )
     cadence = bool(cfg.index_compact_after_batches)
-    live = len(app_c) + len(tomb_c)
     if live >= threshold:
         emit("index_wal", "compact_pq_index",
              "info" if cadence else "recommend",
@@ -255,16 +246,14 @@ def _index_signals(spark, cfg, compact_after, retrain_fraction,
     train = json.loads(meta_json).get("train_rows")
     if not train:
         return
-    app_paths = [f"{ibase}/codes_append/batch={b}" for b in app_c]
+    app_paths = [log.path("append", b) for b in log.committed("append")]
     appended = (
         spark.read.parquet(*app_paths).count() if app_paths else 0
     )
-    if horizon >= 0:
+    if log.horizon >= 0:
         appended += max(
             0,
-            spark.read.parquet(
-                f"{ibase}/codes_head/upto={horizon}"
-            ).count() - int(train),
+            spark.read.parquet(log.snapshot_path()).count() - int(train),
         )
     frac = appended / int(train)
     if frac >= retrain_fraction:
@@ -281,17 +270,10 @@ def _index_signals(spark, cfg, compact_after, retrain_fraction,
 def _journal_signals(spark, journal_dir, compact_after, emit) -> None:
     """Publish journal: killed runs blocking the fold, and fold-due by
     attempted run-dir count."""
-    from ..streaming.incremental import _attempted_runs, _journal_horizon
+    from ..streaming.incremental import JOURNAL_LOG
 
-    jbase = journal_dir.rstrip("/")
-    horizon = _journal_horizon(spark, jbase)
-    attempted = _attempted_runs(spark, jbase, horizon)
-    committed = set(
-        statedir.numbered_dirs(
-            spark, jbase, "run_id=", committed_only=True, above=horizon
-        )
-    )
-    killed = sorted(attempted - committed)
+    log = JOURNAL_LOG.view(spark, journal_dir)
+    attempted, killed = log.attempted(), log.pending
     if killed:
         emit("journal", "replay the run or abandon_run", "urgent",
              f"killed run ids {killed[:5]} (attempted dir, no commit "

@@ -32,9 +32,16 @@ The shared invariants:
 - **Fold-then-delete ordering.** Nothing a snapshot supersedes is deleted
   until the snapshot's marker exists; debris at/below the horizon is
   ignored by readers and swept by the next compaction.
+
+The two at-least-once logs (the journal and the index WAL) each declare
+their layout once as a :class:`LogLayout`; every id rule, pending set,
+fold cap, abandon and report listing goes through its :class:`LogView`.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -428,6 +435,169 @@ def write_snapshot(
     fsutil.rename(spark, tmp, final)
     fsutil.touch(spark, f"{final}/{MARKER}")
     return n
+
+
+@dataclass(frozen=True)
+class LogLayout:
+    """The directory layout of one at-least-once log — declared once per
+    log (``ann_index.INDEX_LOG``, ``incremental.JOURNAL_LOG``):
+
+    - ``kinds``: entry kind → its entry dir under the log's base (``""``
+      = the base itself); every kind draws ids from ONE sequence;
+    - ``prefix``: the entry dir name prefix (``<prefix><id>``);
+    - ``snapshot``: the dir holding the ``upto=N`` compaction snapshots;
+    - ``id_arg``: the verbs' id parameter, named in refusals;
+    - ``refusals``: the log's wording for each refused id, as format
+      templates completing ``"<verb>: <id_arg>=<id> is "``."""
+
+    kinds: dict
+    prefix: str
+    snapshot: str
+    id_arg: str
+    refusals: dict
+
+    def view(self, spark: SparkSession, base: str) -> "LogView":
+        return LogView(spark, self, base)
+
+
+class LogView:
+    """A point-in-time reading of one log under ``base``: the ONE
+    implementation of the at-least-once log discipline both logs share.
+
+    An entry is ATTEMPTED when its dir exists (a killed write, a no-op
+    run and a reservation all leave one) and COMMITTED when it carries
+    :data:`MARKER`. The compaction horizon is the highest committed
+    snapshot; entries at or below it were folded into that snapshot
+    (dirs still there are sweep debris), so ``attempted``,
+    ``committed`` and ``pending`` count only ids above it. Pending =
+    attempted − committed: killed entries awaiting their redelivery,
+    which cap every fold below the lowest of them.
+
+    The snapshot dir is listed on construction; each entry dir is
+    listed once, on first use. Callers hold the log's writer lease for
+    any decision they act on."""
+
+    def __init__(self, spark: SparkSession, layout: LogLayout, base: str):
+        self.spark, self.layout = spark, layout
+        self.base = base.rstrip("/")
+        snap_dir = f"{self.base}/{layout.snapshot}"
+        #: every snapshot id → whether it carries the marker
+        self.snapshots = {
+            nid: fsutil.exists(spark, f"{snap_dir}/{name}/{MARKER}")
+            for nid, name in numbered_dirs(spark, snap_dir, "upto=").items()
+        }
+        self.horizon = max(
+            (nid for nid, ok in self.snapshots.items() if ok), default=-1
+        )
+
+    @cached_property
+    def entries(self) -> dict[str, dict[int, bool]]:
+        """kind → {id: committed} for every entry dir, folded ids
+        included (the reports show them as debris)."""
+        out = {}
+        for kind in self.layout.kinds:
+            d = self._dir(kind)
+            out[kind] = {
+                nid: fsutil.exists(self.spark, f"{d}/{name}/{MARKER}")
+                for nid, name in numbered_dirs(
+                    self.spark, d, self.layout.prefix
+                ).items()
+            }
+        return out
+
+    def _dir(self, kind: str) -> str:
+        sub = self.layout.kinds[kind]
+        return f"{self.base}/{sub}" if sub else self.base
+
+    def path(self, kind: str, nid: int) -> str:
+        return f"{self._dir(kind)}/{self.layout.prefix}{int(nid)}"
+
+    def snapshot_path(self, up_to: int | None = None) -> str:
+        """The ``upto=N`` snapshot dir; default: the serving one."""
+        up = self.horizon if up_to is None else int(up_to)
+        return f"{self.base}/{self.layout.snapshot}/upto={up}"
+
+    def attempted(self, kind: str | None = None) -> set[int]:
+        return {
+            nid for k in ([kind] if kind else self.layout.kinds)
+            for nid in self.entries[k] if nid > self.horizon
+        }
+
+    def committed(self, kind: str | None = None) -> list[int]:
+        return sorted(
+            nid for k in ([kind] if kind else self.layout.kinds)
+            for nid, ok in self.entries[k].items()
+            if ok and nid > self.horizon
+        )
+
+    @cached_property
+    def pending(self) -> list[int]:
+        return sorted(self.attempted() - set(self.committed()))
+
+    def foldable(self, ids) -> list[int]:
+        """The ids of ``ids`` a compaction may fold: those below the
+        lowest pending entry — folding past it would delete the killed
+        dir and then refuse its redelivery as below-horizon."""
+        return sorted(
+            i for i in ids if not self.pending or i < self.pending[0]
+        )
+
+    def next_id(self) -> int:
+        """The auto-assigned id: past every attempted entry of any kind
+        (a killed entry's id stays its redelivery's) and the horizon."""
+        return max(max(self.attempted(), default=0), self.horizon) + 1
+
+    def _refuse(self, why: str, verb: str, nid, **fmt) -> ValueError:
+        return ValueError(
+            f"{verb}: {self.layout.id_arg}={nid} is "
+            + self.layout.refusals[why].format(horizon=self.horizon, **fmt)
+        )
+
+    def claim(self, kind: str, nid: int | None, verb: str) -> int:
+        """The id a ``kind`` write lands under: ``None`` auto-assigns
+        (:meth:`next_id`); an explicit id must be non-negative, above
+        the horizon, not an attempted id of another kind, and either new
+        (past every attempted id) or a replay of an attempted ``kind``
+        entry — a reused, never-attempted id would shadow history."""
+        if nid is None:
+            return self.next_id()
+        if nid < 0:
+            raise self._refuse("negative", verb, nid)
+        if nid <= self.horizon:
+            raise self._refuse("folded", verb, nid)
+        for other in self.layout.kinds:
+            if other != kind and nid in self.attempted(other):
+                raise self._refuse("other_kind", verb, nid, other=other)
+        own, every = self.attempted(kind), self.attempted()
+        if nid not in own and every and nid <= max(every):
+            raise self._refuse("reused", verb, nid, top=max(every),
+                               own=sorted(own))
+        return int(nid)
+
+    def abandon(self, nid: int, verb: str) -> str:
+        """Delete an attempted-uncommitted entry so compaction can pass
+        it; refuses committed and unknown ids. Returns its kind."""
+        nid = int(nid)
+        kind = next(
+            (k for k in self.layout.kinds if nid in self.attempted(k)), None
+        )
+        if kind is None:
+            raise self._refuse("unknown", verb, nid)
+        if self.entries[kind][nid]:
+            raise self._refuse("committed", verb, nid, kind=kind)
+        fsutil.delete(self.spark, self.path(kind, nid))
+        return kind
+
+    def sweep(self, up_to: int) -> int:
+        """Delete the entries a snapshot at ``up_to`` folded and the
+        snapshots it superseded; returns the number of dirs removed."""
+        removed = sum(
+            delete_folded(self.spark, self._dir(k), self.layout.prefix, up_to)
+            for k in self.layout.kinds
+        )
+        return removed + delete_superseded_snapshots(
+            self.spark, f"{self.base}/{self.layout.snapshot}", up_to
+        )
 
 
 def delete_folded(

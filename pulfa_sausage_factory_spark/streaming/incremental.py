@@ -21,7 +21,44 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pulfa_sausage_factory_spark import statedir
 from pulfa_sausage_factory_spark.sources.listing import list_files
+
+#: the publish journal: one ``run_id=N`` partition per attempted run
+#: (a no-op run writes an empty one), folded by ``compact_journal`` into
+#: HEAD-per-path ``_head/upto=N`` snapshots
+JOURNAL_LOG = statedir.LogLayout(
+    kinds={"run": ""},
+    prefix="run_id=",
+    snapshot="_head",
+    id_arg="run_id",
+    refusals={
+        "negative": (
+            "negative — run ids are non-negative (streaming batch ids "
+            "start at 0), and -1 is the never-compacted horizon sentinel"
+        ),
+        "folded": (
+            "at or below the compaction horizon ({horizon}) — its "
+            "original prior manifest was folded into the HEAD snapshot, "
+            "so the replay cannot reproduce its decision; only runs > "
+            "{horizon} are replayable"
+        ),
+        "reused": (
+            "neither a new run (> {top}) nor a replay of an attempted run "
+            "({own}) — a reused, never-attempted id would decide against "
+            "a partial prior manifest and silently corrupt audit history"
+        ),
+        "unknown": (
+            "not an attempted run above the compaction horizon "
+            "({horizon}) — nothing to abandon"
+        ),
+        "committed": (
+            "a COMMITTED run — deleting it would silently rewrite audit "
+            "history; fold history with compact_journal instead, never "
+            "abandon committed runs"
+        ),
+    },
+)
 
 
 def modified_since(
@@ -129,8 +166,8 @@ def journal_publish(
     a KILLED run (marker-less partition dir) is still awaiting its
     at-least-once redelivery, and landing different rows under its id
     would let that redelivery — a legitimate replay — silently overwrite
-    them (the index WAL's auto ids follow the same rule). An EXPLICIT
-    id must be either greater than every ATTEMPTED run (a new
+    them (``statedir.LogView.claim``, shared with the index WAL). An
+    EXPLICIT id must be either greater than every ATTEMPTED run (a new
     run under external numbering — streaming batch ids, which start at
     0: a fresh journal accepts any first id) or an already-attempted id
     (a replay); a reused-but-never-attempted id in between is refused —
@@ -155,8 +192,6 @@ def journal_publish(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from pulfa_sausage_factory_spark import statedir
-
     with statedir.lease_scope(spark, journal_dir, "journal_publish",
                               lease=lease):
         # distinct: an upstream that emits the same output row twice must not
@@ -168,58 +203,15 @@ def journal_publish(
             StorageLevel.MEMORY_AND_DISK
         )
         try:
-            # one journal read serves id assignment AND the prior manifest;
-            # the journal is bounded (one row per changed output per run), so
-            # the distinct-run collect is small. Validation additionally
-            # consults the run-partition DIRECTORY listing (attempted runs ⊇
-            # committed runs — no-op runs journal zero rows but still write
-            # their partition).
-            horizon = _journal_horizon(spark, journal_dir)
+            # auto ids advance past every ATTEMPTED run — committed, no-op
+            # (empty committed partition), or KILLED (marker-less dir
+            # awaiting its at-least-once redelivery) — and never land at
+            # or below the compaction horizon, whose priors are gone
+            run_id = JOURNAL_LOG.view(spark, journal_dir).claim(
+                "run", run_id, "journal_publish"
+            )
             full = _read_journal(spark, journal_dir, before_run=None,
                                  keep_run=True)
-            committed = (
-                set()
-                if full is None
-                else {
-                    r.run_id
-                    for r in full.select("run_id").distinct().collect()
-                }
-            )
-            attempted = committed | _attempted_runs(spark, journal_dir,
-                                                    horizon)
-            if run_id is None:
-                # auto ids advance past every ATTEMPTED run — committed, no-op
-                # (empty committed partition), or KILLED (marker-less dir
-                # awaiting its at-least-once redelivery): reusing a killed
-                # run's id for DIFFERENT rows would let that redelivery, a
-                # legitimate replay of the id, silently overwrite them (the
-                # same rule the index WAL's _validate_log_batch_id applies).
-                # Never lands at or below the compaction horizon, whose priors
-                # are gone.
-                run_id = max(max(attempted, default=0), horizon) + 1
-            elif run_id < 0:
-                raise ValueError(
-                    f"journal_publish: run_id={run_id} is negative — run ids "
-                    "are non-negative (streaming batch ids start at 0), and "
-                    "-1 is the never-compacted horizon sentinel"
-                )
-            elif run_id <= horizon:
-                raise ValueError(
-                    f"journal_publish: run_id={run_id} is at or below the "
-                    f"compaction horizon ({horizon}) — its original prior "
-                    "manifest was folded into the HEAD snapshot, so the "
-                    "replay cannot reproduce its decision; only runs > "
-                    f"{horizon} are replayable"
-                )
-            elif (run_id not in attempted and attempted
-                  and run_id <= max(attempted)):
-                raise ValueError(
-                    f"journal_publish: run_id={run_id} is neither a new run "
-                    f"(> {max(attempted)}) nor a replay of an attempted run "
-                    f"({sorted(attempted)}) — a reused, never-attempted id "
-                    "would decide against a partial prior manifest and "
-                    "silently corrupt audit history"
-                )
             # prior = runs STRICTLY BEFORE this one (not merely "excluding
             # it"): a replay of run N after later runs exist must decide
             # against the journal as it stood when run N originally committed,
@@ -299,15 +291,14 @@ def journal_report(spark: SparkSession, journal_dir: str) -> DataFrame:
     number a replay will overwrite) and one for the serving snapshot —
     never O(runs) jobs, the same discipline as ``pq_index_report``'s
     staleness row. Read-only: takes no lease and mutates nothing."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from .. import fsutil, statedir
+    from .. import fsutil
     from ..io import read_parquet_state
 
     base = journal_dir.rstrip("/")
-    horizon = _journal_horizon(spark, base)
+    log = JOURNAL_LOG.view(spark, base)
+    horizon, pending = log.horizon, log.pending
     rows: list[tuple] = []
 
     per_run: dict[int, int] = {}
@@ -320,28 +311,20 @@ def journal_report(spark: SparkSession, journal_dir: str) -> DataFrame:
             ).collect()
         }
 
-    pending: list[int] = []
-    dirs = statedir.numbered_dirs(spark, base, "run_id=")
-    for rid in sorted(dirs):
-        d = f"{base}/{dirs[rid]}"
-        nf, nb = fsutil.parquet_usage(spark, d)
-        committed = fsutil.exists(spark, f"{d}/{statedir.MARKER}")
+    for rid, committed in sorted(log.entries["run"].items()):
+        nf, nb = fsutil.parquet_usage(spark, log.path("run", rid))
         if rid <= horizon:
             detail = "folded — debris awaiting the next compaction's sweep"
         elif not committed:
             detail = "killed — blocks compaction; replay or abandon_run"
-            pending.append(rid)
         else:
             detail = ""
         rows.append((f"run_id={rid}", per_run.get(rid, 0), nf, nb,
                      committed, detail))
 
-    for up in sorted(
-        statedir.numbered_dirs(spark, os.path.join(base, "_head"), "upto=")
-    ):
-        d = f"{base}/_head/upto={up}"
+    for up, committed in sorted(log.snapshots.items()):
+        d = log.snapshot_path(up)
         nf, nb = fsutil.parquet_usage(spark, d)
-        committed = fsutil.exists(spark, f"{d}/{statedir.MARKER}")
         if not committed:
             detail = ("uncommitted — partial snapshot copy, never adopted "
                       "as the horizon")
@@ -418,36 +401,22 @@ def compact_journal(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from .. import fsutil, statedir
-
     with statedir.lease_scope(spark, journal_dir, "compact_journal",
                               lease=lease) as held:
-        old_horizon = _journal_horizon(spark, journal_dir)
-        # a KILLED run = attempted dir without Spark's job-commit marker (a
-        # committed no-op run has the marker and zero rows) — its redelivery
-        # must stay replayable, so the fold may never reach it
-        pending = sorted(
-            rid
-            for rid, name in statedir.numbered_dirs(
-                spark, journal_dir, "run_id=", above=old_horizon
-            ).items()
-            if not fsutil.exists(spark, f"{journal_dir.rstrip('/')}/{name}/"
-                                 f"{statedir.MARKER}")
-        )
+        log = JOURNAL_LOG.view(spark, journal_dir)
+        old_horizon, pending = log.horizon, log.pending
         full = _read_journal(spark, journal_dir, before_run=None,
                              keep_run=True)
         if full is None:
             return {"horizon": old_horizon, "snapshot_paths": 0,
                     "removed_dirs": 0, "pending": pending}
-        committed = {
-            r.run_id for r in full.select("run_id").distinct().collect()
-        }
         if up_to_run is None:
-            up_to_run = max(
-                (c for c in committed if not pending or c < pending[0]),
-                default=old_horizon,
-            )
-        elif pending and up_to_run >= pending[0]:
+            # the newest run with journaled rows below the first killed
+            # one (a no-op run has the marker but no rows to fold)
+            up_to_run = max(log.foldable(
+                r.run_id for r in full.select("run_id").distinct().collect()
+            ), default=old_horizon)
+        elif not log.foldable([up_to_run]):
             raise ValueError(
                 f"compact_journal: up_to_run={up_to_run} spans killed run(s) "
                 f"{pending} still awaiting redelivery — folding past one "
@@ -467,16 +436,14 @@ def compact_journal(
             .filter(F.col("_rk") == 1)
             .select("path", "digest", "run_id")
         )
-        head_dir = os.path.join(journal_dir, "_head")
-        n_snap = statedir.write_snapshot(spark, head, head_dir, int(up_to_run),
-                                         lease=held)
+        n_snap = statedir.write_snapshot(
+            spark, head, os.path.join(journal_dir, JOURNAL_LOG.snapshot),
+            int(up_to_run), lease=held,
+        )
         # only now is it safe to drop what the snapshot supersedes
-        removed = statedir.delete_folded(spark, journal_dir, "run_id=",
-                                         int(up_to_run))
-        removed += statedir.delete_superseded_snapshots(spark, head_dir,
-                                                        int(up_to_run))
         return {"horizon": int(up_to_run), "snapshot_paths": n_snap,
-                "removed_dirs": removed, "pending": pending}
+                "removed_dirs": log.sweep(int(up_to_run)),
+                "pending": pending}
 
 
 def abandon_run(spark: SparkSession, journal_dir: str, run_id: int,
@@ -484,8 +451,8 @@ def abandon_run(spark: SparkSession, journal_dir: str, run_id: int,
     """Deliberately abandon a KILLED run (attempted ``run_id=N`` dir
     whose job-commit marker is missing) so ``compact_journal`` can
     advance past it — the "deliberately abandon" half of its
-    replay-or-abandon contract made an API, mirroring the index WAL's
-    ``abandon_log_entry``. Refuses committed runs (deleting one would
+    replay-or-abandon contract made an API (``statedir.LogView.abandon``,
+    shared with the index WAL). Refuses committed runs (deleting one would
     silently rewrite audit history — that is what compaction's fold is
     for) and unknown ids. A killed run's dir can hold PARTIAL rows from
     committed tasks of the killed job; deleting the dir removes them,
@@ -496,62 +463,10 @@ def abandon_run(spark: SparkSession, journal_dir: str, run_id: int,
 
     Returns ``{"run_id": id}``. Holds the journal dir's writer lease
     (round-11 VERDICT item 2)."""
-    from .. import fsutil, statedir
-
     base = journal_dir.rstrip("/")
     with statedir.lease_scope(spark, base, "abandon_run", lease=lease):
-        horizon = _journal_horizon(spark, journal_dir)
-        rid = int(run_id)
-        dirs = statedir.numbered_dirs(spark, base, "run_id=", above=horizon)
-        if rid not in dirs:
-            raise ValueError(
-                f"abandon_run: run_id={rid} is not an attempted run above "
-                f"the compaction horizon ({horizon}) — nothing to abandon"
-            )
-        d = f"{base}/{dirs[rid]}"
-        if fsutil.exists(spark, f"{d}/{statedir.MARKER}"):
-            raise ValueError(
-                f"abandon_run: run_id={rid} is a COMMITTED run — deleting "
-                "it would silently rewrite audit history; fold history "
-                "with compact_journal instead, never abandon committed "
-                "runs"
-            )
-        fsutil.delete(spark, d)
-        return {"run_id": rid}
-
-
-def _journal_horizon(spark: SparkSession, journal_dir: str) -> int:
-    """The compaction horizon: max ``upto`` among COMMITTED HEAD
-    snapshots under ``journal_dir/_head``, or ``-1`` when never
-    compacted. Committed = carries the post-rename validity marker
-    (``statedir.snapshot_horizon``): on object stores a crash inside the
-    copy+delete rename leaves a partial snapshot dir, and adopting it by
-    existence would silently drop every manifest row that missed the
-    copy while excluding the still-present run dirs as debris (round-8
-    ADVICE fix)."""
-    import os
-
-    from .. import statedir
-
-    return statedir.snapshot_horizon(
-        spark, os.path.join(journal_dir, "_head")
-    )
-
-
-def _attempted_runs(
-    spark: SparkSession, journal_dir: str, horizon: int
-) -> set[int]:
-    """Run ids that have WRITTEN their partition (committed rows or not) —
-    the replay-validation set: a no-op run journals zero rows but its
-    empty ``run_id=N`` directory still proves the id was used, so an
-    at-least-once redelivery of that batch must idempotently no-op, not
-    be refused as a reuse. Compacted-away dirs (``<= horizon``) are crash
-    debris awaiting deletion and excluded."""
-    from .. import statedir
-
-    return set(
-        statedir.numbered_dirs(spark, journal_dir, "run_id=", above=horizon)
-    )
+        JOURNAL_LOG.view(spark, base).abandon(run_id, "abandon_run")
+        return {"run_id": int(run_id)}
 
 
 def _read_journal(
@@ -569,18 +484,15 @@ def _read_journal(
     with a strictly smaller id — the pre-run manifest a (re)play of that
     run decides against (snapshot rows carry their original committing
     run id, so the filter composes)."""
-    import os
-
     from pyspark.sql import functions as F
 
     from ..io import read_parquet_state
 
-    horizon = _journal_horizon(spark, journal_dir)
+    log = JOURNAL_LOG.view(spark, journal_dir)
+    horizon = log.horizon
     frames = []
     if horizon >= 0:
-        snap = read_parquet_state(
-            spark, os.path.join(journal_dir, "_head", f"upto={horizon}")
-        )
+        snap = read_parquet_state(spark, log.snapshot_path())
         if snap is not None:
             frames.append(snap.select("path", "digest", "run_id"))
     runs = read_parquet_state(spark, journal_dir)

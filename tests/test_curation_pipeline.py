@@ -2279,16 +2279,16 @@ def test_retract_documents_spans_all_state_surfaces(spark, tmp_path):
     assert "retracted" in arts
 
     # idempotent re-run: nothing found to scrub, no duplicate tombstone
-    from pulfa_sausage_factory_spark.operators.ann_index import (
-        _tombstone_batches,
-    )
+    from pulfa_sausage_factory_spark.operators.ann_index import INDEX_LOG
 
-    tombs_before = _tombstone_batches(spark, idx_path)
+    tombs_before = INDEX_LOG.view(spark, idx_path).committed("tombstone")
     rep2 = retract_documents(spark, state, [1], cfg)
     assert rep2["found"] == 1  # the recorded keys are still visible
     assert rep2["scrubbed"] == {} and rep2["index_tombstone"] is None
     assert rep2["retract_batch_id"] is None  # no second event recorded
-    assert _tombstone_batches(spark, idx_path) == tombs_before
+    assert INDEX_LOG.view(spark, idx_path).committed(
+        "tombstone"
+    ) == tombs_before
 
     # at-least-once replay of batch 0 AFTER the retraction: the guard
     # re-excludes exactly the retracted doc — it must not resurface in
@@ -2754,10 +2754,7 @@ def test_retract_vs_index_compaction_interleavings(spark, tmp_path):
         hashed_text_embedding,
     )
     from pulfa_sausage_factory_spark.operators import ann_index
-    from pulfa_sausage_factory_spark.operators.ann_index import (
-        _codes_horizon,
-        _tombstone_batches,
-    )
+    from pulfa_sausage_factory_spark.operators.ann_index import INDEX_LOG
     from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
         _ingest_batch,
         retract_documents,
@@ -2840,16 +2837,17 @@ def test_retract_vs_index_compaction_interleavings(spark, tmp_path):
     )
     assert r1["index_appended"] == 1
     assert "index_compacted" in r1, "cadence should have fired"
-    assert _codes_horizon(spark, idx_path) >= 0
-    assert _tombstone_batches(spark, idx_path) == []  # folded away
+    log = INDEX_LOG.view(spark, idx_path)
+    assert log.horizon >= 0
+    assert log.committed("tombstone") == []  # folded away
     assert not served(1) and served(2) and served(3)
 
     # verb replay AFTER the fold: the probe reads the assembled view, A
     # is absent → no new tombstone lands (the folded one is history)
-    tombs = _tombstone_batches(spark, idx_path)
+    tombs = INDEX_LOG.view(spark, idx_path).committed("tombstone")
     rep2 = retract_documents(spark, state, [1], cfg)
     assert rep2["index_tombstone"] is None and rep2["residual"] == 0
-    assert _tombstone_batches(spark, idx_path) == tombs
+    assert INDEX_LOG.view(spark, idx_path).committed("tombstone") == tombs
     assert not served(1)
 
     # re-submission of the same id+text in a later batch: admitted, its
@@ -3731,24 +3729,37 @@ def tiny_ivf_index(spark, tmp_path_factory):
     {"neardup_ledger": True, "neardup_threshold": 0.5},
     {"overlap_ledger": True, "overlap_sample_mod": 4},
     {"semantic_ledger": True, "semdedup_threshold": 0.8},
-], ids=["exact", "neardup", "overlap", "semantic"])
+    {"semantic_ledger": True, "semdedup_threshold": 0.8,
+     "serve_index_append": True},
+], ids=["exact", "neardup", "overlap", "semantic", "serve"])
 def test_ingest_empty_and_all_corrupt_batches(spark, tmp_path, ledgers,
                                               request):
     # an empty batch and an all-corrupt batch admit nothing and count
-    # every corrupt line, and the next normal batch admits exactly what
-    # it admits on a twin state that never saw them
+    # every corrupt line, and the next normal batch admits (and appends
+    # to the serving index) exactly what it does on a twin state that
+    # never saw them
     import json
+    import shutil
 
     from pyspark.sql import types as T
 
+    from pulfa_sausage_factory_spark.operators.ann_index import INDEX_LOG
     from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
         _ingest_batch,
     )
 
-    if ledgers.get("semantic_ledger"):
-        ledgers = {**ledgers, "semdedup_index_path":
-                   request.getfixturevalue("tiny_ivf_index")}
-    cfg = CurationConfig(min_quality=0.0, neardup_method="none", **ledgers)
+    def config(name):
+        extra = {}
+        if ledgers.get("semantic_ledger"):
+            idx = request.getfixturevalue("tiny_ivf_index")
+            if ledgers.get("serve_index_append"):
+                # the append mutates the index: one copy per state
+                shutil.copytree(idx, tmp_path / f"{name}_idx")
+                idx = str(tmp_path / f"{name}_idx")
+            extra["semdedup_index_path"] = idx
+        return CurationConfig(min_quality=0.0, neardup_method="none",
+                              **ledgers, **extra)
+
     sch = T.StructType.fromDDL("doc_id long, text string")
 
     def lines(values):
@@ -3771,7 +3782,7 @@ def test_ingest_empty_and_all_corrupt_batches(spark, tmp_path, ledgers,
 
     got = {}
     for name in ("degenerate", "twin"):
-        state = str(tmp_path / name)
+        state, cfg = str(tmp_path / name), config(name)
         _ingest_batch(spark, docs(seed), 0, cfg, state, sch)
         if name == "degenerate":
             empty = _ingest_batch(spark, lines([]), 1, cfg, state, sch)
@@ -3779,13 +3790,42 @@ def test_ingest_empty_and_all_corrupt_batches(spark, tmp_path, ledgers,
             for rep, n_bad in ((empty, 0), (bad, len(corrupt))):
                 assert rep["admitted"] == 0 and rep["input_rows"] == 0, rep
                 assert rep["corrupt_lines"] == n_bad, rep
+            if cfg.serve_index_append:
+                _assert_degenerate_serve_state(spark, state, cfg,
+                                               (empty, bad), INDEX_LOG)
         rep = _ingest_batch(spark, docs(nxt), 3, cfg, state, sch)
-        got[name] = (rep["admitted"], sorted(
+        got[name] = (rep["admitted"], rep.get("index_appended"), sorted(
             r.doc_id for r in spark.read.parquet(f"{state}/corpus")
             .where(F.col("batch_id") == 3).select("doc_id").collect()
         ))
     assert got["degenerate"] == got["twin"]
-    assert got["twin"][0] == len(got["twin"][1]) > 0
+    assert got["twin"][0] == len(got["twin"][2]) > 0
+    if ledgers.get("serve_index_append"):
+        assert got["twin"][1] == got["twin"][0]
+
+
+#: (index log id, rows appended) of the empty and the all-corrupt batch,
+#: and the index log's (attempted, committed, pending) ids after them
+_DEGENERATE_SERVE_APPENDS = [(2, 0), (3, 0)]
+_DEGENERATE_SERVE_LOG = ([1, 2, 3], [1, 2, 3], [])
+
+
+def _assert_degenerate_serve_state(spark, state, cfg, reps, index_log):
+    """After the empty and the all-corrupt batch of a serve-index state:
+    each reserved and appended an empty index log entry, every entry is
+    committed, and fsck finds nothing to fail or warn about."""
+    from pulfa_sausage_factory_spark.pipelines.curation_pipeline import (
+        check_ingest_state,
+    )
+
+    assert [(r.get("index_batch_id"), r.get("index_appended"))
+            for r in reps] == _DEGENERATE_SERVE_APPENDS, reps
+    log = index_log.view(spark, cfg.semdedup_index_path)
+    assert (sorted(log.attempted()), log.committed(), log.pending) == \
+        _DEGENERATE_SERVE_LOG
+    bad = [r for r in check_ingest_state(spark, state, cfg).collect()
+           if r.status in ("fail", "warn")]
+    assert not bad, bad
 
 
 #: Spark jobs of the SECOND of two small ingest batches, per ledger config

@@ -53,6 +53,28 @@ def test_simhash_banding_matches_bruteforce(spark, sf_dir):
     assert got == want
 
 
+def test_ngram_jaccard_pairs_leaves_nothing_cached(spark):
+    # the function returns a lazy frame, so a block it cached could never
+    # be released by anyone: after the pairs are collected, no persisted
+    # RDD is left beyond those that existed before the call
+    from pulfa_sausage_factory_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+    )
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    docs = spark.createDataFrame([
+        (1, "the quick brown fox jumps over the lazy dog"),
+        (2, "the quick brown fox jumps over the lazy cat"),
+        (3, "an unrelated sentence about telescope mirror coatings"),
+    ], "doc_id long, text string")
+    before = persisted()
+    pairs = ngram_jaccard_pairs(docs, threshold=0.5).collect()
+    assert [(r.id_a, r.id_b) for r in pairs] == [(1, 2)]
+    assert persisted() <= before, persisted() - before
+
+
 def test_ngram_jaccard_df_cap_preserves_result(spark, sf_dir):
     """Viral-shingle frequency cap: with a cap above the near-dup cluster
     size, the >=threshold pair set is unchanged — boilerplate shared by many

@@ -515,3 +515,141 @@ def test_journal_verbs_enforce_single_writer(spark, tmp_path):
         incremental.journal_publish(
             spark, outs, jdir, run_id=7, lease=old
         )
+
+
+#: one hand-built tree per log layout: the committed snapshot upto=2 is
+#: the horizon (upto=9 lacks its marker), id 1 is folded debris, 4 and 7
+#: are killed entries, 5 is a gap, and id 6 is the second kind's entry
+#: where the layout has one
+_LOG_TREES = {
+    "index": ("INDEX_LOG", {"append": {1: True, 3: True, 4: False,
+                                       7: False},
+                            "tombstone": {6: True}}),
+    "journal": ("JOURNAL_LOG", {"run": {1: True, 3: True, 4: False,
+                                        6: True, 7: False}}),
+}
+
+#: (operation, id, outcome on the index tree, outcome on the journal
+#: tree); an outcome is the returned id or kind, or the phrase of the
+#: refusal. Run in order on one tree: only the last row mutates it.
+_LOG_CASES = [
+    ("claim", None, 8, 8),               # past the killed top entry 7
+    ("claim", 9, 9, 9),                  # new
+    ("claim", 3, 3, 3),                  # replay of a committed entry
+    ("claim", 4, 4, 4),                  # replay of a killed entry
+    ("claim", 5, "neither a new", "neither a new"),  # reused gap
+    ("claim", 2, "compaction horizon", "compaction horizon"),
+    ("claim", 1, "compaction horizon", "compaction horizon"),
+    ("claim", -1, "negative", "negative"),
+    ("claim", 6, "attempted tombstone batch", 6),    # cross-kind
+    ("abandon", 3, "COMMITTED", "COMMITTED"),
+    ("abandon", 6, "COMMITTED", "COMMITTED"),
+    ("abandon", 5, "nothing to abandon", "nothing to abandon"),
+    ("abandon", 1, "nothing to abandon", "nothing to abandon"),
+    ("abandon", 4, "append", "run"),     # the killed entry goes
+]
+
+
+@pytest.mark.parametrize("log", sorted(_LOG_TREES))
+def test_log_view_discipline_on_hand_built_trees(spark, tmp_path, log,
+                                                 count_jobs):
+    # the one id/pending/fold/abandon discipline both at-least-once logs
+    # share, read from marker touches alone: no Spark job runs
+    from pulfa_sausage_factory_spark.operators import ann_index
+    from pulfa_sausage_factory_spark.streaming import incremental
+
+    name, entries = _LOG_TREES[log]
+    layout = getattr(ann_index if log == "index" else incremental, name)
+    kind = next(iter(layout.kinds))
+
+    def build(base, snaps, tree):
+        for up, ok in snaps.items():
+            fsutil.mkdirs(spark, f"{base}/{layout.snapshot}/upto={up}")
+            if ok:
+                fsutil.touch(spark, f"{base}/{layout.snapshot}/upto={up}/"
+                             f"{statedir.MARKER}")
+        for k, ids in tree.items():
+            for nid, ok in ids.items():
+                d = layout.view(spark, base).path(k, nid)
+                fsutil.mkdirs(spark, d)
+                if ok:
+                    fsutil.touch(spark, f"{d}/{statedir.MARKER}")
+        return layout.view(spark, base)
+
+    def run():
+        base = str(tmp_path / "log")
+        v = build(base, {2: True, 9: False}, entries)
+        assert v.horizon == 2 and v.snapshots == {2: True, 9: False}
+        assert v.attempted() == {3, 4, 6, 7}
+        assert v.committed() == [3, 6] and v.pending == [4, 7]
+        assert v.next_id() == 8
+        # the pending cap: nothing at or past the lowest killed entry folds
+        assert v.foldable([3, 6]) == [3] and v.foldable([4]) == []
+        for op, nid, *outcomes in _LOG_CASES:
+            want = outcomes[log == "journal"]
+            call = (lambda: v.claim(kind, nid, "verb")) if op == "claim" \
+                else (lambda: v.abandon(nid, "verb"))
+            if isinstance(want, str) and want not in layout.kinds:
+                with pytest.raises(ValueError, match=want):
+                    call()
+            else:
+                assert call() == want, (op, nid)
+        # with killed entry 4 abandoned only 7 caps the fold
+        v = layout.view(spark, base)
+        assert v.pending == [7] and v.foldable([3, 6]) == [3, 6]
+        assert v.next_id() == 8
+        # auto ids also pass the horizon: a snapshot above every entry
+        v = build(str(tmp_path / "h"), {9: True}, {kind: {1: True}})
+        assert v.horizon == 9 and v.attempted() == set()
+        assert v.next_id() == 10
+        assert layout.view(spark, str(tmp_path / "none")).next_id() == 1
+
+    _, ids, jobs = count_jobs(run)
+    assert ids == [], jobs
+
+
+def test_log_markers_and_prefixes_live_in_statedir():
+    # outside statedir.py the package names the commit marker only as
+    # statedir.MARKER, and no call hands a log-entry prefix to a statedir
+    # helper but the two LogLayout declarations: a log reader that lists
+    # its own entry dirs would re-derive the discipline the view owns
+    import ast
+    from pathlib import Path
+
+    pkg = Path(statedir.__file__).parent
+    prefixes = {"batch=", "run_id=", "upto="}
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "statedir.py":
+            continue
+        tree = ast.parse(path.read_text())
+        docs = {
+            id(n.body[0].value) for n in ast.walk(tree)
+            if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef))
+            and n.body and isinstance(n.body[0], ast.Expr)
+        }
+        imported = {
+            a.asname or a.name for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom)
+            and (n.module or "").endswith("statedir") for a in n.names
+        }
+        for n in ast.walk(tree):
+            if (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                    and "_SUCCESS" in n.value and id(n) not in docs):
+                found.append((path.name, n.lineno, "_SUCCESS literal"))
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            callee = (
+                f.attr if isinstance(f, ast.Attribute)
+                and isinstance(f.value, ast.Name) and f.value.id == "statedir"
+                else f.id if isinstance(f, ast.Name) and f.id in imported
+                else None
+            )
+            if callee is None or callee == "LogLayout":
+                continue
+            for a in [*n.args, *(k.value for k in n.keywords)]:
+                if isinstance(a, ast.Constant) and a.value in prefixes:
+                    found.append((path.name, n.lineno,
+                                  f"{callee}({a.value!r})"))
+    assert not found, f"log discipline outside statedir: {found}"

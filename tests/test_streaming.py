@@ -590,7 +590,7 @@ def test_partial_journal_snapshot_is_not_adopted(spark, tmp_path):
     os.remove(f"{jdir}/_head/upto=2/_SUCCESS")
 
     # the partial snapshot is NOT the horizon; run 2 still serves
-    assert incremental._journal_horizon(spark, jdir) == 1
+    assert incremental.JOURNAL_LOG.view(spark, jdir).horizon == 1
     manifest = {
         (r.path, r.digest)
         for r in incremental.published_manifest(spark, jdir).collect()
@@ -600,7 +600,7 @@ def test_partial_journal_snapshot_is_not_adopted(spark, tmp_path):
     # the next compaction replaces the debris with a REAL snapshot
     rep = incremental.compact_journal(spark, jdir)
     assert rep["horizon"] == 2
-    assert incremental._journal_horizon(spark, jdir) == 2
+    assert incremental.JOURNAL_LOG.view(spark, jdir).horizon == 2
     manifest2 = {
         (r.path, r.digest)
         for r in incremental.published_manifest(spark, jdir).collect()
@@ -662,12 +662,12 @@ def test_journal_report_surfaces_runs_horizon_and_blockers(spark, tmp_path):
     assert "pending" not in rep
 
 
-def test_journal_auto_id_skips_killed_runs(spark, tmp_path):
+def test_journal_auto_id_skips_killed_runs(spark, tmp_path, count_jobs):
     # round-9 ADVICE: auto run-id assignment must advance past every
     # ATTEMPTED run, not just committed ones — landing different rows
     # under a KILLED run's id would let that run's at-least-once
     # redelivery (a legitimate replay of the id) silently overwrite them
-    # (the same rule the index WAL's _validate_log_batch_id applies).
+    # (the same rule the index WAL applies: statedir.LogView.claim).
     import os
 
     jdir = str(tmp_path / "journal_auto_k")
@@ -677,9 +677,14 @@ def test_journal_auto_id_skips_killed_runs(spark, tmp_path):
     incremental.journal_publish(spark, mk([("/a", "d1")]), jdir, run_id=1)
     os.makedirs(f"{jdir}/run_id=2")  # killed run 2: attempted, no rows
 
-    # auto must assign 3, never reuse killed run 2's id
-    rep = incremental.journal_publish(spark, mk([("/c", "d3")]), jdir)
+    # auto must assign 3, never reuse killed run 2's id; the id comes
+    # from the run-dir listing alone, so the publish runs only the prior
+    # read, the row count and the partition write
+    rep, ids, jobs = count_jobs(lambda: incremental.journal_publish(
+        spark, mk([("/c", "d3")]), jdir
+    ))
     assert rep == {"published": 1, "unchanged": 0, "run_id": 3}
+    assert len(ids) == 11, f"publish ran {len(ids)} jobs, pinned 11:\n{jobs}"
 
     # run 2's redelivery still replays under its own id, repairing it
     rep2 = incremental.journal_publish(spark, mk([("/b", "d2")]), jdir,
