@@ -666,8 +666,8 @@ def append_to_pq_index(
     ATTEMPTED append id (a replay — the overwrite rewrites the same
     rows, at-least-once safe; judging replays by directory existence
     rather than commit markers means a killed batch stays repairable
-    even after later batches commit — round-8 ADVICE fix). Ids at/below the compaction horizon
-    (``compact_pq_index``) are refused: their rows live in the folded
+    even after later batches commit — round-8 ADVICE fix). Ids at/below
+    the compaction horizon (``compact_pq_index``) are refused: their rows live in the folded
     snapshot. A batch is committed iff Spark's job-commit ``_SUCCESS``
     marker landed, so a killed append is invisible to loads and its
     replay repairs the dir — the manifest is never rewritten, which
@@ -705,14 +705,13 @@ def append_to_pq_index(
                     f"vectors but the index was built for dim={dim} — "
                     "these cannot be encoded against its codebooks"
                 )
-        batch_id = INDEX_LOG.view(spark, base).claim(
-            "append", batch_id, "append_to_pq_index"
-        )
+        log = INDEX_LOG.view(spark, base)
+        batch_id = log.claim("append", batch_id, "append_to_pq_index")
         codes = pq_encode(
             new_rows, index.codebooks, id_col=id_col, vec_col=vec_col,
             centroids=index.centroids, assign_impl=assign_impl,
         )
-        bdir = f"{base}/codes_append/batch={int(batch_id)}"
+        bdir = log.path("append", batch_id)
         # overwrite also repairs a marker-less partial dir from a killed
         # run
         fsutil.delete(spark, bdir)
@@ -773,10 +772,9 @@ def remove_from_pq_index(
                 [(str(i),) for i in ids], "id string"
             ).select(F.col("id").cast(id_type).alias("id"))
         tomb = tomb.distinct()
-        batch_id = INDEX_LOG.view(spark, base).claim(
-            "tombstone", batch_id, "remove_from_pq_index"
-        )
-        bdir = f"{base}/tombstones/batch={int(batch_id)}"
+        log = INDEX_LOG.view(spark, base)
+        batch_id = log.claim("tombstone", batch_id, "remove_from_pq_index")
+        bdir = log.path("tombstone", batch_id)
         fsutil.delete(spark, bdir)  # repair a marker-less partial dir
         tomb.write.mode("overwrite").parquet(bdir)
         n = spark.read.parquet(bdir).count()

@@ -186,8 +186,6 @@ def journal_publish(
     publish racing a compaction) refuse loudly at acquisition instead of
     double-assigning run ids.
     """
-    import os
-
     from pyspark import StorageLevel
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -207,9 +205,8 @@ def journal_publish(
             # (empty committed partition), or KILLED (marker-less dir
             # awaiting its at-least-once redelivery) — and never land at
             # or below the compaction horizon, whose priors are gone
-            run_id = JOURNAL_LOG.view(spark, journal_dir).claim(
-                "run", run_id, "journal_publish"
-            )
+            log = JOURNAL_LOG.view(spark, journal_dir)
+            run_id = log.claim("run", run_id, "journal_publish")
             full = _read_journal(spark, journal_dir, before_run=None,
                                  keep_run=True)
             # prior = runs STRICTLY BEFORE this one (not merely "excluding
@@ -239,7 +236,7 @@ def journal_publish(
             else:
                 fresh = rows
             n_total = rows.count()
-            part_dir = os.path.join(journal_dir, f"run_id={int(run_id)}")
+            part_dir = log.path("run", run_id)
             fresh.write.mode("overwrite").parquet(part_dir)
             n_new = spark.read.parquet(part_dir).count()
         finally:
@@ -396,8 +393,6 @@ def compact_journal(
     (``horizon=-1`` when there was nothing to compact). Holds the
     journal dir's writer lease.
     """
-    import os
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -437,7 +432,7 @@ def compact_journal(
             .select("path", "digest", "run_id")
         )
         n_snap = statedir.write_snapshot(
-            spark, head, os.path.join(journal_dir, JOURNAL_LOG.snapshot),
+            spark, head, f"{log.base}/{JOURNAL_LOG.snapshot}",
             int(up_to_run), lease=held,
         )
         # only now is it safe to drop what the snapshot supersedes
